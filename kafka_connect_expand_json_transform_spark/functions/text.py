@@ -61,25 +61,6 @@ def shingles_from_tokens(toks: Column | str, n: int = 3) -> Column:
     )
 
 
-def char_shingles(col: Column | str, n: int = 5, lowercase: bool = True) -> Column:
-    """Distinct character n-grams (array<string>) — finer-grained near-dup
-    signal than word shingles for short texts.
-
-    PERF: pass an ALREADY-STAGED normalized column (and lowercase=False) in
-    hot paths — with lowercase=True the lower() sits inside the per-gram
-    lambda and is re-evaluated for every gram (O(len^2) per doc; see
-    winnowing_fingerprints for the staged pattern)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
-            lambda i: F.substring(c, i, n),
-        )
-    )
-
-
 def token_count(col: Column | str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col, lowercase=False))
@@ -159,19 +140,6 @@ def minhash_xxhash(shingles: Column, num_hashes: int) -> Column:
             for i in range(num_hashes)
         ]
     )
-
-
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash of a token array: per bit, sum +1/-1 weighted by token
-    hash bit, take sign. Pure expressions: 64 shift/mask aggregations over
-    ``aggregate`` — codegen'd, no UDF.
-
-    PERF: pass a *materialized* token-array column; the hash array below is
-    referenced 64 times, so ``toks`` must be an attribute. This expression
-    form is the semantic reference; the production path is
-    ``dedup.simhash_signatures`` (numpy sign-vote in a pandas UDF,
-    bit-identical — cross-checked in tests), ~4× faster at sf0.1."""
-    return simhash64_from_hashes(F.transform(toks, lambda t: F.xxhash64(t)))
 
 
 def simhash64_from_hashes(hashed: Column | str) -> Column:

@@ -37,16 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize; with pre-normalized vectors cosine becomes a plain
     dot product — at 100 TB, normalize once at ingest, not per comparison.

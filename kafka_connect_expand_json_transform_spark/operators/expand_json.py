@@ -52,7 +52,7 @@ _SCALAR_WRAP = "__v"
 # rewritten file or another session can never see a stale schema; non-file
 # sources (empty inputFiles) are never memoized.  No query RESULT is cached
 # — only plan-time schema metadata, recomputed per process.  Bounded LRU
-# (the reference caps its own schema memo at 16 entries, ExpandJson.java:73):
+# (the reference caps its own schema memo at 16 entries, ExpandJson.java:81):
 # a long-lived driver expanding rotating file sets must not grow this
 # monotonically — every file rewrite mints a new key, and nothing else
 # would ever evict the superseded one.

@@ -39,7 +39,7 @@ _NANO_TS_COLUMNS = {"events": ["ts"]}
 # parquet — and the key carries the session id plus the file's (mtime, size)
 # so a regenerated table or a new session can never see a stale plan.
 # Bounded LRU (the reference keeps the same class of memo at 16 entries,
-# ExpandJson.java:73): a long-lived driver over rotating file sets must not
+# ExpandJson.java:81): a long-lived driver over rotating file sets must not
 # grow this monotonically, and a rewrite of a path evicts the superseded
 # entry immediately rather than leaving it to age out.
 _PLAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()

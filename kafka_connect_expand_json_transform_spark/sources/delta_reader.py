@@ -756,8 +756,8 @@ def register_delta_stream_source(spark: SparkSession) -> None:
     typed per-file constants; column-mapped ('name') tables stream
     through a physical -> logical column rename on each Arrow batch and
     physical-keyed partitionValues (r9; 'id' mapping still refuses).
-    Caveat shared with every Python stream reader: availableNow is not
-    supported — drive a processing-time trigger and stop at the head."""
+    ``latestOffset`` is the latest version, so an ``availableNow`` query
+    (``streaming.run_stream``) drains in one micro-batch."""
     from dataclasses import dataclass
 
     from pyspark.sql.datasource import (

@@ -685,7 +685,8 @@ def register_hudi_stream_source(spark: SparkSession) -> None:
     micro-batch merges the commit's touched file groups at that instant
     (the batch reader's slice-local merge) and keeps the rows the commit
     wrote — deletes drop out, matching ``read_hudi_incremental``.
-    availableNow is unsupported (Python DataSource limit)."""
+    ``latestOffset`` is the timeline head, so an ``availableNow`` query
+    (``streaming.run_stream``) drains in one micro-batch."""
     from dataclasses import dataclass
 
     from pyspark.sql.datasource import (

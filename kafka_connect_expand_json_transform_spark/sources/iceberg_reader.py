@@ -649,20 +649,6 @@ def _snapshot_files(
     return [p for p, _seq in files], pos_deletes
 
 
-def _live_files(
-    path: str, meta: dict, snapshot_id: int | None, where: list[tuple] | None = None
-) -> list[str]:
-    """Data files live at the snapshot — REFUSES tables carrying delete
-    files (callers that can apply them use ``_snapshot_entries``)."""
-    files, deletes = _snapshot_files(path, meta, snapshot_id, where)
-    if deletes:
-        raise IcebergUnsupported(
-            "table has v2 row-level delete files; this path cannot apply "
-            "them — read through read_iceberg (position deletes supported)"
-        )
-    return files
-
-
 def snapshot_as_of(path: str, timestamp_ms: int) -> int:
     """Iceberg's timestamp time travel rule: the newest snapshot whose
     timestamp-ms is <= the bound (before-first-snapshot is an error there
@@ -734,9 +720,9 @@ def register_iceberg_stream_source(spark: SparkSession) -> None:
     ``streaming-skip-delete-snapshots`` /
     ``streaming-skip-overwrite-snapshots`` skip those snapshots
     WHOLESALE; 'replace' (compaction) snapshots are always skipped,
-    matching the reference streaming source (r9).  availableNow is
-    unsupported (Python DataSource limit): drive a processing-time
-    trigger to the head."""
+    matching the reference streaming source (r9).  ``latestOffset`` is the
+    current snapshot, so an ``availableNow`` query
+    (``streaming.run_stream``) drains in one micro-batch."""
     from dataclasses import dataclass
 
     from pyspark.sql.datasource import (

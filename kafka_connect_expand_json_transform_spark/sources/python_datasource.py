@@ -167,9 +167,10 @@ class ConnectRecordsStreamReader(DataSourceStreamReader):
     at most ``rowsPerBatch`` per trigger (the admission control knob —
     truncating inside ``partitions()`` instead would desync the committed
     offset from the rows actually read), and ``partitions(start, end)``
-    returns the full admitted range.  Python stream readers don't support
-    ``availableNow`` (Spark falls back to a single batch); drive with a
-    normal trigger and stop when ``offset`` reaches ``rows``.
+    returns the full admitted range.  ``availableNow`` takes one
+    ``latestOffset()`` at start, so it would stop after the first admitted
+    batch; drive with a processing-time trigger and stop when ``offset``
+    reaches ``rows``.
     """
 
     def __init__(self, options):

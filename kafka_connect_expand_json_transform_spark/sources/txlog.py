@@ -3222,12 +3222,9 @@ def foreach_batch_sink(root: str):
     is the txlog twin of Delta's transactional streaming sink."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        committed = {
-            e.get("batch_id") for e in _list_entries(root) if "batch_id" in e
-        }
-        if batch_id in committed:
-            return  # replayed batch: already durable, skip (idempotence)
         entries = _list_entries(root)
+        if any(e.get("batch_id") == batch_id for e in entries):
+            return  # replayed batch: already durable, skip (idempotence)
         current = entries[-1]["version"] if entries else -1
         if entries:
             _, schema = _replay(entries, None)
@@ -3629,9 +3626,9 @@ def register_stream_source(spark: SparkSession) -> None:
         register_stream_source(spark)
         spark.readStream.format("txlogstream").option("path", root).load()
 
-    Caveat (same as the other Python stream readers): availableNow is not
-    supported by the Python DataSource API — drive with a processing-time
-    trigger and stop when the cursor reaches the table head."""
+    ``latestOffset`` is the table head, so an ``availableNow`` query
+    (``streaming.run_stream``) drains every committed version in one
+    micro-batch."""
     from dataclasses import dataclass
 
     from pyspark.sql.datasource import (

@@ -9,11 +9,10 @@ from kafka_connect_expand_json_transform_spark.streaming.expand import (
 )
 from kafka_connect_expand_json_transform_spark.streaming.sources import (
     file_stream_source,
+    foreach_batch_sink,
     memory_sink,
     rate_source,
-)
-from kafka_connect_expand_json_transform_spark.streaming.sources import (
-    foreach_batch_sink,
+    run_stream,
 )
 from kafka_connect_expand_json_transform_spark.streaming.stateful import (
     running_aggregate,
@@ -32,6 +31,7 @@ __all__ = [
     "foreach_batch_sink",
     "memory_sink",
     "rate_source",
+    "run_stream",
     "running_aggregate",
     "running_aggregate_tws",
     "session_window_agg",

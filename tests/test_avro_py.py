@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as C
 from kafka_connect_expand_json_transform_spark.sources import avro_py as A
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 
 def enc(schema, value):
@@ -143,14 +144,11 @@ def test_streaming_avro_sink_exactly_once_files(spark, tmp_path):
     )
     batch.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(batch.schema).parquet(src)
-    q = (
+    run_stream(
         stream.writeStream.format("avro_py")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     import os
 
     files = [f for f in os.listdir(out) if f.endswith(".avro")]

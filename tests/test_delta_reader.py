@@ -10,12 +10,14 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
     DeltaProtocolUnsupported,
     delta_history,
     read_delta,
 )
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 
 def _commit(root, version, actions):
@@ -240,23 +242,6 @@ def test_stats_file_skipping(spark, tmp_path):
     assert [r.id for r in df2.collect()] == [2]
 
 
-def _drain(q, seconds=60, expect_error=False):
-    import time as _t
-    deadline = _t.time() + seconds
-    while _t.time() < deadline:
-        if q.exception() is not None:
-            break
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    try:
-        q.awaitTermination()
-    except Exception:
-        if not expect_error:
-            raise
-
-
 def test_deltastream_appends_and_remove_contract(spark, tmp_path):
     from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
         register_delta_stream_source,
@@ -277,12 +262,10 @@ def test_deltastream_appends_and_remove_contract(spark, tmp_path):
     ])
     register_delta_stream_source(spark)
     name = "sg_deltastream_t"
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName(name).outputMode("append")
-        .start()
     )
-    _drain(q)
     assert sorted(r.id for r in spark.table(name).collect()) == [1, 2, 3]
 
     # a rewrite version aborts by default, re-streams with ignoreChanges
@@ -292,20 +275,18 @@ def test_deltastream_appends_and_remove_contract(spark, tmp_path):
         {"remove": {"path": "a.parquet", "deletionTimestamp": 3000,
                     "dataChange": True}},
     ])
-    q2 = (
-        spark.readStream.format("deltastream").option("path", root).load()
-        .writeStream.format("memory").queryName(name + "2")
-        .outputMode("append").start()
-    )
-    _drain(q2, expect_error=True)
-    assert q2.exception() is not None  # remove action -> stream error
-    q3 = (
+    with pytest.raises(StreamingQueryException, match="remove actions"):
+        run_stream(
+            spark.readStream.format("deltastream").option("path", root).load()
+            .writeStream.format("memory").queryName(name + "2")
+            .outputMode("append")
+        )
+    run_stream(
         spark.readStream.format("deltastream").option("path", root)
         .option("ignoreChanges", "true").load()
         .writeStream.format("memory").queryName(name + "3")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q3)
     assert sorted(r.v for r in spark.table(name + "3").collect()) == [
         "A", "B", "a", "b", "c"
     ]
@@ -433,13 +414,10 @@ def test_deltastream_column_mapped(spark, tmp_path):
     _commit(root, 1, [_add("b.parquet")])
     register_delta_stream_source(spark)
     name = "sg_deltastream_mapped"
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName(name).outputMode("append")
-        .start()
     )
-    _drain(q)
-    assert q.exception() is None
     got = sorted((r.id, r.v) for r in spark.table(name).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
 
@@ -474,23 +452,19 @@ def test_deltastream_skip_change_commits(spark, tmp_path):
     _commit(root, 2, [_add("b.parquet")])
     register_delta_stream_source(spark)
     # default: the DV commit fails closed
-    q = (
-        spark.readStream.format("deltastream").option("path", root).load()
-        .writeStream.format("memory").queryName("sg_dscc_fail")
-        .outputMode("append").start()
-    )
-    _drain(q, expect_error=True)
-    assert q.exception() is not None and "deletion-vector" in str(
-        q.exception())
+    with pytest.raises(StreamingQueryException, match="deletion-vector"):
+        run_stream(
+            spark.readStream.format("deltastream").option("path", root).load()
+            .writeStream.format("memory").queryName("sg_dscc_fail")
+            .outputMode("append")
+        )
     # skipChangeCommits: v1 contributes nothing; v0 + v2 stream
-    q2 = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root)
         .option("skipChangeCommits", "true").load()
         .writeStream.format("memory").queryName("sg_dscc_skip")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q2)
-    assert q2.exception() is None
     got = sorted(r.id for r in spark.table("sg_dscc_skip").collect())
     assert got == [1, 2, 3]
 
@@ -511,13 +485,12 @@ def test_deltastream_starting_version_and_gap_fail_closed(spark, tmp_path):
     _commit(root, 1, [_add("b.parquet")])
     register_delta_stream_source(spark)
     # startingVersion=1 skips version 0 by POLICY (not by gap)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root)
         .option("startingVersion", "1").load()
         .writeStream.format("memory").queryName("sg_dsv1")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
     assert [r.id for r in spark.table("sg_dsv1").collect()] == [2]
     # a vacuumed gap fails CLOSED instead of losing rows — surfaced at
     # schema resolution (the replay sees the hole before any batch runs)
@@ -589,13 +562,11 @@ def test_deltastream_skips_datachange_false_compaction(spark, tmp_path):
                     "dataChange": False}},
     ])
     register_delta_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_ds_dcf")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
-    assert q.exception() is None  # no abort on the rearrangement commit
     # only commit 0's rows; the compacted file is NOT re-streamed
     assert sorted(r.id for r in spark.table("sg_ds_dcf").collect()) == [1, 2]
 
@@ -759,13 +730,12 @@ def test_dv_guards_on_stream_cdf_and_dml(spark, tmp_path):
     assert sorted(r.id for r in read_delta(spark, root).collect()) == [10, 12]
     # stream -> fails closed on the DV add
     register_delta_stream_source(spark)
-    q = (
-        spark.readStream.format("deltastream").option("path", root).load()
-        .writeStream.format("memory").queryName("sg_dv_stream")
-        .outputMode("append").start()
-    )
-    _drain(q, expect_error=True)
-    assert q.exception() is not None and "deletion" in str(q.exception())
+    with pytest.raises(StreamingQueryException, match="deletion"):
+        run_stream(
+            spark.readStream.format("deltastream").option("path", root).load()
+            .writeStream.format("memory").queryName("sg_dv_stream")
+            .outputMode("append")
+        )
 
 
 def test_module_dv_encoder_roundtrip_and_cross_check():
@@ -1049,13 +1019,11 @@ def test_deltastream_partitioned_reinjection(spark, tmp_path):
     ])
     _commit(root, 1, [_add("day=2026-01-02/f2.parquet", {"day": "2026-01-02"})])
     register_delta_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_ds_part")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
-    assert q.exception() is None
     got = sorted((r.id, str(r.day)) for r in spark.table("sg_ds_part").collect())
     assert got == [(1, "2026-01-01"), (2, "2026-01-01"), (3, "2026-01-02")]
     assert dict(spark.table("sg_ds_part").dtypes)["day"] == "date"
@@ -1176,13 +1144,11 @@ def test_column_mapping_id_cdf_and_stream(spark, tmp_path):
                    (3, "c", "insert", 1)]
 
     register_delta_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_cmid_stream")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
-    assert q.exception() is None
     got = sorted((r.id, r.v)
                  for r in spark.table("sg_cmid_stream").collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
@@ -1199,28 +1165,23 @@ def test_deltastream_starting_timestamp(spark, tmp_path):
     root = _plain_table(tmp_path)  # v0 at ts 1000 (ids 1,2,3 live)…
     # v1 at ts 2000 rewrites part-b: remove + add — use ignoreChanges
     register_delta_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root)
         .option("startingTimestamp", "1500")
         .option("ignoreChanges", "true").load()
         .writeStream.format("memory").queryName("sg_dst")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
-    assert q.exception() is None
     # only v1's add streams (part-c: id 4)
     assert sorted(r.id for r in spark.table("sg_dst").collect()) == [4]
-    with pytest.raises(Exception, match="not both"):
-        q2 = (
+    with pytest.raises(StreamingQueryException, match="not both"):
+        run_stream(
             spark.readStream.format("deltastream").option("path", root)
             .option("startingTimestamp", "1500")
             .option("startingVersion", "1").load()
             .writeStream.format("memory").queryName("sg_dst2")
-            .outputMode("append").start()
+            .outputMode("append")
         )
-        _drain(q2, expect_error=True)
-        if q2.exception() is not None:
-            raise q2.exception()
 
 
 def test_dv_frame_executor_side_decode_large(spark, tmp_path):

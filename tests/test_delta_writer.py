@@ -17,6 +17,7 @@ from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
     delta_append,
     delta_streaming_sink,
 )
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 
 def _df(spark, lo, hi):
@@ -92,13 +93,10 @@ def test_streaming_sink_exactly_once(spark, tmp_path):
         spark, src_dir, data.schema, fmt="parquet",
         options={"maxFilesPerTrigger": "1"},
     )
-    q = (
+    run_stream(
         stream.writeStream.foreachBatch(delta_streaming_sink(root, "ingest"))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     assert read_delta(spark, root).count() == 60
     # replay batch 0 manually (the checkpoint-crash shape): no duplicates
     delta_streaming_sink(root, "ingest")(_df(spark, 0, 20), 0)
@@ -784,19 +782,11 @@ def test_optimize_binpack_dv_collapse_and_stream_survival(spark, tmp_path):
 
     # the stream does NOT re-stream the compacted rows
     register_delta_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("deltastream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_opt_stream")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    import time as _t
-    deadline = _t.time() + 60
-    while _t.time() < deadline:
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    q.awaitTermination()
     assert spark.table("sg_opt_stream").count() == 20  # not 40
 
     # DV collapse: a CoW-deleted... use MoR-shaped DV via delete on a

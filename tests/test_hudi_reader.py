@@ -10,12 +10,14 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from kafka_connect_expand_json_transform_spark.sources.hudi_reader import (
     HudiUnsupported,
     hudi_timeline,
     read_hudi,
 )
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 C1, C2 = "20260101000000000", "20260102000000000"
 
@@ -295,23 +297,6 @@ def test_incremental_query_mode(spark, tmp_path):
         read_hudi_incremental(spark, root, begin_instant=C2)
 
 
-def _drain_q(q, seconds=60, expect_error=False):
-    import time as _t
-    deadline = _t.time() + seconds
-    while _t.time() < deadline:
-        if q.exception() is not None:
-            break
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    try:
-        q.awaitTermination()
-    except Exception:
-        if not expect_error:
-            raise
-
-
 def test_hudistream_cow_commits(spark, tmp_path):
     # r9: the hudistream source — instant offsets, one micro-batch of the
     # rows WRITTEN by each new commit; a CoW rewrite's carried rows are
@@ -325,13 +310,11 @@ def test_hudistream_cow_commits(spark, tmp_path):
 
     root = _table(tmp_path)
     register_hudi_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("hudistream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_hudistream")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_q(q)
-    assert q.exception() is None
     got = sorted(r.id for r in spark.table("sg_hudistream").collect())
     # C2's slice stamps ALL its rows with C2 (the fixture models an
     # update of 1,2 plus insert of 9), so the stream re-emits 1,2 as
@@ -362,22 +345,18 @@ def test_hudistream_replacecommit_contract(spark, tmp_path):
                                           + ["fg2"]},
         }, fh)
     register_hudi_stream_source(spark)
-    q = (
-        spark.readStream.format("hudistream").option("path", root).load()
-        .writeStream.format("memory").queryName("sg_hudistream_rc")
-        .outputMode("append").start()
-    )
-    _drain_q(q, expect_error=True)
-    assert q.exception() is not None and "replacecommit" in str(
-        q.exception())
-    q2 = (
+    with pytest.raises(StreamingQueryException, match="replacecommit"):
+        run_stream(
+            spark.readStream.format("hudistream").option("path", root).load()
+            .writeStream.format("memory").queryName("sg_hudistream_rc")
+            .outputMode("append")
+        )
+    run_stream(
         spark.readStream.format("hudistream").option("path", root)
         .option("ignoreChanges", "true").load()
         .writeStream.format("memory").queryName("sg_hudistream_rc2")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_q(q2)
-    assert q2.exception() is None
     got = sorted(r.id for r in spark.table("sg_hudistream_rc2").collect())
     # same commit rows as before; the clustering contributed nothing new
     assert got == [1, 1, 2, 2, 3, 9]
@@ -509,13 +488,11 @@ def test_hudistream_mor_commits(spark, tmp_path):
 
     root, _log = _mor_table(tmp_path)
     register_hudi_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("hudistream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_hudistream_mor")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_q(q)
-    assert q.exception() is None
     got = sorted((r.id, r.v)
                  for r in spark.table("sg_hudistream_mor").collect())
     assert got == [(1, "v1"), (1, "v1b"), (2, "v2"), (3, "v3"),

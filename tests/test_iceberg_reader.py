@@ -11,6 +11,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
 from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
@@ -18,6 +19,7 @@ from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
     iceberg_snapshots,
     read_iceberg,
 )
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 ENTRY_V2 = {
     "type": "record", "name": "manifest_entry", "fields": [
@@ -267,23 +269,6 @@ def test_as_of_timestamp(spark, tmp_path):
         read_iceberg(spark, root, snapshot_id=1, as_of_timestamp_ms=1500)
 
 
-def _drain(q, seconds=60, expect_error=False):
-    import time as _t
-    deadline = _t.time() + seconds
-    while _t.time() < deadline:
-        if q.exception() is not None:
-            break
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    try:
-        q.awaitTermination()
-    except Exception:
-        if not expect_error:
-            raise
-
-
 def test_icebergstream_appends_and_overwrite_contract(spark, tmp_path):
     from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
         register_iceberg_stream_source,
@@ -292,21 +277,19 @@ def test_icebergstream_appends_and_overwrite_contract(spark, tmp_path):
     # _table: snapshot 1 appends a+b; snapshot 2 deletes b, adds c
     root = _table(tmp_path)
     register_iceberg_stream_source(spark)
-    q = (
-        spark.readStream.format("icebergstream").option("path", root).load()
-        .writeStream.format("memory").queryName("sg_icestream")
-        .outputMode("append").start()
-    )
-    _drain(q, expect_error=True)
     # snapshot 2 is an overwrite with deleted entries -> abort by default
-    assert q.exception() is not None
-    q2 = (
+    with pytest.raises(StreamingQueryException):
+        run_stream(
+            spark.readStream.format("icebergstream").option("path", root).load()
+            .writeStream.format("memory").queryName("sg_icestream")
+            .outputMode("append")
+        )
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root)
         .option("ignoreChanges", "true").load()
         .writeStream.format("memory").queryName("sg_icestream2")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q2)
     # snapshot 1 adds ids 1,2,3; snapshot 2 re-streams only its ADDED file
     assert sorted(r.id for r in spark.table("sg_icestream2").collect()) == [
         1, 2, 3, 4
@@ -397,39 +380,32 @@ def test_icebergstream_snapshot_id_offsets_survive_expiry(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")  # file sink: supports checkpoint recovery
 
-    def run(expect_error=False):
-        q = (
+    def run():
+        run_stream(
             spark.readStream.format("icebergstream").option("path", root)
             .load()
             .writeStream.format("json").option("path", out)
-            .option("checkpointLocation", ckpt).outputMode("append").start()
+            .option("checkpointLocation", ckpt).outputMode("append")
         )
-        _drain(q, expect_error=expect_error)
-        return q
 
     def sunk_ids():
         return sorted(r.id for r in spark.read.json(out).collect())
 
-    q = run()
-    assert q.exception() is None
+    run()
     assert sunk_ids() == [1, 2, 3]
 
     # expire snapshot 1 AND add snapshot 3 — a positional offset (2 snaps
     # streamed) would now point past snapshot 3 and silently skip it
     write_meta(2, [s2, s3], 303)
-    q2 = run()
-    assert q2.exception() is None
+    run()
     # resumed AFTER snapshot 202 by id: exactly snapshot 303's file is
     # appended — no skip (4 present), no replay (no duplicate 3)
     assert sunk_ids() == [1, 2, 3, 4]
 
     # expire the last-streamed snapshot (303): resume must fail closed
     write_meta(3, [s2], 202)
-    q3 = run(expect_error=True)
-    assert q3.exception() is not None
-    assert "expired" in str(q3.exception()).lower() or "no longer" in str(
-        q3.exception()
-    )
+    with pytest.raises(StreamingQueryException, match="(?i)expired|no longer"):
+        run()
 
 
 def test_icebergstream_legacy_pos_offset_fails_closed(spark, tmp_path):
@@ -448,18 +424,15 @@ def test_icebergstream_legacy_pos_offset_fails_closed(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def run(expect_error=False):
-        q = (
+    def run():
+        run_stream(
             spark.readStream.format("icebergstream").option("path", root)
             .load()
             .writeStream.format("json").option("path", out)
-            .option("checkpointLocation", ckpt).outputMode("append").start()
+            .option("checkpointLocation", ckpt).outputMode("append")
         )
-        _drain(q, expect_error=expect_error)
-        return q
 
-    q = run()
-    assert q.exception() is None
+    run()
     # rewrite the committed offset to the legacy positional format
     write_meta(2, [s1, s2, s3], 303)  # new data so the resume plans a batch
     off_files = sorted(_glob.glob(os.path.join(ckpt, "offsets", "*")))
@@ -475,9 +448,8 @@ def test_icebergstream_legacy_pos_offset_fails_closed(spark, tmp_path):
         with open(f, "w") as fh:
             fh.write("\n".join(lines))
     assert legacy_written
-    q2 = run(expect_error=True)
-    assert q2.exception() is not None
-    assert "legacy" in str(q2.exception()).lower()
+    with pytest.raises(StreamingQueryException, match="(?i)legacy"):
+        run()
 
 
 def test_ordered_snapshots_mixed_sequence_numbers(tmp_path):
@@ -891,14 +863,12 @@ def test_icebergstream_skip_snapshot_options(spark, tmp_path):
     # overwrite deleting b and adding c (id 4)
     root = _table(tmp_path)
     register_iceberg_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root)
         .option("streaming-skip-overwrite-snapshots", "true").load()
         .writeStream.format("memory").queryName("sg_iskip")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q)
-    assert q.exception() is None
     assert sorted(r.id for r in spark.table("sg_iskip").collect()) == [1, 2, 3]
 
     # a 'replace' snapshot is skipped even with no options set
@@ -910,13 +880,11 @@ def test_icebergstream_skip_snapshot_options(spark, tmp_path):
             s["summary"]["operation"] = "replace"
     with open(mpath, "w") as fh:
         json.dump(meta, fh)
-    q2 = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_ireplace")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain(q2)
-    assert q2.exception() is None
     assert sorted(r.id for r in spark.table("sg_ireplace").collect()) \
         == [1, 2, 3]
 

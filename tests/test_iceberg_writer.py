@@ -4,6 +4,7 @@ icebergstream source over self-written tables — every committed state
 verified through the independent iceberg_reader."""
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
@@ -12,6 +13,7 @@ from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
 from kafka_connect_expand_json_transform_spark.sources.iceberg_writer import (
     iceberg_append,
 )
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 
 def _df(spark, lo, hi):
@@ -42,22 +44,11 @@ def test_streams_through_icebergstream(spark, tmp_path):
     iceberg_append(_df(spark, 0, 3), root)
     iceberg_append(_df(spark, 3, 5), root)
     register_iceberg_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root).load()
         .writeStream.format("memory").queryName("sg_iw_stream")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    import time as _t
-    deadline = _t.time() + 60
-    while _t.time() < deadline:
-        if q.exception() is not None:
-            break
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    q.awaitTermination()
-    assert q.exception() is None
     got = sorted(r.k for r in spark.table("sg_iw_stream").collect())
     assert got == list(range(5))
 
@@ -249,24 +240,6 @@ def test_position_delete_write_roundtrip(spark, tmp_path):
     assert s4 > s3 > s2
 
 
-def _drain_stream(q, expect_error=False):
-    import time as _t
-
-    deadline = _t.time() + 60
-    while _t.time() < deadline:
-        if q.exception() is not None:
-            break
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        _t.sleep(0.25)
-    q.stop()
-    try:
-        q.awaitTermination()
-    except Exception:
-        if not expect_error:
-            raise
-
-
 def test_icebergstream_over_delete_bearing_snapshots(spark, tmp_path):
     # r10: a delete snapshot aborts the stream (a retraction cannot be
     # appended) unless skipped wholesale or ignoreChanges — but LATER
@@ -285,36 +258,30 @@ def test_icebergstream_over_delete_bearing_snapshots(spark, tmp_path):
     iceberg_append(_df(spark, 10, 12), root)
     register_iceberg_stream_source(spark)
     # no flags: the delete snapshot aborts
-    q = (
-        spark.readStream.format("icebergstream").option("path", root)
-        .load().writeStream.format("memory").queryName("sg_isd_abort")
-        .outputMode("append").start()
-    )
-    _drain_stream(q, expect_error=True)
-    assert q.exception() is not None \
-        and "delete" in str(q.exception()).lower()
+    with pytest.raises(StreamingQueryException, match="(?i)delete"):
+        run_stream(
+            spark.readStream.format("icebergstream").option("path", root)
+            .load().writeStream.format("memory").queryName("sg_isd_abort")
+            .outputMode("append")
+        )
     # skip-delete-snapshots: appends stream, the delete is skipped
     # wholesale (so pre-delete adds stream in full — documented)
-    q2 = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root)
         .option("streaming-skip-delete-snapshots", "true").load()
         .writeStream.format("memory").queryName("sg_isd_skip")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_stream(q2)
-    assert q2.exception() is None
     got = sorted(r.k for r in spark.table("sg_isd_skip").collect())
     assert got == [0, 1, 2, 3, 10, 11]
     # ignoreChanges: the delete snapshot adds no data files, so it
     # contributes nothing and the stream proceeds
-    q3 = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root)
         .option("ignoreChanges", "true").load()
         .writeStream.format("memory").queryName("sg_isd_ic")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_stream(q3)
-    assert q3.exception() is None
     got3 = sorted(r.k for r in spark.table("sg_isd_ic").collect())
     assert got3 == [0, 1, 2, 3, 10, 11]
 
@@ -422,13 +389,11 @@ def test_compact_materializes_deletes_and_resets_manifest_chain(
     # streaming with skip-delete: replace snapshots are skipped, so the
     # compaction re-streams nothing
     register_iceberg_stream_source(spark)
-    q = (
+    run_stream(
         spark.readStream.format("icebergstream").option("path", root)
         .option("streaming-skip-delete-snapshots", "true").load()
         .writeStream.format("memory").queryName("sg_cmp_stream")
-        .outputMode("append").start()
+        .outputMode("append")
     )
-    _drain_stream(q)
-    assert q.exception() is None
     got = sorted(r.k for r in spark.table("sg_cmp_stream").collect())
     assert got == list(range(9)) + [20]

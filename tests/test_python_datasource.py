@@ -53,9 +53,9 @@ def test_stream_read_microbatches_drain(registered, tmp_path):
         .option("rowsPerBatch", 250)
         .load()
     )
-    # python stream readers don't support availableNow (single-batch
-    # fallback); drive micro-batches with the default trigger and stop once
-    # the bounded offset space drains
+    # availableNow takes one latestOffset() at start, which admits only the
+    # first rowsPerBatch slice; drive micro-batches with the default trigger
+    # and stop once the bounded offset space drains
     q = (
         stream.writeStream.format("memory")
         .queryName("pds_stream")

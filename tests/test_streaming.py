@@ -18,6 +18,7 @@ from kafka_connect_expand_json_transform_spark.streaming import (
     expand_json_stream,
     file_stream_source,
     memory_sink,
+    run_stream,
     running_aggregate,
     session_window_agg,
     sliding_window_agg,
@@ -56,8 +57,7 @@ def events_path(tmp_path):
 
 def run_to_table(spark, df, output_mode="append"):
     name = "t_" + uuid.uuid4().hex[:12]
-    q = memory_sink(df, name, output_mode=output_mode)
-    q.awaitTermination()
+    memory_sink(df, name, output_mode=output_mode)
     return spark.table(name)
 
 
@@ -456,13 +456,10 @@ def test_streaming_cdc_merge_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(cdc_dir))
     )
-    q = (
+    run_stream(
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     full = spark.createDataFrame(changes1 + changes2, cols)
     expected = {
@@ -494,15 +491,12 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     def run_once():
         stream = file_stream_source(spark, str(src), EVENT_SCHEMA, fmt="json")
         agg = stream.select("event_id", "user")
-        q = (
+        run_stream(
             agg.writeStream.format("parquet")
             .outputMode("append")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     write_batch("b0.json", ROWS[:3])
     run_once()
@@ -554,16 +548,13 @@ def test_multibatch_agg_actually_runs_multiple_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .load(src)
     )
-    q = (
+    q = run_stream(
         stream.groupBy("k")
         .agg(F.sum("one").alias("n"))
         .writeStream.format("memory")
         .queryName("sg_mb_test")
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     batches = q.recentProgress
     assert len([p for p in batches if p["numInputRows"] > 0]) >= 3, [
         (p["batchId"], p["numInputRows"]) for p in batches
@@ -878,3 +869,108 @@ def test_timeout_sessions_tws_parity(spark, tmp_path):
         }
     finally:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def session_partitions(spark):
+    """Run with a session partition count that differs from the pinned 8,
+    restoring the fixture session's value after."""
+    prev = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, "5")
+    yield "5"
+    spark.conf.set(SHUFFLE, prev)
+
+
+def test_run_stream_pins_state_partitions_and_restores_conf(
+    spark, events_path, tmp_path, session_partitions
+):
+    import os
+
+    ckpt = str(tmp_path / "ckpt")
+    stream = file_stream_source(spark, events_path, EVENT_SCHEMA)
+    q = run_stream(
+        stream.groupBy("user")
+        .count()
+        .writeStream.format("memory")
+        .queryName("t_" + uuid.uuid4().hex[:12])
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+    )
+    assert not q.isActive and q.recentProgress
+    assert spark.conf.get(SHUFFLE) == session_partitions
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    assert meta["conf"][SHUFFLE] == "8"
+    state = os.listdir(os.path.join(ckpt, "state", "0"))
+    assert sorted(int(d) for d in state if d.isdigit()) == list(range(8))
+
+
+def test_run_stream_restores_conf_when_start_raises(
+    spark, events_path, session_partitions
+):
+    stream = file_stream_source(spark, events_path, EVENT_SCHEMA)
+    with pytest.raises(Exception, match="queryName"):
+        run_stream(stream.writeStream.format("memory"))  # memory needs a name
+    assert spark.conf.get(SHUFFLE) == session_partitions
+
+
+def test_run_stream_times_out_and_stops_the_query(
+    spark, events_path, monkeypatch, session_partitions
+):
+    import time
+
+    from kafka_connect_expand_json_transform_spark.streaming import sources
+
+    monkeypatch.setattr(sources, "_DRAIN_TIMEOUT_S", 1)
+    name = "t_" + uuid.uuid4().hex[:12]
+    stream = file_stream_source(spark, events_path, EVENT_SCHEMA)
+    with pytest.raises(TimeoutError, match=name):
+        run_stream(
+            stream.writeStream.queryName(name).foreachBatch(
+                lambda df, batch_id: time.sleep(4)
+            )
+        )
+    assert name not in {q.name for q in spark.streams.active}
+    assert spark.conf.get(SHUFFLE) == session_partitions
+
+
+def test_run_stream_surfaces_a_failed_batch(spark, events_path):
+    from pyspark.errors import StreamingQueryException
+
+    def fail(df, batch_id):
+        raise ValueError("batch exploded")
+
+    stream = file_stream_source(spark, events_path, EVENT_SCHEMA)
+    with pytest.raises(StreamingQueryException, match="batch exploded"):
+        run_stream(stream.writeStream.foreachBatch(fail))
+
+
+def test_streams_run_only_through_run_stream():
+    """Source scan: registered queries neither write the session's shuffle-
+    partition count nor start and drain a stream by hand, and no test polls
+    a stream; ``run_stream`` owns all of that."""
+    import pathlib
+    import re
+
+    from kafka_connect_expand_json_transform_spark.plans import queries
+
+    src = pathlib.Path(queries.__file__).read_text()
+    banned = {
+        "shuffle-partition conf write": (
+            r"(\.set\(\s*|SET\s+)[\"']?spark\.sql\.shuffle\.partitions"
+        ),
+        "isDataAvailable poll": r"isDataAvailable",
+        "hand-built availableNow start": r"availableNow\s*=\s*True",
+        "_run_stream_to_memory": r"_run_stream_to_memory",
+    }
+    assert [what for what, pat in banned.items() if re.search(pat, src)] == []
+    here = pathlib.Path(__file__)
+    polls = [
+        p.name
+        for p in here.parent.glob("*.py")
+        if p != here and "isDataAvailable" in p.read_text()
+    ]
+    assert polls == []

@@ -4,9 +4,11 @@ enforcement, optimistic-concurrency conflicts, atomic commit layout."""
 import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from kafka_connect_expand_json_transform_spark.sources import txlog
+from kafka_connect_expand_json_transform_spark.streaming import run_stream
 
 
 def _df(spark, lo, hi):
@@ -96,13 +98,10 @@ def test_foreach_batch_sink_exactly_once_across_restart(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).json(str(src))
-        q = (
+        run_stream(
             stream.writeStream.foreachBatch(txlog.foreach_batch_sink(root))
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     write_input("b0.json", range(5))
     run_once()
@@ -187,8 +186,6 @@ def test_stream_source_reads_only_committed_versions(spark, tmp_path):
     """The txlogstream source sees committed versions only: an orphan
     parquet directory in data/ (in-flight writer) contributes nothing, and
     a second run after a new commit picks up exactly the delta."""
-    import time
-
     root = str(tmp_path / "t")
     txlog.append_table(_df(spark, 0, 10), root)
     # orphan data files: written but never committed (crashed writer)
@@ -200,7 +197,7 @@ def test_stream_source_reads_only_committed_versions(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def drain():
-        q = (
+        run_stream(
             spark.readStream.format("txlogstream")
             .option("path", root)
             .load()
@@ -208,17 +205,7 @@ def test_stream_source_reads_only_committed_versions(spark, tmp_path):
             .outputMode("append")
             .option("path", out)
             .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
         )
-        # Python stream readers lack availableNow: wait until the head is
-        # consumed (no more available data), then stop
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if q.lastProgress is not None and not q.status["isDataAvailable"]:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
         return spark.read.parquet(out).count()
 
     assert drain() == 10  # orphan rows invisible
@@ -701,8 +688,6 @@ def test_merge_update_may_not_assign_keys(spark, tmp_path):
 def test_cdf_stream_source_streams_captured_changes(spark, tmp_path):
     """txlogcdf streams append versions as inserts and merge versions from
     their captured change files; an uncaptured overwrite fails loudly."""
-    import time
-
     root = str(tmp_path / "cdfs")
     txlog.append_table(
         spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"), root
@@ -716,26 +701,14 @@ def test_cdf_stream_source_streams_captured_changes(spark, tmp_path):
         delete_when="s.is_delete",
     )
     txlog.register_cdf_stream_source(spark)
-
-    def drain(q):
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if q.lastProgress is not None and not q.status["isDataAvailable"]:
-                break
-            time.sleep(0.25)
-        q.stop()
-        q.awaitTermination()
-
-    q = (
+    run_stream(
         spark.readStream.format("txlogcdf")
         .option("path", root)
         .load()
         .writeStream.format("memory")
         .queryName("sg_cdf_test")
         .outputMode("append")
-        .start()
     )
-    drain(q)
     got = sorted(
         (r["_commit_version"], r["_change_type"], r["k"], r["v"])
         for r in spark.table("sg_cdf_test").collect()
@@ -757,23 +730,15 @@ def test_cdf_stream_source_streams_captured_changes(spark, tmp_path):
 
     # an overwrite WITHOUT captured changes must fail the stream, not drop rows
     txlog.compact_table(spark, root)
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    q2 = (
-        spark.readStream.format("txlogcdf")
-        .option("path", root)
-        .load()
-        .writeStream.format("memory")
-        .queryName("sg_cdf_test2")
-        .outputMode("append")
-        .start()
-    )
     with pytest.raises(StreamingQueryException, match="no captured change"):
-        try:
-            drain(q2)
-        except Exception:
-            raise
-        q2.awaitTermination()
+        run_stream(
+            spark.readStream.format("txlogcdf")
+            .option("path", root)
+            .load()
+            .writeStream.format("memory")
+            .queryName("sg_cdf_test2")
+            .outputMode("append")
+        )
 
 
 def test_merge_prunes_untouched_files(spark, tmp_path):
@@ -1008,8 +973,6 @@ def test_stream_sources_nullfill_across_evolution(spark, tmp_path):
     """Both Python stream readers map parquet columns BY NAME against the
     log schema: pre-evolution append versions stream with the widened
     schema, null-filling the new column (positional mapping would shear)."""
-    import time
-
     root = str(tmp_path / "sev")
     txlog.append_table(
         spark.createDataFrame([(1, 10)], "k long, v long"), root
@@ -1020,26 +983,14 @@ def test_stream_sources_nullfill_across_evolution(spark, tmp_path):
         allow_add_columns=True,
     )
     txlog.register_stream_source(spark)
-
-    def drain(q):
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if q.lastProgress is not None and not q.status["isDataAvailable"]:
-                break
-            time.sleep(0.25)
-        q.stop()
-        q.awaitTermination()
-
-    q = (
+    run_stream(
         spark.readStream.format("txlogstream")
         .option("path", root)
         .load()
         .writeStream.format("memory")
         .queryName("sg_sev")
         .outputMode("append")
-        .start()
     )
-    drain(q)
     got = sorted(
         (r["k"], r["v"], r["tag"]) for r in spark.table("sg_sev").collect()
     )
@@ -1651,8 +1602,6 @@ def test_stream_source_coerces_across_type_widening(spark, tmp_path):
     """txlogstream across an allow_widen_types promotion: pre-evolution
     int/float values coerce to the log-owned bigint/double schema through
     the Python DataSource row path — no reader crash, no value drift."""
-    import time
-
     root = str(tmp_path / "t")
     narrow = spark.range(5).select(
         F.col("id").cast("int").alias("k"), F.col("id").cast("float").alias("v")
@@ -1664,18 +1613,12 @@ def test_stream_source_coerces_across_type_widening(spark, tmp_path):
     txlog.append_table(wide, root, allow_widen_types=True)
     txlog.register_stream_source(spark)
     got = []
-    q = (
+    run_stream(
         spark.readStream.format("txlogstream")
         .option("path", root)
         .load()
         .writeStream.foreachBatch(lambda df, bid: got.extend(df.collect()))
-        .trigger(processingTime="1 second")
-        .start()
     )
-    deadline = time.time() + 60
-    while time.time() < deadline and len(got) < 8:
-        time.sleep(1)
-    q.stop()
     assert sorted((r["k"], r["v"]) for r in got) == [(i, float(i)) for i in range(8)]
 
 
@@ -2029,8 +1972,6 @@ def test_stream_source_over_partitioned_table(spark, tmp_path):
     partition column with an INFERRED dictionary type (numeric-looking
     values infer int32), and the reader must cast it back to the LOG
     schema's type so the streamed rows equal the batch snapshot."""
-    import time
-
     root = str(tmp_path / "pts")
     # numeric-LOOKING string partition values: the inference trap
     df = spark.range(0, 60).selectExpr(
@@ -2039,7 +1980,7 @@ def test_stream_source_over_partitioned_table(spark, tmp_path):
     txlog.append_table(df, root, partition_by=["g"])
     txlog.register_stream_source(spark)
     out = str(tmp_path / "out")
-    q = (
+    run_stream(
         spark.readStream.format("txlogstream")
         .option("path", root)
         .load()
@@ -2047,15 +1988,7 @@ def test_stream_source_over_partitioned_table(spark, tmp_path):
         .outputMode("append")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
     )
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination()
     got = spark.read.parquet(out)
     assert got.count() == 60
     assert dict(got.dtypes)["g"] == "string"
@@ -2085,13 +2018,10 @@ def test_foreach_batch_sink_inherits_partitioning(spark, tmp_path):
         )
     )
     stream = spark.readStream.schema("id int, g string, v int").json(str(src))
-    q = (
+    run_stream(
         stream.writeStream.foreachBatch(txlog.foreach_batch_sink(root))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     assert txlog.read_table(spark, root).count() == 9
     last = txlog._list_entries(root)[-1]
     assert last.get("partition_by") == ["g"]
@@ -2294,8 +2224,6 @@ def test_stream_source_over_date_partitioned_table(spark, tmp_path):
     partition column back as strings; the reader must build the Arrow
     target from the LOG schema (date32) so streamed rows type-match the
     batch snapshot (ADVICE r6: only string/int partitions were covered)."""
-    import time
-
     root = str(tmp_path / "dts")
     df = spark.range(0, 30).selectExpr(
         "id AS k",
@@ -2305,7 +2233,7 @@ def test_stream_source_over_date_partitioned_table(spark, tmp_path):
     txlog.append_table(df, root, partition_by=["d"])
     txlog.register_stream_source(spark)
     out = str(tmp_path / "out")
-    q = (
+    run_stream(
         spark.readStream.format("txlogstream")
         .option("path", root)
         .load()
@@ -2313,15 +2241,7 @@ def test_stream_source_over_date_partitioned_table(spark, tmp_path):
         .outputMode("append")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
     )
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if q.lastProgress is not None and not q.status["isDataAvailable"]:
-            break
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination()
     got = spark.read.parquet(out)
     assert got.count() == 30
     assert dict(got.dtypes)["d"] == "date"
@@ -2714,8 +2634,6 @@ def test_column_mapping_partitioned(spark, tmp_path):
 def test_column_mapping_streams(spark, tmp_path):
     """txlogstream and txlogcdf across a rename: physical-named files
     resolve through the mapping, rename entries stream zero change rows."""
-    import time
-
     root = str(tmp_path / "cstr")
     txlog.append_table(
         spark.range(0, 30).selectExpr("id AS k", "id * 2 AS v"), root
@@ -2727,18 +2645,8 @@ def test_column_mapping_streams(spark, tmp_path):
     txlog.update_where_mor(spark, root, {"val": "val + 1"}, "k = 5")
     txlog.register_stream_source(spark)
     txlog.register_cdf_stream_source(spark)
-
-    def drain(q):
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if q.lastProgress is not None and not q.status["isDataAvailable"]:
-                break
-            time.sleep(0.3)
-        q.stop()
-        q.awaitTermination()
-
     out = str(tmp_path / "out")
-    q = (
+    run_stream(
         spark.readStream.format("txlogstream")
         .option("path", root)
         .load()
@@ -2746,9 +2654,7 @@ def test_column_mapping_streams(spark, tmp_path):
         .outputMode("append")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ck1"))
-        .start()
     )
-    drain(q)
     got = spark.read.parquet(out)
     # append-only stream contract: the MoR update's POSTIMAGE row streams
     # as a new append; the DV'd-out preimage (already streamed from v0)
@@ -2758,7 +2664,7 @@ def test_column_mapping_streams(spark, tmp_path):
         got.agg(F.sum("val")).first()[0]
         == sum(2 * k for k in range(60)) + (2 * 5 + 1)
     )
-    q = (
+    run_stream(
         spark.readStream.format("txlogcdf")
         .option("path", root)
         .load()
@@ -2767,9 +2673,7 @@ def test_column_mapping_streams(spark, tmp_path):
         .writeStream.format("memory")
         .queryName("cm_cdf")
         .outputMode("complete")
-        .start()
     )
-    drain(q)
     rows = {
         (r["_commit_version"], r["_change_type"]): r["n"]
         for r in spark.table("cm_cdf").collect()
