@@ -17,6 +17,20 @@ set, ``append`` extends it.  A snapshot is therefore just
 ``spark.read.parquet(*files)`` — every Spark optimization (pushdown,
 pruning, AQE) applies untouched.
 
+Encoding policy: every parquet file txlog writes (data, deletion vectors,
+change files) goes through ``_write_files``.  Streaming sink batches
+(``foreach_batch_sink``, ``foreach_batch_wap_sink``) are written with
+Parquet dictionaries off and v2 data pages, so integers are
+DELTA_BINARY_PACKED and strings DELTA_BYTE_ARRAY: streamed tables carry
+many per-record-unique columns (offsets, keys, ids, timestamps), for which
+the dictionary writers hash every value and then fall back to plain, and
+the delta encodings keep such files small without a dictionary.  Every
+other write keeps Spark's defaults: low-cardinality columns are smaller
+and decode faster with a dictionary, and no workload measures those paths
+yet.  The sink settings are writer options, not
+session conf, so the on-disk format does not depend on how the session was
+built.  Readers of sink-written files need the two delta encodings.
+
 ACID story (single filesystem):
 
 * **Atomic commit** — the entry is written to a temp name and
@@ -82,6 +96,12 @@ _VACUUM_RETENTION_SECONDS = 7 * 24 * 3600.0
 # publish retries for commuting appends (data written once, log entry
 # re-pointed at the next version on a claim conflict)
 _APPEND_COMMIT_RETRIES = 5
+
+# the encoding of streaming sink batches (module docstring "Encoding policy")
+_SINK_WRITE_OPTIONS = {
+    "parquet.enable.dictionary": "false",
+    "parquet.writer.version": "v2",
+}
 
 
 class TxLogConflict(RuntimeError):
@@ -361,10 +381,9 @@ def _commit(
         else eff_parts_logical
     )
     # files store PHYSICAL column names (rename/drop never rewrite them)
-    writer = _select_physical(df, mapping).write.mode("overwrite")
-    if eff_parts_phys:
-        writer = writer.partitionBy(*eff_parts_phys)
-    writer.parquet(os.path.join(root, rel))
+    _write_files(
+        _select_physical(df, mapping), os.path.join(root, rel), eff_parts_phys
+    )
 
     part_dtypes = (
         {
@@ -698,6 +717,20 @@ def _select_physical(df: DataFrame, mapping: dict) -> DataFrame:
     if not mapping:
         return df
     return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
+
+
+def _write_files(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    options: dict | None = None,
+) -> None:
+    """Write df as a fresh parquet directory; ``options`` are parquet
+    writer options (the sinks pass ``_SINK_WRITE_OPTIONS``)."""
+    writer = df.write.mode("overwrite").options(**(options or {}))
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
 def _read_dirs_pinned(spark, root: str, entries: list[dict], dirs, stored):
@@ -1124,10 +1157,9 @@ def write_audit_publish(
     # column mapping: staged files store PHYSICAL names like any commit;
     # table_parts is already physical (entries record it that way)
     mapping = _replay_mapping(entries)
-    writer = _select_physical(df, mapping).write.mode("overwrite")
-    if table_parts:
-        writer = writer.partitionBy(*table_parts)
-    writer.parquet(os.path.join(root, rel))
+    _write_files(
+        _select_physical(df, mapping), os.path.join(root, rel), table_parts
+    )
 
     # AUDIT the staged files themselves (not the caller's plan): what was
     # actually written is what gets validated — read physical, rename back
@@ -1575,9 +1607,10 @@ def delete_where_mor(
     rel_dv = _write_dv(root, matched)
     # write-time CDF capture: the deleted rows ARE the change set
     ch_dir = _changes_path(root, current + 1)
-    matched.select(*data_cols).withColumn(
-        "_change_type", F.lit("delete")
-    ).write.mode("overwrite").parquet(ch_dir)
+    _write_files(
+        matched.select(*data_cols).withColumn("_change_type", F.lit("delete")),
+        ch_dir,
+    )
     entry = {
         "version": current + 1,
         "op": "delete_mor",
@@ -1655,9 +1688,12 @@ def _write_dv(root: str, matched: DataFrame) -> str:
     from pyspark.sql import functions as F
 
     rel_dv = os.path.join(_DV_DIR, uuid.uuid4().hex + ".parquet")
-    matched.select(
-        F.col("__dvf").alias("file"), F.col("__dvp").cast("bigint").alias("pos")
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, rel_dv))
+    _write_files(
+        matched.select(
+            F.col("__dvf").alias("file"), F.col("__dvp").cast("bigint").alias("pos")
+        ).coalesce(1),
+        os.path.join(root, rel_dv),
+    )
     return rel_dv
 
 
@@ -1699,15 +1735,16 @@ def update_where_mor(
     _enforce_constraints(root, post)
     rel_dv = _write_dv(root, matched)
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    _select_physical(post, _replay_mapping(_list_entries(root))).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, rel_data))
+    _write_files(
+        _select_physical(post, _replay_mapping(_list_entries(root))),
+        os.path.join(root, rel_data),
+    )
     ch_dir = _changes_path(root, current + 1)
     pre_ch = matched.select(*data_cols).withColumn(
         "_change_type", F.lit("delete")
     )
     post_ch = post.withColumn("_change_type", F.lit("insert"))
-    pre_ch.unionByName(post_ch).write.mode("overwrite").parquet(ch_dir)
+    _write_files(pre_ch.unionByName(post_ch), ch_dir)
     entry = {
         "version": current + 1,
         "op": "update_mor",
@@ -1978,7 +2015,7 @@ def merge_into(
             .unionByName(eff_post.withColumn("_change_type", F.lit("insert")))
             .unionByName(ins.withColumn("_change_type", F.lit("insert")))
         )
-        changes.write.mode("overwrite").parquet(_changes_path(root, version))
+        _write_files(changes, _changes_path(root, version))
     return version, stats
 
 
@@ -2105,9 +2142,10 @@ def merge_into_mor(
     _enforce_constraints(root, new_rows)
     rel_dv = _write_dv(root, vec_rows)
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    _select_physical(new_rows, _replay_mapping(_list_entries(root))).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, rel_data))
+    _write_files(
+        _select_physical(new_rows, _replay_mapping(_list_entries(root))),
+        os.path.join(root, rel_data),
+    )
     ch_dir = _changes_path(root, current + 1)
     # capture LOGICAL changes (merge_into's contract): a no-op assignment
     # is physically vectored + re-appended, but pre == post pairs cancel in
@@ -2129,7 +2167,7 @@ def merge_into_mor(
         changes = changes.unionByName(
             ins.withColumn("_change_type", F.lit("insert"))
         )
-    changes.write.mode("overwrite").parquet(ch_dir)
+    _write_files(changes, ch_dir)
     entry = {
         "version": current + 1,
         "op": "merge_mor",
@@ -3211,6 +3249,54 @@ def compact_table(
     )
 
 
+def _sink_prologue(
+    root: str, batch_df: DataFrame, batch_id: int
+) -> tuple[dict, dict] | None:
+    """Per-batch start of the exactly-once sinks.  Lists the log once; a
+    batch id already in it is a crash replay (published or rejected,
+    either way durable) and returns None.  Otherwise checks the batch
+    schema against the table's and returns ``(entry, mapping)``: the
+    append entry the batch will publish, its files still to be written at
+    ``entry["files"][0]``, and the table's column mapping."""
+    entries = _list_entries(root)
+    if any(e.get("batch_id") == batch_id for e in entries):
+        return None
+    if entries:
+        _, schema = _replay(entries, None)
+        if schema is not None and batch_df.schema.simpleString() != schema:
+            raise TxLogSchemaMismatch(
+                f"stream batch schema {batch_df.schema.simpleString()}"
+                f" != table schema {schema}"
+            )
+    os.makedirs(_log_path(root), exist_ok=True)
+    entry = {
+        "version": entries[-1]["version"] + 1 if entries else 0,
+        "op": "append",
+        "files": [os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")],
+        "schema": batch_df.schema.simpleString(),
+        "schema_json": batch_df.schema.json(),
+        "batch_id": batch_id,
+    }
+    part_cols = _table_partition_by(entries)  # physical (entry-recorded)
+    if part_cols:  # partitioned tables stay partitioned under streaming
+        entry["partition_by"] = part_cols
+    return entry, _replay_mapping(entries)
+
+
+def _publish_batch(root: str, phys: DataFrame, entry: dict) -> None:
+    """Publish a sink batch's written files (``phys`` is the batch under
+    physical column names) with the same skipping sidecar as batch
+    commits, through the claim protocol ``_commit`` uses."""
+    part_dtypes = {
+        c: phys.schema[c].dataType.simpleString()
+        for c in entry.get("partition_by", [])
+    }
+    entry["stats"] = _collect_part_stats(
+        root, entry["files"][0], part_dtypes or None
+    )
+    _publish_entry(root, entry["version"], entry)
+
+
 def foreach_batch_sink(root: str):
     """Exactly-once streaming sink: ``writeStream.foreachBatch(
     foreach_batch_sink(root))``.
@@ -3222,49 +3308,18 @@ def foreach_batch_sink(root: str):
     is the txlog twin of Delta's transactional streaming sink."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        entries = _list_entries(root)
-        if any(e.get("batch_id") == batch_id for e in entries):
-            return  # replayed batch: already durable, skip (idempotence)
-        current = entries[-1]["version"] if entries else -1
-        if entries:
-            _, schema = _replay(entries, None)
-            if schema is not None and batch_df.schema.simpleString() != schema:
-                raise TxLogSchemaMismatch(
-                    f"stream batch schema {batch_df.schema.simpleString()}"
-                    f" != table schema {schema}"
-                )
-        os.makedirs(_log_path(root), exist_ok=True)
-        rel = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-        part_cols = _table_partition_by(entries)  # physical (entry-recorded)
-        mapping = _replay_mapping(entries)
-        inv = {v: k for k, v in mapping.items()}
-        writer = _select_physical(batch_df, mapping).write.mode("overwrite")
-        if part_cols:  # partitioned tables stay partitioned under streaming
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(os.path.join(root, rel))
-        version = current + 1
-        part_dtypes = (
-            {
-                c: batch_df.schema[inv.get(c, c)].dataType.simpleString()
-                for c in part_cols
-            }
-            if part_cols
-            else None
+        staged = _sink_prologue(root, batch_df, batch_id)
+        if staged is None:
+            return
+        entry, mapping = staged
+        phys = _select_physical(batch_df, mapping)
+        _write_files(
+            phys,
+            os.path.join(root, entry["files"][0]),
+            entry.get("partition_by"),
+            _SINK_WRITE_OPTIONS,
         )
-        entry = {
-            "version": version,
-            "op": "append",
-            "files": [rel],
-            "schema": batch_df.schema.simpleString(),
-            "schema_json": batch_df.schema.json(),
-            "batch_id": batch_id,
-            # streamed batches get the same skipping sidecar as batch commits
-            "stats": _collect_part_stats(root, rel, part_dtypes),
-        }
-        if part_cols:
-            entry["partition_by"] = part_cols
-        # shared claim-protocol publisher: same ownership check as _commit
-        _publish_entry(root, version, entry)
+        _publish_batch(root, phys, entry)
 
     return _sink
 
@@ -3289,71 +3344,42 @@ def foreach_batch_wap_sink(root: str, expectations: list):
             evaluate,
         )
 
-        entries = _list_entries(root)
-        committed = {e.get("batch_id") for e in entries if "batch_id" in e}
-        if batch_id in committed:
-            return  # replayed batch (published OR rejected): durable, skip
-        current = entries[-1]["version"] if entries else -1
-        if entries:
-            _, schema = _replay(entries, None)
-            if schema is not None and batch_df.schema.simpleString() != schema:
-                raise TxLogSchemaMismatch(
-                    f"stream batch schema {batch_df.schema.simpleString()}"
-                    f" != table schema {schema}"
-                )
-        part_cols = _table_partition_by(entries)  # physical (entry-recorded)
-        mapping = _replay_mapping(entries)
-        os.makedirs(_log_path(root), exist_ok=True)
-        rel = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-        writer = _select_physical(batch_df, mapping).write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(os.path.join(root, rel))
+        staged = _sink_prologue(root, batch_df, batch_id)
+        if staged is None:
+            return
+        entry, mapping = staged
+        rel = entry["files"][0]
+        phys = _select_physical(batch_df, mapping)
+        _write_files(
+            phys,
+            os.path.join(root, rel),
+            entry.get("partition_by"),
+            _SINK_WRITE_OPTIONS,
+        )
         spark = batch_df.sparkSession
-        staged = _select_logical(
+        staged_df = _select_logical(
             spark.read.schema(_phys_struct(batch_df.schema, mapping)).parquet(
                 os.path.join(root, rel)
             ),
             batch_df.schema,
             mapping,
         )
-        report = evaluate(staged, expectations).collect()
+        report = evaluate(staged_df, expectations).collect()
         failed = [r["expectation"] for r in report if r["passed"] == 0]
-        version = current + 1
         if failed:
             shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
-            entry = {
-                "version": version,
+            reject = {
+                "version": entry["version"],
                 "op": "audit_reject",
                 "files": [],
-                "schema": batch_df.schema.simpleString(),
-                "schema_json": batch_df.schema.json(),
+                "schema": entry["schema"],
+                "schema_json": entry["schema_json"],
                 "batch_id": batch_id,
                 "failed_expectations": failed,
             }
-            _publish_entry(root, version, entry)
+            _publish_entry(root, entry["version"], reject)
             return
-        inv = {v: k for k, v in mapping.items()}
-        part_dtypes = (
-            {
-                c: batch_df.schema[inv.get(c, c)].dataType.simpleString()
-                for c in part_cols
-            }
-            if part_cols
-            else None
-        )
-        entry = {
-            "version": version,
-            "op": "append",
-            "files": [rel],
-            "schema": batch_df.schema.simpleString(),
-            "schema_json": batch_df.schema.json(),
-            "batch_id": batch_id,
-            "stats": _collect_part_stats(root, rel, part_dtypes),
-        }
-        if part_cols:
-            entry["partition_by"] = part_cols
-        _publish_entry(root, version, entry)
+        _publish_batch(root, phys, entry)
 
     return _sink
 

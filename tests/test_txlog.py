@@ -123,6 +123,160 @@ def test_foreach_batch_sink_exactly_once_across_restart(spark, tmp_path):
     assert txlog.read_table(spark, root).count() == last.count()
 
 
+def _chunk_encodings(root):
+    """{(file relative to root, column path): (physical type, encodings)}
+    for every column chunk of every parquet file under root."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True):
+        if not os.path.isfile(f):
+            continue
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                col = md.row_group(rg).column(ci)
+                out[(os.path.relpath(f, root), col.path_in_schema)] = (
+                    col.physical_type,
+                    set(col.encodings),
+                )
+    return out
+
+
+def test_sink_batches_skip_dictionaries_other_writes_keep_defaults(
+    spark, tmp_path
+):
+    """Streaming sink batches (``foreach_batch_sink``,
+    ``foreach_batch_wap_sink``) carry no dictionary-encoded column chunk
+    and their 64-bit integers are DELTA_BINARY_PACKED (v2 pages).  Every
+    other file txlog writes -- an append commit, a WAP commit and a
+    merge-on-read MERGE's data, deletion-vector and change files -- keeps
+    Spark's defaults: no delta encodings, dictionaries on."""
+    from kafka_connect_expand_json_transform_spark.operators.expectations import (
+        Expectation,
+    )
+
+    root = str(tmp_path / "t")
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id", "CAST(id % 3 AS STRING) AS s", "CAST(id * 2 AS INT) AS v"
+        )
+
+    suite = [Expectation("v_nonneg", "predicate", params={"sql": "v >= 0"})]
+    txlog.append_table(rows(0, 200), root)
+    txlog.foreach_batch_sink(root)(rows(200, 400), batch_id=0)
+    txlog.foreach_batch_wap_sink(root, suite)(rows(400, 600), batch_id=1)
+    txlog.write_audit_publish(spark, rows(600, 800), root, [])
+    txlog.merge_into_mor(
+        spark, root, rows(150, 250).withColumn("v", F.col("v") + 1), ["id"]
+    )
+    sink_dirs = {
+        f for e in txlog._list_entries(root) if "batch_id" in e for f in e["files"]
+    }
+    assert len(sink_dirs) == 2
+    chunks = _chunk_encodings(root)
+    sink = {k: v for k, v in chunks.items() if os.path.dirname(k[0]) in sink_dirs}
+    other = {k: v for k, v in chunks.items() if k not in sink}
+    assert {os.path.dirname(f) for f, _ in sink} == sink_dirs
+    assert {f.split(os.sep)[0] for f, _ in other} == {"data", "_dv", "_changes"}
+    dictionary = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
+    delta = {"DELTA_BINARY_PACKED", "DELTA_BYTE_ARRAY"}
+    assert {k for k, (_, enc) in sink.items() if enc & dictionary} == set()
+    assert {c for (_, c), (phys, _) in sink.items() if phys == "INT64"} == {"id"}
+    assert {
+        k
+        for k, (phys, enc) in sink.items()
+        if phys == "INT64" and "DELTA_BINARY_PACKED" not in enc
+    } == set()
+    assert {k for k, (_, enc) in other.items() if enc & delta} == set()
+    low_card = {k: enc for k, (_, enc) in other.items() if k[1] in ("s", "file")}
+    assert low_card and all(enc & dictionary for enc in low_card.values())
+    assert txlog.read_table(spark, root).count() == 800
+
+
+def test_sink_written_files_read_in_duckdb_with_stats(spark, tmp_path):
+    """v2 pages stay readable outside Spark: DuckDB over the files of a
+    sink-written table with a nested column agrees with ``read_table``,
+    and the entry's stats sidecar still holds the flat columns' min/max
+    (read from the v2 footers)."""
+    import glob
+
+    import duckdb
+
+    root = str(tmp_path / "t")
+    sink = txlog.foreach_batch_sink(root)
+    for b in range(2):
+        sink(
+            spark.range(b * 500, (b + 1) * 500).selectExpr(
+                "id",
+                "concat('u', id) AS name",
+                "CAST(id AS DOUBLE) / 4 AS price",
+                "array(named_struct('qty', CAST(id % 7 AS INT)),"
+                " named_struct('qty', 1)) AS items",
+            ).repartition(2),
+            batch_id=b,
+        )
+    want = txlog.read_table(spark, root).selectExpr(
+        "count(*) AS n",
+        "sum(id) AS ids",
+        "sum(aggregate(items, 0L, (a, x) -> a + x.qty)) AS qty",
+    ).first()
+    files = sorted(
+        glob.glob(os.path.join(root, "data", "*.parquet", "*.parquet"))
+    )
+    got = duckdb.connect().execute(
+        "SELECT count(*), sum(id), sum(list_sum(list_transform(items, x -> x.qty)))"
+        " FROM read_parquet(?)",
+        [files],
+    ).fetchone()
+    assert tuple(got) == (want["n"], want["ids"], want["qty"]) == (1000, 499500, 3997)
+    for b, e in enumerate(txlog._list_entries(root)):
+        stats = e["stats"]
+        assert len(stats) == 2
+        assert min(s["id"][0] for s in stats.values()) == b * 500
+        assert max(s["id"][1] for s in stats.values()) == b * 500 + 499
+        for s in stats.values():
+            assert set(s) == {"id", "name", "price"}  # nested items skipped
+
+
+def test_txlog_writes_parquet_only_through_write_files():
+    """Source scan: ``sources/txlog.py`` creates exactly one DataFrame
+    writer, in ``_write_files``, and that writer writes parquet, so every
+    file txlog writes goes through one place that sets its encoding."""
+    import ast
+    import pathlib
+
+    tree = ast.parse(pathlib.Path(txlog.__file__).read_text())
+    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+
+    def writers(node):
+        # ``df.write`` / ``df.writeTo(...)``; a CALLED ``.write(...)`` is a
+        # file handle's
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Attribute)
+            and (n.attr == "writeTo" or (n.attr == "write" and id(n) not in called))
+        ]
+
+    (fn,) = [
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_write_files"
+    ]
+    assert len(writers(tree)) == len(writers(fn)) == 1
+    assert [
+        n
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "parquet"
+    ]
+
+
 def test_txlog_cdc_apply_roundtrip(spark, tmp_path):
     """MERGE-style CDC apply onto a txlog table: upserts + deletes land as
     one overwrite commit; the pre-merge snapshot stays time-travelable."""
