@@ -140,22 +140,3 @@ def minhash_xxhash(shingles: Column, num_hashes: int) -> Column:
             for i in range(num_hashes)
         ]
     )
-
-
-def simhash64_from_hashes(hashed: Column | str) -> Column:
-    """SimHash from an already-hashed array<bigint> column (one xxhash64 per
-    token). Keep ``hashed`` an attribute: it is referenced once per bit."""
-    hashed = F.col(hashed) if isinstance(hashed, str) else hashed
-    bits = []
-    for b in range(64):
-        votes = F.aggregate(
-            hashed,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bit = F.when(votes > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bits.append(F.shiftleft(bit, b))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out

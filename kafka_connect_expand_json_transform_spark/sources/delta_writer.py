@@ -35,6 +35,7 @@ import time as _time
 
 from pyspark.sql import DataFrame
 
+from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
     _list_log,
     _log_dir,
@@ -1277,23 +1278,14 @@ def delta_merge_into(
     insert: bool = True,
     insert_when=None,
 ) -> tuple[int, dict]:
-    """Standalone MERGE INTO on a Delta table, jar-free (r10; clause
-    semantics match ``txlog.merge_into`` and Delta's own MERGE): target
-    rows equi-match ``source`` on the ``on`` key columns, then —
-
-    * matched + ``delete_when`` (Column / SQL over the ``t.`` / ``s.``
-      namespaces) -> deleted;
-    * matched otherwise -> ``update`` applied ("all" = replace every
-      non-key target column the source carries; dict = column -> SQL /
-      Column over ``t.`` / ``s.``; None = keep);
-    * source-only -> inserted when ``insert`` and ``insert_when`` (SQL
-      MERGE's WHEN NOT MATCHED AND <cond>); target columns the source
-      lacks come in NULL;
-    * target-only -> kept.
-
-    A duplicate-keyed source refuses up front (matched rows would be
-    ambiguous — Delta's own rule).  Returns
-    ``(version, {"inserted": i, "updated": u, "deleted": d})``.
+    """Standalone MERGE INTO on a Delta table, jar-free (r10).  The
+    clauses (``update`` / ``delete_when`` / ``insert`` / ``insert_when``),
+    the refusals and the stats are the shared MERGE semantics documented
+    in ``sources/_merge.py`` — those of ``txlog.merge_into`` and Delta's
+    own MERGE.  ``update="all"`` never assigns partition columns, and an
+    explicit assignment to one refuses.  Returns ``(version,
+    {"inserted": i, "updated": u, "deleted": d})``; a merge that matches
+    and inserts nothing commits no version.
 
     Partial-CoW economics: only files CONTAINING a matched row are
     rewritten (one semi-join at file grain finds them; footer-stats
@@ -1303,10 +1295,13 @@ def delta_merge_into(
     affected files' DVs; column-mapped ('name'/'id') and partitioned
     tables restage physical names / hive layout via the shared staging
     path; CDF-enabled tables commit delete / update_preimage /
-    update_postimage / insert change rows as cdc actions.  Scale: one
-    shuffle equi-join on the merge keys (a small source broadcasts via
-    AQE); survivors + inserts stage as ONE job; nothing data-sized is
-    collected."""
+    update_postimage / insert change rows as cdc actions.  Inserted rows
+    compute (or validate) generated columns, and non-key identity columns
+    get fresh ids past the high-water mark, which the commit's metaData
+    advances; a source carrying a non-key identity column refuses.
+    Scale: one shuffle equi-join on the merge keys (a small source
+    broadcasts via AQE); survivors + inserts stage as ONE job; nothing
+    data-sized is collected."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -1326,172 +1321,68 @@ def delta_merge_into(
     phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
                for f in schema.fields}
     part_cols = list(meta.get("partitionColumns") or [])
-    names = [f.name for f in schema.fields]
-    for k in on:
-        if k not in names or k not in source.columns:
-            raise ValueError(
-                f"merge key {k!r} missing from target or source"
-            )
-    if isinstance(update, dict):
-        for c in update:
-            if c not in names:
-                raise ValueError(f"unknown column {c!r} in merge update")
-            if c in on:
-                raise ValueError(
-                    f"merge update may not assign key column {c!r} (a "
-                    "key rewrite is a delete+insert, not an update)"
-                )
-            if c in part_cols:
-                raise ValueError(
-                    "updating partition columns is not supported (rows "
-                    "would move between partitions)"
-                )
-    # ONE source pass serves the duplicate-key guard AND the prune range
-    # (the first merge key is a group key, so its min/max over groups
-    # equals its min/max over rows — the old code scanned source twice)
-    mm = source.groupBy(*on).agg(F.count("*").alias("__c")).agg(
-        F.max("__c").alias("mx"),
-        F.min(F.col(on[0])).alias("lo"),
-        F.max(F.col(on[0])).alias("hi"),
-    ).first()
-    if mm["mx"] is not None and mm["mx"] > 1:
+    plan = MergePlan(
+        source, on, schema, update=update, delete_when=delete_when,
+        insert=insert, insert_when=insert_when, partition_cols=part_cols,
+    )
+    id_cols = _identity_cols(schema)
+    carried_src = [c for c in id_cols if c in source.columns and c not in on]
+    if carried_src:
         raise ValueError(
-            "source has duplicate merge keys; matched rows ambiguous"
+            f"source carries IDENTITY column(s) {carried_src} that "
+            "are not merge keys; drop them — inserts get fresh ids"
         )
+    hints = plan.scan_source()
 
-    # footer-stats candidate pruning on the first integer merge key:
-    # files whose [min, max] cannot hold any source key are never read
-    # (sound: a pruned file can contain no matched row, and its rows are
-    # exactly the target-only-kept clause)
+    # footer-stats candidate pruning: files whose [min, max] cannot hold
+    # any source key are never read (sound: a pruned file can contain no
+    # matched row, and its rows are exactly the target-only-kept clause)
     candidates = dict(files)
-    if files:
-        k0 = on[0]
-        if (mm["lo"] is not None and isinstance(mm["lo"], int)
-                and isinstance(mm["hi"], int)
-                and not isinstance(mm["lo"], bool)):
-            hints = [(k0, ">=", mm["lo"]), (k0, "<=", mm["hi"])]
-            types_of = {f.name: f.dataType for f in schema.fields}
-            candidates = {
-                rel: add for rel, add in files.items()
-                if _stats_keep(add, hints, part_cols, phys_of, types_of)
-            }
+    if files and hints:
+        types_of = {f.name: f.dataType for f in schema.fields}
+        candidates = {
+            rel: add for rel, add in files.items()
+            if _stats_keep(add, hints, part_cols, phys_of, types_of)
+        }
 
     nonce = _time.time_ns()
     now_ms = int(_time.time() * 1000)
     version = head + 1
-    # keep EXTRA source columns (clause expressions may reference them,
-    # e.g. a CDC is_delete flag); inserts take only target-schema columns
-    src = source
 
     if candidates:
         scan = _cow_scan(spark, root, candidates, meta, schema, mode,
                          phys_of, part_cols)
         tgt = scan(candidates)
         # file-grain hit discovery: one semi-join, one row per file that
-        # CONTAINS a matched key (bounded collect)
+        # CONTAINS a matched key (bounded collect).  No .distinct() on the
+        # source keys: the duplicate-key guard proves them unique, and a
+        # LEFT SEMI join never multiplies
         abs_of = {os.path.abspath(os.path.join(root, rel)): rel
                   for rel in candidates}
-        # no .distinct() on the source keys: the duplicate-key guard
-        # above proves they are already unique, and a LEFT SEMI join
-        # never multiplies — the old distinct was a pure extra aggregate
         hit_files = (
             tgt.select("__f", *on)
-            .join(src.select(*on), on, "left_semi")
+            .join(source.select(*on), on, "left_semi")
             .select("__f").distinct().collect()
         )
         affected = sorted(abs_of[r["__f"]] for r in hit_files)
     else:
         affected = []
 
-    t_rows = (scan(affected).drop("__f") if affected
+    plan.join(scan(affected).drop("__f") if affected
               else spark.createDataFrame([], schema))
-    t = t_rows.withColumn("_in_t", F.lit(True)).alias("t")
-    sj = src.withColumn("_in_s", F.lit(True)).alias("s")
-    joined = t.join(
-        sj, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
-        "full_outer",
-    ).localCheckpoint(eager=False)
-    matched = F.coalesce(F.col("t._in_t"), F.lit(False)) & F.coalesce(
-        F.col("s._in_s"), F.lit(False)
-    )
-    s_only = F.coalesce(F.col("s._in_s"), F.lit(False)) & ~F.coalesce(
-        F.col("t._in_t"), F.lit(False)
-    )
-    if delete_when is None:
-        delc = F.lit(False)
-    else:
-        delc = (F.expr(delete_when) if isinstance(delete_when, str)
-                else delete_when)
-    delc = F.coalesce(delc, F.lit(False))
-    if insert_when is None:
-        ins_cond = F.lit(insert)
-    else:
-        insw = (F.expr(insert_when) if isinstance(insert_when, str)
-                else insert_when)
-        ins_cond = F.lit(insert) & F.coalesce(insw, F.lit(False))
-
-    if update == "all":
-        assignments = {
-            c: F.col(f"s.{c}") for c in names
-            if c not in on and c in src.columns and c not in part_cols
-        }
-    elif update is None:
-        assignments = {}
-    else:
-        assignments = {
-            c: (F.expr(v) if isinstance(v, str) else v)
-            for c, v in update.items()
-        }
-
-    counts = joined.agg(
-        F.sum((matched & delc).cast("long")).alias("deleted"),
-        F.sum((matched & ~delc).cast("long")).alias("matched_kept"),
-        F.sum((s_only & ins_cond).cast("long")).alias("inserted"),
-    ).first()
-    stats = {
-        "inserted": int(counts["inserted"] or 0),
-        "updated": int(counts["matched_kept"] or 0) if assignments else 0,
-        "deleted": int(counts["deleted"] or 0),
-    }
+    stats = plan.stats()
     if not affected and stats["inserted"] == 0:
         return head, stats
 
-    id_cols = _identity_cols(schema)
-    if id_cols:
-        if any(c in assignments for c in id_cols):
-            raise ValueError(
-                f"assignment to IDENTITY column(s) "
-                f"{sorted(set(assignments) & set(id_cols))} refused"
-            )
-        carried_src = [c for c in id_cols
-                       if c in src.columns and c not in on]
-        if carried_src:
-            raise ValueError(
-                f"source carries IDENTITY column(s) {carried_src} that "
-                "are not merge keys; drop them — inserts get fresh ids"
-            )
-    out_cols = []
     by_name = {f.name: f for f in schema.fields}
-    for c in names:
-        dt = by_name[c].dataType
-        insert_val = (F.col(f"s.{c}")
-                      if c in src.columns or c in on else F.lit(None))
-        col = F.when(s_only, insert_val)
-        if c in assignments:
-            col = col.when(matched, assignments[c])
-        out_cols.append(col.otherwise(F.col(f"t.{c}")).cast(dt).alias(c))
-    kept_matched = joined.where(
-        ~(matched & delc) & ~F.coalesce(F.col("s._in_s"), F.lit(False))
-        | (matched & ~delc)
-    ).select(*out_cols)
-    ins_rows = joined.where(s_only & ins_cond).select(*out_cols)
+    ins_rows = plan.inserts()
     # generated columns on INSERTED rows (r10): compute when the source
     # omits them, validate when it provides them — the same contract as
     # append (matched rows keep their already-valid target values, and
     # assignments on generated tables were refused above)
     for c, expr in sorted(_generated_cols(schema).items()):
         dt = by_name[c].dataType
-        if c in src.columns:
+        if c in source.columns:
             if ins_rows.where(
                 ~F.col(c).eqNullSafe(F.expr(expr).cast(dt))
             ).limit(1).count():
@@ -1517,7 +1408,7 @@ def delta_merge_into(
         )
         if n_assigned:
             id_meta_update[c] = base + info["step"] * (n_assigned - 1)
-    rewritten = kept_matched.unionByName(ins_rows)
+    rewritten = plan.kept().unionByName(ins_rows)
     _enforce_constraints(rewritten, _active_constraints(meta), "merge")
 
     stage_df, stage_parts = rewritten, part_cols
@@ -1548,29 +1439,10 @@ def delta_merge_into(
     if str((meta.get("configuration") or {}).get(
         "delta.enableChangeDataFeed", "false"
     )).lower() == "true":
-        tcols = [F.col(f"t.{c}").alias(c) for c in names]
-        del_pre = joined.where(matched & delc).select(*tcols)
-        if assignments:
-            upd_pre = joined.where(matched & ~delc).select(*tcols)
-            upd_post = joined.where(matched & ~delc).select(*out_cols)
-            # no-op assignments (post == pre) are not changes
-            eff_pre = upd_pre.exceptAll(upd_post).withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            eff_post = upd_post.exceptAll(upd_pre).withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-        else:
-            eff_pre = del_pre.limit(0).withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            eff_post = eff_pre
-        ins = ins_rows  # identity-assigned inserts, same rows as staged
-        cdc_df = (
-            del_pre.withColumn("_change_type", F.lit("delete"))
-            .unionByName(eff_pre).unionByName(eff_post)
-            .unionByName(ins.withColumn("_change_type", F.lit("insert")))
-        )
+        # the identity-assigned inserts, the same rows as staged
+        cdc_df = plan.changes(ins_rows, labels=(
+            "delete", "update_preimage", "update_postimage", "insert"
+        ))
         cdc_parts = part_cols
         if mode != "none":
             cdc_df, cdc_parts = _to_physical(

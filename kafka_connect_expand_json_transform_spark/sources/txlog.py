@@ -73,6 +73,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CHANGES_DIR = "_changes"
@@ -1831,30 +1833,13 @@ def merge_into(
     prune_files: bool = True,
 ) -> tuple[int, dict]:
     """MERGE INTO (Delta-parity upsert) as one copy-on-write OVERWRITE
-    version: equi-match target rows against ``source`` on the ``on`` key
-    columns, then per clause —
-
-    * matched + ``delete_when`` (Column / SQL string over the joined
-      ``t.*`` / ``s.*`` namespaces) → row deleted;
-    * matched otherwise → ``update`` applied: ``"all"`` replaces every
-      non-key target column that the source also carries with the source
-      value; a dict maps target column → Column / SQL expression (again
-      over ``t.`` / ``s.``); ``None`` keeps the target row untouched;
-    * source-only → inserted when ``insert`` and, if given, the
-      ``insert_when`` condition (Column / SQL over ``s.*`` — SQL MERGE's
-      ``WHEN NOT MATCHED AND <cond>``; a CDC apply uses it to make
-      deletes of absent keys a no-op instead of resurrecting the row);
-      source columns missing from the target schema are ignored; target
-      columns missing from the source come in as NULL;
-    * target-only → kept.
-
-    Like Delta, a source with duplicate keys would make a matched target
-    row ambiguous, so it raises ``ValueError`` up front.  Three-valued
-    logic: a NULL ``delete_when`` means keep-and-update, mirroring SQL
-    MERGE's WHEN ... AND <cond> clauses.  Concurrency is the log's
-    optimistic protocol — the rewrite commits with ``expected_version``,
-    so a concurrent writer wins and the merge raises ``TxLogConflict``.
-    Returns ``(version, {"inserted": i, "updated": u, "deleted": d})``.
+    version.  The clauses (``update`` / ``delete_when`` / ``insert`` /
+    ``insert_when``), the refusals and the stats are the shared MERGE
+    semantics documented in ``sources/_merge.py``.  Concurrency is the
+    log's optimistic protocol — the rewrite commits with
+    ``expected_version``, so a concurrent writer wins and the merge raises
+    ``TxLogConflict``.  Returns ``(version, {"inserted": i, "updated": u,
+    "deleted": d})``.
 
     Scale: one shuffle equi-join on the merge keys (a small CDC batch
     broadcasts).  With ``prune_files`` (default) the rewrite is PARTIAL
@@ -1863,27 +1848,16 @@ def merge_into(
     wide table rewrites only the overlapping files.  ``capture_changes``
     (default) also writes the touched rows as a per-version change file —
     the CDF path ``read_changes`` and the ``txlogcdf`` stream prefer."""
-    from pyspark.sql import functions as F
-
     entries = _list_entries(root)
     if not entries:
         raise FileNotFoundError(f"no txlog table at {root}")
     current = entries[-1]["version"]
     snap = read_table(spark, root)
-    for k in on:
-        if k not in snap.columns or k not in source.columns:
-            raise ValueError(f"merge key {k!r} missing from target or source")
-    # ONE source pass serves the duplicate-key guard AND the prune range:
-    # the first merge key is a group key, so its min/max over groups equals
-    # its min/max over rows (the old code paid a second full source scan
-    # for the same numbers)
-    mm = source.groupBy(*on).agg(F.count("*").alias("__c")).agg(
-        F.max("__c").alias("mx"),
-        F.min(F.col(on[0])).alias("lo"),
-        F.max(F.col(on[0])).alias("hi"),
-    ).first()
-    if mm["mx"] is not None and mm["mx"] > 1:
-        raise ValueError("source has duplicate merge keys; matched rows ambiguous")
+    plan = MergePlan(
+        source, on, snap.schema, update=update, delete_when=delete_when,
+        insert=insert, insert_when=insert_when,
+    )
+    hint = plan.scan_source()
 
     # FILE PRUNING (partial CoW — the Delta MERGE refinement): data dirs
     # whose footer stats PROVE they hold no key in the source's key range
@@ -1891,101 +1865,22 @@ def merge_into(
     # go through the join.  Sound because a pruned dir can contain no
     # matched row (its rows are exactly the "target-only -> kept" clause)
     # and clause stats over the touched subset equal the global stats.
-    # Gated to integer first-keys: parquet string min/max may be truncated.
     reused_dirs: list[str] = []
-    if prune_files:
-        k0 = on[0]
-        if (
-            mm["lo"] is not None
-            and isinstance(mm["lo"], int)
-            and isinstance(mm["hi"], int)
-            and not isinstance(mm["lo"], bool)
-        ):
-            where = [(k0, ">=", mm["lo"]), (k0, "<=", mm["hi"])]
-            touched_dirs, reused_dirs = _prune_dirs(root, entries, where)
-            if reused_dirs and touched_dirs:
-                # pin the subset read to the LOG's schema: a widened table
-                # whose touched dirs all predate the evolution must still
-                # rewrite (and null-fill) at full width, or the commit's
-                # schema check would refuse the partial rewrite
-                snap = _read_dirs_pinned(
-                    spark, root, entries, touched_dirs, snap.schema
-                )
-            elif reused_dirs:
-                snap = snap.limit(0)  # nothing overlaps: merge is insert-only
+    if prune_files and hint:
+        touched_dirs, reused_dirs = _prune_dirs(root, entries, hint)
+        if reused_dirs and touched_dirs:
+            # pin the subset read to the LOG's schema: a widened table
+            # whose touched dirs all predate the evolution must still
+            # rewrite (and null-fill) at full width, or the commit's
+            # schema check would refuse the partial rewrite
+            snap = _read_dirs_pinned(spark, root, entries, touched_dirs, snap.schema)
+        elif reused_dirs:
+            snap = snap.limit(0)  # nothing overlaps: merge is insert-only
 
-    t = snap.withColumn("_in_t", F.lit(True)).alias("t")
-    s = source.withColumn("_in_s", F.lit(True)).alias("s")
-    # one equi-join, two consumers (clause stats + the CoW rewrite): lazy
-    # localCheckpoint so the stats action materializes it and the rewrite
-    # reads the materialized result instead of re-running the join
-    joined = t.join(
-        s, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on], "full_outer"
-    ).localCheckpoint(eager=False)
-    matched = F.coalesce(F.col("t._in_t"), F.lit(False)) & F.coalesce(
-        F.col("s._in_s"), F.lit(False)
-    )
-    s_only = F.coalesce(F.col("s._in_s"), F.lit(False)) & ~F.coalesce(
-        F.col("t._in_t"), F.lit(False)
-    )
-    if delete_when is None:
-        delc = F.lit(False)
-    else:
-        delc = F.expr(delete_when) if isinstance(delete_when, str) else delete_when
-    delc = F.coalesce(delc, F.lit(False))
-    if insert_when is None:
-        ins_cond = F.lit(insert)
-    else:
-        insw = F.expr(insert_when) if isinstance(insert_when, str) else insert_when
-        ins_cond = F.lit(insert) & F.coalesce(insw, F.lit(False))
-
-    if update == "all":
-        assignments = {
-            c: F.col(f"s.{c}")
-            for c in snap.columns
-            if c not in on and c in source.columns
-        }
-    elif update is None:
-        assignments = {}
-    else:
-        for c in update:
-            if c not in snap.columns:
-                raise ValueError(f"unknown column {c!r} in merge update assignments")
-            if c in on:
-                raise ValueError(
-                    f"merge update may not assign key column {c!r} (a key "
-                    "rewrite is a delete+insert, not an update)"
-                )
-        assignments = {
-            c: F.expr(v) if isinstance(v, str) else v for c, v in update.items()
-        }
-
-    counts = joined.agg(
-        F.sum((matched & delc).cast("long")).alias("deleted"),
-        F.sum((matched & ~delc).cast("long")).alias(
-            "updated" if assignments else "matched_kept"
-        ),
-        F.sum((s_only & ins_cond).cast("long")).alias("inserted"),
-    ).first()
-    stats = {
-        "inserted": counts["inserted"] or 0,
-        "updated": (counts["updated"] if assignments else 0) or 0,
-        "deleted": counts["deleted"] or 0,
-    }
-
-    kept = joined.where(~(matched & delc) & ~(s_only & ~ins_cond))
-    out_cols = []
-    for c in snap.columns:
-        dt = snap.schema[c].dataType
-        insert_val = (
-            F.col(f"s.{c}") if c in source.columns or c in on else F.lit(None)
-        )
-        col = F.when(s_only, insert_val)
-        if c in assignments:
-            col = col.when(matched, assignments[c])
-        out_cols.append(col.otherwise(F.col(f"t.{c}")).cast(dt).alias(c))
+    plan.join(snap)
+    stats = plan.stats()
     version = overwrite_table(
-        kept.select(*out_cols),
+        plan.routed(),
         root,
         expected_version=current,
         extra_files=reused_dirs or None,
@@ -1996,26 +1891,7 @@ def merge_into(
         # AFTER the commit under the committed version's name: a crash in
         # between loses only the change file, and read_changes falls back
         # to the diff for that version — self-healing, never wrong.
-        tcols = [F.col(f"t.{c}").alias(c) for c in snap.columns]
-        del_pre = joined.where(matched & delc).select(*tcols)
-        if assignments:
-            upd_pre = joined.where(matched & ~delc).select(*tcols)
-            upd_post = joined.where(matched & ~delc).select(*out_cols)
-            # no-op assignments (post == pre) are NOT changes; per-group
-            # multiset except keeps capture identical to the snapshot diff
-            eff_pre = upd_pre.exceptAll(upd_post)
-            eff_post = upd_post.exceptAll(upd_pre)
-        else:
-            eff_pre = del_pre.limit(0)
-            eff_post = del_pre.limit(0)
-        ins = joined.where(s_only & ins_cond).select(*out_cols)
-        changes = (
-            del_pre.withColumn("_change_type", F.lit("delete"))
-            .unionByName(eff_pre.withColumn("_change_type", F.lit("delete")))
-            .unionByName(eff_post.withColumn("_change_type", F.lit("insert")))
-            .unionByName(ins.withColumn("_change_type", F.lit("insert")))
-        )
-        _write_files(changes, _changes_path(root, version))
+        _write_files(plan.changes(plan.inserts()), _changes_path(root, version))
     return version, stats
 
 
@@ -2035,139 +1911,39 @@ def merge_into_mor(
     data dir, all in ONE atomic log entry (``op=merge_mor``).  The
     UNMATCHED target rows — at 100 TB, ~all of them — are never read past
     the join, never rewritten, never shuffled: write cost is O(touched +
-    inserted rows), vs the CoW merge's O(overlapping files), with the
-    same clause semantics as :func:`merge_into` (``update`` = "all" /
-    dict / None; ``delete_when``; ``insert``), the same duplicate-key
-    guard, and write-time CDF capture.  Reads pay the accumulated-DV
-    anti-join until a compaction materializes.  Choose CoW
-    (``merge_into``) for read-hot tables and MoR for write-hot ingest —
-    the same trade Delta documents.  Returns ``(version, {"inserted": i,
-    "updated": u, "deleted": d})``."""
+    inserted rows), vs the CoW merge's O(overlapping files).  Clause
+    semantics, refusals, stats and the write-time CDF capture are those of
+    :func:`merge_into` (``sources/_merge.py``), without ``insert_when``.
+    ``update=None`` keeps matched rows IN PLACE: they are not vectored.
+    Reads pay the accumulated-DV anti-join until a compaction
+    materializes.  Choose CoW (``merge_into``) for read-hot tables and MoR
+    for write-hot ingest — the same trade Delta documents.  Returns
+    ``(version, {"inserted": i, "updated": u, "deleted": d})``."""
     import shutil
 
-    from pyspark.sql import functions as F
-
-    for k in on:
-        if k not in source.columns:
-            raise ValueError(f"merge key {k!r} missing from source")
-    # ONE source pass serves the duplicate-key guard AND the source row
-    # count (keys are unique past the guard, so rows == keys; the insert
-    # count below is then pure arithmetic instead of its own job)
-    src_row = source.groupBy(*on).agg(F.count("*").alias("__c")).agg(
-        F.max("__c").alias("mx"), F.sum("__c").alias("n_src")
-    ).first()
-    if src_row["mx"] is not None and src_row["mx"] > 1:
-        raise ValueError("source has duplicate merge keys; matched rows ambiguous")
-    n_source = int(src_row["n_src"] or 0)
-    tagged, data_cols, _, _, current = _mor_matched(spark, root, F.lit(True))
-    for k in on:
-        if k not in data_cols:
-            raise ValueError(f"merge key {k!r} missing from target")
-    dtypes = {
-        f.name: f.dataType for f in tagged.select(*data_cols).schema.fields
-    }
-    t = tagged.alias("t")
-    s = source.alias("s")
-    m = t.join(
-        s, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on], "inner"
-    ).localCheckpoint(eager=False)
-    if delete_when is None:
-        delc = F.lit(False)
-    else:
-        delc = F.expr(delete_when) if isinstance(delete_when, str) else delete_when
-    delc = F.coalesce(delc, F.lit(False))
-    if update == "all":
-        assignments = {
-            c: F.col(f"s.{c}")
-            for c in data_cols
-            if c not in on and c in source.columns
-        }
-    elif update is None:
-        assignments = {}
-    else:
-        for c in update:
-            if c not in data_cols:
-                raise ValueError(f"unknown column {c!r} in merge update assignments")
-            if c in on:
-                raise ValueError(
-                    f"merge update may not assign key column {c!r} (a key "
-                    "rewrite is a delete+insert, not an update)"
-                )
-        assignments = {
-            c: F.expr(v) if isinstance(v, str) else v for c, v in update.items()
-        }
-    # rows leaving their files: deletes always; updates only when there is
-    # something to assign (update=None keeps matched rows IN PLACE — they
-    # are not vectored, the zero-write no-op)
-    vec_cond = delc | F.lit(bool(assignments))
-    vec_rows = m.where(vec_cond)
-    # distinct matched SOURCE keys ride the same aggregate: inserted =
-    # n_source - matched keys (source keys are unique, and a source key
-    # with any NULL component matches nothing, exactly like the anti-join)
-    agg = m.agg(
-        F.sum(delc.cast("long")).alias("deleted"),
-        F.sum((~delc).cast("long")).alias("matched_kept_or_updated"),
-        F.count_distinct(
-            *[F.col(f"s.{k}") for k in on]
-        ).alias("matched_src_keys"),
-    ).first()
-    n_deleted = agg["deleted"] or 0
-    n_updated = (agg["matched_kept_or_updated"] or 0) if assignments else 0
-    tcols = [F.col(f"t.{c}").alias(c) for c in data_cols]
-    post = m.where(~delc).select(
-        *[
-            (assignments[c].cast(dtypes[c]) if c in assignments else F.col(f"t.{c}"))
-            .alias(c)
-            for c in data_cols
-        ]
-    ) if assignments else m.where(F.lit(False)).select(*tcols)
-    ins = (
-        source.join(tagged.select(*on), on, "left_anti").select(
-            *[
-                (F.col(c) if c in source.columns else F.lit(None))
-                .cast(dtypes[c])
-                .alias(c)
-                for c in data_cols
-            ]
-        )
-        if insert
-        else None
+    tagged, data_cols, _, _, current = _mor_matched(spark, root, "true")
+    plan = MergePlan(
+        source, on, tagged.select(*data_cols).schema, update=update,
+        delete_when=delete_when, insert=insert,
     )
-    n_inserted = (
-        n_source - int(agg["matched_src_keys"] or 0)
-        if ins is not None else 0
-    )
+    plan.scan_source()
+    plan.join(tagged, full=False)
+    stats = plan.stats()
+    post = plan.updated()
+    ins = plan.inserts()
     new_rows = post if ins is None else post.unionByName(ins)
     new_rows = _apply_generated(root, new_rows)
     _enforce_constraints(root, new_rows)
-    rel_dv = _write_dv(root, vec_rows)
+    rel_dv = _write_dv(root, plan.touched())
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
     _write_files(
         _select_physical(new_rows, _replay_mapping(_list_entries(root))),
         os.path.join(root, rel_data),
     )
     ch_dir = _changes_path(root, current + 1)
-    # capture LOGICAL changes (merge_into's contract): a no-op assignment
-    # is physically vectored + re-appended, but pre == post pairs cancel in
-    # the snapshot diff, so they are excluded from the capture too
-    del_pre = m.where(delc).select(*tcols)
-    if assignments:
-        upd_pre = m.where(~delc).select(*tcols)
-        eff_pre = upd_pre.exceptAll(post)
-        eff_post = post.exceptAll(upd_pre)
-    else:
-        eff_pre = del_pre.limit(0)
-        eff_post = del_pre.limit(0)
-    changes = (
-        del_pre.withColumn("_change_type", F.lit("delete"))
-        .unionByName(eff_pre.withColumn("_change_type", F.lit("delete")))
-        .unionByName(eff_post.withColumn("_change_type", F.lit("insert")))
-    )
-    if ins is not None:
-        changes = changes.unionByName(
-            ins.withColumn("_change_type", F.lit("insert"))
-        )
-    _write_files(changes, ch_dir)
+    # a no-op assignment is physically vectored + re-appended, but the
+    # capture records LOGICAL changes, like merge_into's
+    _write_files(plan.changes(ins), ch_dir)
     entry = {
         "version": current + 1,
         "op": "merge_mor",
@@ -2184,11 +1960,7 @@ def merge_into_mor(
         shutil.rmtree(os.path.join(root, rel_data), ignore_errors=True)
         shutil.rmtree(ch_dir, ignore_errors=True)
         raise
-    return current + 1, {
-        "inserted": n_inserted,
-        "updated": n_updated,
-        "deleted": n_deleted,
-    }
+    return current + 1, stats
 
 
 def _changes_path(root: str, version: int) -> str:

@@ -1964,65 +1964,139 @@ def test_vacuum_collects_orphaned_dv_dirs(spark, tmp_path):
 
 
 def test_merge_into_mor_clauses_match_cow_merge(spark, tmp_path):
-    """MoR MERGE == CoW MERGE on the same inputs (clause semantics,
-    counts, final snapshot) — only the physical write differs: MoR leaves
-    the untouched files alone and commits DV + one new dir atomically."""
+    """The three MERGEs share one planner: txlog CoW, txlog MoR and Delta
+    give equal final rows and equal clause stats on the same target,
+    source and clauses (MoR has no ``insert_when``), MoR's change capture
+    equals CoW's, and each refusal raises the same ``ValueError`` text
+    from all three.  Only the physical write differs: MoR leaves the
+    untouched files alone and commits DV + one new dir atomically."""
     import glob as _glob
+    import shutil
 
-    def build(root):
-        txlog.append_table(
-            spark.range(0, 50).selectExpr("id AS k", "CAST(id AS INT) AS v"),
-            root,
-        )
+    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
+        read_delta,
+    )
+    from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
+        delta_append,
+        delta_merge_into,
+    )
 
+    target = spark.range(0, 50).selectExpr("id AS k", "CAST(id AS INT) AS v")
+    seeds = {fmt: str(tmp_path / f"seed_{fmt}") for fmt in ("txlog", "delta")}
+    txlog.append_table(target, seeds["txlog"])
+    delta_append(target, seeds["delta"])
+    # 98 is an absent key flagged dead: delete_when never touches it (it
+    # is not matched), insert_when skips it
     src = spark.createDataFrame(
-        [(10, 1000, False), (20, 2000, False), (30, 0, True), (99, 9900, False)],
+        [(10, 1000, False), (20, 2000, False), (30, 0, True),
+         (98, 9800, True), (99, 9900, False)],
         "k bigint, v int, dead boolean",
     )
-    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
-    build(cow)
-    build(mor)
-    _, cow_stats = txlog.merge_into(
-        spark, cow, src.drop("dead"), ["k"],
-        delete_when="s.k = 30", update="all",
-    )
-    files_before = set(_glob.glob(os.path.join(mor, "data", "*", "*.parquet")))
-    _, mor_stats = txlog.merge_into_mor(
-        spark, mor, src.drop("dead"), ["k"],
-        delete_when="s.k = 30", update="all",
-    )
-    assert mor_stats == cow_stats == {"inserted": 1, "updated": 2, "deleted": 1}
-    # original files untouched (one NEW dir appended for postimages+inserts)
-    assert files_before <= set(
-        _glob.glob(os.path.join(mor, "data", "*", "*.parquet"))
-    )
-    a = {(r["k"], r["v"]) for r in txlog.read_table(spark, cow).collect()}
-    b = {(r["k"], r["v"]) for r in txlog.read_table(spark, mor).collect()}
-    assert a == b and (99, 9900) in b and (10, 1000) in b
-    assert not any(k == 30 for k, _ in b)
-    # CDF: logical changes only, same multiset as the CoW capture
-    cow_ch = {
-        (r["k"], r["v"], r["_change_type"])
-        for r in txlog.read_changes(spark, cow, 0, 1).collect()
+    merges = {
+        "cow": ("txlog", txlog.merge_into, txlog.read_table),
+        "mor": ("txlog", txlog.merge_into_mor, txlog.read_table),
+        "delta": ("delta", delta_merge_into, read_delta),
     }
-    mor_ch = {
-        (r["k"], r["v"], r["_change_type"])
-        for r in txlog.read_changes(spark, mor, 0, 1).collect()
-    }
-    assert mor_ch == cow_ch
-    # update=None: matched rows stay IN PLACE (not vectored), inserts land
-    root3 = str(tmp_path / "mor3")
-    build(root3)
-    _, st3 = txlog.merge_into_mor(
-        spark, root3, src.drop("dead").where("k <> 30"), ["k"], update=None
+    # (case, clauses, stats, final v of keys 10 / 30 / 98; None = absent)
+    cases = [
+        ("all", {"update": "all"},
+         {"inserted": 2, "updated": 3, "deleted": 0}, (1000, 0, 9800)),
+        ("dict", {"update": {"v": "t.v + s.v"}},
+         {"inserted": 2, "updated": 3, "deleted": 0}, (1010, 30, 9800)),
+        ("none", {"update": None},
+         {"inserted": 2, "updated": 0, "deleted": 0}, (10, 30, 9800)),
+        ("delete", {"delete_when": "s.dead"},
+         {"inserted": 2, "updated": 2, "deleted": 1}, (1000, None, 9800)),
+        ("no_insert", {"insert": False, "delete_when": "s.dead"},
+         {"inserted": 0, "updated": 2, "deleted": 1}, (1000, None, None)),
+        ("insert_when", {"insert_when": "NOT s.dead", "delete_when": "s.dead"},
+         {"inserted": 1, "updated": 2, "deleted": 1}, (1000, None, None)),
+    ]
+    for case, kwargs, want, spot in cases:
+        finals = {}
+        for name, (fmt, merge, read) in merges.items():
+            if name == "mor" and "insert_when" in kwargs:
+                continue
+            root = str(tmp_path / f"{case}_{name}")
+            shutil.copytree(seeds[fmt], root)
+            data_files = os.path.join(root, "data", "*", "*.parquet")
+            files_before = set(_glob.glob(data_files))
+            _, stats = merge(spark, root, src, ["k"], **kwargs)
+            assert stats == want, (case, name, stats)
+            finals[name] = sorted(
+                (r["k"], r["v"]) for r in read(spark, root).collect()
+            )
+            if name == "mor":
+                # original files untouched (one NEW dir for postimages+inserts)
+                assert files_before <= set(_glob.glob(data_files))
+        assert finals["cow"] == finals["delta"], case
+        got = dict(finals["cow"])
+        assert tuple(got.get(k) for k in (10, 30, 98)) == spot, case
+        if "mor" in finals:
+            assert finals["mor"] == finals["cow"], case
+            # CDF: logical changes only, the same multiset as the CoW capture
+            cow_ch, mor_ch = (
+                sorted(
+                    (r["k"], r["v"], r["_change_type"])
+                    for r in txlog.read_changes(
+                        spark, str(tmp_path / f"{case}_{n}"), 0, 1
+                    ).collect()
+                )
+                for n in ("cow", "mor")
+            )
+            assert mor_ch == cow_ch, case
+    # refusals: the same text from all three
+    refusals = [
+        (src.unionByName(src), {}, "duplicate merge keys"),
+        (src, {"update": {"k": "s.k"}}, "may not assign key column"),
+        (src, {"update": {"nope": "1"}}, "unknown column"),
+    ]
+    for source, kwargs, match in refusals:
+        texts = set()
+        for name, (fmt, merge, _) in merges.items():
+            with pytest.raises(ValueError, match=match) as err:
+                merge(spark, seeds[fmt], source, ["k"], **kwargs)
+            texts.add(str(err.value))
+        assert len(texts) == 1, texts
+
+
+def test_merge_job_counts_do_not_grow(spark, tmp_path):
+    """Job-count guard for the three MERGEs on a fixed fixture: 20,000
+    target rows in 4 files, a 2,000-row source overlapping 1,000 keys, a
+    delete clause true on every 7th key.  The bounds are the counts
+    measured before the three merges shared one planner."""
+    from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
+        delta_append,
+        delta_merge_into,
     )
-    assert st3 == {"inserted": 1, "updated": 0, "deleted": 0}
-    got3 = {(r["k"], r["v"]) for r in txlog.read_table(spark, root3).collect()}
-    assert (10, 10) in got3 and (99, 9900) in got3  # target kept, insert in
-    with pytest.raises(ValueError, match="duplicate merge keys"):
-        txlog.merge_into_mor(
-            spark, root3, src.unionByName(src).drop("dead"), ["k"]
-        )
+
+    target = spark.range(0, 20000, numPartitions=4).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v"),
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("s"),
+    )
+    source = spark.range(19000, 21000, numPartitions=2).select(
+        F.col("id").alias("k"), (F.col("id") * 5).alias("v"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") % 7 == 0).alias("is_delete"),
+    )
+    sc = spark.sparkContext
+    merges = [
+        ("merge_into", txlog.append_table, txlog.merge_into, 10),
+        ("merge_into_mor", txlog.append_table, txlog.merge_into_mor, 14),
+        ("delta_merge_into", delta_append, delta_merge_into, 10),
+    ]
+    for name, write, merge, bound in merges:
+        root = str(tmp_path / name)
+        write(target, root)
+        group = f"merge-job-count-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            _, stats = merge(spark, root, source, ["k"], delete_when="s.is_delete")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats == {"inserted": 1000, "updated": 857, "deleted": 143}, name
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= bound, (name, jobs)
 
 
 def test_optimize_zorder_incremental_never_rewrites_clustered_files(spark, tmp_path):
