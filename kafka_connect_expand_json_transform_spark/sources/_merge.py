@@ -71,7 +71,7 @@ class MergePlan:
         insert_when=None,
         partition_cols=(),
     ):
-        self.source, self.on, self.insert = source, list(on), insert
+        self.source, self.on = source, list(on)
         self._src_cols = set(source.columns)
         self.dtypes = {f.name: f.dataType for f in target_schema.fields}
         for k in self.on:
@@ -112,22 +112,19 @@ class MergePlan:
         )
 
     def scan_source(self) -> list[tuple] | None:
-        """The one source pass: the duplicate-key guard, the source row
-        count (``n_source``) and the first key's range.  The first key is
-        a group key, so its min/max over groups equals its min/max over
-        rows.  Returns footer-stats prune hints ``[(k0, ">=", lo), (k0,
+        """The one source pass: the duplicate-key guard and the first
+        key's range.  The first key is a group key, so its min/max over
+        groups equals its min/max over rows.  Returns footer-stats prune hints ``[(k0, ">=", lo), (k0,
         "<=", hi)]`` for an integer first key, else None: parquet string
         min/max may be truncated, so other types never prune."""
         k0 = self.on[0]
         row = self.source.groupBy(*self.on).agg(F.count("*").alias("__c")).agg(
             F.max("__c").alias("mx"),
-            F.sum("__c").alias("n"),
             F.min(F.col(k0)).alias("lo"),
             F.max(F.col(k0)).alias("hi"),
         ).first()
         if row["mx"] is not None and row["mx"] > 1:
             raise ValueError("source has duplicate merge keys; matched rows ambiguous")
-        self.n_source = int(row["n"] or 0)
         lo, hi = row["lo"], row["hi"]
         if isinstance(lo, int) and isinstance(hi, int) and not isinstance(lo, bool):
             return [(k0, ">=", lo), (k0, "<=", hi)]
@@ -136,65 +133,37 @@ class MergePlan:
     def join(self, target: DataFrame, full: bool = True) -> None:
         """Equi-join ``target`` (logical column names) with the source as
         ``t`` / ``s``.  ``full`` (copy-on-write) is a full outer join that
-        carries every clause; otherwise an inner join of the matched rows
-        only (merge-on-read, whose inserts come from :meth:`inserts`'
-        anti-join).  The joined frame is lazily checkpointed: the stats
-        action materializes it once for every later consumer."""
-        self._full, self._target = full, target
+        carries every clause; otherwise a right outer join that drops the
+        target-only rows (merge-on-read leaves them in place, so its
+        target may be just the candidate rows).  The joined frame is
+        lazily checkpointed: the stats action materializes it once for
+        every later consumer, the inserts included."""
         cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in self.on]
-        if full:
-            t = target.withColumn("_in_t", F.lit(True)).alias("t")
-            s = self.source.withColumn("_in_s", F.lit(True)).alias("s")
-            self._joined = t.join(s, cond, "full_outer")
-            in_t = F.coalesce(F.col("t._in_t"), F.lit(False))
-            in_s = F.coalesce(F.col("s._in_s"), F.lit(False))
-            self._matched, self._s_only = in_t & in_s, in_s & ~in_t
-            self._keep = in_t & ~(self._matched & self._delc)
-        else:
-            self._joined = target.alias("t").join(self.source.alias("s"), cond, "inner")
-            self._matched, self._s_only = F.lit(True), F.lit(False)
-            self._keep = ~self._delc
-        self._joined = self._joined.localCheckpoint(eager=False)
+        t = target.withColumn("_in_t", F.lit(True)).alias("t")
+        s = self.source.withColumn("_in_s", F.lit(True)).alias("s")
+        self._joined = t.join(
+            s, cond, "full_outer" if full else "right_outer"
+        ).localCheckpoint(eager=False)
+        in_t = F.coalesce(F.col("t._in_t"), F.lit(False))
+        in_s = F.coalesce(F.col("s._in_s"), F.lit(False))
+        self._matched, self._s_only = in_t & in_s, in_s & ~in_t
+        self._keep = in_t & ~(self._matched & self._delc)
         self._deleted = self._matched & self._delc
         self._updated = self._matched & ~self._delc & F.lit(bool(self.assignments))
 
     def stats(self) -> dict:
-        """``{"inserted", "updated", "deleted"}`` in one aggregate.  The
-        inner join sees no source-only rows: source keys are unique past
-        the guard, so inserts are the source rows minus the distinct
-        matched keys (a key with a NULL component matches nothing, exactly
-        like the insert anti-join)."""
-        aggs = [
-            F.sum(self._deleted.cast("long")).alias("deleted"),
+        """``{"inserted", "updated", "deleted"}`` in one aggregate."""
+        row = self._joined.agg(
+            F.sum((self._s_only & self._ins).cast("long")).alias("inserted"),
             F.sum(self._updated.cast("long")).alias("updated"),
-        ]
-        if self._full:
-            aggs.append(
-                F.sum((self._s_only & self._ins).cast("long")).alias("inserted")
-            )
-        else:
-            aggs.append(
-                F.count_distinct(*[F.col(f"s.{k}") for k in self.on]).alias("keys")
-            )
-        row = self._joined.agg(*aggs).first()
-        if self._full:
-            inserted = int(row["inserted"] or 0)
-        else:
-            inserted = self.n_source - int(row["keys"] or 0) if self.insert else 0
-        return {
-            "inserted": inserted,
-            "updated": int(row["updated"] or 0),
-            "deleted": int(row["deleted"] or 0),
-        }
+            F.sum(self._deleted.cast("long")).alias("deleted"),
+        ).first()
+        return {k: int(row[k] or 0) for k in ("inserted", "updated", "deleted")}
 
     def _out_cols(self) -> list[Column]:
         cols = []
         for c, dt in self.dtypes.items():
             assigned = self.assignments.get(c)
-            if not self._full:
-                val = F.col(f"t.{c}") if assigned is None else assigned.cast(dt)
-                cols.append(val.alias(c))
-                continue
             val = F.when(
                 self._s_only,
                 F.col(f"s.{c}") if c in self._src_cols else F.lit(None),
@@ -224,25 +193,12 @@ class MergePlan:
         """Joined rows whose target row the merge deletes or updates."""
         return self._joined.where(self._deleted | self._updated)
 
-    def inserts(self) -> DataFrame | None:
-        """The inserted rows in target shape, or None when ``insert`` is
-        off and the plan is merge-on-read."""
-        if self._full:
-            return self._route(self._s_only & self._ins)
-        if not self.insert:
-            return None
-        return self.source.join(
-            self._target.select(*self.on), self.on, "left_anti"
-        ).select(
-            *[
-                (F.col(c) if c in self._src_cols else F.lit(None))
-                .cast(dt).alias(c)
-                for c, dt in self.dtypes.items()
-            ]
-        )
+    def inserts(self) -> DataFrame:
+        """The inserted rows in target shape."""
+        return self._route(self._s_only & self._ins)
 
     def changes(
-        self, inserts: DataFrame | None, labels=("delete", "delete", "insert", "insert")
+        self, inserts: DataFrame, labels=("delete", "delete", "insert", "insert")
     ) -> DataFrame:
         """The change frame with a ``_change_type`` column: deleted
         preimages, changed update preimages, changed update postimages
@@ -260,5 +216,4 @@ class MergePlan:
         return functools.reduce(DataFrame.unionByName, [
             frame.withColumn("_change_type", F.lit(label))
             for frame, label in zip((del_pre, eff_pre, eff_post, inserts), labels)
-            if frame is not None
         ])

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_connect_expand_json_transform_spark.sources import _tablestream
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 _MULTI_CKPT_RE = re.compile(
@@ -732,16 +734,13 @@ def read_delta_changes(
     return out
 
 
-def register_delta_stream_source(spark: SparkSession) -> None:
-    """Register the ``deltastream`` Python DataSource: STREAM a Delta
-    table's committed versions without the delta-spark jar — each
-    micro-batch is a range of Delta versions, offsets are version numbers
-    (exactly-once restart from the checkpoint), and only PUBLISHED commits
-    are visible (the same transactional-visibility property the
-    ``txlogstream`` source documents).  Usage::
-
-        register_delta_stream_source(spark)
-        spark.readStream.format("deltastream").option("path", root).load()
+class _DeltaStream(_tablestream.TableStream):
+    """``deltastream``: STREAM a Delta table's committed versions without
+    the delta-spark jar — each micro-batch is a range of Delta versions,
+    offsets are version numbers (``{"version": n}``, exactly-once restart
+    from the checkpoint), and only PUBLISHED commits are visible.
+    ``startingVersion`` or ``startingTimestamp`` (the first version
+    committed at or after it, Delta's rule) picks the first version.
 
     Contract (Delta's own streaming-source rule): a version containing
     ``remove`` actions aborts the stream unless ``ignoreChanges=true`` is
@@ -751,225 +750,125 @@ def register_delta_stream_source(spark: SparkSession) -> None:
     data-changing commits WHOLESALE — no rows from a version that
     removes files or adds deletion vectors — which also makes DV-bearing
     commits streamable (their adds never re-stream, so no bitmap needs
-    applying).
-    Partitioned tables re-inject partition values from each add action as
-    typed per-file constants; column-mapped ('name') tables stream
-    through a physical -> logical column rename on each Arrow batch and
-    physical-keyed partitionValues (r9; 'id' mapping still refuses).
-    ``latestOffset`` is the latest version, so an ``availableNow`` query
-    (``streaming.run_stream``) drains in one micro-batch."""
-    from dataclasses import dataclass
+    applying).  ``dataChange=false`` actions (compaction) never stream.
+    Partition values ride each add's task as typed constants;
+    column-mapped tables resolve columns by physical name ('name') or by
+    parquet field id ('id')."""
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+    name = "deltastream"
 
-    @dataclass
-    class _DeltaRange(InputPartition):
-        root: str
-        start: int  # exclusive
-        end: int  # inclusive
-        schema_json: str
-        ignore_changes: bool
-        phys_json: str  # logical -> physical name map ('' when unmapped)
-        skip_change_commits: bool
-        id_json: str  # logical -> field id map ('' unless mode 'id')
-
-    class DeltaStreamReader(DataSourceStreamReader):
-        def __init__(self, options, schema_json, phys_json="",
-                     id_json=""):
-            self.root = options["path"]
-            self.schema_json = schema_json
-            self.phys_json = phys_json
-            self.id_json = id_json
-            self.ignore_changes = (
-                str(options.get("ignoreChanges", "false")).lower() == "true"
-            )
-            self.skip_change_commits = (
-                str(options.get("skipChangeCommits", "false")).lower()
-                == "true"
-            )
-            if "startingTimestamp" in options:
-                if "startingVersion" in options:
-                    raise ValueError(
-                        "pass startingVersion or startingTimestamp, "
-                        "not both"
-                    )
-                # Delta's own rule: the first version committed AT or
-                # AFTER the timestamp starts the stream
-                ts = int(options["startingTimestamp"])
-                hist = delta_history(self.root)  # newest first
-                later = [h["version"] for h in hist
-                         if h["timestamp"] is not None
-                         and h["timestamp"] >= ts]
-                if not later:
-                    raise ValueError(
-                        f"startingTimestamp {ts} is after the last commit"
-                    )
-                self.starting_version = min(later)
-            else:
-                self.starting_version = int(options.get(
-                    "startingVersion", 0
-                ))
-
-        def initialOffset(self) -> dict:
-            return {"version": self.starting_version - 1}
-
-        def latestOffset(self) -> dict:
-            commits, _ = _list_log(self.root)
-            return {"version": max(commits) if commits else -1}
-
-        def partitions(self, start: dict, end: dict):
-            return [
-                _DeltaRange(
-                    self.root, int(start["version"]), int(end["version"]),
-                    self.schema_json, self.ignore_changes, self.phys_json,
-                    self.skip_change_commits, self.id_json,
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
+        self.ignore_changes = self.flag("ignoreChanges")
+        self.skip_change_commits = self.flag("skipChangeCommits")
+        if "startingTimestamp" in options:
+            if "startingVersion" in options:
+                raise ValueError(
+                    "pass startingVersion or startingTimestamp, not both"
                 )
-            ]
+            ts = int(options["startingTimestamp"])
+            later = [h["version"] for h in delta_history(self.root)
+                     if h["timestamp"] is not None and h["timestamp"] >= ts]
+            if not later:
+                raise ValueError(
+                    f"startingTimestamp {ts} is after the last commit"
+                )
+            self.starting_version = min(later)
+        else:
+            self.starting_version = int(options.get("startingVersion", 0))
+        _files, meta, _proto, _v = _replay(self.root, None)
+        mode = (meta.get("configuration") or {}).get(
+            "delta.columnMapping.mode", "none"
+        )
+        logical = _schema(meta)
+        self.mapping = self.field_ids = None
+        if mode != "none":
+            self.mapping = {f.name: _physical_name(f) for f in logical.fields}
+        if mode == "id":
+            self.field_ids = {
+                int(f.metadata["delta.columnMapping.id"]): f.name
+                for f in logical.fields
+            }
 
-        def read(self, partition):
-            import pyarrow.parquet as pq
+    @classmethod
+    def read_schema(cls, options):
+        _files, meta, _proto, _v = _replay(options["path"], None)
+        return _schema(meta)  # _replay gates unsupported modes
 
-            from kafka_connect_expand_json_transform_spark.sources.txlog import (
-                _shape_to_stream_batches,
-            )
+    def initial_offset(self) -> dict:
+        return {"version": self.starting_version - 1}
 
-            commits, _ = _list_log(partition.root)
-            for v in range(partition.start + 1, partition.end + 1):
-                if v not in commits:
-                    # fail-closed: a gap means the commit was vacuumed past
-                    # a checkpoint — silently skipping it would LOSE its
-                    # rows from the stream
-                    raise ValueError(
-                        f"Delta commit {v} is missing from the log "
-                        "(vacuumed past a checkpoint?); restart with "
-                        "startingVersion pointing at an existing commit"
+    def latest_offset(self) -> dict:
+        commits, _ = _list_log(self.root)
+        return {"version": max(commits) if commits else -1}
+
+    def changes(self, start: dict, end: dict) -> list:
+        types_of = {f.name: f.dataType for f in self.schema.fields}
+        log_of = {p: l for l, p in (self.mapping or {}).items()}
+        commits, _ = _list_log(self.root)
+        tasks = []
+        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
+            if v not in commits:
+                # fail-closed: a gap means the commit was vacuumed past
+                # a checkpoint — silently skipping it would LOSE its
+                # rows from the stream
+                raise ValueError(
+                    f"Delta commit {v} is missing from the log "
+                    "(vacuumed past a checkpoint?); restart with "
+                    "startingVersion pointing at an existing commit"
+                )
+            adds, has_remove, has_dv = [], False, False
+            with open(commits[v], encoding="utf-8") as fh:
+                for line in fh:
+                    a = json.loads(line) if line.strip() else {}
+                    if a.get("add") and a["add"].get("dataChange", True):
+                        has_dv = has_dv or bool(a["add"].get("deletionVector"))
+                        adds.append(a["add"])
+                    elif a.get("remove") and a["remove"].get("dataChange", True):
+                        has_remove = True
+            if (has_remove or has_dv) and self.skip_change_commits:
+                continue
+            if has_dv:
+                # re-streaming a DV-bearing add WITHOUT applying its
+                # bitmap would resurrect the deleted rows — fail closed
+                raise ValueError(
+                    f"Delta version {v} adds a deletion-vector file; "
+                    "set skipChangeCommits=true to skip it, or use "
+                    "read_delta for snapshot reads"
+                )
+            if has_remove and not self.ignore_changes:
+                raise ValueError(
+                    f"Delta version {v} contains remove actions (an "
+                    "update/delete rewrite); set ignoreChanges=true to "
+                    "re-stream its adds, skipChangeCommits=true to "
+                    "skip it, or start after it"
+                )
+            for add in adds:
+                # the files do not store partition columns (per the
+                # protocol): the add's partitionValues become typed
+                # constants under their logical names
+                consts = {
+                    log_of.get(c, c): _typed_partition_value(
+                        raw, types_of.get(log_of.get(c, c))
                     )
-                # dataChange=false actions are pure rearrangement
-                # (compaction / OPTIMIZE): the real Delta streaming source
-                # skips them entirely — streaming their adds would duplicate
-                # rows, and their removes must not abort the stream
-                adds, has_remove, has_dv = [], False, False
-                with open(commits[v], encoding="utf-8") as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        a = json.loads(line)
-                        if a.get("add") and a["add"].get("dataChange", True):
-                            if a["add"].get("deletionVector"):
-                                has_dv = True
-                            adds.append((a["add"]["path"],
-                                         a["add"].get("partitionValues")))
-                        elif a.get("remove") and a["remove"].get(
-                            "dataChange", True
-                        ):
-                            has_remove = True
-                if (has_remove or has_dv) and partition.skip_change_commits:
-                    # Delta's skipChangeCommits: data-changing commits are
-                    # skipped WHOLESALE (none of their adds stream) — which
-                    # also covers DV commits without applying any bitmap
-                    continue
-                if has_dv:
-                    # re-streaming a DV-bearing add WITHOUT applying its
-                    # bitmap would resurrect the deleted rows — fail closed
-                    raise ValueError(
-                        f"Delta version {v} adds a deletion-vector file; "
-                        "set skipChangeCommits=true to skip it, or use "
-                        "read_delta for snapshot reads"
-                    )
-                if has_remove and not partition.ignore_changes:
-                    raise ValueError(
-                        f"Delta version {v} contains remove actions (an "
-                        "update/delete rewrite); set ignoreChanges=true to "
-                        "re-stream its adds, skipChangeCommits=true to "
-                        "skip it, or start after it"
-                    )
-                types_of = {
-                    f.name: f.dataType
-                    for f in T.StructType.fromJson(
-                        json.loads(partition.schema_json)
-                    ).fields
+                    for c, raw in (add.get("partitionValues") or {}).items()
                 }
-                # column mapping 'name': files (and partitionValues keys)
-                # carry physical names — rename to logical per batch
-                log_of = {}
-                if partition.phys_json:
-                    log_of = {p: l for l, p in
-                              json.loads(partition.phys_json).items()}
-                for rel, pv in adds:
-                    table = pq.read_table(os.path.join(partition.root, rel))
-                    if partition.id_json:
-                        # columnMapping 'id': resolve columns by the
-                        # parquet FIELD IDS pyarrow surfaces as field
-                        # metadata — physical names are ignored per spec
-                        name_of = {int(i): l for l, i in
-                                   json.loads(partition.id_json).items()}
-                        names = []
-                        for fld in table.schema:
-                            fid = (fld.metadata or {}).get(
-                                b"PARQUET:field_id"
-                            )
-                            names.append(
-                                name_of.get(int(fid), fld.name)
-                                if fid is not None else fld.name
-                            )
-                        table = table.rename_columns(names)
-                    elif log_of:
-                        table = table.rename_columns(
-                            [log_of.get(c, c) for c in table.column_names]
-                        )
-                    # partitioned table: the add's partitionValues become
-                    # typed per-file constants (the files do not store
-                    # partition columns, per the protocol)
-                    consts = {
-                        log_of.get(c, c): _typed_partition_value(
-                            raw, types_of.get(log_of.get(c, c))
-                        )
-                        for c, raw in (pv or {}).items()
-                    } or None
-                    yield from _shape_to_stream_batches(
-                        table, partition.schema_json, constants=consts
-                    )
+                tasks.append(_tablestream.FileTask(
+                    os.path.join(self.root, add["path"]),
+                    constants=consts or None,
+                    mapping=self.mapping,
+                    field_ids=self.field_ids,
+                ))
+        return tasks
 
-        def commit(self, end: dict) -> None:
-            pass
 
-        def stop(self) -> None:
-            pass
+def register_delta_stream_source(spark: SparkSession) -> None:
+    """Register ``deltastream`` (``_DeltaStream``).  Usage::
 
-    class DeltaStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "deltastream"
-
-        def schema(self):
-            _files, meta, _proto, _v = _replay(self.options["path"], None)
-            return _schema(meta)  # _replay gates unsupported modes
-
-        def streamReader(self, schema):
-            _files, meta, _proto, _v = _replay(self.options["path"], None)
-            mode = (meta.get("configuration") or {}).get(
-                "delta.columnMapping.mode", "none"
-            )
-            phys_json = id_json = ""
-            if mode != "none":
-                logical = _schema(meta)
-                phys_json = json.dumps(
-                    {f.name: _physical_name(f) for f in logical.fields}
-                )
-                if mode == "id":
-                    id_json = json.dumps({
-                        f.name: int(f.metadata["delta.columnMapping.id"])
-                        for f in logical.fields
-                    })
-            return DeltaStreamReader(self.options, schema.json(), phys_json,
-                                     id_json)
-
-    spark.dataSource.register(DeltaStreamSource)
+        register_delta_stream_source(spark)
+        spark.readStream.format("deltastream").option("path", root).load()
+    """
+    _tablestream.register(spark, _DeltaStream)
 
 
 def delta_history(path: str) -> list[dict]:

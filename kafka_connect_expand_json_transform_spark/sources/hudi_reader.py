@@ -58,6 +58,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_connect_expand_json_transform_spark.sources import _tablestream
+
 _COMMIT_RE = re.compile(r"^(\d+)\.(commit|deltacommit|replacecommit)$")
 _PENDING_COMPACTION_RE = re.compile(
     r"^\d+\.compaction(\.requested|\.inflight)?$"
@@ -665,210 +667,147 @@ def _read_hudi_mor(
     return plan.mapInPandas(merge_slices, out_schema)
 
 
-def register_hudi_stream_source(spark: SparkSession) -> None:
-    """Register the ``hudistream`` Python DataSource: STREAM a Hudi
-    COPY_ON_WRITE table's committed instants without the hudi-spark
-    bundle — completing the streaming triangle with ``deltastream`` and
-    ``icebergstream`` (r9).  Offsets are the LAST-STREAMED INSTANT
-    (instants are lexically-ordered ``yyyyMMddHHmmssSSS`` strings — the
-    same monotone key Hudi's own incremental relation pages on); a
-    checkpointed instant that is no longer on the timeline (archived)
-    fails closed.  Each micro-batch is the rows WRITTEN by the new
-    commits: a CoW update rewrites a whole slice with carried rows
-    beside the new ones, so every file is filtered to
-    ``_hoodie_commit_time == instant`` — the incremental-query contract,
-    applied per Arrow batch.  ``replacecommit`` instants
-    (clustering/insert_overwrite) abort unless ``ignoreChanges=true``
-    (their rows then stream under the same commit-time filter, so a pure
-    clustering contributes nothing — rewritten records keep their
-    original commit time).  MERGE_ON_READ tables stream too (r10): each
-    micro-batch merges the commit's touched file groups at that instant
-    (the batch reader's slice-local merge) and keeps the rows the commit
-    wrote — deletes drop out, matching ``read_hudi_incremental``.
-    ``latestOffset`` is the timeline head, so an ``availableNow`` query
-    (``streaming.run_stream``) drains in one micro-batch."""
-    from dataclasses import dataclass
+def _slice_commit_rows(task):
+    """A merge-on-read stream task's rows: the slice merged at the task's
+    instant (the batch reader's slice-local merge), keeping the rows that
+    instant wrote — deletes drop out, the incremental contract.  The
+    task's paths are absolute."""
+    import pyarrow as pa
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+    pdf = _merge_slice_pdf("", task.path, list(task.logs), set(task.instants))
+    if pdf is None:
+        return None
+    pdf = pdf[pdf["_hoodie_commit_time"].astype(str) == task.commit_time]
+    pdf = pdf[[n for n in pdf.columns if not n.startswith("_hoodie_")]]
+    return pa.Table.from_pandas(pdf, preserve_index=False)
 
-    @dataclass
-    class _InstantRange(InputPartition):
-        root: str
-        start: str  # last streamed instant (exclusive; '' = from start)
-        end: str  # inclusive
-        schema_json: str
-        ignore_changes: bool
-        table_type: str = "COPY_ON_WRITE"
 
-    class HudiStreamReader(DataSourceStreamReader):
-        def __init__(self, options, schema_json):
-            self.root = options["path"]
-            self.schema_json = schema_json
-            self.ignore_changes = (
-                str(options.get("ignoreChanges", "false")).lower() == "true"
-            )
-            self.table_type = _properties(self.root).get(
-                "hoodie.table.type", "COPY_ON_WRITE"
-            )
+class _HudiStream(_tablestream.TableStream):
+    """``hudistream``: STREAM a Hudi table's committed instants without
+    the hudi-spark bundle.  Offsets are the LAST-STREAMED INSTANT
+    (``{"instant": s}``; instants are lexically-ordered
+    ``yyyyMMddHHmmssSSS`` strings — the same monotone key Hudi's own
+    incremental relation pages on); a checkpointed instant that is no
+    longer on the timeline (archived) fails closed.  Each micro-batch is
+    the rows WRITTEN by the new commits: a CoW update rewrites a whole
+    slice with carried rows beside the new ones, so every file task keeps
+    only ``_hoodie_commit_time == instant`` — the incremental-query
+    contract.  ``replacecommit`` instants (clustering/insert_overwrite)
+    abort unless ``ignoreChanges=true`` (their rows then stream under the
+    same commit-time filter, so a pure clustering contributes nothing —
+    rewritten records keep their original commit time).  MERGE_ON_READ
+    tables plan one task per file slice a commit touched, merged at that
+    instant (``_slice_commit_rows``); a pending compaction refuses."""
 
-        def initialOffset(self) -> dict:
-            return {"instant": ""}
+    name = "hudistream"
 
-        def latestOffset(self) -> dict:
-            commits = hudi_timeline(self.root)  # newest first
-            return {"instant": commits[0]["instant"] if commits else ""}
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
+        self.ignore_changes = self.flag("ignoreChanges")
+        self.table_type = _properties(self.root).get(
+            "hoodie.table.type", "COPY_ON_WRITE"
+        )
 
-        def partitions(self, start: dict, end: dict):
-            return [
-                _InstantRange(
-                    self.root, start.get("instant", ""),
-                    end.get("instant", ""), self.schema_json,
-                    self.ignore_changes, self.table_type,
+    @classmethod
+    def read_schema(cls, options):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        root = options["path"]
+        props = _properties(root)
+        if props.get("hoodie.table.type", "COPY_ON_WRITE") == "MERGE_ON_READ":
+            # schema discovery needs at least one base parquet slice
+            # (same rule as the batch merge reader)
+            bases = [sl["base"] for sl in _mor_slices(root, None) if sl["base"]]
+            if not bases:
+                raise HudiUnsupported(
+                    "table has no base files — schema discovery "
+                    "needs at least one parquet slice"
                 )
-            ]
+            sch = pq.read_schema(os.path.join(root, bases[0]))
+        else:
+            files = _live_slices(root, None)
+            if not files:
+                raise ValueError(f"no completed commits in {root}")
+            sch = pq.read_schema(files[0])
+        sch = pa.schema([f for f in sch if not f.name.startswith("_hoodie_")])
+        return from_arrow_schema(sch)
 
-        def read(self, partition):
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
+    def initial_offset(self) -> dict:
+        return {"instant": ""}
 
-            from kafka_connect_expand_json_transform_spark.sources.txlog import (
-                _shape_to_stream_batches,
+    def latest_offset(self) -> dict:
+        commits = hudi_timeline(self.root)  # newest first
+        return {"instant": commits[0]["instant"] if commits else ""}
+
+    def changes(self, start: dict, end: dict) -> list:
+        lo, hi = start.get("instant", ""), end.get("instant", "")
+        if not hi:
+            return []
+        commits = sorted(hudi_timeline(self.root), key=lambda c: c["instant"])
+        if lo and lo not in {c["instant"] for c in commits}:
+            raise ValueError(
+                f"checkpointed instant {lo} is no longer "
+                "on the timeline (archived?); exactly-once resume is "
+                "impossible — restart from a fresh checkpoint"
             )
-
-            if not partition.end:
-                return
-            commits = sorted(hudi_timeline(partition.root),
-                             key=lambda c: c["instant"])
-            known = {c["instant"] for c in commits}
-            if partition.start and partition.start not in known:
+        pending = [n for n in os.listdir(_hoodie_dir(self.root))
+                   if _PENDING_COMPACTION_RE.match(n)]
+        root = os.path.abspath(self.root)
+        tasks = []
+        for c in commits:
+            if not (lo < c["instant"] <= hi):
+                continue
+            meta = _load_instant(c["path"])
+            if not meta:
+                continue  # in-flight: nothing committed
+            if c["kind"] == "replacecommit" and not self.ignore_changes:
                 raise ValueError(
-                    f"checkpointed instant {partition.start} is no longer "
-                    "on the timeline (archived?); exactly-once resume is "
-                    "impossible — restart from a fresh checkpoint"
+                    f"instant {c['instant']} is a replacecommit "
+                    "(clustering/insert_overwrite); set "
+                    "ignoreChanges=true to stream its commit-time "
+                    "rows, or start after it"
                 )
-            for c in commits:
-                if not (partition.start < c["instant"] <= partition.end):
-                    continue
-                meta = _load_instant(c["path"])
-                if not meta:
-                    continue  # in-flight: nothing committed
-                if c["kind"] == "replacecommit" and not partition.ignore_changes:
-                    raise ValueError(
-                        f"instant {c['instant']} is a replacecommit "
-                        "(clustering/insert_overwrite); set "
-                        "ignoreChanges=true to stream its commit-time "
-                        "rows, or start after it"
-                    )
-                if partition.table_type == "MERGE_ON_READ":
-                    # per-commit MoR micro-batch (r10): merge the
-                    # commit's TOUCHED file groups at this instant
-                    # (slice-local, same merge as the batch reader) and
-                    # keep rows this commit wrote — deletes drop out,
-                    # the incremental contract
-                    import pyarrow as pa
+            written = [st for stats in (meta.get("partitionToWriteStats")
+                                        or {}).values() for st in stats]
+            if self.table_type != "MERGE_ON_READ":
+                tasks += [
+                    _tablestream.FileTask(os.path.join(root, rel),
+                                          commit_time=c["instant"])
+                    for rel in sorted({st["path"] for st in written})
+                ]
+                continue
+            if pending:
+                raise HudiUnsupported(
+                    f"pending compaction {pending[0]}: slices are "
+                    "mid-rewrite; stream after it commits"
+                )
+            touched = {st["fileId"] for st in written}
+            valid = tuple(x["instant"] for x in commits
+                          if x["instant"] <= c["instant"])
+            tasks += [
+                _tablestream.FileTask(
+                    sl["base"] and os.path.join(root, sl["base"]),
+                    commit_time=c["instant"],
+                    logs=tuple(os.path.join(root, r) for r in sl["logs"]),
+                    instants=valid,
+                )
+                for sl in _mor_slices(self.root, c["instant"])
+                if sl["file_id"] in touched
+            ]
+        return tasks
 
-                    for name in os.listdir(_hoodie_dir(partition.root)):
-                        if _PENDING_COMPACTION_RE.match(name):
-                            raise HudiUnsupported(
-                                f"pending compaction {name}: slices are "
-                                "mid-rewrite; stream after it commits"
-                            )
-                    touched = {
-                        st["fileId"]
-                        for stats in (meta.get("partitionToWriteStats")
-                                      or {}).values()
-                        for st in stats
-                    }
-                    valid = {x["instant"] for x in commits
-                             if x["instant"] <= c["instant"]}
-                    for sl in _mor_slices(partition.root, c["instant"]):
-                        if sl["file_id"] not in touched:
-                            continue
-                        pdf = _merge_slice_pdf(
-                            os.path.abspath(partition.root), sl["base"],
-                            sl["logs"], valid,
-                        )
-                        if pdf is None or not len(pdf):
-                            continue
-                        pdf = pdf[pdf["_hoodie_commit_time"].astype(str)
-                                  == c["instant"]]
-                        pdf = pdf[[n for n in pdf.columns
-                                   if not n.startswith("_hoodie_")]]
-                        if len(pdf):
-                            yield from _shape_to_stream_batches(
-                                pa.Table.from_pandas(
-                                    pdf, preserve_index=False
-                                ),
-                                partition.schema_json,
-                            )
-                    continue
-                rels = sorted({
-                    st["path"]
-                    for stats in (meta.get("partitionToWriteStats")
-                                  or {}).values()
-                    for st in stats
-                })
-                for rel in rels:
-                    t = pq.read_table(os.path.join(partition.root, rel))
-                    if "_hoodie_commit_time" in t.column_names:
-                        t = t.filter(pc.equal(
-                            t.column("_hoodie_commit_time"), c["instant"]
-                        ))
-                    t = t.select([n for n in t.column_names
-                                  if not n.startswith("_hoodie_")])
-                    if t.num_rows:
-                        yield from _shape_to_stream_batches(
-                            t, partition.schema_json
-                        )
 
-        def commit(self, end: dict) -> None:
-            pass
+def register_hudi_stream_source(spark: SparkSession) -> None:
+    """Register ``hudistream`` (``_HudiStream``), completing the
+    streaming triangle with ``deltastream`` and ``icebergstream``.
+    Usage::
 
-        def stop(self) -> None:
-            pass
-
-    class HudiStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "hudistream"
-
-        def schema(self):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            root = self.options["path"]
-            props = _properties(root)
-            if props.get("hoodie.table.type", "COPY_ON_WRITE") \
-                    == "MERGE_ON_READ":
-                # r10: MoR streams too — schema discovery needs at
-                # least one base parquet slice (same rule as the batch
-                # merge reader)
-                bases = [sl["base"] for sl in _mor_slices(root, None)
-                         if sl["base"]]
-                if not bases:
-                    raise HudiUnsupported(
-                        "table has no base files — schema discovery "
-                        "needs at least one parquet slice"
-                    )
-                sch = pq.read_schema(os.path.join(root, bases[0]))
-            else:
-                files = _live_slices(root, None)
-                if not files:
-                    raise ValueError(f"no completed commits in {root}")
-                sch = pq.read_schema(files[0])
-            sch = pa.schema([f for f in sch
-                             if not f.name.startswith("_hoodie_")])
-            return from_arrow_schema(sch)
-
-        def streamReader(self, schema):
-            return HudiStreamReader(self.options, schema.json())
-
-    spark.dataSource.register(HudiStreamSource)
+        register_hudi_stream_source(spark)
+        spark.readStream.format("hudistream").option("path", root).load()
+    """
+    _tablestream.register(spark, _HudiStream)
 
 
 class HudiCommitConflict(RuntimeError):

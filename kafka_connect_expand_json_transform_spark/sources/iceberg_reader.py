@@ -53,6 +53,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from kafka_connect_expand_json_transform_spark.sources import _tablestream
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
 
 
@@ -704,165 +705,119 @@ def _snapshot_appended_files(path: str, meta: dict, snap: dict,
     return sorted(set(added))
 
 
-def register_iceberg_stream_source(spark: SparkSession) -> None:
-    """Register the ``icebergstream`` Python DataSource: STREAM an Iceberg
-    table's committed snapshots without the iceberg-spark runtime — the
-    twin of ``delta_reader.register_delta_stream_source``.  Offsets are
-    the LAST-STREAMED SNAPSHOT-ID (not a positional index: snapshot
-    expiry or a metadata rewrite shifts positions, so a positional
-    checkpoint could silently skip or replay snapshots); the id is
-    resolved against the snapshot log at read time and the read fails
-    closed if that snapshot has been expired.  Each micro-batch is
-    the data files ADDED by the new snapshots.  Overwrite/delete
-    snapshots abort the stream unless ``ignoreChanges=true`` (their adds
-    re-stream; consumers dedup) — the same contract Iceberg's own
-    streaming read documents — or the Iceberg option names
+def _ordered_snapshots(path: str) -> list[dict]:
+    meta = _read_metadata(path)
+    snaps = list(meta.get("snapshots", []))
+    # sequence-number and timestamp-ms live on different scales — mixing
+    # them as one sort key interleaves wrongly when only some snapshots
+    # carry sequence-number (v1->v2 upgraded tables)
+    if snaps and all("sequence-number" in s for s in snaps):
+        return sorted(
+            snaps,
+            key=lambda s: (s["sequence-number"], s.get("timestamp-ms", 0)),
+        )
+    return sorted(snaps, key=lambda s: s.get("timestamp-ms", 0))
+
+
+def _resolve_pos(snaps: list[dict], snapshot_id: int) -> int:
+    for i, s in enumerate(snaps):
+        if s["snapshot-id"] == snapshot_id:
+            return i
+    raise ValueError(
+        f"snapshot {snapshot_id} is no longer in the table's snapshot "
+        "log (expired?); exactly-once resume is impossible — restart "
+        "the stream from a fresh checkpoint"
+    )
+
+
+class _IcebergStream(_tablestream.TableStream):
+    """``icebergstream``: STREAM an Iceberg table's committed snapshots
+    without the iceberg-spark runtime.  Offsets are the LAST-STREAMED
+    SNAPSHOT-ID (``{"snapshot_id": id}``, not a positional index:
+    snapshot expiry or a metadata rewrite shifts positions, so a
+    positional checkpoint could silently skip or replay snapshots); the
+    id is resolved against the snapshot log at planning and fails closed
+    if that snapshot has been expired.  Each micro-batch is the data
+    files ADDED by the new snapshots.  Overwrite/delete snapshots abort
+    the stream unless ``ignoreChanges=true`` (their adds re-stream;
+    consumers dedup) — the same contract Iceberg's own streaming read
+    documents — or the Iceberg option names
     ``streaming-skip-delete-snapshots`` /
     ``streaming-skip-overwrite-snapshots`` skip those snapshots
     WHOLESALE; 'replace' (compaction) snapshots are always skipped,
-    matching the reference streaming source (r9).  ``latestOffset`` is the
-    current snapshot, so an ``availableNow`` query
-    (``streaming.run_stream``) drains in one micro-batch."""
-    from dataclasses import dataclass
+    matching the reference streaming source."""
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+    name = "icebergstream"
 
-    @dataclass
-    class _SnapRange(InputPartition):
-        root: str
-        start_id: int | None  # last snapshot-id already streamed (exclusive)
-        end_id: int | None  # last snapshot-id of this batch (inclusive)
-        schema_json: str
-        ignore_changes: bool
-        skip_delete: bool
-        skip_overwrite: bool
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
+        self.ignore_changes = self.flag("ignoreChanges")
+        # Iceberg's own streaming options: skip the named snapshot
+        # types WHOLESALE instead of aborting on them
+        self.skip = {
+            op for op, key in (("delete", "streaming-skip-delete-snapshots"),
+                               ("overwrite", "streaming-skip-overwrite-snapshots"))
+            if self.flag(key)
+        }
 
-    def _ordered_snapshots(path: str) -> list[dict]:
-        meta = _read_metadata(path)
-        snaps = list(meta.get("snapshots", []))
-        # sequence-number and timestamp-ms live on different scales —
-        # mixing them as one sort key interleaves wrongly when only some
-        # snapshots carry sequence-number (v1->v2 upgraded tables)
-        if snaps and all("sequence-number" in s for s in snaps):
-            return sorted(
-                snaps,
-                key=lambda s: (s["sequence-number"], s.get("timestamp-ms", 0)),
-            )
-        return sorted(snaps, key=lambda s: s.get("timestamp-ms", 0))
-
-    def _resolve_pos(snaps: list[dict], snapshot_id: int) -> int:
-        for i, s in enumerate(snaps):
-            if s["snapshot-id"] == snapshot_id:
-                return i
-        raise ValueError(
-            f"snapshot {snapshot_id} is no longer in the table's snapshot "
-            "log (expired?); exactly-once resume is impossible — restart "
-            "the stream from a fresh checkpoint"
+    @classmethod
+    def read_schema(cls, options):
+        meta = _read_metadata(options["path"])
+        return _spark_type(
+            {"type": "struct", "fields": _current_schema(meta)["fields"]}
         )
 
-    class IcebergStreamReader(DataSourceStreamReader):
-        def __init__(self, options, schema_json):
-            self.root = options["path"]
-            self.schema_json = schema_json
-            self.ignore_changes = (
-                str(options.get("ignoreChanges", "false")).lower() == "true"
-            )
+    def initial_offset(self) -> dict:
+        return {"snapshot_id": None}
 
-            def flag(key):
-                return str(options.get(key, "false")).lower() == "true"
+    def latest_offset(self) -> dict:
+        snaps = _ordered_snapshots(self.root)
+        return {"snapshot_id": snaps[-1]["snapshot-id"] if snaps else None}
 
-            # Iceberg's own streaming options: skip the named snapshot
-            # types WHOLESALE instead of aborting on them
-            self.skip_delete = flag("streaming-skip-delete-snapshots")
-            self.skip_overwrite = flag("streaming-skip-overwrite-snapshots")
-
-        def initialOffset(self) -> dict:
-            return {"snapshot_id": None}
-
-        def latestOffset(self) -> dict:
-            snaps = _ordered_snapshots(self.root)
-            return {
-                "snapshot_id": snaps[-1]["snapshot-id"] if snaps else None
-            }
-
-        def partitions(self, start: dict, end: dict):
-            # offsets from before the r8 snapshot-id format carry a "pos"
-            # key; treating them as initial would silently re-stream every
-            # snapshot (duplicates) — fail closed instead, same contract
-            # as _resolve_pos on an expired snapshot
-            for off in (start, end):
-                if off and "pos" in off:
-                    raise ValueError(
-                        "icebergstream checkpoint holds a legacy {'pos': N} "
-                        "offset from a previous format; exactly-once resume "
-                        "is impossible — restart from a fresh checkpoint"
-                    )
-            return [
-                _SnapRange(
-                    self.root, start.get("snapshot_id"),
-                    end.get("snapshot_id"), self.schema_json,
-                    self.ignore_changes, self.skip_delete,
-                    self.skip_overwrite,
+    def changes(self, start: dict, end: dict) -> list:
+        # offsets from before the snapshot-id format carry a "pos" key;
+        # treating them as initial would silently re-stream every
+        # snapshot (duplicates) — fail closed instead, same contract as
+        # _resolve_pos on an expired snapshot
+        for off in (start, end):
+            if off and "pos" in off:
+                raise ValueError(
+                    "icebergstream checkpoint holds a legacy {'pos': N} "
+                    "offset from a previous format; exactly-once resume "
+                    "is impossible — restart from a fresh checkpoint"
+                )
+        if end.get("snapshot_id") is None:
+            return []
+        meta = _read_metadata(self.root)
+        snaps = _ordered_snapshots(self.root)
+        lo = (0 if start.get("snapshot_id") is None
+              else _resolve_pos(snaps, start["snapshot_id"]) + 1)
+        hi = _resolve_pos(snaps, end["snapshot_id"]) + 1
+        tasks = []
+        for snap in snaps[lo:hi]:
+            op = (snap.get("summary") or {}).get("operation", "append")
+            # 'replace' is compaction/rewrite: no data change — Iceberg's
+            # own streaming source always skips it (streaming its adds
+            # would duplicate rows)
+            if op == "replace" or op in self.skip:
+                continue
+            tasks += [
+                _tablestream.FileTask(f)
+                for f in _snapshot_appended_files(
+                    self.root, meta, snap, self.ignore_changes
                 )
             ]
+        return tasks
 
-        def read(self, partition):
-            import pyarrow.parquet as pq
 
-            from kafka_connect_expand_json_transform_spark.sources.txlog import (
-                _shape_to_stream_batches,
-            )
+def register_iceberg_stream_source(spark: SparkSession) -> None:
+    """Register ``icebergstream`` (``_IcebergStream``), the twin of
+    ``delta_reader.register_delta_stream_source``.  Usage::
 
-            if partition.end_id is None:
-                return
-            meta = _read_metadata(partition.root)
-            snaps = _ordered_snapshots(partition.root)
-            lo = (0 if partition.start_id is None
-                  else _resolve_pos(snaps, partition.start_id) + 1)
-            hi = _resolve_pos(snaps, partition.end_id) + 1
-            for snap in snaps[lo:hi]:
-                op = (snap.get("summary") or {}).get("operation", "append")
-                if op == "replace":
-                    # compaction/rewrite: no data change — Iceberg's own
-                    # streaming source always skips these (streaming
-                    # their adds would duplicate rows)
-                    continue
-                if op == "delete" and partition.skip_delete:
-                    continue
-                if op == "overwrite" and partition.skip_overwrite:
-                    continue
-                for f in _snapshot_appended_files(
-                    partition.root, meta, snap, partition.ignore_changes
-                ):
-                    yield from _shape_to_stream_batches(
-                        pq.read_table(f), partition.schema_json
-                    )
-
-        def commit(self, end: dict) -> None:
-            pass
-
-        def stop(self) -> None:
-            pass
-
-    class IcebergStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "icebergstream"
-
-        def schema(self):
-            meta = _read_metadata(self.options["path"])
-            return _spark_type(
-                {"type": "struct", "fields": _current_schema(meta)["fields"]}
-            )
-
-        def streamReader(self, schema):
-            return IcebergStreamReader(self.options, schema.json())
-
-    spark.dataSource.register(IcebergStreamSource)
+        register_iceberg_stream_source(spark)
+        spark.readStream.format("icebergstream").option("path", root).load()
+    """
+    _tablestream.register(spark, _IcebergStream)
 
 
 def read_iceberg(

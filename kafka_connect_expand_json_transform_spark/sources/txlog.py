@@ -53,6 +53,10 @@ ACID story (single filesystem):
   snapshot stays readable until ``vacuum`` passes it (the floor marker
   then turns reads of reclaimed versions into a clear ``ValueError``).
 
+Streaming out: ``txlogstream`` (the committed files, append-only) and
+``txlogcdf`` (the change feed) are planners on the one table stream
+reader, ``sources/_tablestream.py``.
+
 At 100 TB the log stays tiny (one small JSON per commit — listing cost is
 O(versions), compactable by checkpointing the replayed state, the same
 growth answer Delta's checkpoint files give); data-file immutability means
@@ -73,6 +77,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_connect_expand_json_transform_spark.sources import _tablestream
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 
 _LOG_DIR = "_log"
@@ -1631,11 +1636,14 @@ def delete_where_mor(
     return current + 1, n_deleted
 
 
-def _mor_matched(spark: SparkSession, root: str, predicate):
+def _mor_matched(
+    spark: SparkSession, root: str, predicate, prune=None, checkpoint=True
+):
     """Shared MoR scan: the current snapshot WITH ``_metadata`` row
     identity, prior deletion vectors already anti-joined, filtered to the
     predicate and checkpointed (the matched set is consumed by the DV
-    write, the CDF capture, and the count)."""
+    write, the CDF capture, and the count).  ``prune`` is a footer-stats
+    hint (``_prune_dirs``): only the dirs it cannot rule out are scanned."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -1645,6 +1653,10 @@ def _mor_matched(spark: SparkSession, root: str, predicate):
     current = entries[-1]["version"]
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     files, schema_simple = _replay(entries, None)
+    if prune:
+        # nothing in range still scans one dir, so the frame keeps its
+        # row identity; the predicate then drops every row
+        files = _prune_dirs(root, entries, prune)[0] or files[:1]
     schema_json = next(
         (e["schema_json"] for e in reversed(entries) if "schema_json" in e), None
     )
@@ -1682,7 +1694,9 @@ def _mor_matched(spark: SparkSession, root: str, predicate):
             (F.col("__dvf") == F.col("__pf")) & (F.col("__dvp") == F.col("__pp")),
             "left_anti",
         )
-    matched = tagged.where(cond).localCheckpoint(eager=True)
+    matched = tagged.where(cond)
+    if checkpoint:
+        matched = matched.localCheckpoint(eager=True)
     return matched, data_cols, schema_simple, schema_json, current
 
 
@@ -1911,7 +1925,10 @@ def merge_into_mor(
     data dir, all in ONE atomic log entry (``op=merge_mor``).  The
     UNMATCHED target rows — at 100 TB, ~all of them — are never read past
     the join, never rewritten, never shuffled: write cost is O(touched +
-    inserted rows), vs the CoW merge's O(overlapping files).  Clause
+    inserted rows), vs the CoW merge's O(overlapping files): after the
+    source pass, only the rows of dirs the source's key range can touch
+    are scanned, and the one checkpointed join feeds the stats, the
+    vectors, the new data and the change capture.  Clause
     semantics, refusals, stats and the write-time CDF capture are those of
     :func:`merge_into` (``sources/_merge.py``), without ``insert_when``.
     ``update=None`` keeps matched rows IN PLACE: they are not vectored.
@@ -1921,18 +1938,22 @@ def merge_into_mor(
     ``(version, {"inserted": i, "updated": u, "deleted": d})``."""
     import shutil
 
-    tagged, data_cols, _, _, current = _mor_matched(spark, root, "true")
+    entries = _list_entries(root)
+    if not entries:
+        raise FileNotFoundError(f"no txlog table at {root}")
     plan = MergePlan(
-        source, on, tagged.select(*data_cols).schema, update=update,
+        source, on, _current_logical_schema(entries), update=update,
         delete_when=delete_when, insert=insert,
     )
-    plan.scan_source()
+    hint = plan.scan_source()
+    candidates = " AND ".join(f"`{c}` {op} {v}" for c, op, v in hint or ())
+    tagged, _, _, _, current = _mor_matched(
+        spark, root, candidates or "true", prune=hint, checkpoint=False
+    )
     plan.join(tagged, full=False)
     stats = plan.stats()
-    post = plan.updated()
     ins = plan.inserts()
-    new_rows = post if ins is None else post.unionByName(ins)
-    new_rows = _apply_generated(root, new_rows)
+    new_rows = _apply_generated(root, plan.updated().unionByName(ins))
     _enforce_constraints(root, new_rows)
     rel_dv = _write_dv(root, plan.touched())
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
@@ -2869,7 +2890,7 @@ def read_changes(
     # an allow_add_columns widening inside the range otherwise leaves
     # pre-evolution append frames narrower than post-evolution ones and
     # shape-mismatches both unionByName and exceptAll (the txlogcdf stream
-    # reader already null-fills the same way via _named_columns).
+    # reader null-fills the same way, by name).
     target_json = next(
         (
             by_version[v]["schema_json"]
@@ -3340,325 +3361,126 @@ def _read_floor(root: str) -> int:
         return json.load(f)["floor"]
 
 
-def _named_columns(table, names: list[str]) -> list[list]:
-    """Column lists extracted from a pyarrow table BY NAME in the given
-    order, null-filling columns the file predates (schema evolution) —
-    positional extraction would mis-map pre-evolution files."""
-    out = []
-    for c in names:
-        if c in table.column_names:
-            out.append(table.column(c).to_pylist())
-        else:
-            out.append([None] * table.num_rows)
-    return out
+class _TxLogStream(_tablestream.TableStream):
+    """``txlogstream``: a STREAMING source over a txlog table with
+    transactional visibility — each micro-batch is a range of COMMITTED
+    versions; data files sitting in ``data/`` without a published log
+    entry (in-flight or crashed writers) are invisible, the property a
+    raw file stream over the directory cannot give.  Offsets are committed
+    versions (``{"version": n}``), so restart resumes exactly after the
+    last batch.
+
+    Append-only contract: a version streams the files that were not live
+    at the previous version.  An append streams its files; a rewrite
+    (CoW update/delete/merge, MoR update/merge) streams only the files it
+    wrote, never the dirs it carried; a retraction (DV or dropped file)
+    never streams — the rule Delta's ``ignoreChanges`` source follows."""
+
+    name = "txlogstream"
+
+    @classmethod
+    def read_schema(cls, options):
+        entries = _list_entries(options["path"])
+        if not entries:
+            raise FileNotFoundError(f"no txlog table at {options['path']}")
+        return _current_logical_schema(entries)
+
+    def initial_offset(self) -> dict:
+        return {"version": -1}
+
+    def latest_offset(self) -> dict:
+        v = latest_version(self.root)
+        return {"version": -1 if v is None else v}
+
+    def _range(self, start: dict, end: dict):
+        """(the log, the range's bounds, the column mapping at its end)."""
+        entries = _list_entries(self.root)
+        lo, hi = int(start["version"]), int(end["version"])
+        return entries, lo, hi, _replay_mapping(entries, hi)
+
+    def changes(self, start: dict, end: dict) -> list:
+        entries, lo, hi, mapping = self._range(start, end)
+        live = set(_replay(entries, lo)[0])
+        tasks = []
+        for e in entries[lo + 1 : hi + 1]:
+            for rel in e["files"]:
+                if rel not in live:
+                    tasks += _tablestream.parquet_tasks(
+                        os.path.join(self.root, rel), mapping=mapping
+                    )
+            live = set(e["files"]) if e["op"] == "overwrite" else live | set(e["files"])
+        return tasks
 
 
-def _shape_to_stream_batches(table, schema_json: str, constants=None, mapping=None):
-    """Shape a pyarrow table to the stream source's Spark schema and
-    return Arrow RecordBatches — the columnar fast path of the Python
-    DataSource read contract (a per-row tuple yield pickles every value
-    across the Python/JVM boundary; at the sf10 probe that was ~78 s for
-    10.5 M CDF rows vs ~7 s as batches).  Columns map BY NAME
-    (pre-evolution files null-fill), dictionary-encoded hive partition
-    columns decode, and every column casts to the exact Arrow type Spark
-    itself derives from the schema (``to_arrow_schema`` — so int widening,
-    date partitions, and decimal promotion all land typed).  ``constants``
-    appends literal columns (``_commit_version`` etc.) vectorized, never a
-    Python list.  Returns a LIST (built eagerly): the worker dispatches on
-    the FIRST yielded element's type, so a reader must never mix tuple and
-    batch yields."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
+class _TxLogCdfStream(_TxLogStream):
+    """``txlogcdf``: the STREAMING change data feed (Delta's
+    ``readChangeFeed`` shape) — each micro-batch is the row-level changes
+    of a committed version range, schema = table columns +
+    ``_change_type`` + ``_commit_version``.  APPEND versions stream their
+    own files tagged 'insert'; every other version streams the write-time
+    change file its writer captured.  A version with NO captured changes
+    (crashed capture, or plain overwrite/compaction) raises at planning
+    with a pointer to the batch ``read_changes`` diff fallback — silently
+    dropping changes is never an option for a CDC consumer.  Offsets are
+    committed versions, same restart contract as ``txlogstream``."""
 
-    target = to_arrow_schema(StructType.fromJson(json.loads(schema_json)))
-    n = table.num_rows
-    constants = constants or {}
-    mapping = mapping or {}
-    arrays = []
-    for field in target:
-        # column mapping: data files store PHYSICAL names; CDF change
-        # captures store logical names — resolve physical first, then
-        # logical (rename guards keep the two namespaces disjoint)
-        src = mapping.get(field.name, field.name)
-        if src not in table.column_names and field.name in table.column_names:
-            src = field.name
-        if field.name in constants:
-            arrays.append(
-                pc.fill_null(
-                    pa.nulls(n, field.type),
-                    pa.scalar(constants[field.name], field.type),
+    name = "txlogcdf"
+
+    @classmethod
+    def read_schema(cls, options):
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        base = super().read_schema(options)
+        return StructType(
+            list(base.fields)
+            + [
+                StructField("_change_type", StringType(), False),
+                StructField("_commit_version", LongType(), False),
+            ]
+        )
+
+    def changes(self, start: dict, end: dict) -> list:
+        entries, lo, hi, mapping = self._range(start, end)
+        tasks = []
+        for e in entries[lo + 1 : hi + 1]:
+            v = e["version"]
+            if e["op"] in ("rename_column", "drop_column"):
+                continue  # metadata-only: zero row changes
+            if e["op"] == "append":
+                for rel in e["files"]:
+                    tasks += _tablestream.parquet_tasks(
+                        os.path.join(self.root, rel),
+                        constants={"_change_type": "insert", "_commit_version": v},
+                        mapping=mapping,
+                    )
+                continue
+            cpath = _changes_path(self.root, v)
+            if not os.path.isdir(cpath):
+                raise ValueError(
+                    f"overwrite version {v} has no captured change "
+                    "file; stream requires write-time capture "
+                    "(merge_into) — use read_changes for the batch "
+                    "diff fallback"
                 )
+            tasks += _tablestream.parquet_tasks(
+                cpath, constants={"_commit_version": v}, mapping=mapping
             )
-        elif src in table.column_names:
-            arr = table.column(src)
-            if pa.types.is_dictionary(arr.type):
-                arr = pc.cast(arr, arr.type.value_type)
-            if (
-                pa.types.is_timestamp(arr.type)
-                and arr.type.tz is None
-                and pa.types.is_timestamp(field.type)
-                and field.type.tz is not None
-            ):
-                # naive parquet instants are UTC wall-clock in this log
-                arr = pc.assume_timezone(arr, "UTC")
-            if arr.type != field.type:
-                arr = pc.cast(arr, field.type)
-            arrays.append(arr)
-        else:
-            arrays.append(pa.nulls(n, field.type))
-    shaped = pa.table(arrays, schema=target)
-    return list(shaped.to_batches(max_chunksize=1 << 16))
+        return tasks
 
 
 def register_stream_source(spark: SparkSession) -> None:
-    """Register the ``txlogstream`` Python DataSource: a STREAMING source
-    over a txlog table with transactional visibility — each micro-batch is
-    a range of COMMITTED versions; data files sitting in ``data/`` without
-    a published log entry (in-flight or crashed writers) are invisible, the
-    property a raw file stream over the directory cannot give.  Offsets
-    are committed versions, so restart resumes exactly after the last
-    batch.  Usage::
+    """Register ``txlogstream`` (``_TxLogStream``).  Usage::
 
         register_stream_source(spark)
         spark.readStream.format("txlogstream").option("path", root).load()
-
-    ``latestOffset`` is the table head, so an ``availableNow`` query
-    (``streaming.run_stream``) drains every committed version in one
-    micro-batch."""
-    from dataclasses import dataclass
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-    from pyspark.sql.types import StructType
-
-    @dataclass
-    class _VersionRange(InputPartition):
-        root: str
-        start: int  # exclusive
-        end: int  # inclusive
-        col_names: tuple
-        col_types: tuple  # simpleString per column, aligned with col_names
-        schema_json: str = ""  # full Spark schema for the Arrow fast path
-
-    class TxLogStreamReader(DataSourceStreamReader):
-        def __init__(self, options, col_names, col_types, schema_json=""):
-            self.root = options["path"]
-            self.col_names = tuple(col_names)
-            self.col_types = tuple(col_types)
-            self.schema_json = schema_json
-
-        def initialOffset(self) -> dict:
-            return {"version": -1}
-
-        def latestOffset(self) -> dict:
-            v = latest_version(self.root)
-            return {"version": -1 if v is None else v}
-
-        def partitions(self, start: dict, end: dict):
-            return [
-                _VersionRange(
-                    self.root,
-                    int(start["version"]),
-                    int(end["version"]),
-                    self.col_names,
-                    self.col_types,
-                    self.schema_json,
-                )
-            ]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            entries = _list_entries(partition.root)
-            col_map = _replay_mapping(entries, partition.end)
-            for e in entries:
-                if not (partition.start < e["version"] <= partition.end):
-                    continue
-                for rel in e["files"]:
-                    table = pq.read_table(os.path.join(partition.root, rel))
-                    # _shape_to_stream_batches owns the whole mapping: by
-                    # NAME against the LOG schema (pre-evolution files
-                    # null-fill widened columns; renamed columns resolve by
-                    # PHYSICAL name), hive partition columns decoded from
-                    # their inferred dictionary type and cast to the
-                    # schema's type (date/timestamp/decimal incl. —
-                    # ADVICE r6 #2), all yielded as Arrow batches
-                    yield from _shape_to_stream_batches(
-                        table, partition.schema_json, mapping=col_map
-                    )
-
-        def commit(self, end: dict) -> None:
-            pass
-
-        def stop(self) -> None:
-            pass
-
-    class TxLogStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "txlogstream"
-
-        def schema(self):
-            entries = _list_entries(self.options["path"])
-            if not entries:
-                raise FileNotFoundError(
-                    f"no txlog table at {self.options['path']}"
-                )
-            # latest entry carrying a schema_json wins (runs in the
-            # planning worker: StructType.fromJson needs no SparkContext)
-            for e in reversed(entries):
-                if "schema_json" in e:
-                    return StructType.fromJson(json.loads(e["schema_json"]))
-            raise ValueError("txlog table has no schema_json entries")
-
-        def streamReader(self, schema):
-            return TxLogStreamReader(
-                self.options,
-                [f.name for f in schema.fields],
-                [f.dataType.simpleString() for f in schema.fields],
-                schema.json(),
-            )
-
-    spark.dataSource.register(TxLogStreamSource)
+    """
+    _tablestream.register(spark, _TxLogStream)
 
 
 def register_cdf_stream_source(spark: SparkSession) -> None:
-    """Register the ``txlogcdf`` Python DataSource: the STREAMING change
-    data feed (Delta's ``readChangeFeed`` shape) — each micro-batch is the
-    row-level changes of a committed version range, schema = table columns
-    + ``_change_type`` + ``_commit_version``.  APPEND versions stream
-    their own files tagged 'insert'; OVERWRITE versions stream the
-    write-time change file ``merge_into`` captures.  An overwrite with NO
-    captured changes (crashed capture, or plain overwrite/compaction)
-    raises with a pointer to the batch ``read_changes`` diff fallback —
-    silently dropping changes is never an option for a CDC consumer.
-    Offsets are committed versions, same restart contract as
-    ``txlogstream``.  Usage::
+    """Register ``txlogcdf`` (``_TxLogCdfStream``).  Usage::
 
         register_cdf_stream_source(spark)
         spark.readStream.format("txlogcdf").option("path", root).load()
     """
-    from dataclasses import dataclass
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    @dataclass
-    class _CdfRange(InputPartition):
-        root: str
-        start: int  # exclusive
-        end: int  # inclusive
-        col_names: tuple
-        schema_json: str = ""  # full Spark schema for the Arrow fast path
-
-    class TxLogCdfReader(DataSourceStreamReader):
-        def __init__(self, options, col_names, schema_json=""):
-            self.root = options["path"]
-            self.col_names = tuple(col_names)
-            self.schema_json = schema_json
-
-        def initialOffset(self) -> dict:
-            return {"version": -1}
-
-        def latestOffset(self) -> dict:
-            v = latest_version(self.root)
-            return {"version": -1 if v is None else v}
-
-        def partitions(self, start: dict, end: dict):
-            return [
-                _CdfRange(
-                    self.root,
-                    int(start["version"]),
-                    int(end["version"]),
-                    self.col_names,
-                    self.schema_json,
-                )
-            ]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            entries = _list_entries(partition.root)
-            col_map = _replay_mapping(entries, partition.end)
-            for e in entries:
-                v = e["version"]
-                if not (partition.start < v <= partition.end):
-                    continue
-                if e["op"] in ("rename_column", "drop_column"):
-                    continue  # metadata-only: zero row changes
-                if e["op"] == "append":
-                    for rel in e["files"]:
-                        t = pq.read_table(os.path.join(partition.root, rel))
-                        # whole-version constants ride as vectorized
-                        # literal columns; data columns map by name
-                        # (renamed columns resolve by physical name)
-                        yield from _shape_to_stream_batches(
-                            t,
-                            partition.schema_json,
-                            constants={
-                                "_change_type": "insert",
-                                "_commit_version": v,
-                            },
-                            mapping=col_map,
-                        )
-                else:
-                    cpath = _changes_path(partition.root, v)
-                    if not os.path.isdir(cpath):
-                        raise ValueError(
-                            f"overwrite version {v} has no captured change "
-                            "file; stream requires write-time capture "
-                            "(merge_into) — use read_changes for the batch "
-                            "diff fallback"
-                        )
-                    t = pq.read_table(cpath)
-                    yield from _shape_to_stream_batches(
-                        t,
-                        partition.schema_json,
-                        constants={"_commit_version": v},
-                        mapping=col_map,
-                    )
-
-        def commit(self, end: dict) -> None:
-            pass
-
-        def stop(self) -> None:
-            pass
-
-    class TxLogCdfSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "txlogcdf"
-
-        def schema(self):
-            entries = _list_entries(self.options["path"])
-            if not entries:
-                raise FileNotFoundError(
-                    f"no txlog table at {self.options['path']}"
-                )
-            for e in reversed(entries):
-                if "schema_json" in e:
-                    base = StructType.fromJson(json.loads(e["schema_json"]))
-                    return StructType(
-                        list(base.fields)
-                        + [
-                            StructField("_change_type", StringType(), False),
-                            StructField("_commit_version", LongType(), False),
-                        ]
-                    )
-            raise ValueError("txlog table has no schema_json entries")
-
-        def streamReader(self, schema):
-            return TxLogCdfReader(
-                self.options, [f.name for f in schema.fields], schema.json()
-            )
-
-    spark.dataSource.register(TxLogCdfSource)
+    _tablestream.register(spark, _TxLogCdfStream)
