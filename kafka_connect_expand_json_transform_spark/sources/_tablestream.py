@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+
+from kafka_connect_expand_json_transform_spark.sources import _files
 
 
 @dataclass
@@ -51,29 +52,22 @@ class FileTask(InputPartition):
 
 
 def parquet_tasks(path: str, constants: dict | None = None, **fields) -> list[FileTask]:
-    """One ``FileTask`` per part file of a Spark-written parquet directory
-    (or the file itself).  Hive ``key=value`` directories become string
-    constants that ``_shape_to_stream_batches`` casts to the column's
-    type; files and directories starting with ``_`` or ``.`` are skipped,
-    as pyarrow's own discovery does."""
+    """One ``FileTask`` per file of a parquet directory written by
+    ``_files.write`` (or the file itself).  Its hive partition values
+    (``_files.hive_values``: strings, ``None`` for a null partition)
+    become constants that ``_shape_to_stream_batches`` casts to the
+    column's type; files and directories starting with ``_`` or ``.`` are
+    skipped, as pyarrow's own discovery does."""
     if not os.path.isdir(path):
         return [FileTask(path, constants, **fields)]
     tasks = []
     for dirpath, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
-        parts = {}
-        for seg in os.path.relpath(dirpath, path).split(os.sep):
-            key, eq, value = seg.partition("=")
-            if eq:
-                parts[unquote(key)] = (
-                    None if value == "__HIVE_DEFAULT_PARTITION__" else unquote(value)
-                )
         for name in sorted(files):
             if name[0] not in "_.":
-                tasks.append(FileTask(
-                    os.path.join(dirpath, name), {**parts, **(constants or {})} or None,
-                    **fields,
-                ))
+                file = os.path.join(dirpath, name)
+                parts = _files.hive_values(os.path.relpath(file, path))
+                tasks.append(FileTask(file, {**parts, **(constants or {})} or None, **fields))
     return tasks
 
 

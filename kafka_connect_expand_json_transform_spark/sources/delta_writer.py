@@ -26,15 +26,14 @@ under unique version-scoped names and are never rewritten by appends.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
-import shutil
 import time as _time
 
 from pyspark.sql import DataFrame
 
+from kafka_connect_expand_json_transform_spark.sources import _files
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
     _list_log,
@@ -200,17 +199,16 @@ def _enforce_constraints(df: DataFrame, constraints: list[tuple[str, str]],
     raise ValueError(f"{what} violates a CHECK constraint")
 
 
-def _footer_stats(path: str) -> str | None:
+def _stats_json(part) -> str:
     """Delta add-action ``stats`` JSON (numRecords/minValues/maxValues)
-    from the parquet FOOTER — no data read.  Emitting stats at write time
-    is what makes the reader's ``where=`` log-level skipping (and the CoW
-    writer's candidate pruning) work on this writer's own tables.  Columns
-    without min/max in EVERY row group are omitted (skipping must stay
-    sound); nested columns are skipped."""
+    from a written file's footer facts (``_files.Part``) — no data read.
+    Emitting stats at write time is what makes the reader's ``where=``
+    log-level skipping (and the CoW writer's candidate pruning) work on
+    this writer's own tables.  Ranges follow ``_files.footer``'s
+    every-row-group rule, so skipping stays sound; a range whose values
+    have no JSON form here is omitted."""
     import datetime
     import decimal
-
-    import pyarrow.parquet as pq
 
     def _plain(v):
         if isinstance(v, bytes):
@@ -223,35 +221,13 @@ def _footer_stats(path: str) -> str | None:
             return v
         return None
 
-    try:
-        md = pq.ParquetFile(path).metadata
-    except OSError:
-        return None
     mins: dict = {}
     maxs: dict = {}
-    covered: set[str] = set()
-    dropped: set[str] = set()
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name or name in dropped:
-                continue
-            st = col.statistics
-            lo = _plain(st.min) if st is not None and st.has_min_max else None
-            hi = _plain(st.max) if st is not None and st.has_min_max else None
-            if lo is None or hi is None:
-                dropped.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            if name in covered:
-                mins[name] = min(mins[name], lo)
-                maxs[name] = max(maxs[name], hi)
-            else:
-                mins[name], maxs[name] = lo, hi
-                covered.add(name)
-    out = {"numRecords": md.num_rows}
+    for name, (lo, hi) in part.ranges.items():
+        lo, hi = _plain(lo), _plain(hi)
+        if lo is not None and hi is not None:
+            mins[name], maxs[name] = lo, hi
+    out = {"numRecords": part.rows}
     if mins:
         out["minValues"], out["maxValues"] = mins, maxs
     return json.dumps(out)
@@ -538,59 +514,22 @@ def _stage_adds(
     now_ms: int,
     part_cols: list[str],
 ) -> tuple[list[str], list[dict]]:
-    """Write ``df`` to a stage directory (hive ``partitionBy`` layout when
-    ``part_cols``), move the task outputs into ``root`` under
-    attempt-unique names, and return ``(placed_rel_paths, add_actions)``.
-    Partition values travel as directory names and land in the adds'
-    ``partitionValues`` — never in the data files; adds carry
-    footer-derived stats so the reader's skipping works; empty task
-    outputs are dropped instead of committed as dead files.  Shared by
-    ``delta_append`` and the CoW DML rewrite (both stage the same way)."""
-    import urllib.parse as _up
-
-    import pyarrow.parquet as _pq
-
-    stage = os.path.join(root, f"_stage_{nonce}")
-    w = df.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(stage)
-    placed: list[str] = []
-    actions: list[dict] = []
-    try:
-        staged = sorted(glob.glob(
-            os.path.join(stage, "**", "part-*.parquet"), recursive=True
-        ))
-        for i, p in enumerate(staged):
-            # footer-only row count (no second plan evaluation)
-            if _pq.ParquetFile(p).metadata.num_rows == 0:
-                continue
-            part_dirs = [d for d in
-                         os.path.relpath(p, stage).split(os.sep)[:-1]
-                         if "=" in d]
-            pvals = {}
-            for d in part_dirs:
-                key, _, raw = d.partition("=")
-                pvals[key] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                              else _up.unquote(raw))
-            base = f"part-v{version:05d}-{nonce}-{i:05d}.parquet"
-            new_rel = os.path.join(*part_dirs, base) if part_dirs else base
-            if part_dirs:
-                os.makedirs(os.path.dirname(os.path.join(root, new_rel)),
-                            exist_ok=True)
-            os.rename(p, os.path.join(root, new_rel))
-            placed.append(new_rel)
-            full = os.path.join(root, new_rel)
-            add = {"path": new_rel, "partitionValues": pvals,
-                   "size": os.path.getsize(full),
-                   "modificationTime": now_ms, "dataChange": True}
-            stats = _footer_stats(full)
-            if stats:
-                add["stats"] = stats
-            actions.append({"add": add})
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return placed, actions
+    """Stage ``df`` into ``root`` under attempt-unique names (hive
+    ``partitionBy`` layout when ``part_cols``) and return
+    ``(placed_rel_paths, add_actions)``.  Partition values travel as
+    directory names and land in the adds' ``partitionValues`` — never in
+    the data files; adds carry footer-derived stats so the reader's
+    skipping works; empty task outputs are never committed.  Shared by
+    ``delta_append``, the CoW DML rewrite, MERGE and OPTIMIZE."""
+    parts = _files.stage(df, root, lambda i, p: os.path.join(
+        os.path.dirname(p.path), f"part-v{version:05d}-{nonce}-{i:05d}.parquet"
+    ), part_cols)
+    return [p.path for p in parts], [
+        {"add": {"path": p.path, "partitionValues": p.values,
+                 "size": p.size, "modificationTime": now_ms,
+                 "dataChange": True, "stats": _stats_json(p)}}
+        for p in parts
+    ]
 
 
 def _to_physical(df: DataFrame, table_schema, part_cols: list[str],
@@ -634,50 +573,18 @@ def _stage_cdc(
     part_cols: list[str],
 ) -> tuple[list[str], list[dict]]:
     """Stage change-data files under ``_change_data/`` and return
-    ``(placed_rel_paths, cdc_actions)`` — the same hive-layout walk as
-    ``_stage_adds``, but emitting the protocol's ``cdc`` action (no
-    stats; ``dataChange`` false by definition: change files never count
-    as table data)."""
-    import urllib.parse as _up
-
-    import pyarrow.parquet as _pq
-
-    stage = os.path.join(root, f"_stage_cdc_{nonce}")
-    w = df.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(stage)
-    placed: list[str] = []
-    actions: list[dict] = []
-    try:
-        staged = sorted(glob.glob(
-            os.path.join(stage, "**", "part-*.parquet"), recursive=True
-        ))
-        for i, p in enumerate(staged):
-            if _pq.ParquetFile(p).metadata.num_rows == 0:
-                continue
-            part_dirs = [d for d in
-                         os.path.relpath(p, stage).split(os.sep)[:-1]
-                         if "=" in d]
-            pvals = {}
-            for d in part_dirs:
-                key, _, raw = d.partition("=")
-                pvals[key] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                              else _up.unquote(raw))
-            base = f"cdc-v{version:05d}-{nonce}-{i:05d}.parquet"
-            new_rel = os.path.join("_change_data", *part_dirs, base)
-            os.makedirs(os.path.dirname(os.path.join(root, new_rel)),
-                        exist_ok=True)
-            os.rename(p, os.path.join(root, new_rel))
-            placed.append(new_rel)
-            actions.append({"cdc": {
-                "path": new_rel, "partitionValues": pvals,
-                "size": os.path.getsize(os.path.join(root, new_rel)),
-                "dataChange": False,
-            }})
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return placed, actions
+    ``(placed_rel_paths, cdc_actions)`` — ``_stage_adds`` emitting the
+    protocol's ``cdc`` action (no stats; ``dataChange`` false by
+    definition: change files never count as table data)."""
+    parts = _files.stage(df, root, lambda i, p: os.path.join(
+        "_change_data", os.path.dirname(p.path),
+        f"cdc-v{version:05d}-{nonce}-{i:05d}.parquet",
+    ), part_cols)
+    return [p.path for p in parts], [
+        {"cdc": {"path": p.path, "partitionValues": p.values,
+                 "size": p.size, "dataChange": False}}
+        for p in parts
+    ]
 
 
 def _assign_identity(df: DataFrame, name: str, dtype, base: int,

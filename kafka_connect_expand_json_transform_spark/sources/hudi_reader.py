@@ -58,7 +58,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafka_connect_expand_json_transform_spark.sources import _tablestream
+from kafka_connect_expand_json_transform_spark.sources import _files, _tablestream
 
 _COMMIT_RE = re.compile(r"^(\d+)\.(commit|deltacommit|replacecommit)$")
 _PENDING_COMPACTION_RE = re.compile(
@@ -814,6 +814,23 @@ class HudiCommitConflict(RuntimeError):
     """A concurrent writer claimed this instant first; retry."""
 
 
+def _stage_file_groups(
+    df: DataFrame, root: str, nonce: int, instant: str
+) -> tuple[list[str], list[dict]]:
+    """Stage ``df`` as NEW file groups of the ``p`` partition, one per
+    non-empty task output, base files named for ``instant``; returns
+    ``(placed_rel_paths, write_stats)``.  Shared by the appends and the
+    insert side of both upserts."""
+    parts = _files.stage(df, root, lambda i, _p: (
+        f"p/w{nonce}-{i}_0-0-0_{instant}.parquet"
+    ))
+    return [p.path for p in parts], [
+        {"fileId": f"w{nonce}-{p.index}", "path": p.path,
+         "numWrites": p.rows}
+        for p in parts
+    ]
+
+
 def hudi_append(
     df: DataFrame,
     root: str,
@@ -835,8 +852,6 @@ def hudi_append(
     equal instant refuses.  Scale: one parquet write per batch plus one
     O(written files) commit JSON — the timeline bound every Hudi writer
     pays."""
-    import glob as _glob
-    import shutil as _shutil
     import time as _time
 
     from pyspark.sql import functions as F
@@ -870,35 +885,11 @@ def hudi_append(
         raise ValueError(f"record_key column {record_key!r} not in schema")
 
     nonce = _time.time_ns()
-    stage = os.path.join(root, f"_stage_{nonce}")
-    (
-        df.select(
-            F.lit(instant).alias("_hoodie_commit_time"),
-            F.col(record_key).cast("string").alias("_hoodie_record_key"),
-            *df.columns,
-        )
-        .write.mode("overwrite").parquet(stage)
-    )
-    placed: list[str] = []
-    stats = []
-    try:
-        import pyarrow.parquet as _pq
-
-        os.makedirs(os.path.join(root, "p"), exist_ok=True)
-        for i, p in enumerate(sorted(_glob.glob(
-            os.path.join(stage, "part-*.parquet")
-        ))):
-            n_rows = _pq.ParquetFile(p).metadata.num_rows
-            if n_rows == 0:
-                continue
-            fid = f"w{nonce}-{i}"
-            rel = f"p/{fid}_0-0-0_{instant}.parquet"
-            os.rename(p, os.path.join(root, rel))
-            placed.append(rel)
-            stats.append({"fileId": fid, "path": rel,
-                          "numWrites": n_rows})
-    finally:
-        _shutil.rmtree(stage, ignore_errors=True)
+    placed, stats = _stage_file_groups(df.select(
+        F.lit(instant).alias("_hoodie_commit_time"),
+        F.col(record_key).cast("string").alias("_hoodie_record_key"),
+        *df.columns,
+    ), root, nonce, instant)
 
     final = os.path.join(_hoodie_dir(root), f"{instant}.commit")
     try:
@@ -943,8 +934,6 @@ def hudi_upsert(
     same bound Hudi's own CoW upsert pays.  Duplicate keys within one
     batch refuse (Hudi resolves them with a precombine field; callers
     precombine upstream)."""
-    import glob as _glob
-    import shutil as _shutil
     import time as _time
 
     from pyspark.sql import functions as F
@@ -1037,12 +1026,9 @@ def hudi_upsert(
     touched = sorted(r._fid for r in touched_rows)
 
     nonce = _time.time_ns()
-    stage = os.path.join(root, f"_stage_{nonce}")
     placed: list[str] = []
     stats = []
     try:
-        import pyarrow.parquet as _pq
-
         if touched:
             tset = set(touched)
             ex_t = ex.where(F.col("_fid").isin(*touched))
@@ -1059,22 +1045,21 @@ def hudi_upsert(
                 "_fid", F.lit(instant).alias("_hoodie_commit_time"),
                 "_hoodie_record_key", *data_cols,
             )
-            (
-                carried.unionByName(updated)
-                .repartition(len(tset), "_fid")
-                .write.mode("overwrite").partitionBy("_fid")
-                .parquet(os.path.join(stage, "upd"))
-            )
-            for fid in touched:
-                parts = sorted(_glob.glob(os.path.join(
-                    stage, "upd", f"_fid={fid}", "part-*.parquet")))
-                assert len(parts) == 1, \
-                    f"file group {fid}: expected one rewritten slice file"
-                n = _pq.ParquetFile(parts[0]).metadata.num_rows
-                rel = f"p/{fid}_0-0-0_{instant}.parquet"
-                os.rename(parts[0], os.path.join(root, rel))
-                placed.append(rel)
-                stats.append({"fileId": fid, "path": rel, "numWrites": n})
+            # one slice file per group: a second file for a group would
+            # take the same name, which ``_files.stage`` refuses
+            for p in _files.stage(
+                carried.unionByName(updated).repartition(len(tset), "_fid"),
+                root,
+                lambda _i, part: (
+                    f"p/{part.values['_fid']}_0-0-0_{instant}.parquet"
+                ),
+                ["_fid"],
+            ):
+                placed.append(p.path)
+                stats.append({"fileId": p.values["_fid"], "path": p.path,
+                              "numWrites": p.rows})
+            assert sorted(s["fileId"] for s in stats) == touched, \
+                "expected one rewritten slice file per touched file group"
 
         # inserts: keys in no existing group -> new file groups
         inserts = keyed.join(
@@ -1084,28 +1069,18 @@ def hudi_upsert(
             F.lit(instant).alias("_hoodie_commit_time"),
             "_hoodie_record_key", *data_cols,
         )
-        inserts.write.mode("overwrite").parquet(os.path.join(stage, "ins"))
-        for i, p in enumerate(sorted(_glob.glob(
-            os.path.join(stage, "ins", "part-*.parquet")
-        ))):
-            n = _pq.ParquetFile(p).metadata.num_rows
-            if n == 0:
-                continue
-            fid = f"w{nonce}-{i}"
-            rel = f"p/{fid}_0-0-0_{instant}.parquet"
-            os.rename(p, os.path.join(root, rel))
-            placed.append(rel)
-            stats.append({"fileId": fid, "path": rel, "numWrites": n})
+        ins_placed, ins_stats = _stage_file_groups(
+            inserts, root, nonce, instant
+        )
+        placed += ins_placed
+        stats += ins_stats
     except BaseException:
         for rel in placed:
             try:
                 os.unlink(os.path.join(root, rel))
             except OSError:
                 pass
-        _shutil.rmtree(stage, ignore_errors=True)
         raise
-    finally:
-        _shutil.rmtree(stage, ignore_errors=True)
 
     final = os.path.join(_hoodie_dir(root), f"{instant}.commit")
     try:
@@ -1161,8 +1136,6 @@ def hudi_mor_upsert(
     fid->log-name plan.  Columns must be primitive (long/double/string/
     boolean families) — the Avro log schema is derived from the frame;
     anything else refuses."""
-    import glob as _glob
-    import shutil as _shutil
     import time as _time
 
     from pyspark.sql import functions as F
@@ -1254,7 +1227,6 @@ def hudi_mor_upsert(
     nonce = _time.time_ns()
     stats = []
     written_logs: list[str] = []
-    placed: list[str] = []
     valid_instants = {c["instant"] for c in commits}
     slices = _mor_slices(root, None) if commits else []
     table_root = os.path.abspath(root)
@@ -1395,25 +1367,8 @@ def hudi_mor_upsert(
         F.lit(instant).alias("_hoodie_commit_time"),
         "_hoodie_record_key", *data_cols,
     )
-    stage = os.path.join(root, f"_stage_{nonce}")
-    ins.write.mode("overwrite").parquet(stage)
-    try:
-        import pyarrow.parquet as _pq
-
-        os.makedirs(os.path.join(root, "p"), exist_ok=True)
-        for i, pth in enumerate(sorted(_glob.glob(
-            os.path.join(stage, "part-*.parquet")
-        ))):
-            n = _pq.ParquetFile(pth).metadata.num_rows
-            if n == 0:
-                continue
-            fid = f"w{nonce}-{i}"
-            rel = f"p/{fid}_0-0-0_{instant}.parquet"
-            os.rename(pth, os.path.join(root, rel))
-            placed.append(rel)
-            stats.append({"fileId": fid, "path": rel, "numWrites": n})
-    finally:
-        _shutil.rmtree(stage, ignore_errors=True)
+    placed, ins_stats = _stage_file_groups(ins, root, nonce, instant)
+    stats += ins_stats
 
     final = os.path.join(_hoodie_dir(root), f"{instant}.deltacommit")
     try:

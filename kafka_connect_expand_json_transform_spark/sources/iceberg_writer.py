@@ -27,15 +27,14 @@ snapshot-scoped names and are never rewritten by appends.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
-import shutil
 import time as _time
 
 from pyspark.sql import DataFrame
 
+from kafka_connect_expand_json_transform_spark.sources import _files
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
 from kafka_connect_expand_json_transform_spark.sources import (
     iceberg_reader as IR,
@@ -138,8 +137,6 @@ def iceberg_append(df: DataFrame, root: str,
     omit table columns, and a type conflict on a shared column refuses —
     earlier data files simply lack the new columns and read as null.
     See the module docstring for the layout contract."""
-    import pyarrow.parquet as _pq
-
     meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
     try:
@@ -233,21 +230,10 @@ def iceberg_append(df: DataFrame, root: str,
     # attempt-unique data file names: a stale racer's orphans are never
     # referenced by a committed manifest and are unlinked on loss
     nonce = _time.time_ns()
-    os.makedirs(os.path.join(root, "data"), exist_ok=True)
-    stage = os.path.join(root, f"_stage_{nonce}")
-    df.write.mode("overwrite").parquet(stage)
-    placed: list[str] = []
-    try:
-        for i, p in enumerate(sorted(glob.glob(
-            os.path.join(stage, "part-*.parquet")
-        ))):
-            if _pq.ParquetFile(p).metadata.num_rows == 0:
-                continue
-            rel = f"data/snap{snap_id:05d}-{nonce}-{i:05d}.parquet"
-            os.rename(p, os.path.join(root, rel))
-            placed.append(rel)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    parts = _files.stage(df, root, lambda i, _p: (
+        f"data/snap{snap_id:05d}-{nonce}-{i:05d}.parquet"
+    ))
+    placed = [p.path for p in parts]
 
     # new data files ride an UNPARTITIONED spec (found or added); the
     # table's default spec and every carried manifest's spec are
@@ -266,14 +252,12 @@ def iceberg_append(df: DataFrame, root: str,
         [
             {"status": 1, "snapshot_id": snap_id,
              "data_file": {
-                 "content": 0, "file_path": f"{loc}/{rel}",
+                 "content": 0, "file_path": f"{loc}/{p.path}",
                  "file_format": "parquet",
-                 "record_count": _pq.ParquetFile(
-                     os.path.join(root, rel)).metadata.num_rows,
-                 "file_size_in_bytes": os.path.getsize(
-                     os.path.join(root, rel)),
+                 "record_count": p.rows,
+                 "file_size_in_bytes": p.size,
                  "equality_ids": None}}
-            for rel in sorted(placed)
+            for p in parts
         ],
         codec="null",
     )
@@ -433,32 +417,26 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
                          "left_anti")
 
     nonce = _time.time_ns()
-    stage = os.path.join(root, f"_stage_{nonce}")
-    hits.coalesce(1).write.mode("overwrite").parquet(stage)
-    placed: list[str] = []
-    try:
-        parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-        assert len(parts) == 1
-        n_deleted = _pq.ParquetFile(parts[0]).metadata.num_rows
-        if n_deleted == 0:
-            return prev_meta.get("current-snapshot-id"), 0
-        # re-emit with the spec's RESERVED field ids so native readers
-        # resolve the columns (2147483546 file_path / 2147483545 pos),
-        # sorted by (file_path, pos) as the spec requires
-        t = _pq.read_table(parts[0]).sort_by(
-            [("file_path", "ascending"), ("pos", "ascending")]
-        )
-        t = t.cast(_pa.schema([
-            _pa.field("file_path", _pa.string(),
-                      metadata={b"PARQUET:field_id": b"2147483546"}),
-            _pa.field("pos", _pa.int64(),
-                      metadata={b"PARQUET:field_id": b"2147483545"}),
-        ]))
-        del_rel = f"data/delete-snap{snap_id:05d}-{nonce}.parquet"
-        _pq.write_table(t, os.path.join(root, del_rel))
-        placed.append(del_rel)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    del_rel = f"data/delete-snap{snap_id:05d}-{nonce}.parquet"
+    parts = _files.stage(hits.coalesce(1), root, lambda _i, _p: del_rel)
+    if not parts:
+        return prev_meta.get("current-snapshot-id"), 0
+    (part,) = parts
+    n_deleted = part.rows
+    # re-emit in place with the spec's RESERVED field ids so native
+    # readers resolve the columns (2147483546 file_path / 2147483545
+    # pos), sorted by (file_path, pos) as the spec requires
+    t = _pq.read_table(os.path.join(root, del_rel)).sort_by(
+        [("file_path", "ascending"), ("pos", "ascending")]
+    )
+    t = t.cast(_pa.schema([
+        _pa.field("file_path", _pa.string(),
+                  metadata={b"PARQUET:field_id": b"2147483546"}),
+        _pa.field("pos", _pa.int64(),
+                  metadata={b"PARQUET:field_id": b"2147483545"}),
+    ]))
+    _pq.write_table(t, os.path.join(root, del_rel))
+    placed = [del_rel]
 
     # r10: carry the previous snapshot's manifests verbatim and add
     # ONE delete manifest holding only this commit's delete file —
@@ -468,14 +446,12 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
     AC.write_container(
         os.path.join(root, mdel_rel), _ICE_ENTRY_SCHEMA,
         [{"status": 1, "snapshot_id": snap_id, "data_file": {
-            "content": 1, "file_path": f"{loc}/{rel}",
+            "content": 1, "file_path": f"{loc}/{del_rel}",
             "file_format": "parquet",
-            "record_count": _pq.ParquetFile(
-                os.path.join(root, rel)).metadata.num_rows,
+            "record_count": n_deleted,
             "file_size_in_bytes": os.path.getsize(
-                os.path.join(root, rel)),
-            "equality_ids": None}}
-         for rel in placed],
+                os.path.join(root, del_rel)),
+            "equality_ids": None}}],
         codec="null",
     )
     mlist_rel = f"metadata/delete-snap-{snap_id}-{nonce}-list.avro"
@@ -575,41 +551,35 @@ def iceberg_delete_keys(spark, root: str, keys: DataFrame) -> tuple[int, int]:
     seq_no = 1 + prev_meta.get("last-sequence-number", 0)
 
     nonce = _time.time_ns()
-    stage = os.path.join(root, f"_stage_{nonce}")
-    keys.distinct().coalesce(1).write.mode("overwrite").parquet(stage)
-    placed: list[str] = []
-    try:
-        parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-        assert len(parts) == 1
-        n_keys = _pq.ParquetFile(parts[0]).metadata.num_rows
-        if n_keys == 0:
-            return prev_meta.get("current-snapshot-id"), 0
-        # stamp the table's field ids so native readers resolve columns
-        t = _pq.read_table(parts[0])
-        t = t.cast(_pa.schema([
-            _pa.field(f.name, f.type,
-                      metadata={b"PARQUET:field_id":
-                                str(id_of[f.name]).encode()})
-            for f in t.schema
-        ]))
-        del_rel = f"data/eqdelete-snap{snap_id:05d}-{nonce}.parquet"
-        _pq.write_table(t, os.path.join(root, del_rel))
-        placed.append(del_rel)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    del_rel = f"data/eqdelete-snap{snap_id:05d}-{nonce}.parquet"
+    parts = _files.stage(keys.distinct().coalesce(1), root,
+                         lambda _i, _p: del_rel)
+    if not parts:
+        return prev_meta.get("current-snapshot-id"), 0
+    (part,) = parts
+    n_keys = part.rows
+    # re-emit in place stamped with the table's field ids so native
+    # readers resolve columns
+    t = _pq.read_table(os.path.join(root, del_rel))
+    t = t.cast(_pa.schema([
+        _pa.field(f.name, f.type,
+                  metadata={b"PARQUET:field_id":
+                            str(id_of[f.name]).encode()})
+        for f in t.schema
+    ]))
+    _pq.write_table(t, os.path.join(root, del_rel))
+    placed = [del_rel]
 
     mdel_rel = f"metadata/eqdelete-mdel{snap_id}-{nonce}.avro"
     AC.write_container(
         os.path.join(root, mdel_rel), _ICE_ENTRY_SCHEMA,
         [{"status": 1, "snapshot_id": snap_id, "data_file": {
-            "content": 2, "file_path": f"{loc}/{rel}",
+            "content": 2, "file_path": f"{loc}/{del_rel}",
             "file_format": "parquet",
-            "record_count": _pq.ParquetFile(
-                os.path.join(root, rel)).metadata.num_rows,
+            "record_count": n_keys,
             "file_size_in_bytes": os.path.getsize(
-                os.path.join(root, rel)),
-            "equality_ids": eq_ids}}
-         for rel in placed],
+                os.path.join(root, del_rel)),
+            "equality_ids": eq_ids}}],
         codec="null",
     )
     mlist_rel = f"metadata/eqdelete-snap-{snap_id}-{nonce}-list.avro"
@@ -672,8 +642,6 @@ def iceberg_compact(spark, root: str) -> int:
 
     Scale: one distributed read-rewrite job (the snapshot read's own
     delete application) + O(new files) manifest metadata."""
-    import pyarrow.parquet as _pq
-
     meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
     prev_meta = IR._read_metadata(root)
@@ -701,35 +669,22 @@ def iceberg_compact(spark, root: str) -> int:
         read_iceberg,
     )
 
-    current = read_iceberg(spark, root)
     nonce = _time.time_ns()
-    stage = os.path.join(root, f"_stage_{nonce}")
-    current.write.mode("overwrite").parquet(stage)
-    placed: list[str] = []
-    try:
-        for i, pth in enumerate(sorted(glob.glob(
-            os.path.join(stage, "part-*.parquet")
-        ))):
-            if _pq.ParquetFile(pth).metadata.num_rows == 0:
-                continue
-            rel = f"data/compact-snap{snap_id:05d}-{nonce}-{i:05d}.parquet"
-            os.rename(pth, os.path.join(root, rel))
-            placed.append(rel)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    parts = _files.stage(read_iceberg(spark, root), root, lambda i, _p: (
+        f"data/compact-snap{snap_id:05d}-{nonce}-{i:05d}.parquet"
+    ))
+    placed = [p.path for p in parts]
 
     manifest_rel = f"metadata/compact-m{snap_id}-{nonce}.avro"
     AC.write_container(
         os.path.join(root, manifest_rel), _ICE_ENTRY_SCHEMA,
         [{"status": 1, "snapshot_id": snap_id, "data_file": {
-            "content": 0, "file_path": f"{loc}/{rel}",
+            "content": 0, "file_path": f"{loc}/{p.path}",
             "file_format": "parquet",
-            "record_count": _pq.ParquetFile(
-                os.path.join(root, rel)).metadata.num_rows,
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(root, rel)),
+            "record_count": p.rows,
+            "file_size_in_bytes": p.size,
             "equality_ids": None}}
-         for rel in sorted(placed)],
+         for p in parts],
         codec="null",
     )
     mlist_rel = f"metadata/compact-snap-{snap_id}-{nonce}-list.avro"

@@ -18,7 +18,8 @@ set, ``append`` extends it.  A snapshot is therefore just
 pruning, AQE) applies untouched.
 
 Encoding policy: every parquet file txlog writes (data, deletion vectors,
-change files) goes through ``_write_files``.  Streaming sink batches
+change files) goes through ``_files.write``, the one table file writer of
+every format in ``sources``.  Streaming sink batches
 (``foreach_batch_sink``, ``foreach_batch_wap_sink``) are written with
 Parquet dictionaries off and v2 data pages, so integers are
 DELTA_BINARY_PACKED and strings DELTA_BYTE_ARRAY: streamed tables carry
@@ -77,7 +78,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafka_connect_expand_json_transform_spark.sources import _tablestream
+from kafka_connect_expand_json_transform_spark.sources import _files, _tablestream
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 
 _LOG_DIR = "_log"
@@ -388,7 +389,7 @@ def _commit(
         else eff_parts_logical
     )
     # files store PHYSICAL column names (rename/drop never rewrite them)
-    _write_files(
+    parts = _files.write(
         _select_physical(df, mapping), os.path.join(root, rel), eff_parts_phys
     )
 
@@ -408,7 +409,7 @@ def _commit(
         # footer min/max per part file -> read_table_pruned's data skipping
         # (hive partition values injected as exact [v, v] ranges; stats are
         # keyed by PHYSICAL column names, matching the files)
-        "stats": _collect_part_stats(root, rel, part_dtypes),
+        "stats": _sidecar_stats(rel, parts, part_dtypes),
     }
     if eff_parts_phys:
         entry["partition_by"] = eff_parts_phys
@@ -726,20 +727,6 @@ def _select_physical(df: DataFrame, mapping: dict) -> DataFrame:
     return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
 
 
-def _write_files(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    options: dict | None = None,
-) -> None:
-    """Write df as a fresh parquet directory; ``options`` are parquet
-    writer options (the sinks pass ``_SINK_WRITE_OPTIONS``)."""
-    writer = df.write.mode("overwrite").options(**(options or {}))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def _read_dirs_pinned(spark, root: str, entries: list[dict], dirs, stored):
     """Read specific data dirs pinned to the log's LOGICAL schema: files
     store PHYSICAL names (column mapping), so the scan projects the
@@ -868,94 +855,36 @@ def drop_column(root: str, col: str) -> int:
     return version
 
 
-def _partition_values_from_path(rel_under_dir: str, dtypes: dict) -> dict:
-    """Parse hive ``col=value`` segments of a part file's path into typed
-    values per the table schema (int/float coerced; strings unquoted).
-    ``__HIVE_DEFAULT_PARTITION__`` (null) yields no entry — a file with an
-    unknown partition value is simply never pruned on that column."""
-    from urllib.parse import unquote
-
+def _sidecar_stats(rel_dir: str, parts: list, partition_dtypes: dict | None = None) -> dict:
+    """The commit's stats sidecar: per part file, the footer ranges of
+    its int/float/str columns (``_files.footer``'s rule; other types and
+    files without ranges are never pruned) plus each hive partition value
+    as an exact ``[v, v]`` range typed per the table schema, so
+    read_table_pruned, the point-lookup planner and skipping_report prune
+    partitions too.  A null partition value gets no range."""
     out: dict = {}
-    for seg in rel_under_dir.split(os.sep)[:-1]:
-        if "=" not in seg:
-            continue
-        col, raw = seg.split("=", 1)
-        if col not in dtypes or raw == "__HIVE_DEFAULT_PARTITION__":
-            continue
-        val = unquote(raw)
-        t = dtypes[col]
-        try:
-            if t in ("tinyint", "smallint", "int", "bigint"):
-                out[col] = int(val)
-            elif t in ("float", "double"):
-                out[col] = float(val)
-            else:
-                out[col] = val
-        except ValueError:
-            continue
-    return out
-
-
-def _collect_part_stats(
-    root: str, rel_dir: str, partition_dtypes: dict | None = None
-) -> dict:
-    """Per-part-file column min/max from the parquet FOOTERS (KBs per file,
-    no data read) for the commit's stats sidecar — the Delta/Iceberg data-
-    skipping answer.  Only flat int/float/str/bool columns are recorded
-    (nested and binary stats are skipped; absence of stats means a file is
-    never pruned, so partial coverage stays correct)."""
-    import glob as _glob
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # stats are an optimization, never a requirement
-        return {}
-    out: dict = {}
-    base = os.path.join(root, rel_dir)
-    # recursive: hive-partitioned dirs nest part files under col=value
-    # segments; '**' also matches zero directories, so flat layouts work
-    for part in sorted(
-        _glob.glob(os.path.join(base, "**", "*.parquet"), recursive=True)
-    ):
-        try:
-            md = pq.ParquetFile(part).metadata
-        except Exception:
-            continue
-        cols: dict = {}
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                try:
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                except Exception:
-                    continue  # e.g. pyarrow can't extract decimal stats
-                name = col.path_in_schema
-                if "." in name:
-                    continue
-                try:
-                    mn, mx = st.min, st.max
-                except Exception:
-                    continue  # pyarrow can't CAST stats for some types (decimal)
-                if not isinstance(mn, (int, float, str)) or isinstance(mn, bool):
-                    continue
-                if name in cols:
-                    cols[name] = [min(cols[name][0], mn), max(cols[name][1], mx)]
+    for part in parts:
+        cols = {
+            col: [mn, mx]
+            for col, (mn, mx) in part.ranges.items()
+            if isinstance(mn, (int, float, str)) and not isinstance(mn, bool)
+        }
+        for col, raw in part.values.items():
+            t = (partition_dtypes or {}).get(col)
+            if t is None or raw is None:
+                continue
+            try:
+                if t in ("tinyint", "smallint", "int", "bigint"):
+                    v = int(raw)
+                elif t in ("float", "double"):
+                    v = float(raw)
                 else:
-                    cols[name] = [mn, mx]
-        if partition_dtypes:
-            # hive partition values are EXACT per-file ranges [v, v]: the
-            # whole existing pruning stack (read_table_pruned, point-lookup
-            # planner, skipping_report) gets partition pruning for free
-            rel_under = os.path.relpath(part, base)
-            for col, v in _partition_values_from_path(
-                rel_under, partition_dtypes
-            ).items():
-                cols[col] = [v, v]
+                    v = raw
+            except ValueError:
+                continue
+            cols[col] = [v, v]
         if cols:
-            out[os.path.relpath(part, root)] = cols
+            out[os.path.join(rel_dir, part.path)] = cols
     return out
 
 
@@ -1164,7 +1093,7 @@ def write_audit_publish(
     # column mapping: staged files store PHYSICAL names like any commit;
     # table_parts is already physical (entries record it that way)
     mapping = _replay_mapping(entries)
-    _write_files(
+    parts = _files.write(
         _select_physical(df, mapping), os.path.join(root, rel), table_parts
     )
 
@@ -1197,7 +1126,7 @@ def write_audit_publish(
         "files": [rel],
         "schema": df.schema.simpleString(),
         "schema_json": df.schema.json(),
-        "stats": _collect_part_stats(root, rel, part_dtypes),
+        "stats": _sidecar_stats(rel, parts, part_dtypes),
     }
     blooms = _build_part_blooms(root, rel, spark=spark)
     if blooms:
@@ -1614,7 +1543,7 @@ def delete_where_mor(
     rel_dv = _write_dv(root, matched)
     # write-time CDF capture: the deleted rows ARE the change set
     ch_dir = _changes_path(root, current + 1)
-    _write_files(
+    _files.write(
         matched.select(*data_cols).withColumn("_change_type", F.lit("delete")),
         ch_dir,
     )
@@ -1704,7 +1633,7 @@ def _write_dv(root: str, matched: DataFrame) -> str:
     from pyspark.sql import functions as F
 
     rel_dv = os.path.join(_DV_DIR, uuid.uuid4().hex + ".parquet")
-    _write_files(
+    _files.write(
         matched.select(
             F.col("__dvf").alias("file"), F.col("__dvp").cast("bigint").alias("pos")
         ).coalesce(1),
@@ -1751,7 +1680,7 @@ def update_where_mor(
     _enforce_constraints(root, post)
     rel_dv = _write_dv(root, matched)
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    _write_files(
+    parts = _files.write(
         _select_physical(post, _replay_mapping(_list_entries(root))),
         os.path.join(root, rel_data),
     )
@@ -1760,7 +1689,7 @@ def update_where_mor(
         "_change_type", F.lit("delete")
     )
     post_ch = post.withColumn("_change_type", F.lit("insert"))
-    _write_files(pre_ch.unionByName(post_ch), ch_dir)
+    _files.write(pre_ch.unionByName(post_ch), ch_dir)
     entry = {
         "version": current + 1,
         "op": "update_mor",
@@ -1768,7 +1697,7 @@ def update_where_mor(
         "dv_files": [rel_dv],
         "schema": post.schema.simpleString(),
         "schema_json": post.schema.json(),
-        "stats": _collect_part_stats(root, rel_data),
+        "stats": _sidecar_stats(rel_data, parts),
     }
     try:
         _publish_entry(root, current + 1, entry)
@@ -1905,7 +1834,7 @@ def merge_into(
         # AFTER the commit under the committed version's name: a crash in
         # between loses only the change file, and read_changes falls back
         # to the diff for that version — self-healing, never wrong.
-        _write_files(plan.changes(plan.inserts()), _changes_path(root, version))
+        _files.write(plan.changes(plan.inserts()), _changes_path(root, version))
     return version, stats
 
 
@@ -1957,14 +1886,14 @@ def merge_into_mor(
     _enforce_constraints(root, new_rows)
     rel_dv = _write_dv(root, plan.touched())
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    _write_files(
+    parts = _files.write(
         _select_physical(new_rows, _replay_mapping(_list_entries(root))),
         os.path.join(root, rel_data),
     )
     ch_dir = _changes_path(root, current + 1)
     # a no-op assignment is physically vectored + re-appended, but the
     # capture records LOGICAL changes, like merge_into's
-    _write_files(plan.changes(ins), ch_dir)
+    _files.write(plan.changes(ins), ch_dir)
     entry = {
         "version": current + 1,
         "op": "merge_mor",
@@ -1972,7 +1901,7 @@ def merge_into_mor(
         "dv_files": [rel_dv],
         "schema": new_rows.schema.simpleString(),
         "schema_json": new_rows.schema.json(),
-        "stats": _collect_part_stats(root, rel_data),
+        "stats": _sidecar_stats(rel_data, parts),
     }
     try:
         _publish_entry(root, current + 1, entry)
@@ -2014,25 +1943,13 @@ def _prune_dirs(
         for pth in parts:
             rel_p = os.path.relpath(pth, root)
             st = all_stats.get(rel_p)
-            if st is None and _part_is_empty(pth):
+            if st is None and _files.footer(pth).rows == 0:
                 continue  # zero rows: provably unmatched
             if _part_survives(st, where, all_blooms.get(rel_p)):
                 touched = True
                 break
         (touched_dirs if touched else reused_dirs).append(d)
     return touched_dirs, reused_dirs
-
-
-def _part_is_empty(path: str) -> bool:
-    """True only when the parquet FOOTER proves the part holds zero rows
-    (stats sidecars skip empty parts, so they look 'unknown' to the
-    pruner).  Any read problem returns False — never prune on doubt."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows == 0
-    except Exception:
-        return False
 
 
 class TxLogConstraintViolation(ValueError):
@@ -3076,17 +2993,15 @@ def _sink_prologue(
     return entry, _replay_mapping(entries)
 
 
-def _publish_batch(root: str, phys: DataFrame, entry: dict) -> None:
-    """Publish a sink batch's written files (``phys`` is the batch under
-    physical column names) with the same skipping sidecar as batch
+def _publish_batch(root: str, phys: DataFrame, entry: dict, parts: list) -> None:
+    """Publish a sink batch's written ``parts`` (``phys`` is the batch
+    under physical column names) with the same skipping sidecar as batch
     commits, through the claim protocol ``_commit`` uses."""
     part_dtypes = {
         c: phys.schema[c].dataType.simpleString()
         for c in entry.get("partition_by", [])
     }
-    entry["stats"] = _collect_part_stats(
-        root, entry["files"][0], part_dtypes or None
-    )
+    entry["stats"] = _sidecar_stats(entry["files"][0], parts, part_dtypes)
     _publish_entry(root, entry["version"], entry)
 
 
@@ -3106,13 +3021,13 @@ def foreach_batch_sink(root: str):
             return
         entry, mapping = staged
         phys = _select_physical(batch_df, mapping)
-        _write_files(
+        parts = _files.write(
             phys,
             os.path.join(root, entry["files"][0]),
             entry.get("partition_by"),
             _SINK_WRITE_OPTIONS,
         )
-        _publish_batch(root, phys, entry)
+        _publish_batch(root, phys, entry, parts)
 
     return _sink
 
@@ -3143,7 +3058,7 @@ def foreach_batch_wap_sink(root: str, expectations: list):
         entry, mapping = staged
         rel = entry["files"][0]
         phys = _select_physical(batch_df, mapping)
-        _write_files(
+        parts = _files.write(
             phys,
             os.path.join(root, rel),
             entry.get("partition_by"),
@@ -3172,7 +3087,7 @@ def foreach_batch_wap_sink(root: str, expectations: list):
             }
             _publish_entry(root, entry["version"], reject)
             return
-        _publish_batch(root, phys, entry)
+        _publish_batch(root, phys, entry, parts)
 
     return _sink
 

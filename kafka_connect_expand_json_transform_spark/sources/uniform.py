@@ -50,6 +50,7 @@ import time as _time
 
 from pyspark.sql import types as T
 
+from kafka_connect_expand_json_transform_spark.sources import _files
 from kafka_connect_expand_json_transform_spark.sources import txlog as TX
 
 
@@ -101,17 +102,9 @@ def _txlog_state(root: str):
 
 def _hive_pvals(rel: str, part_cols: list[str]) -> dict:
     """Partition values of one data file from its hive directory names
-    (``col=value`` path segments; the txlog stages partitionBy writes, so
-    values travel as directories, never in the files)."""
-    import urllib.parse as _up
-
-    out: dict = {}
-    for seg in rel.split(os.sep):
-        if "=" in seg and not seg.endswith(".parquet"):
-            k, _, raw = seg.partition("=")
-            if k in part_cols:
-                out[k] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                          else _up.unquote(raw))
+    (the txlog writes partitionBy layouts, so values travel as
+    directories, never in the files)."""
+    out = {k: v for k, v in _files.hive_values(rel).items() if k in part_cols}
     missing = [c for c in part_cols if c not in out]
     if missing:
         raise UniformExportUnsupported(
@@ -477,8 +470,8 @@ def export_iceberg(root: str) -> int:
                  **({"partition": _typed_pv(rel)} if part_cols else {}),
                  # honest counts from the parquet footer (one footer read
                  # per file, O(files)): Iceberg planners trust record_count
-                 "record_count": _pq.ParquetFile(
-                     os.path.join(root, rel)).metadata.num_rows,
+                 "record_count": _files.footer(
+                     os.path.join(root, rel)).rows,
                  "file_size_in_bytes": current[rel],
                  "equality_ids": None}}
             for rel in sorted(current)

@@ -34,6 +34,18 @@ def test_create_append_and_read_back(spark, tmp_path):
     assert got == list(range(8))
     assert read_delta(spark, root, version=0).count() == 5
     assert [h["version"] for h in delta_history(root)] == [1, 0]
+    # empty Spark partitions, the first among them, commit no zero-row
+    # file, and the adds' numRecords sum to the frame's rows
+    import json
+
+    sparse = spark.range(8, 18, numPartitions=4).where("id >= 13").select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    assert delta_append(sparse, root) == 2
+    with open(os.path.join(root, "_delta_log", f"{2:020d}.json")) as fh:
+        adds = [json.loads(x)["add"] for x in fh if '"add"' in x]
+    counts = [json.loads(a["stats"])["numRecords"] for a in adds]
+    assert len(adds) == 2 and all(counts) and sum(counts) == sparse.count() == 5
 
 
 def test_schema_contract(spark, tmp_path):
@@ -551,6 +563,21 @@ def test_partitioned_append_create_and_read(spark, tmp_path):
         for r in read_delta(spark, root,
                             where=[("day", "=", "d3")]).collect()
     ) == [6, 7]
+    # a URL-quoted value keeps its value through partitionValues and the
+    # deltastream constants, beside the null
+    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
+        _DeltaStream,
+    )
+
+    odd = "a b/c%=d"
+    assert delta_append(spark.createDataFrame([(8, 16, odd)], "k long, v long, day string"),
+                        root) == 2
+    with open(os.path.join(root, "_delta_log", f"{2:020d}.json")) as fh:
+        (add,) = [_json.loads(x)["add"] for x in fh if '"add"' in x]
+    assert add["partitionValues"] == {"day": odd}
+    stream = _DeltaStream({"path": root}, _DeltaStream.read_schema({"path": root}))
+    tasks = stream.changes(stream.initial_offset(), stream.latest_offset())
+    assert {t.constants["day"] for t in tasks} == {"d1", "d2", "d3", None, odd}
     # a conflicting partition_by on an existing table refuses
     with pytest.raises(ValueError, match="partitionColumns"):
         delta_append(df2, root, partition_by=["k"])

@@ -387,6 +387,18 @@ def test_hudi_append_roundtrip(spark, tmp_path, monkeypatch):
     assert sorted(
         r.k for r in read_hudi(spark, root, as_of_instant=i1).collect()
     ) == [0, 1, 2, 3]
+    # empty Spark partitions, the first among them, commit no zero-row
+    # file, and the commit's numWrites sum to the frame's rows
+    import json
+
+    sparse = spark.range(6, 16, numPartitions=4).where("id >= 11").select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    i3 = hudi_append(sparse, root, record_key="k", instant=str(int(i2) + 1000))
+    with open(os.path.join(root, ".hoodie", f"{i3}.commit")) as fh:
+        writes = [st["numWrites"] for st in json.load(fh)["partitionToWriteStats"]["p"]]
+    assert len(writes) == 2 and all(writes) and sum(writes) == sparse.count() == 5
+    assert read_hudi(spark, root).count() == 11
     # meta columns present when kept
     kept = read_hudi(spark, root, keep_meta=True)
     assert {"_hoodie_commit_time", "_hoodie_record_key"} <= set(kept.columns)
@@ -399,7 +411,7 @@ def test_hudi_append_roundtrip(spark, tmp_path, monkeypatch):
     # its staged files
     import kafka_connect_expand_json_transform_spark.sources.hudi_reader as HR
 
-    nxt = str(int(i2) + 1)
+    nxt = str(int(i3) + 1)
     open(os.path.join(root, ".hoodie", f"{nxt}.commit"), "w").close()
     real = HR.hudi_timeline
     monkeypatch.setattr(

@@ -29,6 +29,25 @@ def test_create_append_time_travel(spark, tmp_path):
     got = sorted(r.k for r in read_iceberg(spark, root).collect())
     assert got == list(range(8))
     assert read_iceberg(spark, root, snapshot_id=1).count() == 5
+    # empty Spark partitions, the first among them, commit no zero-row
+    # file, and the new manifest's record_counts sum to the frame's rows
+    from kafka_connect_expand_json_transform_spark.sources import avro_codec
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
+        _read_metadata,
+    )
+
+    sparse = spark.range(8, 18, numPartitions=4).where("id >= 13").select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    assert iceberg_append(sparse, root) == 3
+    (snap,) = [s for s in _read_metadata(root)["snapshots"] if s["snapshot-id"] == 3]
+    counts = [
+        e["data_file"]["record_count"]
+        for m in avro_codec.read_container(snap["manifest-list"].removeprefix("file://"))
+        if m["added_snapshot_id"] == 3
+        for e in avro_codec.read_container(m["manifest_path"].removeprefix("file://"))
+    ]
+    assert len(counts) == 2 and all(counts) and sum(counts) == sparse.count() == 5
     # schema contract
     bad = spark.range(3).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="append schema"):

@@ -26,6 +26,23 @@ def test_append_versions_and_time_travel(spark, tmp_path):
     assert txlog.read_table(spark, root, version=0).count() == 10
     assert txlog.latest_version(root) == 1
     assert [h["op"] for h in txlog.history(root)] == ["append", "append"]
+    # empty Spark partitions, the first among them, commit no zero-row
+    # file, and the sidecar lists every file the commit holds
+    import glob
+
+    import pyarrow.parquet as pq
+
+    sparse = spark.range(30, 40, numPartitions=4).where("id >= 35").select(
+        "id", (F.col("id") * 2).alias("v")
+    )
+    txlog.append_table(sparse, root)
+    entry = txlog._list_entries(root)[-1]
+    rows = {
+        os.path.relpath(f, root): pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(root, entry["files"][0], "*.parquet"))
+    }
+    assert set(rows) == set(entry["stats"]) and all(rows.values())
+    assert sum(rows.values()) == sparse.count() == 5
 
 
 def test_overwrite_resets_file_set(spark, tmp_path):
@@ -242,19 +259,23 @@ def test_sink_written_files_read_in_duckdb_with_stats(spark, tmp_path):
             assert set(s) == {"id", "name", "price"}  # nested items skipped
 
 
-def test_txlog_writes_parquet_only_through_write_files():
-    """Source scan: ``sources/txlog.py`` creates exactly one DataFrame
-    writer, in ``_write_files``, and that writer writes parquet, so every
-    file txlog writes goes through one place that sets its encoding."""
+def test_table_files_written_only_through_files_module():
+    """Source scan: the table formats (txlog, Delta, Iceberg, Hudi and the
+    uniform export) create no DataFrame writer; ``sources/_files.py``
+    creates exactly one, in ``write``, and it writes parquet, so every
+    table file goes through one place that sets its encoding.  The hive
+    null-partition literal and footer ``.statistics`` reads appear only
+    in ``_files.py`` across the package: one partition parser, one stats
+    rule."""
     import ast
     import pathlib
 
-    tree = ast.parse(pathlib.Path(txlog.__file__).read_text())
-    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    from kafka_connect_expand_json_transform_spark.sources import _files
 
     def writers(node):
         # ``df.write`` / ``df.writeTo(...)``; a CALLED ``.write(...)`` is a
         # file handle's
+        called = {id(n.func) for n in ast.walk(node) if isinstance(n, ast.Call)}
         return [
             n
             for n in ast.walk(node)
@@ -262,11 +283,11 @@ def test_txlog_writes_parquet_only_through_write_files():
             and (n.attr == "writeTo" or (n.attr == "write" and id(n) not in called))
         ]
 
-    (fn,) = [
-        n
-        for n in tree.body
-        if isinstance(n, ast.FunctionDef) and n.name == "_write_files"
-    ]
+    sources = pathlib.Path(_files.__file__).parent
+    for name in ("txlog", "delta_writer", "iceberg_writer", "hudi_reader", "uniform"):
+        assert writers(ast.parse((sources / f"{name}.py").read_text())) == [], name
+    tree = ast.parse(pathlib.Path(_files.__file__).read_text())
+    (fn,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "write"]
     assert len(writers(tree)) == len(writers(fn)) == 1
     assert [
         n
@@ -275,6 +296,14 @@ def test_txlog_writes_parquet_only_through_write_files():
         and isinstance(n.func, ast.Attribute)
         and n.func.attr == "parquet"
     ]
+    found = set()
+    for py in sources.parent.rglob("*.py"):
+        for n in ast.walk(ast.parse(py.read_text())):
+            if (isinstance(n, ast.Attribute) and n.attr == "statistics") or (
+                isinstance(n, ast.Constant) and n.value == "__HIVE_DEFAULT_PARTITION__"
+            ):
+                found.add(py.relative_to(sources.parent).as_posix())
+    assert found == {"sources/_files.py"}
 
 
 def test_txlog_cdc_apply_roundtrip(spark, tmp_path):
@@ -535,6 +564,61 @@ def test_data_skipping_prunes_files_and_preserves_results(spark, tmp_path):
     assert txlog.skipping_report(root, [("k", "=", "not-an-int")])["files_read"] == 6
     # residual filter owns correctness: a predicate stats can't prove is applied
     assert txlog.read_table_pruned(spark, root, [("k", "=", 1500)]).count() == 1
+
+
+@pytest.mark.parametrize("fmt", ["txlog", "delta"])
+def test_skipping_keeps_rows_of_row_groups_without_min_max(spark, tmp_path, fmt):
+    """A file of 4 row groups whose last ``s`` chunk holds a 5,000-char
+    value: parquet-mr writes no min/max for that chunk, so ``s`` gets no
+    range and a predicate on it never prunes the file.  ``n`` is null in
+    the first two row groups, which keeps its range [200, 399]."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from kafka_connect_expand_json_transform_spark.sources import delta_writer
+    from kafka_connect_expand_json_transform_spark.sources.delta_reader import read_delta
+
+    root = str(tmp_path / "t")
+    df = spark.range(400).select(
+        "id",
+        F.when(F.col("id") == 390, F.lit("z" * 5000))
+        .otherwise(F.format_string("a%05d", "id"))
+        .alias("s"),
+        F.when(F.col("id") >= 200, F.col("id")).alias("n"),
+    ).coalesce(1)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = conf.get("parquet.block.size")
+    conf.set("parquet.block.size", "2048")
+    try:
+        if fmt == "txlog":
+            txlog.append_table(df, root)
+        else:
+            delta_writer.delta_append(df, root)
+    finally:
+        if old is None:
+            conf.unset("parquet.block.size")
+        else:
+            conf.set("parquet.block.size", old)
+    (path,) = glob.glob(os.path.join(root, "**", "part-*.parquet"), recursive=True)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 4
+    hint = [("s", ">=", "y")]
+    if fmt == "txlog":
+        (stats,) = txlog._list_entries(root)[0]["stats"].values()
+        assert "s" not in stats and stats["n"] == [200, 399]
+        assert txlog.skipping_report(root, [("n", "<", 100)])["files_read"] == 0
+        assert txlog.read_table_pruned(spark, root, hint).count() == 1
+        assert txlog.delete_where(spark, root, "s >= 'y'", prune_hint=hint) == (1, 1)
+        assert txlog.read_table(spark, root).count() == 399
+    else:
+        with open(os.path.join(root, "_delta_log", f"{0:020d}.json")) as fh:
+            (add,) = [json.loads(x)["add"] for x in fh if '"add"' in x]
+        stats = json.loads(add["stats"])
+        assert "s" not in stats["minValues"] and stats["minValues"]["n"] == 200
+        assert read_delta(spark, root, where=hint).where("s >= 'y'").count() == 1
+        assert delta_writer.delta_delete_where(spark, root, "s >= 'y'") == (1, 1)
+        assert read_delta(spark, root).count() == 399
 
 
 def test_compact_table_preserves_rows_and_time_travel(spark, tmp_path):

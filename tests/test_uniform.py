@@ -144,6 +144,39 @@ def test_partitioned_export_both_directions(spark, tmp_path):
     left = [k for k in range(8) if k not in (2, 5)]
     assert sorted(r.k for r in read_delta(spark, root).collect()) == left
     assert sorted(r.k for r in read_iceberg(spark, root).collect()) == left
+    # a null and a URL-quoted partition value keep their values through
+    # the txlog sidecar, both exports' partition values and the
+    # txlogstream constants
+    import json
+
+    from kafka_connect_expand_json_transform_spark.sources import avro_codec
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
+        _read_metadata,
+    )
+
+    odd = "a b/c%=d"
+    root = str(tmp_path / "podd")
+    want = {(0, odd), (1, None), (2, "g")}
+    TX.append_table(
+        spark.createDataFrame(sorted(want, key=str), "k bigint, g string"),
+        root, partition_by=["g"],
+    )
+    (entry,) = TX._list_entries(root)
+    assert {tuple(st.get("g", [None, None])) for st in entry["stats"].values()} \
+        == {(odd, odd), (None, None), ("g", "g")}
+    assert export_delta(root) == 0 and export_iceberg(root) == 1
+    with open(os.path.join(root, "_delta_log", f"{0:020d}.json")) as fh:
+        adds = [json.loads(x)["add"] for x in fh if '"add"' in x]
+    assert {a["partitionValues"]["g"] for a in adds} == {odd, None, "g"}
+    (snap,) = _read_metadata(root)["snapshots"]
+    assert {
+        e["data_file"]["partition"]["g"]
+        for m in avro_codec.read_container(snap["manifest-list"].removeprefix("file://"))
+        for e in avro_codec.read_container(m["manifest_path"].removeprefix("file://"))
+    } == {odd, None, "g"}
+    stream = TX._TxLogStream({"path": root}, TX._TxLogStream.read_schema({"path": root}))
+    tasks = stream.changes(stream.initial_offset(), stream.latest_offset())
+    assert {t.constants["g"] for t in tasks} == {odd, None, "g"}
 
 
 def test_export_iceberg_and_read_back(spark, tmp_path):
