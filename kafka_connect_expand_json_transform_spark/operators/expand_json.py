@@ -18,6 +18,18 @@ per-record ``DataException`` on malformed JSON (ExpandJson.java:169-171)
 becomes ``mode="FAILFAST"``, with ``"PERMISSIVE"`` (null on malformed) as the
 scale-friendly default.
 
+Every entry point (the three here, ``streaming.expand_json_stream`` and
+``sources.kafka``'s two) checks its own arguments, names its targets (root
+columns or dotted paths) and calls the one planner, ``_expand``.  Its
+strategy rule:
+
+  * a given ``schema`` means ``static``; ``schema`` with ``infer="variant"``
+    raises, and so does ``infer="static"`` without ``schema``;
+  * ``sample`` infers from ``sample_df`` if given, else from the frame
+    itself (memoized); a stream cannot be sampled at plan time, so
+    ``sample`` on a stream needs ``sample_df``;
+  * ``variant`` parses each target to VariantType.
+
 Execution model: each expanded field is one ``from_json`` expression — a
 narrow, shuffle-free, whole-stage-codegen'd projection. At 100 TB this runs
 embarrassingly parallel with zero exchange; schema resolution happens once at
@@ -37,7 +49,7 @@ from kafka_connect_expand_json_transform_spark.schema_inference import (
     assign_schema_names,
     collect_column_samples,
     decimal_leaf_paths,
-    infer_schema_for_column,
+    infer_schema_for_column,  # noqa: F401 — perfbench's tracer patches this binding
     infer_schema_from_samples,
 )
 
@@ -71,6 +83,7 @@ def _inference_memo_key(
     decimal_fidelity: bool,
 ) -> tuple | None:
     import os as _os
+    from urllib.parse import unquote, urlparse
 
     try:
         files = df.inputFiles()
@@ -78,8 +91,8 @@ def _inference_memo_key(
             return None
         stats = []
         for uri in sorted(files):
-            p = uri[len("file:"):] if uri.startswith("file:") else uri
-            st = _os.stat(p)
+            # inputFiles() are percent-encoded URIs (a space is %20)
+            st = _os.stat(unquote(urlparse(uri).path))
             stats.append((uri, st.st_mtime_ns, st.st_size))
         return (
             df.sparkSession.sparkContext.applicationId,
@@ -109,6 +122,154 @@ def _parse_expr(col: Column, dtype: DataType, mode: str) -> Column:
     wrapper = StructType().add(_SCALAR_WRAP, dtype, True)
     wrapped = F.concat(F.lit('{"%s":' % _SCALAR_WRAP), col.cast("string"), F.lit("}"))
     return F.from_json(wrapped, wrapper, options)[_SCALAR_WRAP]
+
+
+def _expand(
+    df: DataFrame,
+    targets: Sequence[str],
+    *,
+    sample_df: DataFrame | None = None,
+    schema: DataType | Mapping[str, DataType] | None = None,
+    infer: str = "sample",
+    sample_limit: int = 1000,
+    sample_ratio: float | None = None,
+    mode: str = "PERMISSIVE",
+    schema_name_prefix: str | None = None,
+    first_element_only: bool = True,
+    decimal_fidelity: bool = False,
+    rescued_data_column: str | None = None,
+) -> DataFrame:
+    """Expand each target — a root column or a dotted path into a struct
+    column — under the strategy rule of the module docstring.  The
+    parameters mean what ``expand_json`` documents."""
+    if infer not in ("sample", "static", "variant"):
+        raise ValueError(f"unknown inference strategy: {infer!r}")
+    if mode not in ("PERMISSIVE", "FAILFAST"):
+        raise ValueError(f"unknown parse mode: {mode!r}")
+    if schema is not None:
+        if infer == "variant":
+            raise ValueError(
+                "schema= conflicts with infer='variant' (a variant column has "
+                "no fixed schema); pass one or the other"
+            )
+        infer = "static"
+    elif infer == "static":
+        raise ValueError("infer='static' requires schema=")
+    for t in targets:
+        if t.split(".", 1)[0] not in df.columns:
+            raise ValueError(f"column {t!r} not in DataFrame: {df.columns}")
+
+    schemas: dict[str, DataType] = {}
+    decimal_paths: dict[str, list[str]] = {}
+    if infer == "static":
+        schemas = dict(schema) if isinstance(schema, Mapping) else {t: schema for t in targets}
+        missing = [t for t in targets if t not in schemas]
+        if missing:
+            raise ValueError(f"no static schema supplied for fields: {missing}")
+    elif infer == "sample":
+        source = df if sample_df is None else sample_df
+        if source.isStreaming:
+            raise ValueError(
+                "infer='sample' cannot sample a streaming DataFrame at plan "
+                "time; pass sample_df= (a batch snapshot, as "
+                "streaming.expand_json_stream takes), schema=, or "
+                "infer='variant'"
+            )
+        for t in targets:
+            # a separate sample_df is sampled on every plan, not memoized:
+            # perfbench's traced stream set-up times that sampling job and
+            # has no figure for a memo hit (ROADMAP item 2)
+            memo_key = None if sample_df is not None else _inference_memo_key(
+                df, t, sample_limit, sample_ratio, first_element_only,
+                decimal_fidelity,
+            )
+            hit = _INFER_MEMO.get(memo_key) if memo_key is not None else None
+            if hit is not None:
+                _INFER_MEMO.move_to_end(memo_key)
+                schemas[t], decimal_paths[t] = hit
+                continue
+            samples = collect_column_samples(
+                source, t, sample_limit=sample_limit, sample_ratio=sample_ratio
+            )
+            schemas[t] = infer_schema_from_samples(
+                samples, first_element_only, decimal_fidelity
+            )
+            decimal_paths[t] = decimal_leaf_paths(samples) if decimal_fidelity else []
+            if memo_key is not None:
+                _INFER_MEMO[memo_key] = (schemas[t], decimal_paths[t])
+                while len(_INFER_MEMO) > _INFER_MEMO_MAX:
+                    _INFER_MEMO.popitem(last=False)
+
+    root_names: dict[str, str | None] = {}
+    if schema_name_prefix and infer != "variant":
+        # ONE shared name map across all targets of this call: the
+        # reference's generatedSchemaNames/schemaNameIndex are instance
+        # state (ExpandJson.java:69-71, 238), so a second field's structs
+        # continue the numbering and dedup against the first field's.  Every
+        # root is counted, also where a nested withField cannot carry it.
+        shared_names: dict = {}
+        for t in targets:
+            schemas[t], root_names[t] = assign_schema_names(
+                schemas[t], schema_name_prefix, with_root=True, names=shared_names
+            )
+
+    out = df
+    for t in targets:
+        text = F.col(t).cast("string")
+        if infer == "variant":
+            parsed = F.parse_json(text)
+        else:
+            parsed = _parse_expr(F.col(t), schemas[t], mode)
+        if root_names.get(t) and "." not in t:
+            # the root struct's generated name (numbered after its children,
+            # reference bottom-up order) rides as column metadata — the only
+            # place a root name can live on a top-level expanded column
+            parsed = parsed.alias(t, metadata={"connect.name": root_names[t]})
+        # BigDecimal value fidelity (ExpandJson.java:212-213): from_json
+        # funnels number tokens through a double even for string targets, so
+        # decimal-derived string leaves are re-extracted through VariantType,
+        # which keeps the exact literal up to 38 digits (decimal128); beyond
+        # that Variant itself falls back to double — documented bound.
+        for path in decimal_paths.get(t, []):
+            exact = F.try_variant_get(
+                F.try_parse_json(text), "$" if path == "" else f"$.{path}", "string"
+            )
+            parsed = exact if path == "" else parsed.withField(path, exact)
+        if rescued_data_column and isinstance(schemas.get(t), StructType):
+            known = [fld.name for fld in schemas[t].fields]
+            all_pairs = F.from_json(text, "map<string,string>", {"mode": "PERMISSIVE"})
+            unknown = F.map_filter(
+                all_pairs, lambda k, _v: ~k.isin(*known) if known else F.lit(True)
+            )
+            name = rescued_data_column if len(targets) == 1 else f"{t}{rescued_data_column}"
+            out = out.withColumn(name, F.when(F.size(F.map_keys(unknown)) > 0, unknown))
+        root, _, rest = t.partition(".")
+        out = out.withColumn(root, F.col(root).withField(rest, parsed) if rest else parsed)
+    return out
+
+
+def _field_targets(
+    df: DataFrame, fields: Sequence[str] | None, source_column: str | None
+) -> list[str]:
+    """``expand_json``'s targets: the root-level ``fields``, or the one
+    whole-value ``source_column`` (default ``"value"``)."""
+    if not fields:
+        # reference guard: schemaless mode forbids a fields config — here the
+        # inverse guard: field mode requires fields (ExpandJson.java:95-110)
+        return [source_column or "value"]
+    if source_column is not None:
+        raise ValueError(
+            "pass either fields= (field mode) or source_column= (whole-value "
+            "mode), not both — the reference forbids fields in schemaless mode "
+            "(ExpandJson.java:95-98)"
+        )
+    for f in fields:
+        if "." in f:
+            raise ValueError(
+                f"nested field path {f!r} not supported (reference: "
+                "ExpandJson.java:42-44, readme.md:25)"
+            )
+    return list(fields)
 
 
 def expand_json(
@@ -169,137 +330,19 @@ def expand_json(
         fields expand.  NULL when nothing was rescued; non-object roots
         (arrays/scalars) have no top-level keys to drift and get none.
     """
-    if infer not in ("sample", "static", "variant"):
-        raise ValueError(f"unknown inference strategy: {infer!r}")
-    if mode not in ("PERMISSIVE", "FAILFAST"):
-        raise ValueError(f"unknown parse mode: {mode!r}")
-
-    whole_value = not fields
-    if whole_value:
-        # reference guard: schemaless mode forbids a fields config — here the
-        # inverse guard: field mode requires fields (ExpandJson.java:95-110)
-        target = source_column or "value"
-        if target not in df.columns:
-            raise ValueError(f"source column {target!r} not in DataFrame: {df.columns}")
-        fields_to_expand = [target]
-    else:
-        if source_column is not None and fields:
-            raise ValueError(
-                "pass either fields= (field mode) or source_column= (whole-value "
-                "mode), not both — the reference forbids fields in schemaless mode "
-                "(ExpandJson.java:95-98)"
-            )
-        for f in fields:
-            if "." in f:
-                raise ValueError(
-                    f"nested field path {f!r} not supported (reference: "
-                    "ExpandJson.java:42-44, readme.md:25)"
-                )
-            if f not in df.columns:
-                raise ValueError(f"field {f!r} not in DataFrame: {df.columns}")
-        fields_to_expand = list(fields)
-
-    if infer == "variant":
-        out = df
-        for f in fields_to_expand:
-            out = out.withColumn(f, F.parse_json(F.col(f).cast("string")))
-        return out
-
-    if infer == "static":
-        if schema is None:
-            raise ValueError("infer='static' requires schema=")
-        if isinstance(schema, Mapping):
-            schemas = dict(schema)
-        else:
-            schemas = {f: schema for f in fields_to_expand}
-        missing = [f for f in fields_to_expand if f not in schemas]
-        if missing:
-            raise ValueError(f"no static schema supplied for fields: {missing}")
-    decimal_paths: dict[str, list[str]] = {}
-    if infer == "sample":
-        if df.isStreaming:
-            raise ValueError(
-                "infer='sample' cannot sample a streaming DataFrame at plan "
-                "time; use streaming.expand_json_stream with sample_df=, or "
-                "infer='static'/'variant'"
-            )
-        schemas = {}
-        for f in fields_to_expand:
-            memo_key = _inference_memo_key(
-                df, f, sample_limit, sample_ratio, first_element_only,
-                decimal_fidelity,
-            )
-            hit = _INFER_MEMO.get(memo_key) if memo_key is not None else None
-            if hit is not None:
-                _INFER_MEMO.move_to_end(memo_key)
-                schemas[f], paths = hit
-                if decimal_fidelity:
-                    decimal_paths[f] = paths
-                continue
-            samples = collect_column_samples(
-                df, f, sample_limit=sample_limit, sample_ratio=sample_ratio
-            )
-            schemas[f] = infer_schema_from_samples(
-                samples, first_element_only, decimal_fidelity
-            )
-            if decimal_fidelity:
-                decimal_paths[f] = decimal_leaf_paths(samples)
-            if memo_key is not None:
-                _INFER_MEMO[memo_key] = (schemas[f], decimal_paths.get(f, []))
-                while len(_INFER_MEMO) > _INFER_MEMO_MAX:
-                    _INFER_MEMO.popitem(last=False)
-
-    root_names: dict[str, str | None] = {}
-    if schema_name_prefix:
-        named = {}
-        # ONE shared name map across all fields of this call: the
-        # reference's generatedSchemaNames/schemaNameIndex are instance
-        # state (ExpandJson.java:69-71, 238), so a second field's structs
-        # continue the numbering and dedup against the first field's.
-        shared_names: dict = {}
-        for f in fields_to_expand:
-            named[f], root_names[f] = assign_schema_names(
-                schemas[f], schema_name_prefix, with_root=True, names=shared_names
-            )
-        schemas = named
-
-    out = df
-    for f in fields_to_expand:
-        parsed = _parse_expr(F.col(f), schemas[f], mode)
-        if root_names.get(f):
-            # the root struct's generated name (numbered after its children,
-            # reference bottom-up order) rides as column metadata — the only
-            # place a root name can live on a top-level expanded column
-            parsed = parsed.alias(f, metadata={"connect.name": root_names[f]})
-        # BigDecimal value fidelity (ExpandJson.java:212-213): from_json
-        # funnels number tokens through a double even for string targets, so
-        # decimal-derived string leaves are re-extracted through VariantType,
-        # which keeps the exact literal up to 38 digits (decimal128); beyond
-        # that Variant itself falls back to double — documented bound.
-        for path in decimal_paths.get(f, []):
-            exact = F.try_variant_get(
-                F.try_parse_json(F.col(f).cast("string")),
-                "$" if path == "" else f"$.{path}",
-                "string",
-            )
-            parsed = exact if path == "" else parsed.withField(path, exact)
-        if rescued_data_column and isinstance(schemas[f], StructType):
-            known = [fld.name for fld in schemas[f].fields]
-            all_pairs = F.from_json(
-                F.col(f).cast("string"), "map<string,string>", {"mode": "PERMISSIVE"}
-            )
-            unknown = F.map_filter(
-                all_pairs, lambda k, _v: ~k.isin(*known) if known else F.lit(True)
-            )
-            rescued = F.when(F.size(F.map_keys(unknown)) > 0, unknown)
-            name = (
-                rescued_data_column
-                if len(fields_to_expand) == 1
-                else f"{f}{rescued_data_column}"
-            )
-            out = out.withColumn(name, rescued)
-        out = out.withColumn(f, parsed)
-    return out
+    return _expand(
+        df,
+        _field_targets(df, fields, source_column),
+        schema=schema,
+        infer=infer,
+        sample_limit=sample_limit,
+        sample_ratio=sample_ratio,
+        mode=mode,
+        schema_name_prefix=schema_name_prefix,
+        first_element_only=first_element_only,
+        decimal_fidelity=decimal_fidelity,
+        rescued_data_column=rescued_data_column,
+    )
 
 
 def expand_json_nested(
@@ -321,36 +364,24 @@ def expand_json_nested(
     which rewrites just the addressed leaf inside the struct: still a
     narrow, codegen'd projection, no shuffle.
 
-    ``infer="sample"``/``"static"`` as in ``expand_json``; ``"variant"``
-    parses the leaf to VariantType.
+    ``schema`` maps each path to its DataType; strategies as in
+    ``expand_json``.
     """
-    if infer not in ("sample", "static", "variant"):
-        raise ValueError(f"unknown inference strategy: {infer!r}")
-    out = df
     for path in paths:
         if "." not in path:
             raise ValueError(
                 f"{path!r} is a root-level field — use expand_json(fields=...) "
                 "for those; expand_json_nested is for dotted paths"
             )
-        root, rest = path.split(".", 1)
-        if root not in df.columns:
-            raise ValueError(f"root column {root!r} not in DataFrame: {df.columns}")
-        leaf = F.col(path)
-        if infer == "variant":
-            parsed = F.parse_json(leaf.cast("string"))
-        else:
-            if infer == "static":
-                if schema is None or path not in schema:
-                    raise ValueError(f"infer='static' requires schema[{path!r}]")
-                dtype = schema[path]
-            else:
-                dtype = infer_schema_for_column(df, path, sample_limit=sample_limit)
-            if schema_name_prefix:
-                dtype = assign_schema_names(dtype, schema_name_prefix)
-            parsed = _parse_expr(leaf, dtype, mode)
-        out = out.withColumn(root, F.col(root).withField(rest, parsed))
-    return out
+    return _expand(
+        df,
+        list(paths),
+        schema=schema,
+        infer=infer,
+        sample_limit=sample_limit,
+        mode=mode,
+        schema_name_prefix=schema_name_prefix,
+    )
 
 
 def expand_json_observed(
@@ -377,8 +408,7 @@ def expand_json_observed(
     """
     from pyspark.sql import Observation
 
-    whole_value = not fields
-    targets = [source_column or "value"] if whole_value else list(fields)
+    targets = _field_targets(df, fields, source_column)
     obs = Observation(observation_name)
     metrics = [F.count(F.lit(1)).alias("n_rows")]
     for f in targets:
@@ -388,8 +418,4 @@ def expand_json_observed(
                 F.when(src.isNotNull() & F.try_parse_json(src).isNull(), 1).otherwise(0)
             ).alias(f"n_malformed_{f}")
         )
-    observed = df.observe(obs, *metrics)
-    out = expand_json(
-        observed, fields=fields, source_column=source_column, **kwargs
-    )
-    return out, obs
+    return _expand(df.observe(obs, *metrics), targets, **kwargs), obs

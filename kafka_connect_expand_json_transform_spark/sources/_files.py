@@ -16,6 +16,8 @@ format: txlog, Delta, Iceberg and Hudi.
   4 KB), so a range built from the other row groups could exclude rows
   the file holds, and data skipping would drop them.
 * ``hive_values(rel)`` parses the ``col=value`` directories of a path.
+* ``plain_path(uri)`` / ``plain_file_path()``: the plain absolute path of
+  a file URI Spark reports (``_metadata.file_path``), as table logs hold it.
 
 The ranges hold pyarrow's values; each format types them for its own log
 (txlog sidecar, Delta ``stats``).
@@ -28,9 +30,9 @@ import os
 import shutil
 import uuid
 from typing import Callable, NamedTuple
-from urllib.parse import unquote
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
@@ -61,6 +63,22 @@ def hive_values(rel: str) -> dict:
         if eq:
             out[unquote(key)] = None if raw == _NULL_PARTITION else unquote(raw)
     return out
+
+
+def plain_path(uri: str) -> str:
+    """The plain absolute path of a file URI as Spark reports it
+    (``file:/a%20b/x`` -> ``/a b/x``).  Spark percent-encodes the path but
+    leaves ``+`` as it is, so ``+`` is not a space here."""
+    return unquote(urlparse(uri).path)
+
+
+def plain_file_path() -> Column:
+    """``plain_path`` of each row's ``_metadata.file_path``."""
+    from pyspark.sql import functions as F
+
+    bare = F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/")
+    # url_decode also turns '+' into a space: escape it first
+    return F.url_decode(F.regexp_replace(bare, "\\+", "%2B"))
 
 
 def footer(path: str) -> Footer:

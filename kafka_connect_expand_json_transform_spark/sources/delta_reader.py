@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_expand_json_transform_spark.sources import _tablestream
+from kafka_connect_expand_json_transform_spark.sources._files import plain_file_path
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -661,9 +662,7 @@ def read_delta_changes(
         if part_cols:
             df = df.withColumn(
                 "__file",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^[a-z]+:/+", "/"
-                ),
+                plain_file_path(),
             )
         # physical -> logical, plan-time rename ('name' mapping; 'id'
         # already reads under logical names via field-id resolution)
@@ -1107,10 +1106,9 @@ def read_delta(
     paths = [os.path.join(path, f) for f in sorted(files)]
     if part_cols or dv_rows:
         df = spark.read.schema(read_schema).parquet(*paths).withColumn(
-            # scheme-normalized: Spark renders local URIs as file:/x, the
-            # map keys are plain absolute paths
+            # the map keys are plain absolute paths
             "__file",
-            F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/"),
+            plain_file_path(),
         )
         if dv_rows:
             df = df.withColumn("__pos", F.col("_metadata.row_index"))

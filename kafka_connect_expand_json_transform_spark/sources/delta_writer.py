@@ -979,7 +979,7 @@ def _cow_scan(spark, root, candidates, meta, schema, mode, phys_of,
             *[os.path.join(root, rel) for rel in sorted(rels)]
         ).withColumn(
             "__f",
-            F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/"),
+            _files.plain_file_path(),
         )
         if dv_df is not None:
             df = (
@@ -1592,7 +1592,7 @@ def delta_optimize(
         *[os.path.join(root, rel) for rel in affected]
     ).withColumn(
         "__f",
-        F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/"),
+        _files.plain_file_path(),
     )
     if dv_df is not None:
         df = (

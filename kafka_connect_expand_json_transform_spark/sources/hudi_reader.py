@@ -1012,9 +1012,9 @@ def hudi_upsert(
     # map each existing row to its file group via the scanned file name
     fid_map_expr = F.create_map(*[
         x for p, fid in sorted(fid_of.items())
-        for x in (F.lit("file://" + p), F.lit(fid))
+        for x in (F.lit(p), F.lit(fid))
     ])
-    ex = existing.withColumn("_fid", fid_map_expr[F.input_file_name()])
+    ex = existing.withColumn("_fid", fid_map_expr[_files.plain_file_path()])
 
     # file groups touched by this batch: semi-join on the record key
     touched_rows = (

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from kafka_connect_expand_json_transform_spark.sources import _tablestream
+from kafka_connect_expand_json_transform_spark.sources._files import plain_file_path
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
 
 
@@ -865,9 +866,7 @@ def read_iceberg(
     cols = df.columns
     kept = df.select(
         "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), "^[a-z]+:/+", "/"
-        ).alias("__f"),
+        plain_file_path().alias("__f"),
         F.col("_metadata.row_index").alias("__p"),
     )
     if pos_deletes:

@@ -403,7 +403,8 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
         *[os.path.join(root, rel) for rel in data_rels]
     )
     hits = scan.where(F.expr(predicate)).select(
-        F.col("_metadata.file_path").alias("file_path"),
+        # the data file's URI exactly as the manifest holds it
+        F.concat(F.lit("file://"), _files.plain_file_path()).alias("file_path"),
         F.col("_metadata.row_index").alias("pos"),
     )
     if prev_pos_dels:

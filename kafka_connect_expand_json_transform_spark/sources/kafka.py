@@ -11,6 +11,10 @@ against memory/rate sources (see streaming/).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from kafka_connect_expand_json_transform_spark.operators.connect_smt import _side_of
+from kafka_connect_expand_json_transform_spark.operators.expand_json import _expand
 
 
 def read_kafka_stream(
@@ -55,39 +59,18 @@ def expand_kafka_records(
     other record column (topic/partition/offset/timestamp and the other side)
     through untouched.
 
-    Works on batch or streaming frames; streaming + ``infer='sample'`` needs
-    ``sample_df`` (see ``streaming.expand_json_stream``).
+    Works on batch or streaming frames; ``infer='sample'`` reads
+    ``sample_df`` when given, and a stream needs it (the strategy rule of
+    ``operators.expand_json``).
     """
     if side not in ("key", "value"):
         raise ValueError("side must be 'key' or 'value' (ExpandJson.java:277,299)")
-    if schema is not None and infer == "variant":
-        raise ValueError(
-            "schema= conflicts with infer='variant' (a variant column has no "
-            "fixed schema); pass one or the other"
-        )
-    from kafka_connect_expand_json_transform_spark.operators.expand_json import (
-        expand_json,
-    )
-
-    if df.isStreaming and infer == "sample":
-        from kafka_connect_expand_json_transform_spark.streaming.expand import (
-            expand_json_stream,
-        )
-
-        return expand_json_stream(
-            df,
-            source_column=side,
-            schema=schema,
-            infer=infer,
-            sample_df=sample_df,
-            mode=mode,
-            schema_name_prefix=schema_name_prefix,
-        )
-    return expand_json(
+    return _expand(
         df,
-        source_column=side,
+        [side],
+        sample_df=sample_df,
         schema=schema,
-        infer="static" if schema is not None else infer,
+        infer=infer,
         mode=mode,
         schema_name_prefix=schema_name_prefix,
     )
@@ -142,8 +125,7 @@ def from_connect_config(config: dict):
     JSON-text fields INSIDE the record side via dotted-path rewrite; the
     rest of the record passes through untouched.
     """
-    type_name = str(config.get("type", ""))
-    side = "key" if type_name.strip().endswith("$Key") else "value"
+    side = _side_of(str(config.get("type", "")))
     raw = config.get("fields", "")
     fields = [f.strip() for f in str(raw).split(",") if f.strip()] if raw else []
     prefix = config.get("schema.name.prefix")
@@ -154,12 +136,6 @@ def from_connect_config(config: dict):
         infer: str = "sample",
         mode: str = "PERMISSIVE",
     ) -> DataFrame:
-        from pyspark.sql.types import StructType
-
-        from kafka_connect_expand_json_transform_spark.operators.expand_json import (
-            expand_json_nested,
-        )
-
         is_struct = isinstance(df.schema[side].dataType, StructType)
         if fields and not is_struct:
             raise ValueError(
@@ -172,19 +148,11 @@ def from_connect_config(config: dict):
                 f"record {side} is a struct but 'fields' is empty — the "
                 "reference raises DataException here (ExpandJson.java:107-110)"
             )
-        if fields:
-            return expand_json_nested(
-                df,
-                [f"{side}.{f}" for f in fields],
-                infer=infer,
-                mode=mode,
-                schema_name_prefix=prefix,
-            )
-        return expand_kafka_records(
+        return _expand(
             df,
-            side=side,
-            infer=infer,
+            [f"{side}.{f}" for f in fields] or [side],
             sample_df=sample_df,
+            infer=infer,
             mode=mode,
             schema_name_prefix=prefix,
         )

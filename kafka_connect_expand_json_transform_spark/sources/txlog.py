@@ -2159,8 +2159,7 @@ def _build_part_blooms(root: str, rel_dir: str, spark=None) -> dict:
 
     merged: dict = {}
     for r in packed:
-        # _metadata.file_path is a URI (file:///...); strip to a local path
-        rel = os.path.relpath(re.sub(r"^file:/*", "/", r["file"]), root)
+        rel = os.path.relpath(_files.plain_path(r["file"]), root)
         key = (rel, r["col"])
         partial = np.frombuffer(base64.b64decode(r["bits"]), dtype=np.uint8)
         if key in merged:

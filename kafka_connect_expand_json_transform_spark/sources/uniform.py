@@ -76,10 +76,8 @@ def _dv_positions_by_abs(root: str, entries) -> dict[str, list[int]]:
                                   columns=["file", "pos"])
                 for f, p in zip(t.column("file").to_pylist(),
                                 t.column("pos").to_pylist()):
-                    # the txlog stores Spark's file URI (file:/x) — strip
-                    # the scheme like every reader does
-                    f = re.sub(r"^[a-z]+:/+", "/", f)
-                    out.setdefault(os.path.abspath(f), set()).add(int(p))
+                    # the txlog stores Spark's file URI (file:/x%20y)
+                    out.setdefault(_files.plain_path(f), set()).add(int(p))
     return {k: sorted(v) for k, v in out.items()}
 
 

@@ -2,12 +2,11 @@
 a JSON-expansion step inside a running stream pipeline (ExpandJson.java:32,
 readme.md:38-42).
 
-A streaming DataFrame cannot be sampled at plan time, so the ``sample``
-inference strategy (SURVEY.md §1.5) takes its sample from a *static* batch
-DataFrame (e.g. a parquet snapshot of the same topic) — the honest,
-plan-time-resolved version of the reference's first-record schema freeze
-(ExpandJson.java:131-153). ``static`` and ``variant`` strategies pass through
-unchanged: both are already plan-time-safe.
+It runs the one planner of ``operators.expand_json``, whose strategy rule
+holds for batch and stream alike: a stream cannot be sampled at plan time,
+so ``sample`` infers from ``sample_df``, a *static* batch DataFrame (e.g. a
+parquet snapshot of the same topic) — the honest, plan-time-resolved version
+of the reference's first-record schema freeze (ExpandJson.java:131-153).
 """
 
 from __future__ import annotations
@@ -17,8 +16,14 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DataType
 
-from kafka_connect_expand_json_transform_spark.operators.expand_json import expand_json
-from kafka_connect_expand_json_transform_spark.schema_inference import (
+# expand_json and infer_schema_for_column are bound here because perfbench's
+# tracer patches them in this module by name
+from kafka_connect_expand_json_transform_spark.operators.expand_json import (  # noqa: F401
+    _expand,
+    _field_targets,
+    expand_json,
+)
+from kafka_connect_expand_json_transform_spark.schema_inference import (  # noqa: F401
     infer_schema_for_column,
 )
 
@@ -34,32 +39,15 @@ def expand_json_stream(
     mode: str = "PERMISSIVE",
     schema_name_prefix: str | None = None,
 ) -> DataFrame:
-    """``expand_json`` for streaming DataFrames.
-
-    ``infer="sample"`` requires ``sample_df``: a batch DataFrame with the same
-    JSON columns, from which schemas are inferred once at plan time. An
-    explicit ``schema=`` short-circuits inference entirely (static).
-    """
-    if schema is not None:
-        infer = "static"
-    elif infer == "sample":
-        if sample_df is None:
-            raise ValueError(
-                "streaming expand_json with infer='sample' needs sample_df= "
-                "(a batch snapshot to infer from) or an explicit schema="
-            )
-        targets = list(fields) if fields else [source_column or "value"]
-        schema = {
-            f: infer_schema_for_column(sample_df, f, sample_limit=sample_limit)
-            for f in targets
-        }
-        infer = "static"
-    return expand_json(
+    """``expand_json`` for streaming DataFrames; ``sample_df`` is the batch
+    snapshot that ``infer="sample"`` reads (module docstring)."""
+    return _expand(
         df,
-        fields=fields,
-        source_column=source_column,
+        _field_targets(df, fields, source_column),
+        sample_df=sample_df,
         schema=schema,
         infer=infer,
+        sample_limit=sample_limit,
         mode=mode,
         schema_name_prefix=schema_name_prefix,
     )

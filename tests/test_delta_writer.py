@@ -578,6 +578,24 @@ def test_partitioned_append_create_and_read(spark, tmp_path):
     stream = _DeltaStream({"path": root}, _DeltaStream.read_schema({"path": root}))
     tasks = stream.changes(stream.initial_offset(), stream.latest_offset())
     assert {t.constants["day"] for t in tasks} == {"d1", "d2", "d3", None, odd}
+    # reads re-inject the escaped value: Spark percent-encodes
+    # _metadata.file_path (a%20b%252Fc%2525%253Dd) and leaves '+' as is
+    from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
+        delta_delete_where,
+    )
+
+    plus = "x+y"
+    assert delta_append(spark.createDataFrame([(9, 18, plus)], "k long, v long, day string"),
+                        root) == 3
+    assert sorted((r.k, r.day) for r in read_delta(spark, root).collect() if r.k >= 8) \
+        == [(8, odd), (9, plus)]
+    assert [r.k for r in read_delta(spark, root, where=[("day", "=", odd)]).collect()] == [8]
+    assert [r.k for r in read_delta(spark, root, where=[("day", "=", plus)]).collect()] == [9]
+    # a delete inside the escaped partition
+    assert delta_delete_where(spark, root, "k = 8 OR k = 0")[1] == 2
+    assert sorted((r.k, r.day) for r in read_delta(spark, root).collect()) \
+        == [(1, "d1"), (2, "d1"), (3, "d2"), (4, "d2"), (5, None), (6, "d3"),
+            (7, "d3"), (9, plus)]
     # a conflicting partition_by on an existing table refuses
     with pytest.raises(ValueError, match="partitionColumns"):
         delta_append(df2, root, partition_by=["k"])

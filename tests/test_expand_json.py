@@ -362,3 +362,69 @@ def test_rescued_data_column_captures_schema_drift(spark):
     # sample saw the wide record too (tiny frame) OR rescued it — either
     # way the key is never silently lost
     assert got[0] == {"late": "z"} or "late" in out3.schema["j"].dataType.names
+
+
+def test_one_expansion_planner():
+    """Source scan: across the package, only ``operators.expand_json._expand``
+    samples, merges, names and parses for expansion.  ``schema_inference``
+    defines these functions (its ``infer_schema_for_column`` is sample +
+    merge) and is the only other module allowed to call them."""
+    import ast
+    import pathlib
+
+    import kafka_connect_expand_json_transform_spark as pkg
+
+    guarded = {
+        "collect_column_samples",
+        "infer_schema_from_samples",
+        "infer_schema_for_column",
+        "assign_schema_names",
+        "_parse_expr",
+    }
+    root = pathlib.Path(pkg.__file__).parent
+    callers = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "schema_inference.py":
+            continue
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, fn or child.name)
+                    continue
+                if isinstance(child, ast.Call):
+                    f = child.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if name in guarded:
+                        callers.add((rel, fn, name))
+                visit(child, fn)
+
+        visit(ast.parse(path.read_text()), None)
+    assert {(rel, fn) for rel, fn, _ in callers} == {("operators/expand_json.py", "_expand")}
+    assert {name for *_, name in callers} == guarded - {"infer_schema_for_column"}
+
+
+def test_perfbench_tracer_installs_and_restores_every_binding():
+    """The benchmark's tracer patches package attributes by name; each must
+    exist, be wrapped while installed and be the original after."""
+    import importlib
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).parents[1] / "perfbench" / "spans.py"
+    spec = importlib.util.spec_from_file_location("perfbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spans)
+    names = [(m, a) for m, a, *_ in spans._TRACED + spans._FACTORIES]
+    modules = {m: importlib.import_module(f"{spans.PKG}.{m}") for m, _ in names}
+    before = {(m, a): getattr(modules[m], a) for m, a in names}
+    tracer = spans.Tracer()
+    tracer.install()
+    try:
+        for (m, a), orig in before.items():
+            assert getattr(modules[m], a) is not orig
+            assert getattr(modules[m], a).__wrapped__ is orig
+    finally:
+        tracer.uninstall()
+    assert all(getattr(modules[m], a) is orig for (m, a), orig in before.items())

@@ -484,6 +484,12 @@ def test_hudi_upsert_roundtrip(spark, tmp_path):
     assert sorted(r.k for r in read_hudi(spark, root2).collect()) \
         == list(range(6))
     assert j1 is not None
+    # under a directory whose name Spark percent-encodes in file URIs,
+    # existing rows still map to their file groups
+    root3 = str(tmp_path / "a b%c")
+    hudi_append(df1.coalesce(2), root3, record_key="k")
+    hudi_upsert(batch, root3, record_key="k")
+    assert {r.k: r.v for r in read_hudi(spark, root3).collect()} == got
 
 
 def test_hudistream_mor_commits(spark, tmp_path):

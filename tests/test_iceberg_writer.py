@@ -259,6 +259,32 @@ def test_position_delete_write_roundtrip(spark, tmp_path):
     assert s4 > s3 > s2
 
 
+def test_position_deletes_name_data_files_as_the_manifest_does(spark, tmp_path):
+    # a root whose name Spark percent-encodes: the delete file holds the
+    # manifest's file URI, not Spark's encoded one, and the reader applies it
+    import pyarrow.parquet as _pq
+
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_reader import (
+        _read_metadata,
+        _snapshot_entries,
+    )
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_writer import (
+        iceberg_delete_where,
+    )
+
+    root = str(tmp_path / "a b%c")
+    iceberg_append(_df(spark, 0, 6).coalesce(2), root)
+    _sid, n = iceberg_delete_where(spark, root, "k IN (1, 4)")
+    assert n == 2
+    assert sorted(r.k for r in read_iceberg(spark, root).collect()) == [0, 2, 3, 5]
+    import os
+
+    loc = "file://" + os.path.abspath(root)
+    _files, (pos_file,), _eq, _pv = _snapshot_entries(root, _read_metadata(root), None)
+    assert all(p.startswith(loc + "/data/") and os.path.exists(p[len("file://"):])
+               for p in _pq.read_table(pos_file).column("file_path").to_pylist())
+
+
 def test_icebergstream_over_delete_bearing_snapshots(spark, tmp_path):
     # r10: a delete snapshot aborts the stream (a retraction cannot be
     # appended) unless skipped wholesale or ignoreChanges — but LATER

@@ -107,6 +107,12 @@ def test_readme_config_roundtrip_schemad_value(spark):
         for f in [vt["anotherJsonTextField"].dataType["level1"]]
     ]
     assert all(n and n.startswith("com.github.joshuagrisham.kafka.test.MyJsonRecord") for n in named)
+    # one name map across both fields, roots counted as expand_json(fields=[a,
+    # b]) counts them: someJsonTextField's root is the prefix, then level2,
+    # level1 and anotherJsonTextField's root (which withField cannot carry)
+    prefix = README_CONFIG["schema.name.prefix"]
+    assert other["level1"].dataType["level2"].metadata["connect.name"] == prefix + "2"
+    assert vt["anotherJsonTextField"].dataType["level1"].metadata["connect.name"] == prefix + "3"
 
     row = out.select(
         "value.someJsonTextField.stringValue",
@@ -124,6 +130,38 @@ def test_readme_config_roundtrip_schemad_value(spark):
     assert row[3:5] == (24, "foo")                 # nested fixture
     assert row[5] == 7                             # non-expanded field untouched
     assert row[6] == "my-topic" and row[7] == 0 and row[8] == 100 and row[9] == TS
+
+
+def test_readme_config_on_a_stream_infers_from_sample_df(spark, tmp_path):
+    """Field mode on a stream samples ``sample_df``, not the stream: the
+    drained stream equals the batch expansion of the same records."""
+    from kafka_connect_expand_json_transform_spark.streaming import (
+        file_stream_source,
+        memory_sink,
+    )
+
+    outer = [
+        json.dumps({"someJsonTextField": SIMPLE_JSON, "anotherJsonTextField": NESTED_JSON,
+                    "untouched": i})
+        for i in range(4)
+    ]
+    wire = _wire_df(spark, [o.encode("utf-8") for o in outer])
+    converted = expand_json(
+        wire.withColumn("value", F.col("value").cast("string")), source_column="value"
+    )
+    src = str(tmp_path / "records")
+    converted.write.parquet(src)
+    snapshot = spark.read.parquet(src)
+    transform = from_connect_config(README_CONFIG)
+    stream = transform(
+        file_stream_source(spark, src, snapshot.schema, fmt="parquet"), sample_df=snapshot
+    )
+    batch = transform(snapshot)
+    assert stream.isStreaming and stream.schema == batch.schema
+    memory_sink(stream, "readme_config_stream")
+    got = spark.table("readme_config_stream").orderBy("offset").collect()
+    assert got == batch.orderBy("offset").collect()
+    assert [r.value.anotherJsonTextField.level1.level2.level3Number for r in got] == [24] * 4
 
 
 def test_schemaless_value_whole_expansion(spark):

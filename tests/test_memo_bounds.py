@@ -101,3 +101,21 @@ def test_infer_memo_is_bounded_and_eviction_keeps_results(spark, tmp_path):
         "id", "payload.a", "payload.b"
     )
     assert sorted(map(tuple, out2.collect())) == first
+
+
+def test_infer_memo_hits_under_an_escaped_directory(spark, tmp_path, monkeypatch):
+    # inputFiles() are percent-encoded URIs: the memo key must stat the
+    # decoded path, or a directory with a space or '%' never hits
+    d = str(tmp_path / "a b%c" / "t")
+    spark.createDataFrame(
+        [(i, '{"a": %d}' % i) for i in range(5)], "id int, payload string"
+    ).write.parquet(d)
+    calls = []
+    real = EJ.collect_column_samples
+    monkeypatch.setattr(
+        EJ, "collect_column_samples", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    for _ in range(2):
+        out = EJ.expand_json(spark.read.parquet(d), fields=["payload"])
+        assert sorted(r.a for r in out.select("payload.a").collect()) == list(range(5))
+    assert len(calls) == 1

@@ -288,6 +288,17 @@ def test_expand_json_sample_rejects_streaming(spark, events_path):
         expand_json(stream, fields=["props"])
 
 
+def test_expand_json_nested_sample_rejects_streaming(spark, events_path):
+    from kafka_connect_expand_json_transform_spark.operators.expand_json import (
+        expand_json_nested,
+    )
+
+    stream = file_stream_source(spark, events_path, EVENT_SCHEMA)
+    nested = stream.select(F.struct("props").alias("meta"))
+    with pytest.raises(ValueError, match="expand_json_stream"):
+        expand_json_nested(nested, ["meta.props"])
+
+
 def test_incremental_hll_across_microbatches(spark, tmp_path):
     from kafka_connect_expand_json_transform_spark.operators.sketches import (
         hll_rollup,

@@ -2731,6 +2731,23 @@ def test_distributed_bloom_build_matches_serial(spark, tmp_path):
         txlog._read_bloom_config(root),
     )
     assert e1 == serial1
+    # under a directory whose name Spark percent-encodes in file URIs the
+    # distributed build keys its blooms by the same plain paths
+    esc = str(tmp_path / "a b%c")
+    txlog.set_bloom_columns(esc, ["k", "s"], m_bits=2048, k_hashes=3)
+    _os.environ["SPARK_GRAFT_BLOOM_DIST_THRESHOLD"] = "0"
+    try:
+        txlog.append_table(df, esc)
+    finally:
+        del _os.environ["SPARK_GRAFT_BLOOM_DIST_THRESHOLD"]
+    e2 = txlog._list_entries(esc)[0]["bloom"]
+    esc_parts = _glob.glob(
+        os.path.join(esc, os.path.dirname(next(iter(e2))), "**", "*.parquet"),
+        recursive=True,
+    )
+    assert e2 == txlog._build_part_blooms_serial(
+        esc, sorted(esc_parts), txlog._read_bloom_config(esc)
+    )
 
 
 def test_commit_backend_seam_object_store_semantics(spark, tmp_path):

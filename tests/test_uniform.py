@@ -177,6 +177,26 @@ def test_partitioned_export_both_directions(spark, tmp_path):
     stream = TX._TxLogStream({"path": root}, TX._TxLogStream.read_schema({"path": root}))
     tasks = stream.changes(stream.initial_offset(), stream.latest_offset())
     assert {t.constants["g"] for t in tasks} == {odd, None, "g"}
+    # both exports read back the escaped value (Spark percent-encodes
+    # _metadata.file_path and leaves '+' as is), also after a MoR delete
+    # on the escaped partition turns into Delta DVs and Iceberg position
+    # deletes
+    assert {(r.k, r.g) for r in read_delta(spark, root).collect()} == want
+    assert {(r.k, r.g) for r in read_iceberg(spark, root).collect()} == want
+    TX.delete_where_mor(spark, root, "k = 0")
+    export_delta(root)
+    export_iceberg(root)
+    want = {(1, None), (2, "g")}
+    assert {(r.k, r.g) for r in read_delta(spark, root).collect()} == want
+    assert {(r.k, r.g) for r in read_iceberg(spark, root).collect()} == want
+    TX.append_table(spark.createDataFrame([(3, "x+y")], "k bigint, g string"), root)
+    export_delta(root)
+    export_iceberg(root)
+    want |= {(3, "x+y")}
+    assert {(r.k, r.g) for r in read_delta(spark, root).collect()} == want
+    assert {(r.k, r.g) for r in read_iceberg(spark, root).collect()} == want
+    assert [r.k for r in read_delta(spark, root, where=[("g", "=", "x+y")]).collect()] == [3]
+    assert [r.k for r in read_iceberg(spark, root, where=[("g", "=", "x+y")]).collect()] == [3]
 
 
 def test_export_iceberg_and_read_back(spark, tmp_path):
