@@ -11,11 +11,16 @@ Layout::
       data/<uuid>.parquet/    one immutable parquet directory per commit
 
 Each log entry is ``{"version": n, "op": "append"|"overwrite",
-"files": [...], "schema": ddl}``.  Readers list ``_log``, take entries up
-to the requested version, and replay them: ``overwrite`` resets the file
-set, ``append`` extends it.  A snapshot is therefore just
-``spark.read.parquet(*files)`` — every Spark optimization (pushdown,
-pruning, AQE) applies untouched.
+"files": [...], "schema": ddl}``.  One class, ``_Snapshot``, turns the
+log into table state: it lists ``_log`` once, takes the entries up to the
+requested version and replays them (``overwrite`` resets the file set,
+``append`` extends it) into the live files, deletion vectors, log schema,
+column mapping and partitioning.  One function, ``_scan``, turns a
+snapshot into rows: a plain parquet scan of its files pinned to the log
+schema, per data dir on a partitioned table, with the vectors
+anti-joined — every Spark optimization (pushdown, pruning, AQE) applies
+untouched.  Every reader, DML path, maintenance op and export takes
+both, so a rewrite reads exactly what a read sees.
 
 Encoding policy: every parquet file txlog writes (data, deletion vectors,
 change files) goes through ``_files.write``, the one table file writer of
@@ -70,6 +75,8 @@ batch-source/sink surface at production scale.
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
 import os
 import re
@@ -157,73 +164,177 @@ def _list_entries(root: str) -> list[dict]:
     return entries
 
 
+class _Snapshot:
+    """The table at one version, derived from ONE listing of ``_log``: the
+    only code that replays log entries into table state (Delta's snapshot
+    reconstruction).  ``version`` defaults to the latest; ``at(v)`` derives
+    another version from the same listing.  An empty or missing table is a
+    snapshot at version -1 with no entries — writers start from it;
+    ``require()`` and ``readable()`` add the checks readers make.
+
+    * ``files`` — live data dirs: ``overwrite`` resets the set, every other
+      op extends it.
+    * ``dvs`` — live deletion-vector dirs.  They ACCUMULATE across ops (a
+      DV row names an immutable part file by absolute path, so vectors on
+      files a rewrite dropped simply stop matching, while vectors on
+      carried dirs keep applying); ``dv_reset`` (full rewrite, RESTORE,
+      CLONE) replaces the set.
+    * ``schema`` — the DDL of the newest entry; ``schema_json`` / ``struct``
+      — the newest recorded log schema at or below the version (reads pin
+      it: the LOG owns the schema, Delta's rule).
+    * ``mapping`` — COLUMN MAPPING, logical -> physical name (identity
+      pairs omitted, so ``{}`` means never renamed).  Physical names are
+      what the parquet files store, fixed at a column's first commit;
+      ``rename_column`` re-keys the logical name over the same physical
+      column, ``drop_column`` removes the logical key.
+    * ``retired`` — physicals of dropped columns: they live on in committed
+      files, so a new column may not take one (the by-physical-name
+      projection would resurrect the dropped column's values).
+    * ``partition_by`` — the PHYSICAL hive-partition columns, or None.
+      Partitioning is table-constant (validated at commit): the first
+      marker in the log wins.
+    * ``stats`` / ``bloom`` / ``floor`` — the merged skipping sidecars and
+      vacuum's time-travel floor, read on first use."""
+
+    def __init__(self, root: str, version: int | None = None, log=None):
+        self.root = root
+        self.log = _list_entries(root) if log is None else log
+        self.latest = self.log[-1]["version"] if self.log else -1
+        self.version = self.latest if version is None else version
+        # versions are contiguous from 0 (_list_entries checks)
+        self.entries = self.log[: self.version + 1]
+        files: list[str] = []
+        dvs: list[str] = []
+        mapping: dict = {}
+        self.retired: set = set()
+        self.schema = self.schema_json = None
+        for e in self.entries:
+            if e["op"] == "overwrite":
+                files = list(e["files"])
+            else:
+                files.extend(e["files"])
+            if e.get("dv_reset"):
+                dvs = list(e.get("dv_files", []))
+            else:
+                dvs.extend(e.get("dv_files", []))
+            if e["op"] == "rename_column":
+                frm, to = e["rename"]["from"], e["rename"]["to"]
+                mapping[to] = mapping.pop(frm, frm)
+            elif e["op"] == "drop_column":
+                self.retired.add(mapping.pop(e["drop"], e["drop"]))
+            self.schema = e["schema"]
+            self.schema_json = e.get("schema_json", self.schema_json)
+        self.files, self.dvs = files, dvs
+        self.mapping = {k: v for k, v in mapping.items() if k != v}
+        self.partition_by = next(
+            (list(e["partition_by"]) for e in self.log if e.get("partition_by")),
+            None,
+        )
+
+    def at(self, version: int) -> "_Snapshot":
+        """Another version of the table from this snapshot's listing."""
+        return _Snapshot(self.root, version, self.log)
+
+    def require(self) -> "_Snapshot":
+        if not self.log:
+            raise FileNotFoundError(f"no txlog table at {self.root}")
+        return self
+
+    def readable(self) -> "_Snapshot":
+        """``require()`` plus a read's version checks: committed, and not
+        below vacuum's floor."""
+        self.require()
+        if self.version > self.latest:
+            raise ValueError(
+                f"version {self.version} not committed (latest {self.latest})"
+            )
+        if self.version < self.floor:
+            raise ValueError(
+                f"version {self.version} was vacuumed (time-travel floor is "
+                f"{self.floor})"
+            )
+        return self
+
+    @functools.cached_property
+    def struct(self):
+        """The log schema as a StructType, or None when no entry records one."""
+        from pyspark.sql.types import StructType
+
+        if self.schema_json is None:
+            return None
+        return StructType.fromJson(json.loads(self.schema_json))
+
+    def logical_struct(self):
+        if self.struct is None:
+            raise ValueError("txlog table has no schema_json entries")
+        return self.struct
+
+    @functools.cached_property
+    def stats(self) -> dict:
+        """Footer min/max per part file, keyed by root-relative part path
+        and PHYSICAL column name."""
+        out: dict = {}
+        for e in self.entries:
+            out.update(e.get("stats") or {})
+        return out
+
+    @functools.cached_property
+    def bloom(self) -> dict:
+        out: dict = {}
+        for e in self.entries:
+            out.update(e.get("bloom") or {})
+        return out
+
+    @functools.cached_property
+    def floor(self) -> int:
+        return _read_floor(self.root)
+
+    def parts(self, dirs: list[str] | None = None):
+        """``(absolute path, stats, bloom)`` for every part file of the live
+        data dirs (or of ``dirs``), dir by dir, recursing into hive
+        partition dirs."""
+        for d in self.files if dirs is None else dirs:
+            pattern = os.path.join(glob.escape(os.path.join(self.root, d)), "**", "*.parquet")
+            for p in sorted(glob.glob(pattern, recursive=True)):
+                rel = os.path.relpath(p, self.root)
+                yield p, self.stats.get(rel), self.bloom.get(rel)
+
+    def commits(self, after: int):
+        """``(entry, files it made live)`` for each entry after version
+        ``after`` — a file counts once, at the version where it was not
+        live before (a carried dir is not new)."""
+        live = set(self.at(after).files)
+        for e in self.entries[after + 1 :]:
+            yield e, [f for f in e["files"] if f not in live]
+            live = set(e["files"]) if e["op"] == "overwrite" else live | set(e["files"])
+
+
 def latest_version(root: str) -> int | None:
     """Highest committed version, or None for an empty/nonexistent table."""
-    entries = _list_entries(root)
-    return entries[-1]["version"] if entries else None
+    snap = _Snapshot(root)
+    return snap.latest if snap.log else None
 
 
-def _replay(entries: list[dict], version: int | None) -> tuple[list[str], str | None]:
-    files: list[str] = []
-    schema = None
-    for e in entries:
-        if version is not None and e["version"] > version:
-            break
-        if e["op"] == "overwrite":
-            files = list(e["files"])
-        else:
-            files.extend(e["files"])
-        schema = e["schema"]
-    return files, schema
+# the row identity a merge-on-read writer keeps: part file and row index
+_ROW_ID = ("__dvf", "__dvp")
 
 
-def _replay_dvs(entries: list[dict], version: int | None) -> list[str]:
-    """Deletion-vector dirs live at ``version``.  DVs ACCUMULATE across all
-    ops (never reset on overwrite): a DV row names an immutable part file
-    by absolute path, so vectors on files a CoW rewrite dropped simply
-    stop matching, while vectors on carried (``extra_files``) dirs keep
-    applying — exactly the correct semantics with zero bookkeeping."""
-    dvs: list[str] = []
-    for e in entries:
-        if version is not None and e["version"] > version:
-            break
-        if e.get("dv_reset"):
-            # RESTORE/CLONE pin the target snapshot's exact DV set — a
-            # post-target MoR delete must not leak through the restore
-            dvs = list(e.get("dv_files", []))
-        else:
-            dvs.extend(e.get("dv_files", []))
-    return dvs
-
-
-def _apply_dvs(
-    spark: SparkSession, root: str, df: DataFrame, dv_dirs: list[str]
-) -> DataFrame:
-    """Merge-on-read: anti-join the (file, pos) deletion vectors against the
-    scan's ``_metadata`` row identity.  The DV table is kilobytes per
+def _apply_dvs(spark: SparkSession, snap: _Snapshot, tagged: DataFrame) -> DataFrame:
+    """Merge-on-read: anti-join the snapshot's (file, pos) deletion vectors
+    against a scan's ``_ROW_ID`` columns.  The DV table is kilobytes per
     deleted batch and broadcast; the scan itself is untouched — this is
     the read-path half of Delta's deletion vectors."""
     from pyspark.sql import functions as F
 
-    paths = [d if os.path.isabs(d) else os.path.join(root, d) for d in dv_dirs]
-    dv = (
-        spark.read.schema("file string, pos bigint")
-        .parquet(*paths)
-        .withColumnRenamed("file", "__dv_file")
-        .withColumnRenamed("pos", "__dv_pos")
-    )
-    cols = df.columns
-    tagged = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__f"),
-        F.col("_metadata.row_index").alias("__p"),
-    )
-    kept = tagged.join(
+    dv = spark.read.schema("file string, pos bigint").parquet(
+        *[os.path.join(snap.root, d) for d in snap.dvs]
+    ).toDF("__dv_file", "__dv_pos")
+    return tagged.join(
         F.broadcast(dv),
-        (F.col("__f") == F.col("__dv_file")) & (F.col("__p") == F.col("__dv_pos")),
+        (F.col(_ROW_ID[0]) == F.col("__dv_file"))
+        & (F.col(_ROW_ID[1]) == F.col("__dv_pos")),
         "left_anti",
     )
-    return kept.select(*cols)
 
 
 def _acquire_claim(final: str) -> int:
@@ -294,16 +405,16 @@ def _commit(
     a conflict means their snapshot is stale and the CALLER must re-read
     (``with_retries``)."""
 
-    def validate(entries: list[dict]) -> int:
-        current = entries[-1]["version"] if entries else -1
+    def validate(snap: _Snapshot) -> int:
+        current = snap.latest
         if expected_version is not None and current != expected_version:
             raise TxLogConflict(
                 f"expected to commit after version {expected_version}, "
                 f"table is at {current}"
             )
-        if (op == "append" or extra_files) and entries:
-            _, schema = _replay(entries, None)
-            if schema is not None and df.schema.simpleString() != schema:
+        schema = snap.schema
+        if (op == "append" or extra_files) and schema is not None:
+            if df.schema.simpleString() != schema:
                 ok = op == "append" and (
                     (allow_add_columns or allow_widen_types)
                     and _is_widening(
@@ -327,8 +438,7 @@ def _commit(
                     # logical name — it may not shadow a live physical of
                     # another column or resurrect a dropped column's
                     # physical from pre-drop files (Delta's column-id rule)
-                    m = _replay_mapping(entries)
-                    taken = set(m.values()) | _retired_physicals(entries)
+                    taken = set(snap.mapping.values()) | snap.retired
                     old_names = {f.split(":", 1)[0] for f in _fields(schema)}
                     clash = [
                         c
@@ -344,19 +454,19 @@ def _commit(
         return current
 
     df = _apply_generated(root, df)  # generated columns materialize/validate
-    existing_entries = _list_entries(root)
+    snap = _Snapshot(root)
     # identity column: fill NULL rows from the versioned high-water mark
     # BEFORE schema validation (the fill may add the column)
-    df, identity_hwm = _apply_identity(root, df, existing_entries)
-    current = validate(existing_entries)
+    df, identity_hwm = _apply_identity(root, df, snap.entries)
+    current = validate(snap)
     # hive partitioning is TABLE-CONSTANT: a new spec on a partitioned
     # table (or vice versa) would break unified reads mid-history.
     # (Entries record PHYSICAL partition names; the caller speaks logical —
     # translate before comparing.)
-    table_parts = _table_partition_by(existing_entries)
-    _m0 = _replay_mapping(existing_entries)
+    table_parts = snap.partition_by
+    mapping = snap.mapping
     if partition_by is not None and table_parts is not None and [
-        _m0.get(c, c) for c in partition_by
+        mapping.get(c, c) for c in partition_by
     ] != table_parts:
         raise ValueError(
             f"table is partitioned by {table_parts}; cannot commit with "
@@ -365,7 +475,7 @@ def _commit(
     # the vice-versa direction: an UNPARTITIONED table with committed
     # history must not silently gain partitioning mid-history (time travel
     # to pre-marker versions would route through the wrong read path)
-    if partition_by is not None and table_parts is None and existing_entries:
+    if partition_by is not None and table_parts is None and snap.log:
         raise ValueError(
             "table has unpartitioned committed history; cannot introduce "
             f"partition_by={list(partition_by)} mid-history"
@@ -373,7 +483,6 @@ def _commit(
     eff_parts = list(partition_by) if partition_by is not None else table_parts
     # column mapping: entries record PHYSICAL partition names (they match
     # the immutable hive dirs); the caller speaks logical — translate
-    mapping = _m0
     inv = {v: k for k, v in mapping.items()}
     eff_parts_logical = [inv.get(c, c) for c in eff_parts] if eff_parts else eff_parts
     if eff_parts_logical:
@@ -456,7 +565,7 @@ def _commit(
             # SAME data dir at the next slot.  Backoff lets an in-flight
             # claimer publish instead of busy-spinning on its claim.
             time.sleep(min(0.05 * (attempt + 1), 0.2))
-            current = validate(_list_entries(root))
+            current = validate(_Snapshot(root))
     raise AssertionError("unreachable")  # pragma: no cover
 
 
@@ -642,54 +751,6 @@ def _is_widening(
     return True
 
 
-def _table_partition_by(entries: list[dict]) -> list[str] | None:
-    """The table's hive-partitioning columns, or None.  Partitioning is
-    TABLE-CONSTANT (validated at commit), so the first marker wins."""
-    for e in entries:
-        if e.get("partition_by"):
-            return list(e["partition_by"])
-    return None
-
-
-def _replay_mapping(entries: list[dict], version: int | None = None) -> dict:
-    """COLUMN MAPPING (Delta's rename/drop-without-rewrite, re-expressed
-    for the log): the logical->physical column-name map at ``version``.
-    Physical names are what the parquet files store — fixed at a column's
-    first commit, never rewritten; ``rename_column`` re-keys the logical
-    name over the same physical column, ``drop_column`` removes the
-    logical key (the physical column stays in old files, unprojected).
-    Identity pairs are omitted, so ``{}`` means the table was never
-    renamed and every path skips the translation entirely."""
-    mapping: dict = {}
-    for e in entries:
-        if version is not None and e["version"] > version:
-            break
-        if e["op"] == "rename_column":
-            frm, to = e["rename"]["from"], e["rename"]["to"]
-            mapping[to] = mapping.pop(frm, frm)
-        elif e["op"] == "drop_column":
-            mapping.pop(e["drop"], None)
-    return {k: v for k, v in mapping.items() if k != v}
-
-
-def _retired_physicals(entries: list[dict]) -> set:
-    """Physical column names that live inside committed files but are no
-    longer (or never again safely) projectable: the physicals of dropped
-    columns.  A new logical column may not take one of these names — the
-    by-physical-name projection would resurrect the dropped column's stale
-    values from pre-drop files."""
-    mapping: dict = {}
-    retired: set = set()
-    for e in entries:
-        if e["op"] == "rename_column":
-            frm, to = e["rename"]["from"], e["rename"]["to"]
-            mapping[to] = mapping.pop(frm, frm)
-        elif e["op"] == "drop_column":
-            col = e["drop"]
-            retired.add(mapping.pop(col, col))
-    return retired
-
-
 def _phys_struct(stored, mapping: dict):
     """The stored (logical) StructType with field names translated to
     physical — the schema the parquet files actually carry."""
@@ -727,27 +788,99 @@ def _select_physical(df: DataFrame, mapping: dict) -> DataFrame:
     return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
 
 
-def _read_dirs_pinned(spark, root: str, entries: list[dict], dirs, stored):
-    """Read specific data dirs pinned to the log's LOGICAL schema: files
-    store PHYSICAL names (column mapping), so the scan projects the
-    physical struct and aliases back."""
-    m = _replay_mapping(entries)
-    df = spark.read.schema(_phys_struct(stored, m)).parquet(
-        *[os.path.join(root, d) for d in dirs]
-    )
-    return _select_logical(df, stored, m) if m else df
+def _scan(
+    spark: SparkSession,
+    snap: _Snapshot,
+    dirs: list[str] | None = None,
+    files: list[str] | None = None,
+    row_identity: bool = False,
+) -> DataFrame:
+    """The one reader of table data files: the snapshot's rows, from all
+    live data dirs, from ``dirs`` (a subset of them), or from ``files``
+    (absolute part-file paths of live dirs, a pruned read).
+
+    The scan is pinned to the LOG's schema under PHYSICAL names, so
+    pre-evolution files null-fill appended columns and footers are never
+    consulted, then renamed back to the logical names in log order.  On a
+    hive-partitioned table each data dir scans on its own, with that dir
+    as ``basePath`` (Spark's partition discovery rejects a multi-dir scan:
+    the uuid dir segments conflict), and the scans union.  Deletion
+    vectors anti-join PER SCAN, because ``_metadata`` row identity only
+    exists on scan-backed frames; ``row_identity`` keeps it as the
+    ``_ROW_ID`` columns for the merge-on-read writers.  No files gives the
+    empty frame, nullable like a parquet read."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    root, stored = snap.root, snap.struct
+    if files is None:
+        groups = [
+            (os.path.join(root, d), [os.path.join(root, d)])
+            for d in (snap.files if dirs is None else dirs)
+        ]
+    else:
+        live = {os.path.join(root, d) for d in snap.files}
+        by_dir: dict[str, list[str]] = {}
+        for p in files:
+            d = os.path.dirname(p)
+            while d not in live and d != os.path.dirname(d):
+                d = os.path.dirname(d)
+            by_dir.setdefault(d, []).append(p)
+        groups = list(by_dir.items())
+    if not groups:
+        if stored is None:
+            raise ValueError(
+                f"txlog table at {root} has no files to read and no entry "
+                "records schema_json"
+            )
+        fields = [f.__class__(f.name, f.dataType, True) for f in stored.fields]
+        if row_identity:
+            fields += [
+                StructField(_ROW_ID[0], StringType()),
+                StructField(_ROW_ID[1], LongType()),
+            ]
+        return spark.createDataFrame([], StructType(fields))
+    if not snap.partition_by:
+        groups = [(None, [p for _, paths in groups for p in paths])]
+    frames = []
+    for base, paths in groups:
+        reader = spark.read
+        if stored is not None:
+            reader = reader.schema(_phys_struct(stored, snap.mapping))
+        if base is not None:
+            reader = reader.option("basePath", base)
+        df = reader.parquet(*paths)
+        if row_identity or snap.dvs:
+            df = df.select(
+                "*",
+                F.col("_metadata.file_path").alias(_ROW_ID[0]),
+                F.col("_metadata.row_index").alias(_ROW_ID[1]),
+            )
+        if snap.dvs:
+            df = _apply_dvs(spark, snap, df)
+        frames.append(df)
+    df = functools.reduce(DataFrame.unionByName, frames)
+    if stored is None:
+        data = [c for c in df.columns if c not in _ROW_ID]
+    else:
+        data = [
+            F.col(snap.mapping.get(f.name, f.name)).alias(f.name)
+            for f in stored.fields
+        ]
+    return df.select(*data, *(_ROW_ID if row_identity else ()))
 
 
-def _current_logical_schema(entries: list[dict]):
-    from pyspark.sql.types import StructType
-
-    schema_json = next(
-        (e["schema_json"] for e in reversed(entries) if "schema_json" in e),
-        None,
-    )
-    if schema_json is None:
-        raise ValueError("txlog table has no schema_json entries")
-    return StructType.fromJson(json.loads(schema_json))
+def _partial_scan(spark: SparkSession, snap: _Snapshot, hint: list[tuple] | None):
+    """``(rows to rewrite, dirs to carry)`` for a partial copy-on-write
+    rewrite: with a footer-stats ``hint`` only the dirs ``_prune_dirs``
+    cannot rule out are scanned (pinned to the log schema, so a widened
+    table still rewrites at full width, and with deletion vectors applied,
+    so a rewrite never resurrects a merge-on-read delete); the rest carry
+    into the new version unrewritten."""
+    if not hint:
+        return _scan(spark, snap), []
+    touched, reused = _prune_dirs(snap, hint)
+    return _scan(spark, snap, dirs=touched), reused
 
 
 def _guard_metadata_refs(root: str, col: str, action: str) -> None:
@@ -779,18 +912,15 @@ def rename_column(root: str, old: str, new: str) -> int:
     the rename take the new name and write the same physical column.  At
     100 TB this is the difference between an O(1) metadata commit and
     rewriting every file that mentions the column."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    stored = _current_logical_schema(entries)
+    snap = _Snapshot(root).require()
+    stored = snap.logical_struct()
     names = [f.name for f in stored.fields]
     if old not in names:
         raise ValueError(f"no column {old!r} to rename (have {names})")
     if new in names:
         raise ValueError(f"rename target {new!r} already exists")
-    mapping = _replay_mapping(entries)
-    phys_in_use = {mapping.get(n, n) for n in names}
-    if new in phys_in_use or new in _retired_physicals(entries):
+    phys_in_use = {snap.mapping.get(n, n) for n in names}
+    if new in phys_in_use or new in snap.retired:
         raise ValueError(
             f"rename target {new!r} collides with a physical column name "
             "still present in committed files"
@@ -802,7 +932,7 @@ def rename_column(root: str, old: str, new: str) -> int:
             for f in stored.fields
         ]
     )
-    version = entries[-1]["version"] + 1
+    version = snap.latest + 1
     entry = {
         "version": version,
         "op": "rename_column",
@@ -824,25 +954,21 @@ def drop_column(root: str, col: str) -> int:
     ``allow_add_columns`` append may not reuse it (the projection would
     resurrect stale values from pre-drop files), matching Delta's
     column-id semantics."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    stored = _current_logical_schema(entries)
+    snap = _Snapshot(root).require()
+    stored = snap.logical_struct()
     names = [f.name for f in stored.fields]
     if col not in names:
         raise ValueError(f"no column {col!r} to drop (have {names})")
     if len(names) == 1:
         raise ValueError("cannot drop the table's only column")
-    mapping = _replay_mapping(entries)
-    table_parts = _table_partition_by(entries) or []
-    if mapping.get(col, col) in table_parts:
+    if snap.mapping.get(col, col) in (snap.partition_by or []):
         raise ValueError(
             f"cannot drop partition column {col!r} (the hive layout "
             "depends on it)"
         )
     _guard_metadata_refs(root, col, "drop")
     new_struct = type(stored)([f for f in stored.fields if f.name != col])
-    version = entries[-1]["version"] + 1
+    version = snap.latest + 1
     entry = {
         "version": version,
         "op": "drop_column",
@@ -926,38 +1052,16 @@ def _part_survives(
     return True
 
 
-def _skip_plan(root: str, version: int | None, where: list[tuple]):
-    """(surviving_abs_parts, n_total_parts, schema_json) for a pruned read."""
-    import glob as _glob
-
+def _skip_plan(snap: _Snapshot, where: list[tuple]) -> tuple[list[str], int]:
+    """(surviving absolute part paths, total part count) for a pruned read."""
     for col, op, lit in where:
         if op not in _SKIP_OPS:
             raise ValueError(f"unsupported skip op {op!r} (use one of {_SKIP_OPS})")
-    entries = _list_entries(root)
     # stats/blooms are keyed by PHYSICAL column names; callers speak logical
-    _m = _replay_mapping(entries, version)
-    where = [(_m.get(c, c), op, lit) for (c, op, lit) in where]
-    files, _ = _replay(entries, version)
-    all_stats: dict = {}
-    all_blooms: dict = {}
-    for e in entries:
-        all_stats.update(e.get("stats") or {})
-        all_blooms.update(e.get("bloom") or {})
-    schema_json = next(
-        (e["schema_json"] for e in reversed(entries)
-         if "schema_json" in e and (version is None or e["version"] <= version)),
-        None,
-    )
-    parts, survivors = [], []
-    for d in files:
-        for p in sorted(
-            _glob.glob(os.path.join(root, d, "**", "*.parquet"), recursive=True)
-        ):
-            parts.append(p)
-            rel_p = os.path.relpath(p, root)
-            if _part_survives(all_stats.get(rel_p), where, all_blooms.get(rel_p)):
-                survivors.append(p)
-    return survivors, len(parts), schema_json
+    where = [(snap.mapping.get(c, c), op, lit) for (c, op, lit) in where]
+    parts = list(snap.parts())
+    survivors = [p for p, st, bl in parts if _part_survives(st, where, bl)]
+    return survivors, len(parts)
 
 
 def read_table_pruned(
@@ -976,68 +1080,9 @@ def read_table_pruned(
     and touching three of them is the point of keeping stats in the log).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    # reuse read_table's floor/version validation, then re-plan with stats
-    read_table(spark, root, version)
-    survivors, _, schema_json = _skip_plan(root, version, where)
-    entries = _list_entries(root)
-    part_cols = _table_partition_by(entries)
-    if survivors:
-        # pin the LOG's schema exactly like read_table does: after an
-        # allow_add_columns widening the survivor set can mix pre/post-
-        # evolution files, and footer inference from an arbitrary file
-        # would drop (or mistype) the widened column — breaking the
-        # bit-identical-to-read_table contract above
-        stored = (
-            StructType.fromJson(json.loads(schema_json))
-            if schema_json is not None
-            else None
-        )
-        mapping = _replay_mapping(entries, version)
-        phys = _phys_struct(stored, mapping) if stored is not None else None
-        dv_dirs = _replay_dvs(entries, version)
-        if part_cols:
-            # surviving part FILES under hive dirs do not contain the
-            # partition columns — group by data dir and read with that
-            # dir as basePath so discovery derives them per file
-            from functools import reduce
-
-            by_dir: dict[str, list[str]] = {}
-            for p in survivors:
-                rel_p = os.path.relpath(p, root)
-                d = rel_p.split(os.sep)[0] + os.sep + rel_p.split(os.sep)[1]
-                by_dir.setdefault(d, []).append(p)
-            frames = []
-            for d, parts in by_dir.items():
-                reader = spark.read.option("basePath", os.path.join(root, d))
-                if phys is not None:
-                    reader = reader.schema(phys)
-                fr = reader.parquet(*parts)
-                if dv_dirs:
-                    fr = _apply_dvs(spark, root, fr, dv_dirs)
-                frames.append(fr)
-            df = reduce(lambda a, b: a.unionByName(b), frames)
-            if stored is not None:
-                df = _select_logical(df, stored, mapping)
-        else:
-            reader = spark.read
-            if phys is not None:
-                reader = reader.schema(phys)
-            df = reader.parquet(*survivors)
-            if dv_dirs:
-                # merge-on-read deletes apply to the pruned scan too —
-                # skipping must stay bit-identical to read_table().where()
-                df = _apply_dvs(spark, root, df, dv_dirs)
-            if stored is not None and mapping:
-                df = _select_logical(df, stored, mapping)
-    else:
-        stored = StructType.fromJson(json.loads(schema_json))
-        # parquet reads surface every column nullable; match that shape so
-        # the all-pruned frame unions/compares cleanly with a real read
-        df = spark.createDataFrame(
-            [], StructType([f.__class__(f.name, f.dataType, True) for f in stored.fields])
-        )
+    snap = _Snapshot(root, version).readable()
+    df = _scan(spark, snap, files=_skip_plan(snap, where)[0])
     ops = {
         "=": lambda c, v: F.col(c) == v,
         "<": lambda c, v: F.col(c) < v,
@@ -1077,22 +1122,20 @@ def write_audit_publish(
         evaluate,
     )
 
-    entries = _list_entries(root)
-    table_parts = _table_partition_by(entries)
+    snap = _Snapshot(root)
+    table_parts = snap.partition_by
     df = _apply_generated(root, df)
-    if entries:
-        _, schema = _replay(entries, None)
-        if schema is not None and df.schema.simpleString() != schema:
-            raise TxLogSchemaMismatch(
-                f"WAP batch schema {df.schema.simpleString()} != table "
-                f"schema {schema}"
-            )
+    if snap.schema is not None and df.schema.simpleString() != snap.schema:
+        raise TxLogSchemaMismatch(
+            f"WAP batch schema {df.schema.simpleString()} != table "
+            f"schema {snap.schema}"
+        )
     _enforce_constraints(root, df)
     os.makedirs(_log_path(root), exist_ok=True)
     rel = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
     # column mapping: staged files store PHYSICAL names like any commit;
     # table_parts is already physical (entries record it that way)
-    mapping = _replay_mapping(entries)
+    mapping = snap.mapping
     parts = _files.write(
         _select_physical(df, mapping), os.path.join(root, rel), table_parts
     )
@@ -1133,7 +1176,7 @@ def write_audit_publish(
         entry["bloom"] = blooms
     if table_parts:
         entry["partition_by"] = table_parts
-    current = entries[-1]["version"] if entries else -1
+    current = snap.latest
     for attempt in range(_APPEND_COMMIT_RETRIES + 1):
         version = current + 1
         entry["version"] = version
@@ -1144,21 +1187,20 @@ def write_audit_publish(
             if attempt >= _APPEND_COMMIT_RETRIES:
                 raise
             time.sleep(min(0.05 * (attempt + 1), 0.2))
-            latest = _list_entries(root)
-            current = latest[-1]["version"] if latest else -1
+            latest = _Snapshot(root)
+            current = latest.latest
             # mirror _commit's validate-on-retry: a concurrent
             # allow_add_columns append may have evolved the table schema,
             # and publishing this entry's narrower schema would regress the
             # log-owned read schema
-            if latest:
-                _, evolved = _replay(latest, None)
-                if evolved is not None and df.schema.simpleString() != evolved:
-                    shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
-                    raise TxLogSchemaMismatch(
-                        f"WAP batch schema {df.schema.simpleString()} != "
-                        f"evolved table schema {evolved} (concurrent commit "
-                        "during publish retry); staged files discarded"
-                    )
+            evolved = latest.schema
+            if evolved is not None and df.schema.simpleString() != evolved:
+                shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
+                raise TxLogSchemaMismatch(
+                    f"WAP batch schema {df.schema.simpleString()} != "
+                    f"evolved table schema {evolved} (concurrent commit "
+                    "during publish retry); staged files discarded"
+                )
     raise AssertionError("unreachable")
 
 
@@ -1174,66 +1216,13 @@ def read_point_lookups(
     materialize; reading the bare file paths would silently drop them).
     Empty plans return an empty frame with the log schema.  Deletion
     vectors apply per scan, exactly as ``read_table`` does."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    plans = plan_point_lookups(root, col, keys, version)
+    snap = _Snapshot(root, version).require()
+    plans = _lookup_plan(snap, col, keys)
     survivors = sorted({p for surv in plans.values() for p in surv})
-    schema_json = next(
-        (e["schema_json"] for e in reversed(entries)
-         if "schema_json" in e and (version is None or e["version"] <= version)),
-        None,
-    )
-    stored = (
-        StructType.fromJson(json.loads(schema_json))
-        if schema_json is not None
-        else None
-    )
-    mapping = _replay_mapping(entries, version)
-    phys = _phys_struct(stored, mapping) if stored is not None else None
-    if not survivors:
-        if stored is None:
-            raise ValueError("empty plan and no schema to shape the result")
-        nullable = StructType(
-            [f.__class__(f.name, f.dataType, True) for f in stored.fields]
-        )
-        return spark.createDataFrame([], nullable)
-    dv_dirs = _replay_dvs(entries, version)
-    part_cols = _table_partition_by(entries)
-    if part_cols:
-        by_dir: dict[str, list[str]] = {}
-        for p in survivors:
-            rel_p = os.path.relpath(p, root)
-            d = os.sep.join(rel_p.split(os.sep)[:2])
-            by_dir.setdefault(d, []).append(p)
-        frames = []
-        for d, parts in by_dir.items():
-            reader = spark.read.option("basePath", os.path.join(root, d))
-            if phys is not None:
-                reader = reader.schema(phys)
-            fr = reader.parquet(*parts)
-            if dv_dirs:
-                fr = _apply_dvs(spark, root, fr, dv_dirs)
-            frames.append(fr)
-        df = reduce(lambda a, b: a.unionByName(b), frames)
-        if stored is not None:
-            df = _select_logical(df, stored, mapping)
-    else:
-        reader = spark.read
-        if phys is not None:
-            reader = reader.schema(phys)
-        df = reader.parquet(*survivors)
-        if dv_dirs:
-            df = _apply_dvs(spark, root, df, dv_dirs)
-        if stored is not None and mapping:
-            df = _select_logical(df, stored, mapping)
-    # the residual filter speaks LOGICAL (the frame was renamed back)
-    return df.where(F.col(col).isin(list(keys)))
+    # the residual filter speaks LOGICAL (the scan renames back)
+    return _scan(spark, snap, files=survivors).where(F.col(col).isin(list(keys)))
 
 
 def plan_point_lookups(
@@ -1247,38 +1236,23 @@ def plan_point_lookups(
     ``{key: [surviving absolute part paths]}``; reading the union of the
     values with a ``col IN keys`` residual filter is bit-identical to
     per-key pruned reads."""
-    import glob as _glob
+    return _lookup_plan(_Snapshot(root, version), col, keys)
 
-    entries = _list_entries(root)
+
+def _lookup_plan(snap: _Snapshot, col: str, keys: list) -> dict:
     # stats/blooms are keyed by PHYSICAL column names
-    col = _replay_mapping(entries, version).get(col, col)
-    files, _ = _replay(entries, version)
-    all_stats: dict = {}
-    all_blooms: dict = {}
-    for e in entries:
-        all_stats.update(e.get("stats") or {})
-        all_blooms.update(e.get("bloom") or {})
-    parts = []
-    for d in files:
-        for p in sorted(
-            _glob.glob(os.path.join(root, d, "**", "*.parquet"), recursive=True)
-        ):
-            rel_p = os.path.relpath(p, root)
-            parts.append((p, all_stats.get(rel_p), all_blooms.get(rel_p)))
-    out: dict = {}
-    for k in keys:
-        out[k] = [
-            p
-            for p, st, bl in parts
-            if _part_survives(st, [(col, "=", k)], bl)
-        ]
-    return out
+    col = snap.mapping.get(col, col)
+    parts = list(snap.parts())
+    return {
+        k: [p for p, st, bl in parts if _part_survives(st, [(col, "=", k)], bl)]
+        for k in keys
+    }
 
 
 def skipping_report(root: str, where: list[tuple], version: int | None = None) -> dict:
     """{'files_total': n, 'files_read': m} for a pruned read — the
     observability hook tests use to PROVE pruning happened."""
-    survivors, total, _ = _skip_plan(root, version, where)
+    survivors, total = _skip_plan(_Snapshot(root, version), where)
     return {"files_total": total, "files_read": len(survivors)}
 
 
@@ -1336,82 +1310,7 @@ def overwrite_table(
 def read_table(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
     """Snapshot at ``version`` (default: latest). Plain parquet scan over
     the replayed file set — pushdown/pruning/AQE all apply."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    if version is not None and version > entries[-1]["version"]:
-        raise ValueError(
-            f"version {version} not committed (latest {entries[-1]['version']})"
-        )
-    floor = _read_floor(root)
-    target = entries[-1]["version"] if version is None else version
-    if target < floor:
-        raise ValueError(
-            f"version {target} was vacuumed (time-travel floor is {floor})"
-        )
-    files, _ = _replay(entries, version)
-    target_entries = [
-        e for e in entries if version is None or e["version"] <= version
-    ]
-    schema_json = next(
-        (e["schema_json"] for e in reversed(target_entries) if "schema_json" in e),
-        None,
-    )
-    reader = spark.read
-    stored = None
-    # column mapping: files carry PHYSICAL names; read with the physical
-    # schema, alias back to logical at the end ({} = never renamed)
-    mapping = _replay_mapping(entries, version)
-    if schema_json is not None:
-        # the LOG owns the schema (Delta's rule): pre-evolution files
-        # null-fill appended columns; footer inference is never consulted
-        from pyspark.sql.types import StructType
-
-        stored = StructType.fromJson(json.loads(schema_json))
-        reader = reader.schema(_phys_struct(stored, mapping))
-    if not files:
-        # possible since audit_reject: a table whose only batches were
-        # rejected replays to zero files but still records schema_json —
-        # return the empty frame (nullable, matching parquet-read shape)
-        # instead of a zero-path spark.read.parquet() error
-        if stored is None:
-            raise ValueError(
-                f"txlog table at {root} replays to zero files and no entry "
-                "records schema_json"
-            )
-        nullable = StructType(
-            [f.__class__(f.name, f.dataType, True) for f in stored.fields]
-        )
-        return spark.createDataFrame([], nullable)
-    part_cols = _table_partition_by(entries)
-    if part_cols:
-        # hive-partitioned dirs: Spark's partition discovery rejects a
-        # multi-dir scan (the uuid dir segments conflict), so each data
-        # dir scans on its own (discovery derives the partition columns
-        # per dir) and the scans union; DVs apply PER SCAN because the
-        # _metadata row identity only exists on scan-backed frames
-        from functools import reduce
-
-        dv_dirs = _replay_dvs(entries, version)
-        frames = []
-        for f in files:
-            fr = reader.parquet(os.path.join(root, f))
-            if dv_dirs:
-                fr = _apply_dvs(spark, root, fr, dv_dirs)
-            frames.append(fr)
-        df = reduce(lambda a, b: a.unionByName(b), frames)
-        if stored is not None:
-            # discovery appends partition columns last; restore log order
-            # and logical names
-            df = _select_logical(df, stored, mapping)
-        return df
-    df = reader.parquet(*[os.path.join(root, f) for f in files])
-    dv_dirs = _replay_dvs(entries, version)
-    if dv_dirs:
-        df = _apply_dvs(spark, root, df, dv_dirs)
-    if stored is not None and mapping:
-        df = _select_logical(df, stored, mapping)
-    return df
+    return _scan(spark, _Snapshot(root, version).readable())
 
 
 def history(root: str) -> list[dict]:
@@ -1424,7 +1323,7 @@ def history(root: str) -> list[dict]:
             "n_files": len(e["files"]),
             **({"ts": e["ts"]} if "ts" in e else {}),
         }
-        for e in _list_entries(root)
+        for e in _Snapshot(root).entries
     ]
 
 
@@ -1435,9 +1334,7 @@ def version_at_timestamp(root: str, ts: float) -> int:
     timestamp.  Entries written before in-commit timestamps existed
     count as ts=-inf (always eligible), so old tables resolve to their
     newest un-stamped version when ``ts`` predates the first stamp."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
+    entries = _Snapshot(root).require().entries
     best = None
     for e in entries:
         if e.get("ts", float("-inf")) <= ts:
@@ -1479,25 +1376,13 @@ def delete_where(
     only when it is mechanically derived from the predicate."""
     from pyspark.sql import functions as F
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
+    snap = _Snapshot(root).require()
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    snap = read_table(spark, root)
-    reused_dirs: list[str] = []
-    if prune_hint:
-        touched_dirs, reused_dirs = _prune_dirs(root, entries, prune_hint)
-        if reused_dirs and touched_dirs:
-            # pinned to the log schema (see merge_into: evolution x pruning;
-            # column mapping: files store physical names)
-            snap = _read_dirs_pinned(spark, root, entries, touched_dirs, snap.schema)
-        elif reused_dirs:
-            snap = snap.limit(0)  # nothing can match: no-op rewrite
-    survivors = snap.where(~cond | cond.isNull())  # NULL predicate = keep
-    n_deleted = snap.where(cond).count()
+    rows, reused_dirs = _partial_scan(spark, snap, prune_hint)
+    survivors = rows.where(~cond | cond.isNull())  # NULL predicate = keep
+    n_deleted = rows.where(cond).count()
     version = overwrite_table(
-        survivors, root, expected_version=current,
+        survivors, root, expected_version=snap.version,
         extra_files=reused_dirs or None,
     )
     return version, n_deleted
@@ -1534,17 +1419,16 @@ def delete_where_mor(
     import shutil
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    matched, data_cols, schema_simple, schema_json, current = _mor_matched(
-        spark, root, predicate
-    )
+    snap = _Snapshot(root).require()
+    current = snap.version
+    matched = _mor_matched(spark, snap, predicate)
     n_deleted = matched.count()
     rel_dv = _write_dv(root, matched)
     # write-time CDF capture: the deleted rows ARE the change set
     ch_dir = _changes_path(root, current + 1)
     _files.write(
-        matched.select(*data_cols).withColumn("_change_type", F.lit("delete")),
+        matched.drop(*_ROW_ID).withColumn("_change_type", F.lit("delete")),
         ch_dir,
     )
     entry = {
@@ -1552,10 +1436,10 @@ def delete_where_mor(
         "op": "delete_mor",
         "files": [],
         "dv_files": [rel_dv],
-        "schema": schema_simple,
+        "schema": snap.schema,
     }
-    if schema_json is not None:
-        entry["schema_json"] = schema_json
+    if snap.schema_json is not None:
+        entry["schema_json"] = snap.schema_json
     try:
         _publish_entry(root, current + 1, entry)
     except TxLogConflict:
@@ -1566,67 +1450,21 @@ def delete_where_mor(
 
 
 def _mor_matched(
-    spark: SparkSession, root: str, predicate, prune=None, checkpoint=True
-):
-    """Shared MoR scan: the current snapshot WITH ``_metadata`` row
-    identity, prior deletion vectors already anti-joined, filtered to the
+    spark: SparkSession, snap: _Snapshot, predicate, prune=None, checkpoint=True
+) -> DataFrame:
+    """Shared MoR scan: the snapshot's rows WITH their ``_ROW_ID`` row
+    identity (prior deletion vectors already applied), filtered to the
     predicate and checkpointed (the matched set is consumed by the DV
     write, the CDF capture, and the count).  ``prune`` is a footer-stats
     hint (``_prune_dirs``): only the dirs it cannot rule out are scanned."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    files, schema_simple = _replay(entries, None)
-    if prune:
-        # nothing in range still scans one dir, so the frame keeps its
-        # row identity; the predicate then drops every row
-        files = _prune_dirs(root, entries, prune)[0] or files[:1]
-    schema_json = next(
-        (e["schema_json"] for e in reversed(entries) if "schema_json" in e), None
-    )
-    mapping = _replay_mapping(entries)
-    reader = spark.read
-    stored = None
-    if schema_json is not None:
-        stored = StructType.fromJson(json.loads(schema_json))
-        reader = reader.schema(_phys_struct(stored, mapping))
-    scan = reader.parquet(*[os.path.join(root, f) for f in files])
-    # logical column names for the predicate and every consumer; the
-    # _metadata row identity rides alongside (column mapping: the scan
-    # itself is physical-named)
-    data_cols = (
-        [f.name for f in stored.fields] if stored is not None else scan.columns
-    )
-    tagged = scan.select(
-        *[
-            F.col(mapping.get(c, c)).alias(c)
-            for c in data_cols
-        ],
-        F.col("_metadata.file_path").alias("__dvf"),
-        F.col("_metadata.row_index").alias("__dvp"),
-    )
-    prior = _replay_dvs(entries, None)
-    if prior:
-        dv_prior = (
-            spark.read.schema("file string, pos bigint")
-            .parquet(*[d if os.path.isabs(d) else os.path.join(root, d) for d in prior])
-            .withColumnRenamed("file", "__pf")
-            .withColumnRenamed("pos", "__pp")
-        )
-        tagged = tagged.join(
-            F.broadcast(dv_prior),
-            (F.col("__dvf") == F.col("__pf")) & (F.col("__dvp") == F.col("__pp")),
-            "left_anti",
-        )
-    matched = tagged.where(cond)
+    dirs = _prune_dirs(snap, prune)[0] if prune else None
+    matched = _scan(spark, snap, dirs=dirs, row_identity=True).where(cond)
     if checkpoint:
         matched = matched.localCheckpoint(eager=True)
-    return matched, data_cols, schema_simple, schema_json, current
+    return matched
 
 
 def _write_dv(root: str, matched: DataFrame) -> str:
@@ -1635,7 +1473,8 @@ def _write_dv(root: str, matched: DataFrame) -> str:
     rel_dv = os.path.join(_DV_DIR, uuid.uuid4().hex + ".parquet")
     _files.write(
         matched.select(
-            F.col("__dvf").alias("file"), F.col("__dvp").cast("bigint").alias("pos")
+            F.col(_ROW_ID[0]).alias("file"),
+            F.col(_ROW_ID[1]).cast("bigint").alias("pos"),
         ).coalesce(1),
         os.path.join(root, rel_dv),
     )
@@ -1660,11 +1499,12 @@ def update_where_mor(
 
     from pyspark.sql import functions as F
 
-    matched, data_cols, _, schema_json, current = _mor_matched(
-        spark, root, predicate
-    )
+    snap = _Snapshot(root).require()
+    current = snap.version
+    matched = _mor_matched(spark, snap, predicate)
     n_updated = matched.count()
-    post = matched.select(*data_cols)
+    post = matched.drop(*_ROW_ID)
+    data_cols = post.columns
     dtypes = {f.name: f.dataType for f in post.schema.fields}
     for col, expr in set_exprs.items():
         if col not in data_cols:
@@ -1681,13 +1521,10 @@ def update_where_mor(
     rel_dv = _write_dv(root, matched)
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
     parts = _files.write(
-        _select_physical(post, _replay_mapping(_list_entries(root))),
-        os.path.join(root, rel_data),
+        _select_physical(post, snap.mapping), os.path.join(root, rel_data)
     )
     ch_dir = _changes_path(root, current + 1)
-    pre_ch = matched.select(*data_cols).withColumn(
-        "_change_type", F.lit("delete")
-    )
+    pre_ch = matched.drop(*_ROW_ID).withColumn("_change_type", F.lit("delete"))
     post_ch = post.withColumn("_change_type", F.lit("insert"))
     _files.write(pre_ch.unionByName(post_ch), ch_dir)
     entry = {
@@ -1724,39 +1561,27 @@ def update_where(
     predicate must imply the hint)."""
     from pyspark.sql import functions as F
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
+    snap = _Snapshot(root).require()
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    snap = read_table(spark, root)
-    reused_dirs: list[str] = []
-    if prune_hint:
-        touched_dirs, reused_dirs = _prune_dirs(root, entries, prune_hint)
-        if reused_dirs and touched_dirs:
-            # pinned to the log schema (see merge_into: evolution x pruning;
-            # column mapping: files store physical names)
-            snap = _read_dirs_pinned(spark, root, entries, touched_dirs, snap.schema)
-        elif reused_dirs:
-            snap = snap.limit(0)  # nothing can match: no-op rewrite
+    rows, reused_dirs = _partial_scan(spark, snap, prune_hint)
     for col in assignments:
-        if col not in snap.columns:
+        if col not in rows.columns:
             raise ValueError(f"unknown column {col!r} in update assignments")
-    n_updated = snap.where(cond).count()
-    updated = snap.select(
+    n_updated = rows.where(cond).count()
+    updated = rows.select(
         *[
             F.when(
                 cond,
                 F.expr(assignments[c]) if isinstance(assignments[c], str)
                 else assignments[c],
-            ).otherwise(F.col(c)).cast(snap.schema[c].dataType).alias(c)
+            ).otherwise(F.col(c)).cast(rows.schema[c].dataType).alias(c)
             if c in assignments
             else F.col(c)
-            for c in snap.columns
+            for c in rows.columns
         ]
     )
     version = overwrite_table(
-        updated, root, expected_version=current,
+        updated, root, expected_version=snap.version,
         extra_files=reused_dirs or None,
     )
     return version, n_updated
@@ -1791,14 +1616,10 @@ def merge_into(
     wide table rewrites only the overlapping files.  ``capture_changes``
     (default) also writes the touched rows as a per-version change file —
     the CDF path ``read_changes`` and the ``txlogcdf`` stream prefer."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
-    snap = read_table(spark, root)
+    snap = _Snapshot(root).require()
     plan = MergePlan(
-        source, on, snap.schema, update=update, delete_when=delete_when,
-        insert=insert, insert_when=insert_when,
+        source, on, _scan(spark, snap).schema, update=update,
+        delete_when=delete_when, insert=insert, insert_when=insert_when,
     )
     hint = plan.scan_source()
 
@@ -1808,24 +1629,13 @@ def merge_into(
     # go through the join.  Sound because a pruned dir can contain no
     # matched row (its rows are exactly the "target-only -> kept" clause)
     # and clause stats over the touched subset equal the global stats.
-    reused_dirs: list[str] = []
-    if prune_files and hint:
-        touched_dirs, reused_dirs = _prune_dirs(root, entries, hint)
-        if reused_dirs and touched_dirs:
-            # pin the subset read to the LOG's schema: a widened table
-            # whose touched dirs all predate the evolution must still
-            # rewrite (and null-fill) at full width, or the commit's
-            # schema check would refuse the partial rewrite
-            snap = _read_dirs_pinned(spark, root, entries, touched_dirs, snap.schema)
-        elif reused_dirs:
-            snap = snap.limit(0)  # nothing overlaps: merge is insert-only
-
-    plan.join(snap)
+    target, reused_dirs = _partial_scan(spark, snap, hint if prune_files else None)
+    plan.join(target)
     stats = plan.stats()
     version = overwrite_table(
         plan.routed(),
         root,
-        expected_version=current,
+        expected_version=snap.version,
         extra_files=reused_dirs or None,
     )
     if capture_changes:
@@ -1867,17 +1677,16 @@ def merge_into_mor(
     ``(version, {"inserted": i, "updated": u, "deleted": d})``."""
     import shutil
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
+    snap = _Snapshot(root).require()
+    current = snap.version
     plan = MergePlan(
-        source, on, _current_logical_schema(entries), update=update,
+        source, on, snap.logical_struct(), update=update,
         delete_when=delete_when, insert=insert,
     )
     hint = plan.scan_source()
     candidates = " AND ".join(f"`{c}` {op} {v}" for c, op, v in hint or ())
-    tagged, _, _, _, current = _mor_matched(
-        spark, root, candidates or "true", prune=hint, checkpoint=False
+    tagged = _mor_matched(
+        spark, snap, candidates or "true", prune=hint, checkpoint=False
     )
     plan.join(tagged, full=False)
     stats = plan.stats()
@@ -1887,8 +1696,7 @@ def merge_into_mor(
     rel_dv = _write_dv(root, plan.touched())
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
     parts = _files.write(
-        _select_physical(new_rows, _replay_mapping(_list_entries(root))),
-        os.path.join(root, rel_data),
+        _select_physical(new_rows, snap.mapping), os.path.join(root, rel_data)
     )
     ch_dir = _changes_path(root, current + 1)
     # a no-op assignment is physically vectored + re-appended, but the
@@ -1917,37 +1725,23 @@ def _changes_path(root: str, version: int) -> str:
     return os.path.join(root, _CHANGES_DIR, f"{version:08d}.parquet")
 
 
-def _prune_dirs(
-    root: str, entries: list[dict], where: list[tuple]
-) -> tuple[list[str], list[str]]:
-    """Split the current snapshot's data dirs into (touched, reused) for a
+def _prune_dirs(snap: _Snapshot, where: list[tuple]) -> tuple[list[str], list[str]]:
+    """Split the snapshot's data dirs into (touched, reused) for a
     partial-CoW rewrite: a dir lands in ``reused`` only when every part
     file's footer stats PROVE no row can satisfy ``where`` (zero-row parts
     count as proven).  Unknown stats -> touched; never prune on doubt."""
-    import glob as _glob
-
     # stats/blooms are keyed by PHYSICAL column names; callers speak logical
-    _m = _replay_mapping(entries)
-    where = [(_m.get(c, c), op, lit) for (c, op, lit) in where]
-    all_stats: dict = {}
-    all_blooms: dict = {}
-    for e in entries:
-        all_stats.update(e.get("stats") or {})
-        all_blooms.update(e.get("bloom") or {})
-    cur_files, _ = _replay(entries, None)
+    where = [(snap.mapping.get(c, c), op, lit) for (c, op, lit) in where]
     touched_dirs: list[str] = []
     reused_dirs: list[str] = []
-    for d in cur_files:
-        parts = sorted(_glob.glob(os.path.join(root, d, "*.parquet")))
-        touched = not parts  # unreadable/empty dir: never prune
-        for pth in parts:
-            rel_p = os.path.relpath(pth, root)
-            st = all_stats.get(rel_p)
-            if st is None and _files.footer(pth).rows == 0:
-                continue  # zero rows: provably unmatched
-            if _part_survives(st, where, all_blooms.get(rel_p)):
-                touched = True
-                break
+    for d in snap.files:
+        parts = list(snap.parts([d]))
+        touched = not parts or any(  # unreadable/empty dir: never prune
+            # a zero-row part without stats is provably unmatched
+            not (st is None and _files.footer(p).rows == 0)
+            and _part_survives(st, where, bl)
+            for p, st, bl in parts
+        )
         (touched_dirs if touched else reused_dirs).append(d)
     return touched_dirs, reused_dirs
 
@@ -2471,8 +2265,8 @@ def with_retries(fn, max_retries: int = 3):
     """Run a write transaction under optimistic-concurrency RETRY (the loop
     every Delta writer wraps commits in): call ``fn()``; on
     ``TxLogConflict`` call it again — ``fn`` must RE-READ the table each
-    attempt (every DML helper here does: they list entries and take the
-    latest version inside the call), so a retry merges against the
+    attempt (every DML helper here does: it builds a fresh snapshot of
+    the latest version inside the call), so a retry merges against the
     winner's state instead of replaying a stale snapshot.  Raises the last
     conflict after ``max_retries`` failed attempts.  Returns ``fn()``'s
     result.  Semantic conflict detection (append-vs-append commute, so
@@ -2508,22 +2302,19 @@ def optimize_zorder(
 
     from kafka_connect_expand_json_transform_spark.sources.batch import zorder_key
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
-    snap = read_table(spark, root)
-    zdf = snap.withColumn("__z", zorder_key(snap, cols, bits))
+    snap = _Snapshot(root).require()
+    rows = _scan(spark, snap)
+    zdf = rows.withColumn("__z", zorder_key(rows, cols, bits))
     clustered = (
         zdf.repartitionByRange(target_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .select(*[F.col(c) for c in snap.columns])
+        .select(*[F.col(c) for c in rows.columns])
     )
     return overwrite_table(
         clustered,
         root,
-        expected_version=current,
+        expected_version=snap.version,
         entry_extra={"zorder": {"cols": list(cols), "bits": bits}},
     )
 
@@ -2556,15 +2347,12 @@ def optimize_zorder_incremental(
     keeps the accumulated DV set).  Returns the committed version; returns
     the current version unchanged when there is nothing new to cluster."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from kafka_connect_expand_json_transform_spark.sources.batch import zorder_key
 
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
-    zentry = next((e for e in reversed(entries) if e.get("zorder")), None)
+    snap = _Snapshot(root).require()
+    current = snap.version
+    zentry = next((e for e in reversed(snap.entries) if e.get("zorder")), None)
     if zentry is None:
         return optimize_zorder(spark, root, cols, bits, target_files)
     spec = zentry["zorder"]
@@ -2574,27 +2362,13 @@ def optimize_zorder_incremental(
             f"incremental optimize with {cols} (bits={bits}) would mix "
             "clustering keys — run the full optimize_zorder to re-cluster"
         )
-    clustered_set = set(zentry["files"])
-    files_now, _ = _replay(entries, None)
-    keep = [f for f in files_now if f in clustered_set]
-    new_dirs = [f for f in files_now if f not in clustered_set]
+    # a ZORDER commit is an overwrite: its snapshot's files are its own
+    clustered_set = set(snap.at(zentry["version"]).files)
+    keep = [f for f in snap.files if f in clustered_set]
+    new_dirs = [f for f in snap.files if f not in clustered_set]
     if not new_dirs:
         return current  # nothing unclustered: no-op, no commit
-    schema_json = next(
-        (e["schema_json"] for e in reversed(entries) if "schema_json" in e), None
-    )
-    mapping = _replay_mapping(entries)
-    reader = spark.read
-    stored = None
-    if schema_json is not None:
-        stored = StructType.fromJson(json.loads(schema_json))
-        reader = reader.schema(_phys_struct(stored, mapping))
-    df = reader.parquet(*[os.path.join(root, f) for f in new_dirs])
-    dv_dirs = _replay_dvs(entries, None)
-    if dv_dirs:
-        df = _apply_dvs(spark, root, df, dv_dirs)
-    if stored is not None and mapping:
-        df = _select_logical(df, stored, mapping)
+    df = _scan(spark, snap, dirs=new_dirs)
     zdf = df.withColumn("__z", zorder_key(df, cols, bits))
     clustered_new = (
         zdf.repartitionByRange(target_files, "__z")
@@ -2609,6 +2383,21 @@ def optimize_zorder_incremental(
         extra_files=keep,
         entry_extra={"zorder": {"cols": list(cols), "bits": bits}},
     )
+
+
+def _live_sidecars(snap: _Snapshot, rel_to: str) -> tuple[dict, dict]:
+    """(stats, bloom) of the snapshot's live part files, keyed by part path
+    relative to ``rel_to`` — what a zero-copy RESTORE or CLONE entry
+    carries so pruned reads of it keep skipping."""
+    stats: dict = {}
+    blooms: dict = {}
+    for p, st, bl in snap.parts():
+        key = os.path.relpath(p, rel_to)
+        if st is not None:
+            stats[key] = st
+        if bl is not None:
+            blooms[key] = bl
+    return stats, blooms
 
 
 def restore_table(
@@ -2629,43 +2418,26 @@ def restore_table(
     snapshot's ROWS into fresh files instead (CoW) — use it when the old
     files are about to be vacuumed away or live on decommissioned
     storage."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
+    head = _Snapshot(root).require()
+    current = head.version
     # floor/version validation exactly as a read would apply
-    snap = read_table(spark, root, version=version)
+    snap = head.at(version).readable()
     if materialize:
-        return overwrite_table(snap, root, expected_version=current)
-    files, schema = _replay(entries, version)
-    target_entries = [e for e in entries if e["version"] <= version]
-    schema_json = next(
-        (e["schema_json"] for e in reversed(target_entries) if "schema_json" in e),
-        None,
-    )
-    stats: dict = {}
-    blooms: dict = {}
-    live = set(files)
-    for e in target_entries:
-        for key, val in (e.get("stats") or {}).items():
-            if os.path.dirname(key) in live:
-                stats[key] = val
-        for key, val in (e.get("bloom") or {}).items():
-            if os.path.dirname(key) in live:
-                blooms[key] = val
+        return overwrite_table(_scan(spark, snap), root, expected_version=current)
+    stats, blooms = _live_sidecars(snap, root)
     entry = {
         "version": current + 1,
         "op": "overwrite",
-        "files": list(files),
-        "schema": schema,
+        "files": list(snap.files),
+        "schema": snap.schema,
         "stats": stats,
         # pin the restored snapshot's DV set: a MoR delete committed AFTER
         # `version` must not keep erasing rows from the restored files
         "dv_reset": True,
-        "dv_files": _replay_dvs(entries, version),
+        "dv_files": list(snap.dvs),
     }
-    if schema_json is not None:
-        entry["schema_json"] = schema_json
+    if snap.schema_json is not None:
+        entry["schema_json"] = snap.schema_json
     if blooms:
         entry["bloom"] = blooms
     _publish_entry(root, current + 1, entry)
@@ -2696,64 +2468,30 @@ def clone_table(
     dependency.  Returns the committed version in dst (0 for a fresh
     clone target; cloning ONTO an existing table is an overwrite commit
     under the same optimistic protocol as every other write)."""
-    entries = _list_entries(src_root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {src_root}")
     # floor/version validation exactly as a read would apply
-    read_table(spark, src_root, version)
+    src = _Snapshot(src_root, version).readable()
     if not shallow:
-        snap = read_table(spark, src_root, version)
-        return overwrite_table(snap, dst_root)
-    files, schema = _replay(entries, version)
-    target_entries = [
-        e for e in entries if version is None or e["version"] <= version
-    ]
-    schema_json = next(
-        (e["schema_json"] for e in reversed(target_entries) if "schema_json" in e),
-        None,
-    )
-    abs_dirs = [
-        d if os.path.isabs(d) else os.path.join(src_root, d) for d in files
-    ]
+        return overwrite_table(_scan(spark, src), dst_root)
     # carry the source's skipping sidecars over, re-keyed to dst-relative
-    # part paths (that's how _skip_plan looks them up)
-    src_stats: dict = {}
-    src_blooms: dict = {}
-    for e in target_entries:
-        src_stats.update(e.get("stats") or {})
-        src_blooms.update(e.get("bloom") or {})
-    stats: dict = {}
-    blooms: dict = {}
-    live = set(files)
-    for key, val in src_stats.items():
-        d = os.path.dirname(key)
-        if d in live:
-            abs_part = key if os.path.isabs(key) else os.path.join(src_root, key)
-            stats[os.path.relpath(abs_part, dst_root)] = val
-    for key, val in src_blooms.items():
-        d = os.path.dirname(key)
-        if d in live:
-            abs_part = key if os.path.isabs(key) else os.path.join(src_root, key)
-            blooms[os.path.relpath(abs_part, dst_root)] = val
-    dst_entries = _list_entries(dst_root)
-    dst_version = (dst_entries[-1]["version"] if dst_entries else -1) + 1
+    # part paths (that's how the dst snapshot looks them up)
+    stats, blooms = _live_sidecars(src, dst_root)
+    dst_version = _Snapshot(dst_root).latest + 1
     entry = {
         "version": dst_version,
         "op": "overwrite",
-        "files": abs_dirs,
-        "schema": schema,
+        "files": [os.path.join(src_root, d) for d in src.files],
+        "schema": src.schema,
         "stats": stats,
         # carry the source snapshot's DV set by absolute path (the clone
         # references the same immutable files, so the same vectors apply);
         # reset so a clone ONTO an existing table drops the target's DVs
         "dv_reset": True,
-        "dv_files": [
-            d if os.path.isabs(d) else os.path.join(src_root, d)
-            for d in _replay_dvs(entries, version)
-        ],
+        "dv_files": [os.path.join(src_root, d) for d in src.dvs],
     }
-    if schema_json is not None:
-        entry["schema_json"] = schema_json
+    if src.schema_json is not None:
+        entry["schema_json"] = src.schema_json
+    if src.partition_by:  # the clone reads the source's hive layout
+        entry["partition_by"] = src.partition_by
     if blooms:
         entry["bloom"] = blooms
     os.makedirs(_log_path(dst_root), exist_ok=True)
@@ -2781,25 +2519,20 @@ def read_changes(
     does) is to WRITE change files at commit time from the merge/delete
     join that already knows the touched rows; this reader is the
     no-extra-write fallback and the semantics oracle for one."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    latest = entries[-1]["version"]
+    head = _Snapshot(root).require()
+    latest = head.version
     if to_version is None:
         to_version = latest
     if not (0 <= from_version <= to_version <= latest):
         raise ValueError(
             f"bad change range ({from_version}, {to_version}]; latest {latest}"
         )
-    floor = _read_floor(root)
-    if from_version < floor:
+    if from_version < head.floor:
         raise ValueError(
-            f"version {from_version} was vacuumed (time-travel floor is {floor})"
+            f"version {from_version} was vacuumed (time-travel floor is "
+            f"{head.floor})"
         )
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    by_version = {e["version"]: e for e in entries}
 
     # the range's target schema: the newest log schema <= to_version.  Every
     # per-version frame is null-filled to THIS shape before union/diff —
@@ -2807,19 +2540,9 @@ def read_changes(
     # pre-evolution append frames narrower than post-evolution ones and
     # shape-mismatches both unionByName and exceptAll (the txlogcdf stream
     # reader null-fills the same way, by name).
-    target_json = next(
-        (
-            by_version[v]["schema_json"]
-            for v in range(to_version, -1, -1)
-            if "schema_json" in by_version.get(v, {})
-        ),
-        None,
-    )
-    target = (
-        StructType.fromJson(json.loads(target_json)) if target_json else None
-    )
-
-    latest_map = _replay_mapping(entries, to_version)
+    rng = head.at(to_version)
+    target = rng.struct
+    latest_map = rng.mapping
 
     def fill(df: DataFrame, v: int) -> DataFrame:
         """Project df (logical names AT VERSION v) onto the range's target
@@ -2830,7 +2553,7 @@ def read_changes(
         tag rides along."""
         if target is None:
             return df
-        v_map = _replay_mapping(entries, v)
+        v_map = head.at(v).mapping
         # physical name -> df's logical-at-v column holding it
         by_phys = {v_map.get(c, c): c for c in df.columns}
         extras = [c for c in df.columns if c == "_change_type"]
@@ -2854,28 +2577,12 @@ def read_changes(
             F.lit(version).cast("bigint").alias("_commit_version"),
         )
 
-    for v in range(from_version + 1, to_version + 1):
-        e = by_version[v]
+    for e, new in rng.commits(from_version):
+        v = e["version"]
         if e["op"] == "append":
-            reader = spark.read
-            if "schema_json" in e:
-                # pin the commit's own schema (footer inference could
-                # mis-order or drop columns across multi-file appends);
-                # column mapping: the files store PHYSICAL names
-                v_stored = StructType.fromJson(json.loads(e["schema_json"]))
-                v_map = _replay_mapping(entries, v)
-                reader = reader.schema(_phys_struct(v_stored, v_map))
-                appended = _select_logical(
-                    reader.parquet(
-                        *[os.path.join(root, f) for f in e["files"]]
-                    ),
-                    v_stored,
-                    v_map,
-                )
-            else:
-                appended = reader.parquet(
-                    *[os.path.join(root, f) for f in e["files"]]
-                )
+            # the appended files, read as of their own version (the log
+            # schema and column mapping there)
+            appended = _scan(spark, head.at(v), dirs=new)
             parts.append(tag(fill(appended, v), "insert", v))
         elif os.path.isdir(_changes_path(root, v)):
             # write-time captured changes (merge_into): touched rows only;
@@ -2889,12 +2596,12 @@ def read_changes(
         elif e["op"] in ("rename_column", "drop_column"):
             continue  # metadata-only: zero row changes
         else:
-            prev = fill(read_table(spark, root, version=v - 1), v - 1)
-            cur = fill(read_table(spark, root, version=v), v)
+            prev = fill(_scan(spark, head.at(v - 1)), v - 1)
+            cur = fill(_scan(spark, head.at(v)), v)
             parts.append(tag(cur.exceptAll(prev), "insert", v))
             parts.append(tag(prev.exceptAll(cur), "delete", v))
     if not parts:
-        schema = read_table(spark, root, version=from_version).schema
+        schema = _scan(spark, head.at(from_version)).schema
         empty = spark.createDataFrame([], schema)
         return tag(empty, "insert", from_version).limit(0)
     out = parts[0]
@@ -2919,15 +2626,7 @@ def maintain_table(
     (compaction is pure maintenance; the next call re-evaluates), so a
     ``TxLogConflict`` from the inner commit is swallowed and None
     returned."""
-    import glob as _glob
-
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    files, _ = _replay(entries, None)
-    n_parts = sum(
-        len(_glob.glob(os.path.join(root, d, "*.parquet"))) for d in files
-    )
+    n_parts = sum(1 for _ in _Snapshot(root).require().parts())
     if n_parts <= max_files:
         return None
     try:
@@ -2948,13 +2647,10 @@ def compact_table(
     pre-compaction versions stay time-travel readable (immutable files),
     and vacuum reclaims the small files once the floor passes them.
     Returns the committed version."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    current = entries[-1]["version"]
-    snap = read_table(spark, root)
+    snap = _Snapshot(root).require()
     return overwrite_table(
-        snap.coalesce(target_files), root, expected_version=current
+        _scan(spark, snap).coalesce(target_files), root,
+        expected_version=snap.version,
     )
 
 
@@ -2967,29 +2663,27 @@ def _sink_prologue(
     schema against the table's and returns ``(entry, mapping)``: the
     append entry the batch will publish, its files still to be written at
     ``entry["files"][0]``, and the table's column mapping."""
-    entries = _list_entries(root)
-    if any(e.get("batch_id") == batch_id for e in entries):
+    snap = _Snapshot(root)
+    if any(e.get("batch_id") == batch_id for e in snap.entries):
         return None
-    if entries:
-        _, schema = _replay(entries, None)
-        if schema is not None and batch_df.schema.simpleString() != schema:
-            raise TxLogSchemaMismatch(
-                f"stream batch schema {batch_df.schema.simpleString()}"
-                f" != table schema {schema}"
-            )
+    schema = snap.schema
+    if schema is not None and batch_df.schema.simpleString() != schema:
+        raise TxLogSchemaMismatch(
+            f"stream batch schema {batch_df.schema.simpleString()}"
+            f" != table schema {schema}"
+        )
     os.makedirs(_log_path(root), exist_ok=True)
     entry = {
-        "version": entries[-1]["version"] + 1 if entries else 0,
+        "version": snap.latest + 1,
         "op": "append",
         "files": [os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")],
         "schema": batch_df.schema.simpleString(),
         "schema_json": batch_df.schema.json(),
         "batch_id": batch_id,
     }
-    part_cols = _table_partition_by(entries)  # physical (entry-recorded)
-    if part_cols:  # partitioned tables stay partitioned under streaming
-        entry["partition_by"] = part_cols
-    return entry, _replay_mapping(entries)
+    if snap.partition_by:  # partitioned tables stay partitioned under streaming
+        entry["partition_by"] = snap.partition_by
+    return entry, snap.mapping
 
 
 def _publish_batch(root: str, phys: DataFrame, entry: dict, parts: list) -> None:
@@ -3096,88 +2790,33 @@ _FLOOR_MARKER = "_vacuum_floor.json"
 
 
 def checkpoint_log(root: str) -> int:
-    """Write a read-optimization checkpoint of the replayed state at the
-    latest version: ``_log/<version>.checkpoint.json`` holds the full file
-    set, so readers replay from the newest checkpoint at or below their
-    target instead of from version 0 — the O(versions) listing answer
-    (Delta's checkpoint parquet, reduced to JSON).  Pure optimization:
-    entries are kept, time travel is unaffected."""
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    version = entries[-1]["version"]
-    files, schema = _replay(entries, version)
+    """Write a checkpoint of the replayed state at the latest version:
+    ``_log/<version>.checkpoint.json`` holds the full file set and schema
+    (Delta's checkpoint parquet, reduced to JSON).  No reader consumes it
+    yet — ``_Snapshot`` still replays every entry; replaying from the
+    newest checkpoint at or below the target is the open half of the
+    O(versions) listing answer.  Entries are kept, time travel is
+    unaffected."""
+    snap = _Snapshot(root).require()
+    version = snap.version
     path = os.path.join(_log_path(root), f"{version:08d}{_CHECKPOINT_SUFFIX}")
     tmp = path + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
-        json.dump({"version": version, "files": files, "schema": schema}, f)
+        json.dump({"version": version, "files": snap.files, "schema": snap.schema}, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
     return version
 
 
-def _latest_checkpoint(root: str, version: int | None) -> dict | None:
-    log_dir = _log_path(root)
-    if not os.path.isdir(log_dir):
-        return None
-    best = None
-    for n in sorted(os.listdir(log_dir)):
-        if not n.endswith(_CHECKPOINT_SUFFIX):
-            continue
-        v = int(n[: -len(_CHECKPOINT_SUFFIX)])
-        if version is None or v <= version:
-            best = os.path.join(log_dir, n)
-    if best is None:
-        return None
-    with open(best) as f:
-        return json.load(f)
-
-
 def read_table_from_checkpoint(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """Snapshot read that replays from the newest checkpoint <= version —
-    behaviorally identical to ``read_table`` (tested), listing-cost
-    O(versions since checkpoint)."""
-    cp = _latest_checkpoint(root, version)
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    if version is not None and version > entries[-1]["version"]:
-        raise ValueError(
-            f"version {version} not committed (latest {entries[-1]['version']})"
-        )
-    floor = _read_floor(root)
-    target = entries[-1]["version"] if version is None else version
-    if target < floor:
-        raise ValueError(
-            f"version {target} was vacuumed (time-travel floor is {floor})"
-        )
-    if cp is None:
-        return read_table(spark, root, version)
-    files = list(cp["files"])
-    for e in entries:
-        if e["version"] <= cp["version"]:
-            continue
-        if version is not None and e["version"] > version:
-            break
-        if e["op"] == "overwrite":
-            files = list(e["files"])
-        else:
-            files.extend(e["files"])
-    mapping = _replay_mapping(entries, version)
-    if not mapping:
-        return spark.read.parquet(*[os.path.join(root, f) for f in files])
-    # column mapping: files store physical names; serve the logical schema
-    target_entries = [
-        e for e in entries if version is None or e["version"] <= version
-    ]
-    stored = _current_logical_schema(target_entries)
-    df = spark.read.schema(_phys_struct(stored, mapping)).parquet(
-        *[os.path.join(root, f) for f in files]
-    )
-    return _select_logical(df, stored, mapping)
+    """``read_table``: the same snapshot, deletion vectors and layout
+    handling, by the same code.  It does not consume the checkpoint yet —
+    the reader still lists and parses the whole log; replaying from the
+    newest checkpoint is the open half of the log-snapshot work."""
+    return read_table(spark, root, version)
 
 
 def vacuum(
@@ -3203,15 +2842,15 @@ def vacuum(
 
     if retention_seconds is None:
         retention_seconds = _VACUUM_RETENTION_SECONDS
-    entries = _list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    latest = entries[-1]["version"]
+    head = _Snapshot(root).require()
+    latest = head.version
     floor = max(0, latest - retain_versions + 1)
+    # data dirs and deletion-vector sidecars any retained snapshot reads
     keep: set[str] = set()
-    for v in range(floor, latest + 1):
-        files, _ = _replay(entries, v)
-        keep.update(files)
+    keep_dv: set[str] = set()
+    for snap in map(head.at, range(floor, latest + 1)):
+        keep.update(snap.files)
+        keep_dv.update(snap.dvs)
     data_dir = os.path.join(root, _DATA_DIR)
     deleted = 0
     now = time.time()
@@ -3240,12 +2879,9 @@ def vacuum(
             if v < floor:
                 shutil.rmtree(os.path.join(ch_dir, n), ignore_errors=True)
                 deleted += 1
-    # deletion-vector sidecars: keep every DV any retained snapshot replays
-    # (same rule as data dirs; foreign/absolute references are never ours
-    # to collect, and young orphans get the in-flight-writer age guard)
-    keep_dv: set[str] = set()
-    for v in range(floor, latest + 1):
-        keep_dv.update(_replay_dvs(entries, v))
+    # deletion-vector sidecars: same rule as data dirs (foreign/absolute
+    # references are never ours to collect, and young orphans get the
+    # in-flight-writer age guard)
     dv_root = os.path.join(root, _DV_DIR)
     for n in os.listdir(dv_root) if os.path.isdir(dv_root) else []:
         rel = os.path.join(_DV_DIR, n)
@@ -3294,35 +2930,28 @@ class _TxLogStream(_tablestream.TableStream):
 
     @classmethod
     def read_schema(cls, options):
-        entries = _list_entries(options["path"])
-        if not entries:
-            raise FileNotFoundError(f"no txlog table at {options['path']}")
-        return _current_logical_schema(entries)
+        return _Snapshot(options["path"]).require().logical_struct()
 
     def initial_offset(self) -> dict:
         return {"version": -1}
 
     def latest_offset(self) -> dict:
-        v = latest_version(self.root)
-        return {"version": -1 if v is None else v}
+        return {"version": _Snapshot(self.root).latest}
 
     def _range(self, start: dict, end: dict):
-        """(the log, the range's bounds, the column mapping at its end)."""
-        entries = _list_entries(self.root)
-        lo, hi = int(start["version"]), int(end["version"])
-        return entries, lo, hi, _replay_mapping(entries, hi)
+        """(the range's commits with the files each made live, the column
+        mapping at its end)."""
+        snap = _Snapshot(self.root, int(end["version"]))
+        return snap.commits(int(start["version"])), snap.mapping
 
     def changes(self, start: dict, end: dict) -> list:
-        entries, lo, hi, mapping = self._range(start, end)
-        live = set(_replay(entries, lo)[0])
+        commits, mapping = self._range(start, end)
         tasks = []
-        for e in entries[lo + 1 : hi + 1]:
-            for rel in e["files"]:
-                if rel not in live:
-                    tasks += _tablestream.parquet_tasks(
-                        os.path.join(self.root, rel), mapping=mapping
-                    )
-            live = set(e["files"]) if e["op"] == "overwrite" else live | set(e["files"])
+        for _, new in commits:
+            for rel in new:
+                tasks += _tablestream.parquet_tasks(
+                    os.path.join(self.root, rel), mapping=mapping
+                )
         return tasks
 
 
@@ -3354,14 +2983,14 @@ class _TxLogCdfStream(_TxLogStream):
         )
 
     def changes(self, start: dict, end: dict) -> list:
-        entries, lo, hi, mapping = self._range(start, end)
+        commits, mapping = self._range(start, end)
         tasks = []
-        for e in entries[lo + 1 : hi + 1]:
+        for e, new in commits:
             v = e["version"]
             if e["op"] in ("rename_column", "drop_column"):
                 continue  # metadata-only: zero row changes
             if e["op"] == "append":
-                for rel in e["files"]:
+                for rel in new:
                     tasks += _tablestream.parquet_tasks(
                         os.path.join(self.root, rel),
                         constants={"_change_type": "insert", "_commit_version": v},

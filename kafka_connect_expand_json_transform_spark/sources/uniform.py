@@ -59,15 +59,15 @@ class UniformExportUnsupported(RuntimeError):
     represent; see the docstring for the compact-first workarounds."""
 
 
-def _dv_positions_by_abs(root: str, entries) -> dict[str, list[int]]:
-    """Accumulated txlog deletion-vector rows, grouped by absolute data
-    file path.  Driver-side read of the kilobyte (file, pos) sidecars —
-    O(deleted-not-compacted rows), the same bound every DV reader pays."""
+def _dv_positions_by_abs(snap) -> dict[str, list[int]]:
+    """The snapshot's live txlog deletion-vector rows, grouped by absolute
+    data file path.  Driver-side read of the kilobyte (file, pos) sidecars
+    — O(deleted-not-compacted rows), the same bound every DV reader pays."""
     import pyarrow.parquet as pq
 
     out: dict[str, set[int]] = {}
-    for rel in TX._replay_dvs(entries, None):
-        d = rel if os.path.isabs(rel) else os.path.join(root, rel)
+    for rel in snap.dvs:
+        d = os.path.join(snap.root, rel)
         for dirpath, _dirs, names in os.walk(d):
             for n in sorted(names):
                 if not n.endswith(".parquet"):
@@ -82,20 +82,19 @@ def _dv_positions_by_abs(root: str, entries) -> dict[str, list[int]]:
 
 
 def _txlog_state(root: str):
-    entries = TX._list_entries(root)
-    if not entries:
-        raise FileNotFoundError(f"no txlog table at {root}")
-    version = entries[-1]["version"]
-    files, schema_ddl = TX._replay(entries, None)
-    part_cols = TX._table_partition_by(entries) or []
-    mapping = TX._replay_mapping(entries)
-    if any(k != v for k, v in mapping.items()):
+    """(txlog version, live part files as rel path -> size, schema DDL,
+    live DV positions by absolute file path, partition columns)."""
+    snap = TX._Snapshot(root).require()
+    if snap.mapping:
         raise UniformExportUnsupported(
             "table has column-mapping renames; exportable as Delta "
             "columnMapping=name in a later tier"
         )
-    return (entries, version, files, schema_ddl,
-            _dv_positions_by_abs(root, entries), part_cols)
+    current = {
+        os.path.relpath(p, root): os.path.getsize(p) for p, _, _ in snap.parts()
+    }
+    return (snap.version, current, snap.schema, _dv_positions_by_abs(snap),
+            snap.partition_by or [])
 
 
 def _hive_pvals(rel: str, part_cols: list[str]) -> dict:
@@ -109,24 +108,6 @@ def _hive_pvals(rel: str, part_cols: list[str]) -> dict:
             f"data file {rel!r} lacks hive directories for partition "
             f"columns {missing}"
         )
-    return out
-
-
-def _expand_parquet(root: str, rel_entries: list[str]) -> dict[str, int]:
-    """Concrete parquet files (rel path -> size) under the replayed file
-    entries, which may be single files or version directories."""
-    out: dict[str, int] = {}
-    for rel in rel_entries:
-        p = os.path.join(root, rel)
-        if os.path.isfile(p):
-            out[rel] = os.path.getsize(p)
-            continue
-        for dirpath, _dirs, names in os.walk(p):
-            for n in sorted(names):
-                if not n.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, n)
-                out[os.path.relpath(full, root)] = os.path.getsize(full)
     return out
 
 
@@ -156,9 +137,7 @@ def export_delta(root: str) -> int:
         delta_reader as DR,
     )
 
-    (_entries, tx_version, rel_files, schema_ddl, dv_by_abs,
-     part_cols) = _txlog_state(root)
-    current = _expand_parquet(root, rel_files)
+    tx_version, current, schema_ddl, dv_by_abs, part_cols = _txlog_state(root)
     prev_version, prev_files, prev_adds = _delta_replayed(root)
 
     # live DV positions per CURRENT rel path (vectors on dropped files
@@ -362,9 +341,7 @@ def export_iceberg(root: str) -> int:
     from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
     from kafka_connect_expand_json_transform_spark.sources import iceberg_reader as IR
 
-    (_entries, tx_version, rel_files, schema_ddl, dv_by_abs,
-     part_cols) = _txlog_state(root)
-    current = _expand_parquet(root, rel_files)
+    tx_version, current, schema_ddl, dv_by_abs, part_cols = _txlog_state(root)
     cur_dels: set[tuple[str, int]] = set()
     for rel in current:
         for p in dv_by_abs.get(

@@ -306,6 +306,102 @@ def test_table_files_written_only_through_files_module():
     assert found == {"sources/_files.py"}
 
 
+def test_one_snapshot_and_one_scan():
+    """Source scan: ``txlog._Snapshot`` is the only derivation of table
+    state and ``txlog._scan`` the only reader of table data files.
+
+    In ``sources/txlog.py`` only ``_Snapshot`` lists the log, and outside
+    it a state key (files, vectors, schema, mapping, partitioning,
+    sidecars) is read only off the ``entry`` a writer is building, or by
+    ``history``, which reports each entry's own file count.  Only
+    ``_scan`` anti-joins deletion vectors.  Parquet reads outside it are
+    of files no snapshot holds yet or that are not table data, and each
+    is named here: the vectors themselves (``_apply_dvs``), change files
+    (``read_changes``, through ``_changes_path``), WAP staged files (the
+    audit runs before the entry exists), and the indexed columns of the
+    files a commit just wrote (``_build_part_blooms``).  The physical
+    schema and the rename back go with those reads: ``_scan`` and the
+    two WAP auditors.  Every other module reaches the txlog's private
+    state only through ``_Snapshot``."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(txlog.__file__)
+    tree = ast.parse(src.read_text())
+    state_keys = {
+        "files", "dv_files", "dv_reset", "schema", "schema_json", "rename",
+        "drop", "partition_by", "stats", "bloom",
+    }
+    allowed = {
+        "_list_entries": {"_Snapshot"},
+        "_apply_dvs": {"_scan"},
+        "_phys_struct": {"_scan", "write_audit_publish", "foreach_batch_wap_sink"},
+        "_select_logical": {"_scan", "write_audit_publish", "foreach_batch_wap_sink"},
+        ".parquet": {
+            "_scan", "_apply_dvs", "read_changes", "write_audit_publish",
+            "foreach_batch_wap_sink", "_build_part_blooms",
+        },
+    }
+    bad = []
+    for top in tree.body:
+        name = getattr(top, "name", None)
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call):
+                f = n.func
+                callee = (
+                    f.id if isinstance(f, ast.Name)
+                    else "." + f.attr if isinstance(f, ast.Attribute) else None
+                )
+                if callee in allowed and name not in allowed[callee]:
+                    bad.append((name, callee))
+                if callee == ".parquet" and name == "read_changes":
+                    assert [
+                        a.func.id for a in n.args
+                        if isinstance(a, ast.Call) and isinstance(a.func, ast.Name)
+                    ] == ["_changes_path"]
+                if (
+                    callee == ".get"
+                    and n.args
+                    and isinstance(n.args[0], ast.Constant)
+                    and n.args[0].value in state_keys
+                    and name != "_Snapshot"
+                    and not (isinstance(f.value, ast.Name) and f.value.id == "entry")
+                ):
+                    bad.append((name, n.args[0].value))
+            if (
+                isinstance(n, ast.Subscript)
+                and isinstance(n.ctx, ast.Load)
+                and isinstance(n.slice, ast.Constant)
+                and n.slice.value in state_keys
+                and name not in ("_Snapshot", "history")
+                and not (isinstance(n.value, ast.Name) and n.value.id == "entry")
+            ):
+                bad.append((name, n.slice.value))
+    assert bad == []
+    # the rest of the package: txlog's private names are _Snapshot only
+    for py in src.parent.parent.rglob("*.py"):
+        if py == src:
+            continue
+        mod = ast.parse(py.read_text())
+        aliases = {
+            a.asname or a.name
+            for n in ast.walk(mod)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.name == "txlog"
+        }
+        for n in ast.walk(mod):
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id in aliases
+                and n.attr.startswith("_")
+            ):
+                assert n.attr == "_Snapshot", (py.name, n.attr)
+            if isinstance(n, ast.ImportFrom) and (n.module or "").endswith(".txlog"):
+                assert all(not a.name.startswith("_") for a in n.names), py.name
+
+
 def test_txlog_cdc_apply_roundtrip(spark, tmp_path):
     """MERGE-style CDC apply onto a txlog table: upserts + deletes land as
     one overwrite commit; the pre-merge snapshot stays time-travelable."""
@@ -349,6 +445,21 @@ def test_checkpoint_read_equals_full_replay(spark, tmp_path):
         a = txlog.read_table(spark, root, version=v).count()
         b = txlog.read_table_from_checkpoint(spark, root, version=v).count()
         assert a == b, (v, a, b)
+    # deletion vectors after the checkpoint apply too
+    dv = str(tmp_path / "dv")
+    txlog.append_table(_df(spark, 0, 100), dv)
+    txlog.checkpoint_log(dv)
+    txlog.delete_where_mor(spark, dv, "id < 10")
+    assert txlog.read_table_from_checkpoint(spark, dv).count() == 90
+    # a hive-partitioned table with two commits reads per data dir
+    pt = str(tmp_path / "pt")
+    for g in ("a", "b"):
+        txlog.append_table(
+            _df(spark, 0, 10).withColumn("g", F.lit(g)), pt,
+            partition_by=["g"] if g == "a" else None,
+        )
+    txlog.checkpoint_log(pt)
+    assert txlog.read_table_from_checkpoint(spark, pt).count() == 20
 
 
 def test_vacuum_deletes_unreferenced_and_sets_floor(spark, tmp_path):
@@ -1047,6 +1158,21 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     ch2 = sorted((r["_change_type"], r["k"]) for r in
                  txlog.read_changes(spark, root2, version - 1, version).collect())
     assert ch == ch2
+    # the pruned merge after a merge-on-read delete keeps k = 5 deleted
+    root3 = str(tmp_path / "mp3")
+    for lo in (0, 100):
+        txlog.append_table(
+            spark.range(lo, lo + 100).select(
+                F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+            ),
+            root3,
+        )
+    txlog.delete_where_mor(spark, root3, "k = 5")
+    txlog.merge_into(
+        spark, root3, spark.createDataFrame([(7, -1)], "k long, v long"), ["k"]
+    )
+    snap = txlog.read_table(spark, root3)
+    assert snap.count() == 199 and snap.where("k = 5").count() == 0
 
 
 def test_merge_prune_insert_only_when_nothing_overlaps(spark, tmp_path):
@@ -1103,6 +1229,20 @@ def test_delete_and_update_prune_hints(spark, tmp_path):
     txlog.update_where(spark, root2, "k >= 200", {"v": "v + 1"})
     got2 = {r["k"]: r["v"] for r in txlog.read_table(spark, root2).collect()}
     assert got == got2
+    # a partial rewrite after a merge-on-read delete: the touched dir is
+    # rewritten from a DV-applied read, so k = 5 stays deleted
+    root3 = str(tmp_path / "dh3")
+    for lo in (0, 100):
+        txlog.append_table(
+            spark.range(lo, lo + 100).select(
+                F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+            ),
+            root3,
+        )
+    txlog.delete_where_mor(spark, root3, "k = 5")
+    txlog.delete_where(spark, root3, "k = 6", prune_hint=[("k", "=", 6)])
+    snap = txlog.read_table(spark, root3)
+    assert snap.count() == 198 and snap.where("k = 5").count() == 0
 
 
 def test_optimize_zorder_tightens_skipping(spark, tmp_path):
@@ -1713,6 +1853,19 @@ def test_shallow_clone_zero_copy_branching(spark, tmp_path):
     txlog.vacuum(dst, retain_versions=1, retention_seconds=0.0)
     assert len(glob.glob(os.path.join(src, "data", "*"))) == n_src_files
     assert txlog.read_table(spark, dst).count() == 95
+    # a hive-partitioned source with two commits: the clone keeps its
+    # layout, so each data dir still scans on its own; partition pruning
+    # keeps working on the carried stats
+    psrc, pdst = str(tmp_path / "psrc"), str(tmp_path / "pbranch")
+    for g in ("a", "b"):
+        txlog.append_table(
+            _df(spark, 0, 10).withColumn("g", F.lit(g)), psrc,
+            partition_by=["g"] if g == "a" else None,
+        )
+    txlog.clone_table(spark, psrc, pdst)
+    assert txlog.read_table(spark, pdst).count() == 20
+    rep = txlog.skipping_report(pdst, [("g", "=", "b")])
+    assert rep["files_read"] < rep["files_total"], rep
 
 
 def test_deep_clone_severs_source_dependency(spark, tmp_path):
@@ -1769,9 +1922,20 @@ def test_maintain_table_compacts_only_past_threshold(spark, tmp_path):
     assert txlog.maintain_table(spark, root, max_files=64) is None  # 24 files
     v = txlog.maintain_table(spark, root, max_files=10, target_files=2)
     assert v == 6  # compaction committed as the next version
+    # a partitioned table's part files live under hive dirs: they count too
+    pt = str(tmp_path / "pt")
+    for i in range(5):
+        txlog.append_table(
+            _df(spark, i * 10, i * 10 + 10).withColumn("g", F.lit("a"))
+            .repartition(4),
+            pt,
+            partition_by=["g"] if i == 0 else None,
+        )
+    assert txlog.maintain_table(spark, pt, max_files=8) == 5
+    assert txlog.read_table(spark, pt).count() == 50
     import glob
 
-    files, _ = txlog._replay(txlog._list_entries(root), None)
+    files = txlog._Snapshot(root).files
     n_parts = sum(
         len(glob.glob(os.path.join(root, d, "*.parquet"))) for d in files
     )
@@ -2247,6 +2411,15 @@ def test_optimize_zorder_incremental_never_rewrites_clustered_files(spark, tmp_p
     fv = txlog.optimize_zorder_incremental(spark, root2, ["a", "b"], bits=3)
     assert txlog._list_entries(root2)[fv].get("zorder")
     assert txlog.read_table(spark, root2).count() == 256
+    # a hive-partitioned table: the new dirs scan one by one
+    root3 = str(tmp_path / "zoi3")
+    part = lambda lo, hi, g: mk(lo, hi).withColumn("g", F.lit(g))
+    txlog.append_table(part(0, 256, "x"), root3, partition_by=["g"])
+    txlog.optimize_zorder(spark, root3, ["a", "b"], bits=3, target_files=2)
+    txlog.append_table(part(256, 384, "y"), root3)
+    txlog.append_table(part(384, 512, "z"), root3)
+    txlog.optimize_zorder_incremental(spark, root3, ["a", "b"], bits=3)
+    assert txlog.read_table(spark, root3).count() == 512
 
 
 def test_partitioned_table_pruning_and_dml(spark, tmp_path):
@@ -2301,6 +2474,31 @@ def test_partitioned_table_pruning_and_dml(spark, tmp_path):
     assert last.get("partition_by") == ["g"]
     nested = _glob.glob(os.path.join(root, last["files"][-1], "g=*", "*.parquet"))
     assert nested, "compacted dir must be hive-partitioned"
+
+    # two commits under different partition values: the MoR writers scan
+    # each data dir on its own, and the prune hint looks inside hive dirs
+    def two_commits(name):
+        r = str(tmp_path / name)
+        txlog.append_table(
+            spark.range(0, 10).selectExpr("id AS k", "'a' AS g", "id AS v"),
+            r, partition_by=["g"],
+        )
+        txlog.append_table(
+            spark.range(100, 110).selectExpr("id AS k", "'b' AS g", "id AS v"), r
+        )
+        return r
+
+    r = two_commits("pt_del")
+    assert txlog.delete_where_mor(spark, r, "k = 5")[1] == 1
+    assert txlog.read_table(spark, r).count() == 19
+    r = two_commits("pt_merge")
+    src = spark.createDataFrame([(5, "a", -1)], "k long, g string, v long")
+    assert txlog.merge_into_mor(spark, r, src, ["k"])[1]["updated"] == 1
+    got = {x["k"]: x["v"] for x in txlog.read_table(spark, r).collect()}
+    assert len(got) == 20 and got[5] == -1
+    snap = txlog._Snapshot(two_commits("pt_prune"))
+    touched, reused = txlog._prune_dirs(snap, [("k", "=", 5)])
+    assert touched == snap.files[:1] and reused == snap.files[1:]
 
 
 def test_stream_source_over_partitioned_table(spark, tmp_path):
@@ -2552,7 +2750,7 @@ def test_unpartitioned_history_cannot_gain_partitioning(spark, tmp_path):
         )
     # the table stays flat and readable
     assert txlog.read_table(spark, root).count() == 10
-    assert txlog._table_partition_by(txlog._list_entries(root)) is None
+    assert txlog._Snapshot(root).partition_by is None
 
 
 def test_stream_source_over_date_partitioned_table(spark, tmp_path):
@@ -2631,7 +2829,7 @@ def test_wap_publish_retry_revalidates_evolved_schema(spark, tmp_path):
     # staged files are gone and nothing regressed the read schema
     assert txlog.latest_version(root) == 1
     assert txlog.read_table(spark, root).columns == ["k", "v", "extra"]
-    files, _ = txlog._replay(txlog._list_entries(root), None)
+    files = txlog._Snapshot(root).files
     on_disk = {
         os.path.relpath(p, root)
         for p in _glob.glob(os.path.join(root, "data", "*.parquet"))
