@@ -92,7 +92,11 @@ def _list_log(path: str) -> tuple[dict[int, str], dict[int, list[str]]]:
     for name in os.listdir(log):
         m = _COMMIT_RE.match(name)
         if m:
-            commits[int(m.group(1))] = os.path.join(log, name)
+            p = os.path.join(log, name)
+            # a zero-length commit is a writer's in-flight claim
+            # (``_commit.publish``), never a committed version
+            if os.path.getsize(p):
+                commits[int(m.group(1))] = p
             continue
         m = _CKPT_RE.match(name)
         if m:

@@ -34,6 +34,7 @@ import time as _time
 from pyspark.sql import DataFrame
 
 from kafka_connect_expand_json_transform_spark.sources import _files
+from kafka_connect_expand_json_transform_spark.sources._commit import publish, replace
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
     _list_log,
@@ -496,14 +497,27 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
         "protocol": pa.array(rows_proto, proto_t),
     })
     final = os.path.join(_log_dir(root), f"{v:020d}.checkpoint.parquet")
-    tmp = final + f".tmp-{_time.time_ns()}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)  # idempotent: any writer produces the same state
-    last = os.path.join(_log_dir(root), "_last_checkpoint")
-    with open(last + ".tmp", "w") as fh:
-        json.dump({"version": v, "size": n}, fh)
-    os.replace(last + ".tmp", last)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    # idempotent: any writer produces the same state
+    replace(final, buf.getvalue().to_pybytes())
+    replace(
+        os.path.join(_log_dir(root), "_last_checkpoint"),
+        json.dumps({"version": v, "size": n}),
+    )
     return final
+
+
+def _publish(root: str, version: int, actions: list[dict], placed: list[str]) -> None:
+    """Publish ``actions`` as commit ``version``; when a concurrent writer
+    won the version, this attempt's staged files (``placed``, referenced by
+    no add action) are unlinked and ``DeltaCommitConflict`` raised."""
+    publish(
+        os.path.join(_log_dir(root), f"{version:020d}.json"),
+        "".join(json.dumps(a) + "\n" for a in actions).encode(),
+        DeltaCommitConflict(f"version {version} already committed"),
+        [os.path.join(root, rel) for rel in placed],
+    )
 
 
 def _stage_adds(
@@ -666,11 +680,14 @@ def delta_append(
 
     from pyspark.sql import functions as F
 
-    exists = os.path.isdir(_log_dir(root))
+    try:
+        _files, meta, _proto, head = _replay(root, None)
+        exists = True
+    except FileNotFoundError:  # no committed version (maybe a first claim)
+        exists = False
     evolved = None
     stage_df, stage_part_cols = df, None
     if exists:
-        _files, meta, _proto, head = _replay(root, None)
         _check_writer_requirements(meta, _proto, dml=False)
         _enforce_constraints(df, _active_constraints(meta), "append")
         part_cols = list(meta.get("partitionColumns") or [])
@@ -840,23 +857,7 @@ def delta_append(
     actions.extend(adds)
 
     os.makedirs(_log_dir(root), exist_ok=True)
-    final = os.path.join(_log_dir(root), f"{version:020d}.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        # a concurrent writer won this version; this attempt's data files
-        # were never referenced by any add action — unlink them
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise DeltaCommitConflict(f"version {version} already committed") from e
-    with os.fdopen(fd, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish(root, version, actions, placed)
     if (checkpoint_interval and version > 0
             and version % checkpoint_interval == 0):
         try:
@@ -1156,21 +1157,7 @@ def _delta_cow(
                     "dataChange": True}}
         for rel in affected
     )
-    final = os.path.join(_log_dir(root), f"{version:020d}.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise DeltaCommitConflict(f"version {version} already committed") from e
-    with os.fdopen(fd, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish(root, version, actions, placed)
     return version, n_deleted
 
 
@@ -1365,23 +1352,7 @@ def delta_merge_into(
                     "dataChange": True}}
         for rel in affected
     )
-    final = os.path.join(_log_dir(root), f"{version:020d}.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise DeltaCommitConflict(
-            f"version {version} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish(root, version, actions, placed)
     return version, stats
 
 
@@ -1669,19 +1640,5 @@ def delta_optimize(
                     "dataChange": False}}
         for rel in affected
     )
-    final = os.path.join(_log_dir(root), f"{version:020d}.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise DeltaCommitConflict(f"version {version} already committed") from e
-    with os.fdopen(fd, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish(root, version, actions, placed)
     return version, len(affected)

@@ -59,6 +59,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_connect_expand_json_transform_spark.sources import _files, _tablestream
+from kafka_connect_expand_json_transform_spark.sources._commit import publish
 
 _COMMIT_RE = re.compile(r"^(\d+)\.(commit|deltacommit|replacecommit)$")
 _PENDING_COMPACTION_RE = re.compile(
@@ -97,20 +98,32 @@ def hudi_timeline(path: str) -> list[dict]:
     out = []
     for name in os.listdir(d):
         m = _COMMIT_RE.match(name)
-        if m:
+        # a zero-length instant is a writer's in-flight claim
+        # (``_commit.publish``), never a completed commit
+        if m and os.path.getsize(os.path.join(d, name)):
             out.append({"instant": m.group(1), "kind": m.group(2),
                         "path": os.path.join(d, name)})
     return sorted(out, key=lambda c: c["instant"], reverse=True)
 
 
 def _load_instant(path: str) -> dict:
-    """Parse a completed instant's JSON; a zero-length file is an
-    in-flight/incomplete instant — its writes are not committed, so it
-    contributes nothing."""
-    if os.path.getsize(path) == 0:
-        return {}
+    """Parse a completed instant's JSON (``hudi_timeline`` lists only
+    those)."""
     with open(path, encoding="utf-8") as fh:
         return json.load(fh)
+
+
+def _publish_instant(root: str, instant: str, action: str,
+                     stats: list[dict], placed) -> None:
+    """Publish the completed ``<instant>.<action>`` listing ``stats``;
+    when a racing writer won the instant, this attempt's ``placed`` files
+    are unlinked and ``HudiCommitConflict`` raised."""
+    publish(
+        os.path.join(_hoodie_dir(root), f"{instant}.{action}"),
+        json.dumps({"partitionToWriteStats": {"p": stats}}).encode(),
+        HudiCommitConflict(f"instant {instant} already committed"),
+        [os.path.join(root, rel) for rel in placed],
+    )
 
 
 def _replaced_ids(meta: dict) -> set[str]:
@@ -846,8 +859,8 @@ def hudi_append(
     carry ``_hoodie_commit_time`` and ``_hoodie_record_key`` (from
     ``record_key``), the completed-commit JSON lists the files in
     ``partitionToWriteStats``, and the ``<instant>.commit`` file is
-    claimed with O_CREAT|O_EXCL — a racing writer loses cleanly and its
-    attempt-unique data files are unlinked.  Instants are
+    published through ``_commit.publish`` — a racing writer loses
+    cleanly and its attempt-unique data files are unlinked.  Instants are
     ``yyyyMMddHHmmssSSS`` and must be lexically increasing; an older or
     equal instant refuses.  Scale: one parquet write per batch plus one
     O(written files) commit JSON — the timeline bound every Hudi writer
@@ -891,22 +904,7 @@ def hudi_append(
         *df.columns,
     ), root, nonce, instant)
 
-    final = os.path.join(_hoodie_dir(root), f"{instant}.commit")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise HudiCommitConflict(
-            f"instant {instant} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"partitionToWriteStats": {"p": stats}}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish_instant(root, instant, "commit", stats, placed)
     return instant
 
 
@@ -925,7 +923,7 @@ def hudi_upsert(
     new one — exactly what makes incremental queries see only the
     changed rows), and rows with unseen keys land in NEW file groups as
     inserts.  Returns the committed instant; the ``<instant>.commit``
-    file is claimed with O_CREAT|O_EXCL like ``hudi_append``.
+    file is published like ``hudi_append``.
 
     Scale: the shuffle is keyed on the 16-byte record key + file-group
     id, never whole documents twice; each touched file group is
@@ -1082,22 +1080,7 @@ def hudi_upsert(
                 pass
         raise
 
-    final = os.path.join(_hoodie_dir(root), f"{instant}.commit")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise HudiCommitConflict(
-            f"instant {instant} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"partitionToWriteStats": {"p": stats}}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish_instant(root, instant, "commit", stats, placed)
     return instant
 
 
@@ -1123,8 +1106,8 @@ def hudi_mor_upsert(
     keys land in NEW base parquet file groups; ``delete_keys`` (an
     iterable or a one-column DataFrame) appends delete blocks (absent
     keys are no-ops).  Returns the committed ``<instant>.deltacommit``
-    (claimed O_CREAT|O_EXCL).  Creating the table (or an empty one)
-    writes base files only.  Readable by ``read_hudi`` /
+    (published like ``hudi_append``'s commit).  Creating the table (or
+    an empty one) writes base files only.  Readable by ``read_hudi`` /
     ``read_hudi_incremental`` / ``hudistream`` — the repo's own MoR
     merge is the independent check.
 
@@ -1370,22 +1353,9 @@ def hudi_mor_upsert(
     placed, ins_stats = _stage_file_groups(ins, root, nonce, instant)
     stats += ins_stats
 
-    final = os.path.join(_hoodie_dir(root), f"{instant}.deltacommit")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in [*placed, *written_logs]:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise HudiCommitConflict(
-            f"instant {instant} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"partitionToWriteStats": {"p": stats}}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish_instant(
+        root, instant, "deltacommit", stats, [*placed, *written_logs]
+    )
     return instant
 
 
@@ -1467,22 +1437,7 @@ def hudi_compact(spark, root: str, instant: str | None = None) -> str:
     plan.foreachPartition(compact_slice)
     stats = [{"fileId": s["file_id"], "path": out_rel[s["file_id"]]}
              for s in slices]
-    final = os.path.join(_hoodie_dir(root), f"{instant}.commit")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in out_rel.values():
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise HudiCommitConflict(
-            f"instant {instant} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"partitionToWriteStats": {"p": stats}}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish_instant(root, instant, "commit", stats, out_rel.values())
     return instant
 
 

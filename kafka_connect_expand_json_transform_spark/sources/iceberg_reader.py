@@ -6,11 +6,17 @@ reference user's existing tables — Delta or Iceberg — are readable by this
 engine without format jars, the capability tier PyIceberg offers.  The
 metadata tree is walked with PUBLIC structures only:
 
-    metadata/vN.metadata.json  (or version-hint.text)   table metadata
+    metadata/vN.metadata.json  newest committed N     table metadata
       -> snapshots[{snapshot-id, manifest-list, ...}]
       -> manifest list (Avro OCF)  one row per manifest  [avro_codec]
       -> manifests (Avro OCF)      entries {status, data_file{...}}
       -> live parquet data files
+
+The newest committed ``vN.metadata.json`` comes from one listing of
+``metadata/`` (a zero-length name is an in-flight claim and skipped);
+``version-hint.text`` is written by this repo's writers for outside
+clients but never read, so a stale or half-written hint cannot steer a
+read or a commit.
 
 * ``read_iceberg(spark, path, snapshot_id=None)`` — current snapshot, or
   time travel by snapshot id; Iceberg data files normally STORE partition
@@ -107,27 +113,30 @@ def _spark_type(t) -> T.DataType:
     raise IcebergUnsupported(f"iceberg type {t!r} not supported")
 
 
-def _read_metadata(path: str) -> dict:
+def _metadata_head(path: str) -> tuple[int, dict]:
+    """``(N, metadata)`` of the newest committed ``vN.metadata.json``,
+    from one listing.  A zero-length name is a writer's in-flight claim
+    (``_commit.publish``), never a commit; ``version-hint.text`` is not
+    read, so the version a writer claims next (N + 1) is tied to the
+    metadata it read."""
     meta_dir = os.path.join(path, "metadata")
     if not os.path.isdir(meta_dir):
         raise FileNotFoundError(f"no Iceberg metadata dir at {meta_dir}")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            v = fh.read().strip()
-        cand = os.path.join(meta_dir, f"v{v}.metadata.json")
-    else:
-        versions = sorted(
-            (int(m.group(1)), n)
-            for n in os.listdir(meta_dir)
-            for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-            if m
-        )
-        if not versions:
-            raise FileNotFoundError(f"no vN.metadata.json under {meta_dir}")
-        cand = os.path.join(meta_dir, versions[-1][1])
-    with open(cand) as fh:
-        return json.load(fh)
+    versions = sorted(
+        (int(m.group(1)), os.path.join(meta_dir, n))
+        for n in os.listdir(meta_dir)
+        for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
+        if m
+    )
+    for n, cand in reversed(versions):
+        if os.path.getsize(cand):
+            with open(cand) as fh:
+                return n, json.load(fh)
+    raise FileNotFoundError(f"no committed vN.metadata.json under {meta_dir}")
+
+
+def _read_metadata(path: str) -> dict:
+    return _metadata_head(path)[1]
 
 
 def _resolve(path: str, location: str, file_path: str) -> str:

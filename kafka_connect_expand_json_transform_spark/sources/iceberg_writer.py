@@ -11,8 +11,11 @@ public iceberg.apache.org spec:
   adds ONE manifest holding only the new files — Iceberg's own append
   economics — so carried entries keep their partition tuples, spec ids,
   and sequence numbers, and time travel works in any Iceberg reader;
-  the commit claims the next ``vN.metadata.json`` with O_CREAT|O_EXCL,
-  the same atomic rename-if-absent contract Iceberg's catalogs provide.
+  the commit publishes ``v(N+1).metadata.json`` through
+  ``_commit.publish``, where N is the newest committed version it read —
+  the atomic rename-if-absent contract Iceberg's catalogs provide — and
+  then rewrites ``version-hint.text`` for outside clients (written, never
+  read here).
 * ``iceberg_delete_where(spark, root, predicate)`` — a v2
   POSITION-DELETE commit: matching rows (from ``_metadata.row_index``
   on the distributed pinned scan) land in a delete parquet with the
@@ -29,12 +32,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time as _time
 
 from pyspark.sql import DataFrame
 
 from kafka_connect_expand_json_transform_spark.sources import _files
+from kafka_connect_expand_json_transform_spark.sources._commit import publish, replace
 from kafka_connect_expand_json_transform_spark.sources import avro_codec as AC
 from kafka_connect_expand_json_transform_spark.sources import (
     iceberg_reader as IR,
@@ -49,6 +52,24 @@ from kafka_connect_expand_json_transform_spark.sources.uniform import (
 class IcebergCommitConflict(RuntimeError):
     """A concurrent writer claimed this metadata version first; re-read
     the head and retry."""
+
+
+def _publish_metadata(root: str, version: int, meta: dict, placed=(),
+                      conflict=None) -> None:
+    """Publish ``meta`` as ``metadata/v{version}.metadata.json`` through
+    ``_commit.publish``, then point ``version-hint.text`` at it for
+    outside clients; this repo's readers never read the hint
+    (``iceberg_reader._metadata_head``).  On a lost race this attempt's
+    ``placed`` files are unlinked and ``conflict`` raised (by default
+    ``IcebergCommitConflict``)."""
+    meta_dir = os.path.join(root, "metadata")
+    publish(
+        os.path.join(meta_dir, f"v{version}.metadata.json"),
+        json.dumps(meta).encode(),
+        conflict or IcebergCommitConflict(f"metadata v{version} already committed"),
+        [os.path.join(root, rel) for rel in placed],
+    )
+    replace(os.path.join(meta_dir, "version-hint.text"), str(version))
 
 
 def _offset_ids(t, off: int):
@@ -140,7 +161,7 @@ def iceberg_append(df: DataFrame, root: str,
     meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
     try:
-        prev_meta = IR._read_metadata(root)
+        head, prev_meta = IR._metadata_head(root)
     except FileNotFoundError:
         prev_meta = None
 
@@ -207,12 +228,7 @@ def iceberg_append(df: DataFrame, root: str,
         # seq and wrongly hit old data files)
         if any(r["sequence_number"] is None for r in carried_rows):
             _refuse_eq_deletes_without_seq(root, prev_meta, carried_rows)
-        meta_version = 1 + max(
-            int(m.group(1))
-            for n in os.listdir(meta_dir)
-            for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-            if m
-        )
+        meta_version = head + 1
     else:
         prev_snaps, meta_version = [], 1
         carried_rows = []
@@ -321,24 +337,7 @@ def iceberg_append(df: DataFrame, root: str,
         "snapshot-log": [],
         "metadata-log": [],
     }
-    final = os.path.join(meta_dir, f"v{meta_version}.metadata.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise IcebergCommitConflict(
-            f"metadata v{meta_version} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(meta_version))
+    _publish_metadata(root, meta_version, meta, placed)
     return snap_id
 
 
@@ -350,8 +349,8 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
     2147483546/2147483545) referenced by a delete manifest (content=1)
     in the new snapshot; data files are never rewritten.  Returns
     ``(snapshot_id, n_deleted)`` — the current snapshot unchanged when
-    nothing matches.  The commit claims the next metadata version with
-    O_CREAT|O_EXCL like ``iceberg_append``.
+    nothing matches.  The commit publishes the next metadata version
+    like ``iceberg_append``.
 
     Scale: positions come from ``_metadata.row_index`` on the pinned
     scan — predicate evaluation and position extraction stay
@@ -362,9 +361,8 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
     import pyarrow.parquet as _pq
     from pyspark.sql import functions as F
 
-    meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
-    prev_meta = IR._read_metadata(root)  # raises when no table
+    head, prev_meta = IR._metadata_head(root)  # raises when no table
     prev_files_seq, prev_pos_dels, prev_eq_dels, _ipv = \
         IR._snapshot_entries(root, prev_meta, None)
     if prev_eq_dels:
@@ -386,12 +384,7 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
         os.path.relpath(p, root) for p, _s in prev_files_seq
     )
     prev_snaps = prev_meta.get("snapshots", [])
-    meta_version = 1 + max(
-        int(m.group(1))
-        for n in os.listdir(meta_dir)
-        for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-        if m
-    )
+    meta_version = head + 1
     snap_id = 1 + max((s["snapshot-id"] for s in prev_snaps), default=0)
     seq_no = 1 + prev_meta.get("last-sequence-number", 0)
 
@@ -483,24 +476,7 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
             "schema-id": commit_schema_id,
         }],
     })
-    final = os.path.join(meta_dir, f"v{meta_version}.metadata.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise IcebergCommitConflict(
-            f"metadata v{meta_version} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(meta_version))
+    _publish_metadata(root, meta_version, meta, placed)
     return snap_id, n_deleted
 
 
@@ -522,9 +498,8 @@ def iceberg_delete_keys(spark, root: str, keys: DataFrame) -> tuple[int, int]:
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
-    prev_meta = IR._read_metadata(root)  # raises when no table
+    head, prev_meta = IR._metadata_head(root)  # raises when no table
     cur_fields = IR._current_schema(prev_meta)["fields"]
     id_of = {f["name"]: f["id"] for f in cur_fields}
     missing = [c for c in keys.columns if c not in id_of]
@@ -542,12 +517,7 @@ def iceberg_delete_keys(spark, root: str, keys: DataFrame) -> tuple[int, int]:
             "table has manifests with unrecoverable sequence numbers; "
             "equality deletes cannot be scoped — compact first"
         )
-    meta_version = 1 + max(
-        int(m.group(1))
-        for n in os.listdir(meta_dir)
-        for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-        if m
-    )
+    meta_version = head + 1
     snap_id = 1 + max((s["snapshot-id"] for s in prev_snaps), default=0)
     seq_no = 1 + prev_meta.get("last-sequence-number", 0)
 
@@ -609,24 +579,7 @@ def iceberg_delete_keys(spark, root: str, keys: DataFrame) -> tuple[int, int]:
             "schema-id": prev_meta.get("current-schema-id", 0),
         }],
     })
-    final = os.path.join(meta_dir, f"v{meta_version}.metadata.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise IcebergCommitConflict(
-            f"metadata v{meta_version} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(meta_version))
+    _publish_metadata(root, meta_version, meta, placed)
     return snap_id, n_keys
 
 
@@ -643,9 +596,8 @@ def iceberg_compact(spark, root: str) -> int:
 
     Scale: one distributed read-rewrite job (the snapshot read's own
     delete application) + O(new files) manifest metadata."""
-    meta_dir = os.path.join(root, "metadata")
     loc = "file://" + os.path.abspath(root)
-    prev_meta = IR._read_metadata(root)
+    head, prev_meta = IR._metadata_head(root)
     prev_snaps = prev_meta.get("snapshots", [])
     default_spec = next(
         (sp for sp in prev_meta.get("partition-specs", [])
@@ -657,12 +609,7 @@ def iceberg_compact(spark, root: str) -> int:
             "compacting a partitioned Iceberg table is not supported "
             "(the rewrite would drop partition tuples)"
         )
-    meta_version = 1 + max(
-        int(m.group(1))
-        for n in os.listdir(meta_dir)
-        for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-        if m
-    )
+    meta_version = head + 1
     snap_id = 1 + max((s["snapshot-id"] for s in prev_snaps), default=0)
     seq_no = 1 + prev_meta.get("last-sequence-number", 0)
 
@@ -714,22 +661,5 @@ def iceberg_compact(spark, root: str) -> int:
             "schema-id": prev_meta.get("current-schema-id", 0),
         }],
     })
-    final = os.path.join(meta_dir, f"v{meta_version}.metadata.json")
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        for rel in placed:
-            try:
-                os.unlink(os.path.join(root, rel))
-            except OSError:
-                pass
-        raise IcebergCommitConflict(
-            f"metadata v{meta_version} already committed"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(meta_version))
+    _publish_metadata(root, meta_version, meta, placed)
     return snap_id

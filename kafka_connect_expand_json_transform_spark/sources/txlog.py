@@ -39,17 +39,18 @@ built.  Readers of sink-written files need the two delta encodings.
 
 ACID story (single filesystem):
 
-* **Atomic commit** — the entry is written to a temp name and
-  ``os.rename``'d into place; rename is atomic on POSIX, so readers see
-  either the full version or nothing.  Data files are written BEFORE the
-  log entry, so an uncommitted write is invisible garbage, never a
-  torn table.
-* **Optimistic concurrency** — the rename target embeds the version
+* **Atomic commit** — the entry is published by ``_commit.publish``,
+  the one commit primitive of every format in ``sources``: an exclusive
+  claim on the version's name, then a rename of the fully written
+  entry over it, so readers see either the full version or nothing (a
+  zero-length name is an in-flight claim, never a commit).  Data files
+  are written BEFORE the log entry, so an uncommitted write is
+  invisible garbage, never a torn table.
+* **Optimistic concurrency** — the entry name embeds the version
   number; two writers racing to commit the same version collide on the
-  existing file and the loser raises ``TxLogConflict`` (retry = re-read
-  latest, re-commit next version).  ``os.rename`` onto an existing path
-  silently succeeds on POSIX, so the loser is detected with an exclusive
-  ``O_CREAT | O_EXCL`` claim file instead.
+  claim and the loser raises ``TxLogConflict`` (retry = re-read latest,
+  re-commit next version).  A claim a crashed writer left behind is
+  reclaimed after a grace period.
 * **Schema enforcement** — appends must match the table's schema DDL
   exactly (or WIDEN it with ``allow_add_columns``: new columns appended,
   existing ones unchanged; reads pin the log's latest schema so old files
@@ -86,6 +87,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_connect_expand_json_transform_spark.sources import _files, _tablestream
+# the commit seam's public names stay importable from txlog
+from kafka_connect_expand_json_transform_spark.sources._commit import (  # noqa: F401
+    CommitBackend,
+    PosixCommitBackend,
+    TxLogConflict,
+    publish,
+    replace,
+    set_commit_backend,
+)
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 
 _LOG_DIR = "_log"
@@ -93,20 +103,17 @@ _DATA_DIR = "data"
 _CHANGES_DIR = "_changes"
 _DV_DIR = "_dv"
 
-# A zero-length claim file older than this is treated as abandoned by a
-# crashed writer and reclaimed (see _acquire_claim).  Also the minimum age
-# before vacuum may delete an unreferenced data directory (an in-flight
-# writer publishes its log entry AFTER writing parquet, so a younger
-# unreferenced dir may belong to a live commit).
-_CLAIM_GRACE_SECONDS = 60.0
-
 # vacuum's age guard for unreferenced data dirs.  Deliberately MUCH larger
-# than the claim grace: the commit protocol writes parquet BEFORE publishing
-# the log entry, so an unreferenced dir may belong to a live commit whose
-# data write simply takes a while — at the 100 TB scale this module targets,
-# a multi-hour write is normal, and a 60 s guard would delete its data out
-# from under it.  Delta's default is 7 days for the same reason.
+# than the 60 s claim grace (``_commit``): the commit protocol writes
+# parquet BEFORE publishing the log entry, so an unreferenced dir may
+# belong to a live commit whose data write simply takes a while — at the
+# 100 TB scale this module targets, a multi-hour write is normal, and a
+# 60 s guard would delete its data out from under it.  Delta's default is
+# 7 days for the same reason.
 _VACUUM_RETENTION_SECONDS = 7 * 24 * 3600.0
+
+# characters Spark's path globbing expands (refused in a txlog root)
+_GLOB_CHARS = "[]{}*?\\"
 
 # publish retries for commuting appends (data written once, log entry
 # re-pointed at the next version on a claim conflict)
@@ -117,10 +124,6 @@ _SINK_WRITE_OPTIONS = {
     "parquet.enable.dictionary": "false",
     "parquet.writer.version": "v2",
 }
-
-
-class TxLogConflict(RuntimeError):
-    """Another writer committed this version first — re-read and retry."""
 
 
 class TxLogSchemaMismatch(ValueError):
@@ -337,47 +340,6 @@ def _apply_dvs(spark: SparkSession, snap: _Snapshot, tagged: DataFrame) -> DataF
     )
 
 
-def _acquire_claim(final: str) -> int:
-    """Exclusive O_CREAT|O_EXCL claim on a log-entry name, with crash
-    recovery: a writer that dies between claiming and ``os.replace`` leaves
-    a permanent zero-length file at the next version's name, which would
-    wedge the table forever (every later commit recomputes that version and
-    hits FileExistsError).  A zero-length claim older than
-    ``_CLAIM_GRACE_SECONDS`` is treated as abandoned — unlink and retry
-    ONCE.  A non-empty file is a committed entry and a young empty file is
-    a live writer's in-flight claim; both stay a genuine conflict."""
-    try:
-        return os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:
-            st = os.stat(final)
-            abandoned = (
-                st.st_size == 0
-                and (time.time() - st.st_mtime) > _CLAIM_GRACE_SECONDS
-            )
-        except FileNotFoundError:
-            abandoned = False  # owner published or recovered concurrently
-        if not abandoned:
-            raise
-        # re-stat immediately before the unlink: if the owner published
-        # (os.replace swaps in a new inode with content) or a recoverer
-        # already reclaimed, the inode/size changed and we must NOT delete
-        # a committed entry.  POSIX has no conditional unlink, so a window
-        # remains between this stat and the unlink — it is (re-stat →
-        # unlink) nanoseconds wide, vs the original (first-stat → unlink)
-        # which spanned the whole abandonment judgment.
-        try:
-            st2 = os.stat(final)
-            if st2.st_ino != st.st_ino or st2.st_size != 0:
-                raise FileExistsError(final)
-            os.unlink(final)
-        except FileNotFoundError:
-            pass
-        # single retry; a concurrent recoverer winning the re-claim
-        # surfaces as FileExistsError -> TxLogConflict at the caller
-        return os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-
-
 def _commit(
     root: str,
     op: str,
@@ -498,18 +460,8 @@ def _commit(
         else eff_parts_logical
     )
     # files store PHYSICAL column names (rename/drop never rewrite them)
-    parts = _files.write(
-        _select_physical(df, mapping), os.path.join(root, rel), eff_parts_phys
-    )
-
-    part_dtypes = (
-        {
-            mapping.get(c, c): df.schema[c].dataType.simpleString()
-            for c in eff_parts_logical
-        }
-        if eff_parts_logical
-        else None
-    )
+    phys = _select_physical(df, mapping)
+    parts = _files.write(phys, os.path.join(root, rel), eff_parts_phys)
     entry = {
         "op": op,
         "files": list(extra_files or []) + [rel],
@@ -518,7 +470,7 @@ def _commit(
         # footer min/max per part file -> read_table_pruned's data skipping
         # (hive partition values injected as exact [v, v] ranges; stats are
         # keyed by PHYSICAL column names, matching the files)
-        "stats": _sidecar_stats(rel, parts, part_dtypes),
+        "stats": _sidecar_stats(rel, parts, phys, eff_parts_phys),
     }
     if eff_parts_phys:
         entry["partition_by"] = eff_parts_phys
@@ -569,92 +521,6 @@ def _commit(
     raise AssertionError("unreachable")  # pragma: no cover
 
 
-class CommitBackend:
-    """The SEAM the whole ACID story rests on: one primitive — atomically
-    publish ``payload`` at ``path`` iff no committed entry exists there,
-    raising ``TxLogConflict`` when another writer won the name.  Everything
-    above this line (optimistic retry, conflict surfacing, schema
-    re-validation, WAP) is backend-agnostic.
-
-    The default ``PosixCommitBackend`` is correct for any filesystem with
-    atomic exclusive-create and rename (local disk, NFSv4, HDFS-via-mount).
-    The 100 TB deployment target is an OBJECT STORE, which has neither
-    inodes nor O_EXCL — there this seam maps onto the store's conditional
-    write, exactly as the public formats do:
-
-    * S3: ``PutObject`` with ``If-None-Match: *`` (or, pre-2024, a DynamoDB
-      lock table — Delta's S3DynamoDBLogStore; Iceberg uses a catalog
-      compare-and-swap on the metadata pointer)
-    * GCS: ``x-goods-if-generation-match: 0`` preconditioned insert
-    * Azure: ``If-None-Match: *`` on the Put Blob
-
-    An object-store backend's ``publish`` is one conditional PUT: no tmp
-    file, no fsync, no claim recovery (a failed PUT leaves nothing behind).
-    Install with ``set_commit_backend``; the seam is the ONLY place commit
-    atomicity semantics live (readers just list+get immutable objects)."""
-
-    def publish(self, path: str, payload: bytes) -> None:
-        raise NotImplementedError
-
-
-class PosixCommitBackend(CommitBackend):
-    """Exclusive-create + fsync + rename publish for POSIX filesystems,
-    with crash recovery for abandoned claims (see ``_acquire_claim``)."""
-
-    def publish(self, path: str, payload: bytes) -> None:
-        # exclusive claim: O_CREAT|O_EXCL makes the loser of a same-version
-        # race fail here (POSIX rename would silently clobber); abandoned
-        # claims from crashed writers are reclaimed after a grace period
-        try:
-            fd = _acquire_claim(path)
-        except FileExistsError as exc:
-            raise TxLogConflict(
-                f"{os.path.basename(path)} already committed or claimed"
-            ) from exc
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        try:
-            with open(tmp, "wb") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            # ownership check: if we stalled >grace between claiming and
-            # here, a recoverer may have unlinked our claim and re-claimed
-            # (or even published) this version — `path` then names a
-            # DIFFERENT inode than the one our fd holds, and os.replace
-            # would silently clobber it, forking the log.  A residual
-            # window remains between this check and the replace (POSIX
-            # offers no compare-and-rename); it is nanoseconds wide vs the
-            # unbounded claim->publish stall it guards.
-            try:
-                owned = os.stat(path).st_ino == os.fstat(fd).st_ino
-            except FileNotFoundError:
-                owned = False
-            if not owned:
-                os.unlink(tmp)
-                raise TxLogConflict(
-                    f"claim on {os.path.basename(path)} was reclaimed by "
-                    "another writer (stalled past the "
-                    f"{_CLAIM_GRACE_SECONDS:.0f}s grace?) — re-read and "
-                    "retry; this commit's data dir is an orphan vacuum "
-                    "will collect"
-                )
-            os.replace(tmp, path)  # atomic publish of the full content
-        finally:
-            os.close(fd)
-
-
-_commit_backend: CommitBackend = PosixCommitBackend()
-
-
-def set_commit_backend(backend: CommitBackend) -> CommitBackend:
-    """Swap the atomic-publish primitive (e.g. an object-store conditional
-    PUT); returns the previous backend so callers can restore it."""
-    global _commit_backend
-    prev = _commit_backend
-    _commit_backend = backend
-    return prev
-
-
 def _publish_entry(root: str, version: int, entry: dict) -> None:
     """Atomically publish ``entry`` as the log file for ``version`` via the
     commit backend (shared by _commit, WAP, and clone_table).
@@ -663,7 +529,16 @@ def _publish_entry(root: str, version: int, entry: dict) -> None:
     inCommitTimestamp): ``ts`` is wall-clock at publish, clamped to be
     strictly greater than the previous version's — so ``TIMESTAMP AS OF``
     resolution is well-defined even under clock skew between writers (the
-    log's version order IS the time order, Delta's rule)."""
+    log's version order IS the time order, Delta's rule).
+
+    The first commit refuses a root holding glob syntax: Spark's parquet
+    reader globs every path it is given, so such a table could be
+    written but never read back."""
+    if version == 0 and any(c in _GLOB_CHARS for c in root):
+        raise ValueError(
+            f"txlog root {root!r} contains one of the glob characters "
+            f"{_GLOB_CHARS}, which Spark's reader expands; choose another path"
+        )
     if "ts" not in entry:
         ts = time.time()
         prev = os.path.join(_log_path(root), _entry_name(version - 1))
@@ -676,7 +551,7 @@ def _publish_entry(root: str, version: int, entry: dict) -> None:
             pass
         entry["ts"] = ts
     final = os.path.join(_log_path(root), _entry_name(version))
-    _commit_backend.publish(final, json.dumps(entry).encode())
+    publish(final, json.dumps(entry).encode(), TxLogConflict)
 
 
 def _fields(simple: str) -> list[str]:
@@ -981,13 +856,19 @@ def drop_column(root: str, col: str) -> int:
     return version
 
 
-def _sidecar_stats(rel_dir: str, parts: list, partition_dtypes: dict | None = None) -> dict:
+def _sidecar_stats(
+    rel_dir: str, parts: list, phys=None, partition_by: list[str] | None = None
+) -> dict:
     """The commit's stats sidecar: per part file, the footer ranges of
     its int/float/str columns (``_files.footer``'s rule; other types and
     files without ranges are never pruned) plus each hive partition value
-    as an exact ``[v, v]`` range typed per the table schema, so
-    read_table_pruned, the point-lookup planner and skipping_report prune
-    partitions too.  A null partition value gets no range."""
+    as an exact ``[v, v]`` range typed per ``phys``, the physical frame
+    the parts were written from, so read_table_pruned, the point-lookup
+    planner and skipping_report prune partitions too.  A null partition
+    value gets no range."""
+    partition_dtypes = {
+        c: phys.schema[c].dataType.simpleString() for c in partition_by or ()
+    }
     out: dict = {}
     for part in parts:
         cols = {
@@ -996,7 +877,7 @@ def _sidecar_stats(rel_dir: str, parts: list, partition_dtypes: dict | None = No
             if isinstance(mn, (int, float, str)) and not isinstance(mn, bool)
         }
         for col, raw in part.values.items():
-            t = (partition_dtypes or {}).get(col)
+            t = partition_dtypes.get(col)
             if t is None or raw is None:
                 continue
             try:
@@ -1136,9 +1017,8 @@ def write_audit_publish(
     # column mapping: staged files store PHYSICAL names like any commit;
     # table_parts is already physical (entries record it that way)
     mapping = snap.mapping
-    parts = _files.write(
-        _select_physical(df, mapping), os.path.join(root, rel), table_parts
-    )
+    phys = _select_physical(df, mapping)
+    parts = _files.write(phys, os.path.join(root, rel), table_parts)
 
     # AUDIT the staged files themselves (not the caller's plan): what was
     # actually written is what gets validated — read physical, rename back
@@ -1155,21 +1035,12 @@ def write_audit_publish(
             f"WAP audit failed, staged files discarded: {failed}"
         )
 
-    inv = {v: k for k, v in mapping.items()}
-    part_dtypes = (
-        {
-            c: df.schema[inv.get(c, c)].dataType.simpleString()
-            for c in table_parts
-        }
-        if table_parts
-        else None
-    )
     entry = {
         "op": "append",
         "files": [rel],
         "schema": df.schema.simpleString(),
         "schema_json": df.schema.json(),
-        "stats": _sidecar_stats(rel, parts, part_dtypes),
+        "stats": _sidecar_stats(rel, parts, phys, table_parts),
     }
     blooms = _build_part_blooms(root, rel, spark=spark)
     if blooms:
@@ -1520,9 +1391,9 @@ def update_where_mor(
     _enforce_constraints(root, post)
     rel_dv = _write_dv(root, matched)
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    parts = _files.write(
-        _select_physical(post, snap.mapping), os.path.join(root, rel_data)
-    )
+    # the table's hive layout (its PHYSICAL partition columns)
+    phys = _select_physical(post, snap.mapping)
+    parts = _files.write(phys, os.path.join(root, rel_data), snap.partition_by)
     ch_dir = _changes_path(root, current + 1)
     pre_ch = matched.drop(*_ROW_ID).withColumn("_change_type", F.lit("delete"))
     post_ch = post.withColumn("_change_type", F.lit("insert"))
@@ -1534,7 +1405,7 @@ def update_where_mor(
         "dv_files": [rel_dv],
         "schema": post.schema.simpleString(),
         "schema_json": post.schema.json(),
-        "stats": _sidecar_stats(rel_data, parts),
+        "stats": _sidecar_stats(rel_data, parts, phys, snap.partition_by),
     }
     try:
         _publish_entry(root, current + 1, entry)
@@ -1695,9 +1566,9 @@ def merge_into_mor(
     _enforce_constraints(root, new_rows)
     rel_dv = _write_dv(root, plan.touched())
     rel_data = os.path.join(_DATA_DIR, uuid.uuid4().hex + ".parquet")
-    parts = _files.write(
-        _select_physical(new_rows, snap.mapping), os.path.join(root, rel_data)
-    )
+    # the table's hive layout (its PHYSICAL partition columns)
+    phys = _select_physical(new_rows, snap.mapping)
+    parts = _files.write(phys, os.path.join(root, rel_data), snap.partition_by)
     ch_dir = _changes_path(root, current + 1)
     # a no-op assignment is physically vectored + re-appended, but the
     # capture records LOGICAL changes, like merge_into's
@@ -1709,7 +1580,7 @@ def merge_into_mor(
         "dv_files": [rel_dv],
         "schema": new_rows.schema.simpleString(),
         "schema_json": new_rows.schema.json(),
-        "stats": _sidecar_stats(rel_data, parts),
+        "stats": _sidecar_stats(rel_data, parts, phys, snap.partition_by),
     }
     try:
         _publish_entry(root, current + 1, entry)
@@ -1789,10 +1660,7 @@ def set_bloom_columns(
         raise ValueError(f"k_hashes must be >= 1, got {k_hashes}")
     cfg = {"cols": list(cols), "m": int(m_bits), "k": int(k_hashes)}
     os.makedirs(root, exist_ok=True)
-    tmp = _bloom_config_path(root) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, _bloom_config_path(root))
+    replace(_bloom_config_path(root), json.dumps(cfg))
 
 
 def _bloom_positions(value, k: int, m: int) -> list[int]:
@@ -2078,10 +1946,7 @@ def set_generated_column(root: str, name: str, expr: str) -> None:
     gen = _read_generated(root)
     gen[name] = expr
     os.makedirs(root, exist_ok=True)
-    tmp = _generated_path(root) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(gen, f)
-    os.replace(tmp, _generated_path(root))
+    replace(_generated_path(root), json.dumps(gen))
 
 
 def _apply_generated(root: str, df: DataFrame) -> DataFrame:
@@ -2132,10 +1997,7 @@ def set_identity_column(root: str, name: str, start: int = 1, step: int = 1) -> 
         raise ValueError("identity step must be non-zero")
     cfg = {"col": name, "start": int(start), "step": int(step)}
     os.makedirs(root, exist_ok=True)
-    tmp = _identity_path(root) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, _identity_path(root))
+    replace(_identity_path(root), json.dumps(cfg))
 
 
 def _identity_hwm(entries: list[dict], cfg: dict) -> int:
@@ -2232,21 +2094,15 @@ def set_check_constraint(root: str, name: str, expr: str) -> None:
     convention; pair with a NOT NULL check when that matters)."""
     cons = _read_constraints(root)
     cons[name] = expr
-    tmp = _constraints_path(root) + f".tmp.{uuid.uuid4().hex}"
     os.makedirs(root, exist_ok=True)
-    with open(tmp, "w") as f:
-        json.dump(cons, f)
-    os.replace(tmp, _constraints_path(root))
+    replace(_constraints_path(root), json.dumps(cons))
 
 
 def drop_check_constraint(root: str, name: str) -> None:
     """Remove a CHECK constraint; unknown names raise KeyError."""
     cons = _read_constraints(root)
     del cons[name]
-    tmp = _constraints_path(root) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(cons, f)
-    os.replace(tmp, _constraints_path(root))
+    replace(_constraints_path(root), json.dumps(cons))
 
 
 def _enforce_constraints(root: str, df: DataFrame) -> None:
@@ -2690,11 +2546,9 @@ def _publish_batch(root: str, phys: DataFrame, entry: dict, parts: list) -> None
     """Publish a sink batch's written ``parts`` (``phys`` is the batch
     under physical column names) with the same skipping sidecar as batch
     commits, through the claim protocol ``_commit`` uses."""
-    part_dtypes = {
-        c: phys.schema[c].dataType.simpleString()
-        for c in entry.get("partition_by", [])
-    }
-    entry["stats"] = _sidecar_stats(entry["files"][0], parts, part_dtypes)
+    entry["stats"] = _sidecar_stats(
+        entry["files"][0], parts, phys, entry.get("partition_by")
+    )
     _publish_entry(root, entry["version"], entry)
 
 
@@ -2800,12 +2654,9 @@ def checkpoint_log(root: str) -> int:
     snap = _Snapshot(root).require()
     version = snap.version
     path = os.path.join(_log_path(root), f"{version:08d}{_CHECKPOINT_SUFFIX}")
-    tmp = path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "files": snap.files, "schema": snap.schema}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    replace(path, json.dumps(
+        {"version": version, "files": snap.files, "schema": snap.schema}
+    ))
     return version
 
 
@@ -2895,11 +2746,7 @@ def vacuum(
             continue
         shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
         deleted += 1
-    marker = os.path.join(root, _FLOOR_MARKER)
-    tmp = marker + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"floor": floor}, f)
-    os.replace(tmp, marker)
+    replace(os.path.join(root, _FLOOR_MARKER), json.dumps({"floor": floor}))
     return {"floor": floor, "deleted": deleted}
 
 

@@ -51,6 +51,7 @@ import time as _time
 from pyspark.sql import types as T
 
 from kafka_connect_expand_json_transform_spark.sources import _files
+from kafka_connect_expand_json_transform_spark.sources._commit import publish
 from kafka_connect_expand_json_transform_spark.sources import txlog as TX
 
 
@@ -211,21 +212,12 @@ def export_delta(root: str) -> int:
     version = 0 if prev_version is None else prev_version + 1
     log_dir = os.path.join(root, "_delta_log")
     os.makedirs(log_dir, exist_ok=True)
-    final = os.path.join(log_dir, f"{version:020d}.json")
-    # O_CREAT|O_EXCL claims the version atomically (the exists+replace
-    # dance is a TOCTOU race: two concurrent exports can both pass the
-    # check and one silently overwrites the other's commit)
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        raise TX.TxLogConflict(
-            f"concurrent Delta export at version {version}"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    # create-once: of two concurrent exports of one version, one wins
+    publish(
+        os.path.join(log_dir, f"{version:020d}.json"),
+        "".join(json.dumps(a) + "\n" for a in actions).encode(),
+        TX.TxLogConflict(f"concurrent Delta export at version {version}"),
+    )
     return version
 
 
@@ -355,7 +347,7 @@ def export_iceberg(root: str) -> int:
 
     abs_root = os.path.abspath(root)
     try:
-        prev_meta = IR._read_metadata(root)
+        head, prev_meta = IR._metadata_head(root)
         prev_data, prev_del_files = IR._snapshot_files(root, prev_meta, None)
         prev_files = {os.path.relpath(f, root) for f in prev_data}
         prev_dels: set[tuple[str, int]] = set()
@@ -366,12 +358,7 @@ def export_iceberg(root: str) -> int:
                 fp = re.sub(r"^[a-z]+:/+", "/", fp)
                 prev_dels.add((os.path.relpath(fp, abs_root), int(p)))
         prev_snaps = prev_meta.get("snapshots", [])
-        meta_version = 1 + max(
-            int(m.group(1))
-            for n in os.listdir(meta_dir)
-            for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-            if m
-        )
+        meta_version = head + 1
     except FileNotFoundError:
         prev_files, prev_snaps, meta_version = set(), [], 1
         prev_dels = set()
@@ -542,21 +529,13 @@ def export_iceberg(root: str) -> int:
         "snapshot-log": [],
         "metadata-log": [],
     }
-    final = os.path.join(meta_dir, f"v{meta_version}.metadata.json")
-    # atomic O_CREAT|O_EXCL claim — same race-free contract as the Delta
-    # export above (and as Iceberg's own rename-if-absent commit)
-    try:
-        fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        raise TX.TxLogConflict(
-            f"concurrent Iceberg export at v{meta_version}"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(meta_version))
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_writer import (
+        _publish_metadata,
+    )
+
+    _publish_metadata(root, meta_version, meta, conflict=TX.TxLogConflict(
+        f"concurrent Iceberg export at v{meta_version}"
+    ))
     return snap_id
 
 
@@ -583,7 +562,7 @@ def expire_iceberg_snapshots(
         iceberg_reader as IR,
     )
 
-    meta = IR._read_metadata(root)
+    head, meta = IR._metadata_head(root)
     snaps = sorted(meta.get("snapshots", []),
                    key=lambda s: s.get("sequence-number",
                                        s.get("timestamp-ms", 0)))
@@ -642,20 +621,11 @@ def expire_iceberg_snapshots(
 
     new_meta = dict(meta)
     new_meta["snapshots"] = kept
-    versions = sorted(
-        int(m.group(1))
-        for n in os.listdir(os.path.join(root, "metadata"))
-        for m in [re.match(r"^v(\d+)\.metadata\.json$", n)]
-        if m
+    from kafka_connect_expand_json_transform_spark.sources.iceberg_writer import (
+        _publish_metadata,
     )
-    meta_version = versions[-1] + 1
-    final = os.path.join(root, "metadata", f"v{meta_version}.metadata.json")
-    fd = os.open(final, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(root, "metadata", "version-hint.text"),
-              "w") as fh:
-        fh.write(str(meta_version))
+
+    _publish_metadata(root, head + 1, new_meta, conflict=TX.TxLogConflict(
+        f"concurrent Iceberg commit at v{head + 1}"
+    ))
     return removed

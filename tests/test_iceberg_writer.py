@@ -29,6 +29,14 @@ def test_create_append_time_travel(spark, tmp_path):
     got = sorted(r.k for r in read_iceberg(spark, root).collect())
     assert got == list(range(8))
     assert read_iceberg(spark, root, snapshot_id=1).count() == 5
+    # the version hint is written for outside clients but never read: a
+    # stale hint (a writer died before rewriting it) does not steer the
+    # next commit, and an empty one (caught mid-write) does not break reads
+    import os
+
+    hint = os.path.join(root, "metadata", "version-hint.text")
+    with open(hint, "w") as fh:
+        fh.write("1")
     # empty Spark partitions, the first among them, commit no zero-row
     # file, and the new manifest's record_counts sum to the frame's rows
     from kafka_connect_expand_json_transform_spark.sources import avro_codec
@@ -40,6 +48,8 @@ def test_create_append_time_travel(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     assert iceberg_append(sparse, root) == 3
+    open(hint, "w").close()
+    assert read_iceberg(spark, root).count() == 13
     (snap,) = [s for s in _read_metadata(root)["snapshots"] if s["snapshot-id"] == 3]
     counts = [
         e["data_file"]["record_count"]

@@ -222,7 +222,7 @@ def test_export_iceberg_and_read_back(spark, tmp_path):
 
 
 def test_export_commit_claim_is_atomic(spark, tmp_path, monkeypatch):
-    # ADVICE r7 #4: the version file is claimed with O_CREAT|O_EXCL — a
+    # ADVICE r7 #4: the version file is created once (_commit.publish) — a
     # loser whose state read raced a winner's commit gets TxLogConflict
     # and NEVER clobbers the winner (the old exists-check + os.replace
     # was a TOCTOU race where both passed the check).
@@ -252,9 +252,9 @@ def test_export_commit_claim_is_atomic(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         U.IR if hasattr(U, "IR") else __import__(
             "kafka_connect_expand_json_transform_spark.sources.iceberg_reader",
-            fromlist=["_read_metadata"],
+            fromlist=["_metadata_head"],
         ),
-        "_read_metadata",
+        "_metadata_head",
         lambda r: (_ for _ in ()).throw(FileNotFoundError(r)),
     )
     with pytest.raises(TX.TxLogConflict):
