@@ -12,9 +12,9 @@ same capability tier delta-rs offers:
   (never one read per partition);
 * ``delta_history(path)`` — the commit list (version, timestamp,
   operation) DESCRIBE HISTORY returns;
-* column mapping mode ``name`` supported (files carry physical names; the
-  reader translates physical->logical at plan time — the same trade
-  txlog's column mapping documents);
+* column mapping modes ``name`` and ``id`` supported (files carry
+  physical names or parquet field ids; the reader translates to logical
+  names at plan time — the same trade txlog's column mapping documents);
 * deletion vectors supported on the snapshot read path (Z85 descriptors +
   RoaringBitmapArray bitmaps decoded per PROTOCOL.md, applied as a
   broadcast (file, row_index) anti-join — the txlog MoR shape); other
@@ -22,16 +22,17 @@ same capability tier delta-rs offers:
   fail-closed rule (PROTOCOL.md "Reader Requirements"), never silently
   mis-read.
 
-Log replay: JSON commits after the newest eligible checkpoint are parsed
-on the planner (each commit is one transaction's actions — small by
-construction); ``*.checkpoint.parquet`` files — single-part or
-multi-part (``V.checkpoint.P.N.parquet``, all parts required, incomplete
-sets refused) — are read via pyarrow column-projected to the ``add``/
-``remove``/``metaData``/``protocol`` structs.  The materialized state is
-the snapshot FILE LIST — O(live files), the same planner bound every
-Delta reader pays (delta-rs, Delta Spark's state reconstruction); the
-data itself never touches the planner.  v2 checkpoint manifests are
-refused honestly (they only appear on tables whose writers opted in).
+Log replay: ``_Snapshot`` is the only derivation of table state — one
+listing of ``_delta_log`` and one pass over the newest eligible
+checkpoint plus the JSON commits after it (each commit is one
+transaction's actions, parsed on the planner by ``_actions``);
+``*.checkpoint.parquet`` files — single-part or multi-part
+(``V.checkpoint.P.N.parquet``, incomplete sets ignored) and v2
+manifests with sidecars — are read via pyarrow column-projected to the
+action structs.  The materialized state is the snapshot FILE LIST —
+O(live files), the same planner bound every Delta reader pays (delta-rs,
+Delta Spark's state reconstruction); the data itself never touches the
+planner.  ``_scan`` is the only reader of table data files.
 """
 
 from __future__ import annotations
@@ -200,67 +201,138 @@ def _parquet_actions(path: str, kinds: tuple[str, ...]):
                     yield {kind: action}
 
 
-def _replay(path: str, version: int | None):
-    """Replay the log to ``version`` (latest if None).  Returns
-    (file_state, metaData, protocol, actual_version)."""
-    commits, ckpts = _list_log(path)
-    latest = max([*commits, *ckpts])
-    target = latest if version is None else int(version)
-    if target > latest or (target not in commits and target not in ckpts):
-        raise ValueError(f"version {target} not in Delta log (latest {latest})")
-
-    base = max((v for v in ckpts if v <= target), default=None)
-    actions = []
-    if base is not None:
-        for part in ckpts[base]:
-            actions.extend(_checkpoint_actions(part))
-        start = base + 1
-    else:
-        start = 0
-    for v in range(start, target + 1):
-        if v not in commits:
-            if base is not None and v <= base:
-                continue
-            raise ValueError(f"Delta log is missing commit {v}")
-        with open(commits[v], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    actions.append(json.loads(line))
-
-    files: dict[str, dict] = {}
-    meta = None
-    protocol = None
-    for a in actions:
-        if "add" in a and a["add"] is not None:
-            files[a["add"]["path"]] = a["add"]
-        elif "remove" in a and a["remove"] is not None:
-            files.pop(a["remove"]["path"], None)
-        elif "metaData" in a and a["metaData"] is not None:
-            meta = a["metaData"]
-        elif "protocol" in a and a["protocol"] is not None:
-            protocol = a["protocol"]
-    if meta is None:
-        raise ValueError("Delta log has no metaData action")
-    _check_protocol(protocol, meta)
-    return files, meta, protocol, target
+def _actions(commit_path: str) -> list[dict]:
+    """The actions of one commit JSON, in log order: the only parser of
+    a Delta commit file."""
+    with open(commit_path, encoding="utf-8") as fh:
+        return [json.loads(line) for line in fh if line.strip()]
 
 
-def _check_protocol(protocol: dict | None, meta: dict) -> None:
+class _Snapshot:
+    """The Delta table at one version, derived from ONE ``_list_log``
+    listing: the only code that replays the log into table state.  State
+    is the newest checkpoint at or below the version plus the commits
+    after it (PROTOCOL.md "Checkpoints"), in one pass.  ``version``
+    defaults to the head.  The listing (``commits``, ``versions()``) is
+    read at construction; the replayed state below is derived on first use, so
+    history and a stream's head never replay, and ``_check_protocol``
+    runs once with it.  Like txlog's snapshot it is never cached across
+    calls.
+
+    * ``files`` — live add actions by table-relative path;
+    * ``meta`` / ``protocol`` — the newest metaData / protocol actions;
+    * ``schema`` — the logical StructType; ``part_cols``; ``mode`` — the
+      column-mapping mode; ``phys_of`` — logical -> physical name (the
+      identity when unmapped: partitionValues and stats are keyed by
+      it); ``field_ids`` — parquet field id -> logical name under 'id',
+      else None;
+    * ``txns`` — appId -> (version, lastUpdated), the idempotent-writer
+      watermark (highest version wins);
+    * ``tombstones`` — removed path -> deletionTimestamp ms (a later add
+      of the path clears it)."""
+
+    _STATE = frozenset({
+        "files", "meta", "protocol", "schema", "part_cols", "mode",
+        "phys_of", "field_ids", "txns", "tombstones",
+    })
+
+    def __init__(self, root: str, version: int | None = None):
+        self.root = root
+        self.commits, self.ckpts = _list_log(root)
+        latest = max([*self.commits, *self.ckpts])
+        self.version = latest if version is None else int(version)
+        if self.version > latest or (
+            self.version not in self.commits and self.version not in self.ckpts
+        ):
+            raise ValueError(
+                f"version {self.version} not in Delta log (latest {latest})"
+            )
+
+    def __getattr__(self, name: str):
+        # only reached while the replayed state is not yet derived
+        if name not in _Snapshot._STATE:
+            raise AttributeError(name)
+        self._replay()
+        return self.__dict__[name]
+
+    def versions(self, start: int, end: int | None = None):
+        """Yield ``(v, actions)`` for each commit from ``start`` to ``end``
+        (default: this version).  A commit missing from the log raises:
+        skipping it would silently drop its rows."""
+        end = self.version if end is None else int(end)
+        for v in range(int(start), end + 1):
+            if v not in self.commits:
+                raise ValueError(
+                    f"Delta commit {v} is missing from the log "
+                    "(vacuumed past a checkpoint?); restart with "
+                    "startingVersion pointing at an existing commit"
+                )
+            yield v, _actions(self.commits[v])
+
+    def _replay(self) -> None:
+        base = max((v for v in self.ckpts if v <= self.version), default=None)
+        actions = [a for part in self.ckpts.get(base, ())
+                   for a in _checkpoint_actions(part)]
+        for v in range(0 if base is None else base + 1, self.version + 1):
+            if v not in self.commits:
+                raise ValueError(f"Delta log is missing commit {v}")
+            actions.extend(_actions(self.commits[v]))
+        files: dict[str, dict] = {}
+        txns: dict[str, tuple[int, int | None]] = {}
+        tombstones: dict[str, int] = {}
+        meta = protocol = None
+        for a in actions:
+            if a.get("add"):
+                files[a["add"]["path"]] = a["add"]
+                tombstones.pop(a["add"]["path"], None)
+            elif a.get("remove"):
+                p = a["remove"]["path"]
+                files.pop(p, None)
+                ts = int(a["remove"].get("deletionTimestamp") or 0)
+                tombstones[p] = max(tombstones.get(p, 0), ts)
+            elif a.get("metaData"):
+                meta = a["metaData"]
+            elif a.get("protocol"):
+                protocol = a["protocol"]
+            elif a.get("txn"):
+                t = a["txn"]
+                tv, prev = int(t["version"]), txns.get(t["appId"])
+                if prev is None or tv >= prev[0]:
+                    txns[t["appId"]] = (tv, t.get("lastUpdated"))
+        if meta is None:
+            raise ValueError("Delta log has no metaData action")
+        mode = (meta.get("configuration") or {}).get(
+            "delta.columnMapping.mode", "none"
+        )
+        _check_protocol(protocol, mode)
+        schema = _schema(meta)
+        self.__dict__.update(
+            files=files, meta=meta, protocol=protocol, schema=schema,
+            part_cols=list(meta.get("partitionColumns") or []), mode=mode,
+            phys_of={f.name: _physical_name(f) if mode != "none" else f.name
+                     for f in schema.fields},
+            field_ids={
+                int(f.metadata["delta.columnMapping.id"]): f.name
+                for f in schema.fields
+                if "delta.columnMapping.id" in f.metadata
+            } if mode == "id" else None,
+            txns=txns, tombstones=tombstones,
+        )
+
+
+def _check_protocol(protocol: dict | None, mode: str) -> None:
     """PROTOCOL.md reader requirements: fail closed on anything this
     implementation cannot honor."""
-    if protocol is None:
-        return
-    v = protocol.get("minReaderVersion", 1)
-    if v >= 3:
-        feats = set(protocol.get("readerFeatures") or [])
-        unsupported = feats - _SUPPORTED_READER_FEATURES
-        if unsupported:
-            raise DeltaProtocolUnsupported(
-                f"table requires reader features {sorted(unsupported)}; "
-                f"this reader supports {sorted(_SUPPORTED_READER_FEATURES)}"
-            )
-    mode = (meta.get("configuration") or {}).get("delta.columnMapping.mode", "none")
+    if protocol is not None:
+        v = protocol.get("minReaderVersion", 1)
+        if v >= 3:
+            feats = set(protocol.get("readerFeatures") or [])
+            unsupported = feats - _SUPPORTED_READER_FEATURES
+            if unsupported:
+                raise DeltaProtocolUnsupported(
+                    f"table requires reader features {sorted(unsupported)}; "
+                    f"this reader supports {sorted(_SUPPORTED_READER_FEATURES)}"
+                )
     if mode not in ("none", "name", "id"):
         raise DeltaProtocolUnsupported(
             f"columnMapping mode {mode!r} not supported "
@@ -596,117 +668,29 @@ def read_delta_changes(
     actions is refused — the pre/post images are unrecoverable, the same
     error Delta raises when ``delta.enableChangeDataFeed`` was off.
     Output schema: table columns + ``_change_type`` + ``_commit_version``.
-    Partitioned tables re-inject partition columns from the actions'
-    ``partitionValues`` (broadcast file->values map, the snapshot read's
-    shape); column-mapped ('name') tables read through the physical ->
-    logical rename at plan time, the snapshot read's shape (r9).  Scale:
-    one parquet scan per contributing version over only the change
-    files — never a snapshot diff."""
-    commits, _ = _list_log(path)
-    latest = max(commits) if commits else -1
-    end = latest if ending_version is None else int(ending_version)
-    _files, meta, _proto, _v = _replay(path, end)  # protocol/meta guards
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    part_cols = list(meta.get("partitionColumns") or [])
-    logical = _schema(meta)
-    by_logical = {f.name: f for f in logical.fields}
-    data_fields = [f for f in logical.fields if f.name not in part_cols]
-    # partitionValues are keyed by PHYSICAL name in both mapping modes
-    phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
-               for f in logical.fields}
-    if mode == "id":
-        # resolve parquet columns by FIELD ID (the snapshot read's r9
-        # shape): logical names + parquet.field.id metadata; the extra
-        # _change_type column has no id and matches by name
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
-    def _with_parts(df, entries, extra_fields):
-        """Re-inject partition columns from the actions' partitionValues
-        via a broadcast file->values map — the snapshot read's shape.
-        Expects ``__file`` already on ``df`` (captured pre-rename, while
-        ``_metadata`` was still resolvable)."""
-        if not part_cols:
-            return df
-        rows = [
-            (os.path.abspath(os.path.join(path, rel)),
-             # column-mapped tables key partitionValues by PHYSICAL name
-             *[(pv or {}).get(phys_of[c]) for c in part_cols])
-            for rel, pv in entries
-        ]
-        map_schema = T.StructType(
-            [T.StructField("__file", T.StringType(), False)]
-            + [T.StructField(f"__pv_{c}", T.StringType(), True)
-               for c in part_cols]
-        )
-        pv_df = spark.createDataFrame(rows, map_schema)
-        return (
-            df.join(F.broadcast(pv_df), "__file")
-            .select(
-                *[f.name for f in data_fields],
-                *[F.col(f"__pv_{c}").cast(by_logical[c].dataType).alias(c)
-                  for c in part_cols],
-                *extra_fields,
-            )
-        )
-
-    def _scan(paths_, keep_change_type):
-        if mode == "id":
-            fields = list(_field_id_type(T.StructType(
-                [T.StructField(f.name, f.dataType, f.nullable, f.metadata)
-                 for f in data_fields]
-            )).fields)
-        else:
-            fields = [T.StructField(phys_of[f.name], f.dataType, True)
-                      for f in data_fields]
-        if keep_change_type:
-            fields.append(T.StructField("_change_type", T.StringType(), True))
-        df = spark.read.schema(T.StructType(fields)).parquet(*paths_)
-        if part_cols:
-            df = df.withColumn(
-                "__file",
-                plain_file_path(),
-            )
-        # physical -> logical, plan-time rename ('name' mapping; 'id'
-        # already reads under logical names via field-id resolution)
-        df = df.select(
-            *(["__file"] if part_cols else []),
-            *[F.col(phys_of[f.name] if mode == "name" else f.name)
-              .alias(f.name) for f in data_fields],
-            *(["_change_type"] if keep_change_type else []),
-        )
-        return df
-
+    Each contributing version is one ``_scan`` over only its change (or
+    add) files, so partitioned and column-mapped tables read exactly as
+    the snapshot read does — never a snapshot diff.  A commit in the
+    range that is missing from the log (cleaned up past a checkpoint)
+    raises, as ``deltastream`` does: skipping it would drop its rows."""
+    snap = _Snapshot(path, ending_version)  # protocol/meta guards
+    change_type = T.StructField("_change_type", T.StringType(), True)
     frames = []
-    for v in range(int(starting_version), end + 1):
-        if v not in commits:
-            continue
-        adds, cdcs, data_removed = [], [], False
-        with open(commits[v], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                if a.get("cdc"):
-                    cdcs.append((a["cdc"]["path"],
-                                 a["cdc"].get("partitionValues")))
-                elif a.get("add") and a["add"].get("dataChange", True):
-                    if a["add"].get("deletionVector"):
-                        # a DV add soft-deletes rows: without cdc files its
-                        # pre/post images are as unrecoverable as a rewrite
-                        data_removed = True
-                    adds.append((a["add"]["path"],
-                                 a["add"].get("partitionValues")))
-                elif a.get("remove") and a["remove"].get("dataChange", True):
+    for v, actions in snap.versions(starting_version):
+        adds, cdcs, data_removed = {}, {}, False
+        for a in actions:
+            if a.get("cdc"):
+                cdcs[a["cdc"]["path"]] = a["cdc"]
+            elif a.get("add") and a["add"].get("dataChange", True):
+                if a["add"].get("deletionVector"):
+                    # a DV add soft-deletes rows: without cdc files its
+                    # pre/post images are as unrecoverable as a rewrite
                     data_removed = True
+                adds[a["add"]["path"]] = a["add"]
+            elif a.get("remove") and a["remove"].get("dataChange", True):
+                data_removed = True
         if cdcs:
-            df = _scan(
-                [os.path.join(path, c) for c, _pv in cdcs],
-                keep_change_type=True,
-            )
-            df = _with_parts(df, cdcs, ["_change_type"])
+            df = _scan(spark, snap, cdcs, extra=(change_type,))
         elif data_removed:
             raise DeltaProtocolUnsupported(
                 f"version {v} rewrites data without cdc actions; its "
@@ -714,21 +698,15 @@ def read_delta_changes(
                 "on the writer)"
             )
         elif adds:
-            df = _scan(
-                [os.path.join(path, a) for a, _pv in adds],
-                keep_change_type=False,
-            ).select("*", F.lit("insert").alias("_change_type"))
-            df = _with_parts(df, adds, ["_change_type"])
+            df = _scan(spark, snap, adds).select(
+                "*", F.lit("insert").alias("_change_type")
+            )
         else:
             continue
-        frames.append(
-            df.select(*[f.name for f in logical.fields], "_change_type")
-            .select("*", F.lit(v).alias("_commit_version"))
-        )
+        frames.append(df.select("*", F.lit(v).alias("_commit_version")))
     if not frames:
         return spark.createDataFrame([], T.StructType(
-            [*logical.fields,
-             T.StructField("_change_type", T.StringType(), True),
+            [*snap.schema.fields, change_type,
              T.StructField("_commit_version", T.IntegerType(), False)]
         ))
     out = frames[0]
@@ -779,56 +757,36 @@ class _DeltaStream(_tablestream.TableStream):
             self.starting_version = min(later)
         else:
             self.starting_version = int(options.get("startingVersion", 0))
-        _files, meta, _proto, _v = _replay(self.root, None)
-        mode = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        logical = _schema(meta)
-        self.mapping = self.field_ids = None
-        if mode != "none":
-            self.mapping = {f.name: _physical_name(f) for f in logical.fields}
-        if mode == "id":
-            self.field_ids = {
-                int(f.metadata["delta.columnMapping.id"]): f.name
-                for f in logical.fields
-            }
+        snap = _Snapshot(self.root)
+        self.mapping = snap.phys_of if snap.mode != "none" else None
+        self.field_ids = snap.field_ids
 
     @classmethod
     def read_schema(cls, options):
-        _files, meta, _proto, _v = _replay(options["path"], None)
-        return _schema(meta)  # _replay gates unsupported modes
+        return _Snapshot(options["path"]).schema
 
     def initial_offset(self) -> dict:
         return {"version": self.starting_version - 1}
 
     def latest_offset(self) -> dict:
-        commits, _ = _list_log(self.root)
-        return {"version": max(commits) if commits else -1}
+        return {"version": max(_Snapshot(self.root).commits, default=-1)}
 
     def changes(self, start: dict, end: dict) -> list:
         types_of = {f.name: f.dataType for f in self.schema.fields}
         log_of = {p: l for l, p in (self.mapping or {}).items()}
-        commits, _ = _list_log(self.root)
+        snap = _Snapshot(self.root)
         tasks = []
-        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            if v not in commits:
-                # fail-closed: a gap means the commit was vacuumed past
-                # a checkpoint — silently skipping it would LOSE its
-                # rows from the stream
-                raise ValueError(
-                    f"Delta commit {v} is missing from the log "
-                    "(vacuumed past a checkpoint?); restart with "
-                    "startingVersion pointing at an existing commit"
-                )
+        # fail-closed: a gap means the commit was vacuumed past a
+        # checkpoint — silently skipping it would LOSE its rows
+        for v, actions in snap.versions(int(start["version"]) + 1,
+                                        end["version"]):
             adds, has_remove, has_dv = [], False, False
-            with open(commits[v], encoding="utf-8") as fh:
-                for line in fh:
-                    a = json.loads(line) if line.strip() else {}
-                    if a.get("add") and a["add"].get("dataChange", True):
-                        has_dv = has_dv or bool(a["add"].get("deletionVector"))
-                        adds.append(a["add"])
-                    elif a.get("remove") and a["remove"].get("dataChange", True):
-                        has_remove = True
+            for a in actions:
+                if a.get("add") and a["add"].get("dataChange", True):
+                    has_dv = has_dv or bool(a["add"].get("deletionVector"))
+                    adds.append(a["add"])
+                elif a.get("remove") and a["remove"].get("dataChange", True):
+                    has_remove = True
             if (has_remove or has_dv) and self.skip_change_commits:
                 continue
             if has_dv:
@@ -877,22 +835,13 @@ def register_delta_stream_source(spark: SparkSession) -> None:
 def delta_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY: one dict per commit (version, timestamp,
     operation) from the commitInfo actions, newest first."""
-    commits, _ = _list_log(path)
+    snap = _Snapshot(path)
     out = []
-    for v in sorted(commits, reverse=True):
-        info = {"version": v, "timestamp": None, "operation": None}
-        with open(commits[v], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                ci = a.get("commitInfo")
-                if ci:
-                    info["timestamp"] = ci.get("timestamp")
-                    info["operation"] = ci.get("operation")
-                    break
-        out.append(info)
+    for v in sorted(snap.commits, reverse=True):
+        ci = next((a["commitInfo"] for a in _actions(snap.commits[v])
+                   if a.get("commitInfo")), {})
+        out.append({"version": v, "timestamp": ci.get("timestamp"),
+                    "operation": ci.get("operation")})
     return out
 
 
@@ -935,68 +884,71 @@ def _typed_partition_value(raw, dtype: T.DataType | None):
     return raw
 
 
-def _stats_keep(add: dict, where: list[tuple], part_cols: list[str],
-                phys_of: dict, types_of: dict | None = None) -> bool:
-    """File-skipping on the add action's stats JSON (minValues/maxValues)
-    and partitionValues — keep when the predicate MAY match (missing or
-    type-mismatched stats keep the file: pruning must stay sound)."""
-    stats = add.get("stats")
-    mins = maxs = {}
-    if stats:
-        try:
-            s = json.loads(stats) if isinstance(stats, str) else stats
-            mins, maxs = s.get("minValues") or {}, s.get("maxValues") or {}
-        except (ValueError, TypeError):
-            mins = maxs = {}
-    pv = add.get("partitionValues") or {}
-    types_of = types_of or {}
-    for col, op, val in where:
-        key = phys_of.get(col, col)
-        if col in part_cols:
-            if key not in pv:
-                continue  # partition value unknown: keep, sound
-            got = pv[key]
-            if got is None:
-                # explicit null partition value: no comparison hint
-                # (=, <, <=, >, >=) is ever true of SQL NULL — prune
-                return False
-            dtype = types_of.get(col)
+def _prune(snap: _Snapshot, files: dict, where: list[tuple]) -> dict:
+    """The adds of ``files`` that ``where=[(col, op, val)]`` MAY match:
+    file-skipping on each add's stats JSON (minValues/maxValues) and
+    partitionValues.  Missing or type-mismatched stats keep the file:
+    pruning must stay sound."""
+    types_of = {f.name: f.dataType for f in snap.schema.fields}
+
+    def keep(add: dict) -> bool:
+        stats = add.get("stats")
+        mins = maxs = {}
+        if stats:
             try:
-                lo = hi = _typed_partition_value(got, dtype)
-                if isinstance(val, str) and not isinstance(dtype, T.StringType):
-                    val = _typed_partition_value(val, dtype)
-            except (ValueError, TypeError, ArithmeticError):
-                continue  # unparseable partition value: keep, sound
-        else:
-            lo, hi = mins.get(key), maxs.get(key)
-        try:
-            if op == "=" and lo is not None and hi is not None and not (lo <= val <= hi):
-                return False
-            if op in ("<", "<=") and lo is not None and not (
-                lo < val if op == "<" else lo <= val
-            ):
-                return False
-            if op in (">", ">=") and hi is not None and not (
-                hi > val if op == ">" else hi >= val
-            ):
-                return False
-        except TypeError:
-            continue  # incomparable stat type: keep, sound
-    return True
+                s = json.loads(stats) if isinstance(stats, str) else stats
+                mins, maxs = s.get("minValues") or {}, s.get("maxValues") or {}
+            except (ValueError, TypeError):
+                mins = maxs = {}
+        pv = add.get("partitionValues") or {}
+        for col, op, val in where:
+            key = snap.phys_of.get(col, col)
+            if col in snap.part_cols:
+                if key not in pv:
+                    continue  # partition value unknown: keep, sound
+                got = pv[key]
+                if got is None:
+                    # explicit null partition value: no comparison hint
+                    # (=, <, <=, >, >=) is ever true of SQL NULL — prune
+                    return False
+                dtype = types_of.get(col)
+                try:
+                    lo = hi = _typed_partition_value(got, dtype)
+                    if isinstance(val, str) and not isinstance(dtype, T.StringType):
+                        val = _typed_partition_value(val, dtype)
+                except (ValueError, TypeError, ArithmeticError):
+                    continue  # unparseable partition value: keep, sound
+            else:
+                lo, hi = mins.get(key), maxs.get(key)
+            try:
+                if op == "=" and lo is not None and hi is not None and not (lo <= val <= hi):
+                    return False
+                if op in ("<", "<=") and lo is not None and not (
+                    lo < val if op == "<" else lo <= val
+                ):
+                    return False
+                if op in (">", ">=") and hi is not None and not (
+                    hi > val if op == ">" else hi >= val
+                ):
+                    return False
+            except TypeError:
+                continue  # incomparable stat type: keep, sound
+        return True
+
+    return {rel: add for rel, add in files.items() if keep(add)}
 
 
 def dv_frame(spark: SparkSession, path: str, files: dict) -> DataFrame | None:
     """Deletion-vector rows as ONE ``(__dv_file, __dv_pos)`` frame across
-    the adds (or None if no add carries a DV) — the shared helper for the
-    snapshot read AND the CoW DML scan, so both exclude DV-deleted rows
-    through the same broadcast anti-join.  Positions decode
+    the adds (or None if no add carries a DV), which ``_scan`` excludes
+    through a broadcast anti-join.  Positions decode
     EXECUTOR-side (r10, ADVICE-r9 #6): the driver ships only the raw
     roaring bitmap bytes (the compact form the log already stores —
     O(bitmap bytes), not O(cardinality) Python tuples) and a
     mapInPandas stage expands them to (file, pos) rows in parallel,
     validating each descriptor's cardinality where the decode runs.
-    The expanded frame is broadcast by the consumers, the
-    deleted-not-yet-compacted bound every Delta MoR reader pays."""
+    ``_scan`` broadcasts the expanded frame, the deleted-not-yet-compacted
+    bound every Delta MoR reader pays."""
     descs: list[tuple[str, bytes, int | None]] = []
     for rel, add in files.items():
         dv = add.get("deletionVector")
@@ -1039,6 +991,86 @@ def dv_frame(spark: SparkSession, path: str, files: dict) -> DataFrame | None:
     )
 
 
+def _scan(
+    spark: SparkSession,
+    snap: _Snapshot,
+    files: dict,
+    file_col: str | None = None,
+    extra: tuple = (),
+) -> DataFrame:
+    """The one reader of Delta table data files: the rows of ``files``
+    (add or cdc actions by table-relative path) under the snapshot's
+    LOGICAL columns in table order, then ``extra`` (unmapped parquet
+    columns such as ``_change_type``), then ``file_col`` (the plain
+    absolute file path) when named.
+
+    One parquet scan pinned to the log schema.  Column mapping 'name'
+    reads the physical names and renames them at plan time; 'id'
+    resolves columns by parquet field id under the logical names.
+    Deletion-vector rows leave through a broadcast ``(file, row_index)``
+    anti-join (``dv_frame``), and partition columns come back from the
+    actions' ``partitionValues`` through a broadcast file -> values map,
+    never one read per partition.  No files gives the empty frame,
+    nullable like a parquet read."""
+    data_fields = [f for f in snap.schema.fields if f.name not in snap.part_cols]
+    if not files:
+        return spark.createDataFrame([], T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in snap.schema.fields]
+            + list(extra)
+            + ([T.StructField(file_col, T.StringType(), True)] if file_col else [])
+        ))
+    if snap.mode == "id":
+        # 'id' resolves parquet columns by FIELD ID, not name: the read
+        # schema keeps the logical names and rides the ids in
+        # `parquet.field.id` metadata, so a file missing ids fails loudly
+        # instead of resolving by the physical name the spec says to
+        # ignore; unmapped extras have no id and match by name.  Spark
+        # reads this session conf when the plan EXECUTES, not here, so it
+        # cannot be scoped to this call: it stays set for the session.
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        fields = list(_field_id_type(T.StructType(data_fields)).fields)
+    else:
+        fields = [T.StructField(snap.phys_of[f.name], f.dataType, True)
+                  for f in data_fields]
+    df = spark.read.schema(T.StructType([*fields, *extra])).parquet(
+        *[os.path.join(snap.root, rel) for rel in sorted(files)]
+    )
+    dv_df = dv_frame(spark, snap.root, files)
+    fcol = file_col or "__file"
+    if file_col or snap.part_cols or dv_df is not None:
+        # the join keys are plain absolute paths
+        df = df.withColumn(fcol, plain_file_path())
+    if dv_df is not None:
+        df = df.withColumn("__pos", F.col("_metadata.row_index")).join(
+            F.broadcast(dv_df),
+            (F.col(fcol) == F.col("__dv_file"))
+            & (F.col("__pos") == F.col("__dv_pos")),
+            "left_anti",
+        )
+    if snap.part_cols:
+        pv_df = spark.createDataFrame(
+            [(os.path.abspath(os.path.join(snap.root, rel)),
+              *[(a.get("partitionValues") or {}).get(snap.phys_of[c])
+                for c in snap.part_cols])
+             for rel, a in files.items()],
+            T.StructType(
+                [T.StructField(fcol, T.StringType(), False)]
+                + [T.StructField(f"__pv_{c}", T.StringType(), True)
+                   for c in snap.part_cols]
+            ),
+        )
+        df = df.join(F.broadcast(pv_df), fcol)
+    return df.select(
+        *[F.col(f"__pv_{f.name}").cast(f.dataType).alias(f.name)
+          if f.name in snap.part_cols
+          else F.col(snap.phys_of[f.name] if snap.mode == "name" else f.name)
+          .alias(f.name)
+          for f in snap.schema.fields],
+        *[e.name for e in extra],
+        *([file_col] if file_col else []),
+    )
+
+
 def read_delta(
     spark: SparkSession,
     path: str,
@@ -1047,115 +1079,17 @@ def read_delta(
     where: list[tuple] | None = None,
 ) -> DataFrame:
     """Snapshot (or VERSION AS OF / TIMESTAMP AS OF) read of a Delta table
-    without the delta-spark jar.  One parquet scan over the live files;
-    partitioned tables re-inject partition columns via a broadcast
-    file->values map joined on ``_metadata.file_path`` (partition pruning
-    then happens in Catalyst exactly as for any dimension filter).
-    ``where=[(col, op, val)]`` additionally skips files whose add-action
-    stats (minValues/maxValues) or partitionValues prove no match — the
-    log-level data skipping Delta clients perform; the returned frame is
-    NOT filtered (callers apply their own predicate, which Catalyst pushes
-    into the pruned scan)."""
+    without the delta-spark jar: ``_scan`` over the snapshot's live files
+    (partition pruning then happens in Catalyst exactly as for any
+    dimension filter).  ``where=[(col, op, val)]`` additionally skips
+    files whose add-action stats (minValues/maxValues) or partitionValues
+    prove no match — the log-level data skipping Delta clients perform;
+    the returned frame is NOT filtered (callers apply their own
+    predicate, which Catalyst pushes into the pruned scan)."""
     if version is not None and timestamp_ms is not None:
         raise ValueError("pass version= or timestamp_ms=, not both")
     if timestamp_ms is not None:
         version = _version_at_timestamp(path, timestamp_ms)
-    files, meta, _, _ = _replay(path, version)
-    logical = _schema(meta)
-    part_cols = list(meta.get("partitionColumns") or [])
-    mode = (meta.get("configuration") or {}).get("delta.columnMapping.mode", "none")
-
-    by_logical = {f.name: f for f in logical.fields}
-    # partitionValues and stats are keyed by PHYSICAL name in BOTH mapping
-    # modes (PROTOCOL.md "Column Mapping": writers use physical names in
-    # all file-level metadata)
-    phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
-               for f in logical.fields}
-
-    if where:
-        types_of = {f.name: f.dataType for f in logical.fields}
-        files = {
-            rel: add
-            for rel, add in files.items()
-            if _stats_keep(add, where, part_cols, phys_of, types_of)
-        }
-
-    data_fields = [f for f in logical.fields if f.name not in part_cols]
-    if mode == "id":
-        # 'id' mapping resolves parquet columns by FIELD ID, not name:
-        # the read schema keeps the LOGICAL names and rides the ids in
-        # `parquet.field.id` metadata, which Spark's native parquet
-        # field-id resolution (spark.sql.parquet.fieldId.read.enabled)
-        # matches against the file footers — no rename needed, and a
-        # file missing ids fails loudly instead of resolving by the
-        # physical name the spec says to ignore
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        read_schema = _field_id_type(T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable, f.metadata)
-             for f in data_fields]
-        ))
-    else:
-        read_schema = T.StructType(
-            [T.StructField(phys_of[f.name], f.dataType, True)
-             for f in data_fields]
-        )
-    if not files:
-        return spark.createDataFrame([], T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in logical.fields]
-        ))
-
-    dv_df = dv_frame(spark, path, files)
-    dv_rows = dv_df is not None
-
-    paths = [os.path.join(path, f) for f in sorted(files)]
-    if part_cols or dv_rows:
-        df = spark.read.schema(read_schema).parquet(*paths).withColumn(
-            # the map keys are plain absolute paths
-            "__file",
-            plain_file_path(),
-        )
-        if dv_rows:
-            df = df.withColumn("__pos", F.col("_metadata.row_index"))
-        extra = ["__file", *(["__pos"] if dv_rows else [])]
-        if mode == "name":
-            df = df.select(
-                *extra,
-                *[F.col(phys_of[f.name]).alias(f.name) for f in data_fields],
-            )
-        if dv_rows:
-            df = df.join(
-                F.broadcast(dv_df),
-                (F.col("__file") == F.col("__dv_file"))
-                & (F.col("__pos") == F.col("__dv_pos")),
-                "left_anti",
-            )
-    else:
-        df = spark.read.schema(read_schema).parquet(*paths)
-        if mode == "name":
-            # physical -> logical rename (column mapping 'name': files keep
-            # the physical name forever; plan-time, zero movement)
-            df = df.select(
-                *[F.col(phys_of[f.name]).alias(f.name) for f in data_fields]
-            )
-
-    if part_cols:
-        rows = []
-        for rel, add in files.items():
-            pv = add.get("partitionValues") or {}
-            rows.append(
-                (os.path.abspath(os.path.join(path, rel)),
-                 *[pv.get(phys_of[c]) for c in part_cols])
-            )
-        map_schema = T.StructType(
-            [T.StructField("__file", T.StringType(), False)]
-            + [T.StructField(f"__pv_{c}", T.StringType(), True) for c in part_cols]
-        )
-        pv_df = spark.createDataFrame(rows, map_schema)
-        df = df.join(F.broadcast(pv_df), "__file").select(
-            *[f.name for f in data_fields],
-            *[
-                F.col(f"__pv_{c}").cast(by_logical[c].dataType).alias(c)
-                for c in part_cols
-            ],
-        )
-    return df.select(*[f.name for f in logical.fields])
+    snap = _Snapshot(path, version)
+    files = _prune(snap, snap.files, where) if where else snap.files
+    return _scan(spark, snap, files)

@@ -37,9 +37,11 @@ from kafka_connect_expand_json_transform_spark.sources import _files
 from kafka_connect_expand_json_transform_spark.sources._commit import publish, replace
 from kafka_connect_expand_json_transform_spark.sources._merge import MergePlan
 from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-    _list_log,
+    _dv_file_path,
     _log_dir,
-    _replay,
+    _prune,
+    _scan,
+    _Snapshot,
 )
 
 
@@ -97,10 +99,8 @@ def _identity_cols(schema) -> dict[str, dict]:
     return out
 
 
-def _check_writer_requirements(meta: dict, protocol: dict | None,
-                               dml: bool,
-                               assignments: dict | str | None = None,
-                               merge_inserts: bool = False) -> None:
+def _check_writer_requirements(snap: _Snapshot, dml: bool,
+                               assignments: dict | str | None = None) -> None:
     """Fail closed on tables whose WRITER requirements this
     implementation cannot honor — writing anyway would corrupt the
     table's invariants for every other engine (PROTOCOL.md: writers must
@@ -108,13 +108,12 @@ def _check_writer_requirements(meta: dict, protocol: dict | None,
     columns are handled per operation (r10): appends compute/validate/
     assign them; DELETE changes no values; UPDATE/MERGE assignments may
     invalidate a generation expression (dependency analysis would need
-    an expression parser) and MERGE inserts would need fresh identity
-    values — both refuse."""
-    from pyspark.sql import types as T
-
-    v = (protocol or {}).get("minWriterVersion", 2)
+    an expression parser), so they refuse on generated tables, and an
+    assignment to an identity column refuses."""
+    protocol = snap.protocol or {}
+    v = protocol.get("minWriterVersion", 2)
     if v == 7:
-        unknown = set((protocol or {}).get("writerFeatures") or []) \
+        unknown = set(protocol.get("writerFeatures") or []) \
             - _SUPPORTED_WRITER_FEATURES
         if unknown:
             raise ValueError(
@@ -123,9 +122,8 @@ def _check_writer_requirements(meta: dict, protocol: dict | None,
             )
     elif v > 7:
         raise ValueError(f"minWriterVersion {v} not supported")
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    gen = _generated_cols(schema)
-    idc = _identity_cols(schema)
+    gen = _generated_cols(snap.schema)
+    idc = _identity_cols(snap.schema)
     if dml and assignments is not None and gen:
         raise ValueError(
             "UPDATE/MERGE assignments on a table with GENERATED columns "
@@ -144,7 +142,7 @@ def _check_writer_requirements(meta: dict, protocol: dict | None,
         # delta_merge_into itself refuses a source that CARRIES the
         # identity column, assigns fresh ids to inserts, and bumps
         # the watermark in the commit's metaData
-    cfg = meta.get("configuration") or {}
+    cfg = snap.meta.get("configuration") or {}
     if dml:
         if str(cfg.get("delta.appendOnly", "false")).lower() == "true":
             raise ValueError(
@@ -153,19 +151,16 @@ def _check_writer_requirements(meta: dict, protocol: dict | None,
 
 
 
-def _active_constraints(meta: dict) -> list[tuple[str, str]]:
+def _active_constraints(snap: _Snapshot) -> list[tuple[str, str]]:
     """CHECK constraints (``delta.constraints.<name>`` configuration) and
     column invariants (``delta.invariants`` field metadata) as
     ``(label, sql_expression)`` — the writer must reject rows violating
     either (PROTOCOL.md "CHECK Constraints" / "Column Invariants")."""
-    from pyspark.sql import types as T
-
     out: list[tuple[str, str]] = []
-    for k, expr in sorted((meta.get("configuration") or {}).items()):
+    for k, expr in sorted((snap.meta.get("configuration") or {}).items()):
         if k.startswith("delta.constraints."):
             out.append((k[len("delta.constraints."):], expr))
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    for f in schema.fields:
+    for f in snap.schema.fields:
         inv = (f.metadata or {}).get("delta.invariants")
         if not inv:
             continue
@@ -234,52 +229,6 @@ def _stats_json(part) -> str:
     return json.dumps(out)
 
 
-#: (abs root, app_id) -> (highest commit version scanned, latest txn seen).
-#: Commit JSONs are immutable once written, so the scan can resume where
-#: it left off — without this a long-running streaming sink re-reads the
-#: ENTIRE commit history on every micro-batch (O(history) driver I/O).
-_TXN_WATERMARKS: dict[tuple[str, str], tuple[int, int | None]] = {}
-
-
-def _latest_txn_version(path: str, app_id: str) -> int | None:
-    """The highest ``txn`` version recorded for ``app_id`` (the
-    idempotence watermark); incremental across calls.  A cold scan seeds
-    from the newest checkpoint's txn rows — pre-checkpoint commits may
-    have been vacuumed, and PROTOCOL.md puts txn watermarks in the
-    checkpoint for exactly this reason."""
-    key = (os.path.abspath(path), app_id)
-    scanned, latest = _TXN_WATERMARKS.get(key, (-1, None))
-    commits, ckpts = _list_log(path)
-    if scanned == -1 and ckpts:
-        from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-            _checkpoint_actions,
-        )
-
-        base = max(ckpts)
-        for part in ckpts[base]:
-            for a in _checkpoint_actions(part):
-                t = a.get("txn")
-                if t and t.get("appId") == app_id:
-                    tv = int(t["version"])
-                    latest = tv if latest is None else max(latest, tv)
-        scanned = base
-    new = sorted(v for v in commits if v > scanned)
-    for v in new:
-        with open(commits[v], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                t = a.get("txn")
-                if t and t.get("appId") == app_id:
-                    tv = int(t["version"])
-                    latest = tv if latest is None else max(latest, tv)
-    if new:
-        _TXN_WATERMARKS[key] = (new[-1], latest)
-    return latest
-
-
 def _retention_hours(meta: dict | None) -> float:
     """``delta.deletedFileRetentionDuration`` from the table
     configuration as hours (default 168 = 7 days).  Delta's interval
@@ -311,8 +260,10 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
     PROTOCOL.md "Checkpoints".  This bounds log replay for long-lived
     tables: without one, every reader (and every ``delta_append``) walks
     the FULL commit history; with one, replay starts at the newest
-    checkpoint.  Planner-side: the state is the live-file list, the same
-    O(live files) every Delta checkpointer materializes.  Adds carrying
+    checkpoint.  Planner-side: one ``_Snapshot`` replay (base checkpoint
+    plus the commits after it) supplies the live files, txn watermarks
+    and tombstones — O(live files), the same state every Delta
+    checkpointer materializes.  Adds carrying
     deletion-vector descriptors keep them verbatim (PROTOCOL.md: the DV
     descriptor is part of the add's state — long-lived MoR tables need
     checkpoints most), and unexpired remove tombstones ride along so
@@ -320,7 +271,8 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files, meta, protocol, v = _replay(root, version)
+    snap = _Snapshot(root, version)
+    files, meta, protocol, v = snap.files, snap.meta, snap.protocol, snap.version
     dv_t = pa.struct([
         ("storageType", pa.string()),
         ("pathOrInlineDv", pa.string()),
@@ -369,55 +321,10 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
     # txn idempotence watermarks MUST ride the checkpoint (PROTOCOL.md
     # checkpoint schema): once pre-checkpoint commits are vacuumed, the
     # streaming sink's exactly-once dedup would otherwise reset
-    txns: dict[str, dict] = {}
-    tombstones: dict[str, int] = {}  # removed path -> deletionTimestamp ms
-
-    def _note_tomb(action: dict) -> None:
-        ts = action.get("deletionTimestamp") or 0
-        p = action["path"]
-        tombstones[p] = max(tombstones.get(p, 0), int(ts))
-
-    commits, _ckpts = _list_log(root)
-    for cv in sorted(c for c in commits if c <= v):
-        with open(commits[cv], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                if a.get("remove"):
-                    _note_tomb(a["remove"])
-                t = a.get("txn")
-                if t and (t["appId"] not in txns
-                          or int(t["version"])
-                          >= int(txns[t["appId"]]["version"])):
-                    txns[t["appId"]] = {
-                        "appId": t["appId"],
-                        "version": int(t["version"]),
-                        "lastUpdated": t.get("lastUpdated"),
-                    }
-    # fold txns summarized by an older checkpoint — some of the commits it
-    # covered may already be vacuumed (max-merge, idempotent)
-    base = max((b for b in _ckpts if b <= v), default=None)
-    if base is not None:
-        from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-            _checkpoint_actions,
-        )
-
-        for part in _ckpts[base]:
-            for a in _checkpoint_actions(part):
-                if a.get("remove"):
-                    _note_tomb(a["remove"])
-                t = a.get("txn")
-                if t and (t["appId"] not in txns
-                          or int(t["version"])
-                          >= int(txns[t["appId"]]["version"])):
-                    txns[t["appId"]] = {
-                        "appId": t["appId"],
-                        "version": int(t["version"]),
-                        "lastUpdated": t.get("lastUpdated"),
-                    }
-    txn_rows = [txns[k] for k in sorted(txns)]
+    txn_rows = [
+        {"appId": app, "version": tv, "lastUpdated": updated}
+        for app, (tv, updated) in sorted(snap.txns.items())
+    ]
 
     def _dv_row(add: dict):
         dv = add.get("deletionVector")
@@ -447,8 +354,7 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
         for _rel, add in sorted(files.items())
     ]
     # unexpired tombstones ride the checkpoint (PROTOCOL.md: readers keep
-    # retention info once pre-checkpoint commits are cleaned up); a path
-    # re-added later is live state, not a tombstone
+    # retention info once pre-checkpoint commits are cleaned up)
     # ADVICE r9 (medium): honor delta.deletedFileRetentionDuration —
     # tombstones must outlive the table's configured retention or
     # vacuum's deleted_at map loses them and falls back to file mtime,
@@ -458,8 +364,8 @@ def delta_checkpoint(root: str, version: int | None = None) -> str:
     )
     removes = [
         {"path": p, "deletionTimestamp": ts, "dataChange": False}
-        for p, ts in sorted(tombstones.items())
-        if p not in files and ts >= tomb_cutoff_ms
+        for p, ts in sorted(snap.tombstones.items())
+        if ts >= tomb_cutoff_ms
     ]
     meta_row = {
         "id": meta.get("id"),
@@ -546,36 +452,47 @@ def _stage_adds(
     ]
 
 
-def _to_physical(df: DataFrame, table_schema, part_cols: list[str],
-                 mode: str, extra: tuple = ()):
+def _to_physical(df: DataFrame, snap: _Snapshot, extra: tuple = ()):
     """Rename a LOGICAL-named frame to the table's physical column names
-    (plus parquet field ids under 'id' mapping) for staging, and return
-    ``(stage_df, physical_part_cols)`` — column-mapped tables store
-    physical names in the data files, so staging logical names would
-    make every reader surface nulls.  Columns absent from ``df`` (a
-    merge_schema append omitting one) are skipped."""
+    (plus parquet field ids where the schema carries
+    ``delta.columnMapping.id``) for staging, and return ``(stage_df,
+    physical_part_cols)`` — column-mapped tables store physical names in
+    the data files, so staging logical names would make every reader
+    surface nulls.  Columns absent from ``df`` (a merge_schema append
+    omitting one) are skipped; an unmapped table stages ``df`` as is."""
     from pyspark.sql import functions as F
 
+    if snap.mode == "none":
+        return df, snap.part_cols
     cols = []
-    for f in table_schema.fields:
+    for f in snap.schema.fields:
         if f.name not in df.columns:
             continue
-        md = f.metadata or {}
-        phys = md.get("delta.columnMapping.physicalName", f.name)
-        fid = md.get("delta.columnMapping.id")
-        if fid is not None:
-            cols.append(F.col(f.name).alias(
-                phys, metadata={"parquet.field.id": int(fid)}
-            ))
-        else:
-            cols.append(F.col(f.name).alias(phys))
+        col, phys = F.col(f.name), snap.phys_of[f.name]
+        fid = (f.metadata or {}).get("delta.columnMapping.id")
+        cols.append(col.alias(phys) if fid is None else
+                    col.alias(phys, metadata={"parquet.field.id": int(fid)}))
     cols.extend(F.col(e) for e in extra)
-    phys_of = {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        ) for f in table_schema.fields
-    }
-    return df.select(*cols), [phys_of[c] for c in part_cols]
+    return df.select(*cols), [snap.phys_of[c] for c in snap.part_cols]
+
+
+def _with_high_watermarks(snap: _Snapshot, hwm: dict[str, int]) -> dict:
+    """The metaData action advancing identity columns' high watermarks
+    (``delta.identity.highWaterMark`` field metadata) to ``hwm`` — it
+    rides the commit whose rows consumed the ids, so a lost commit loses
+    the advance with them."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField(f.name, f.dataType, f.nullable, {
+            **(f.metadata or {}),
+            **({"delta.identity.highWaterMark": hwm[f.name]}
+               if f.name in hwm else {}),
+        })
+        for f in snap.schema.fields
+    ])
+    return {"metaData": {**snap.meta,
+                         "schemaString": json.dumps(schema.jsonValue())}}
 
 
 def _stage_cdc(
@@ -681,22 +598,19 @@ def delta_append(
     from pyspark.sql import functions as F
 
     try:
-        _files, meta, _proto, head = _replay(root, None)
-        exists = True
+        snap = _Snapshot(root)
     except FileNotFoundError:  # no committed version (maybe a first claim)
-        exists = False
+        snap = None
     evolved = None
-    stage_df, stage_part_cols = df, None
-    if exists:
-        _check_writer_requirements(meta, _proto, dml=False)
-        _enforce_constraints(df, _active_constraints(meta), "append")
-        part_cols = list(meta.get("partitionColumns") or [])
+    if snap is not None:
+        _check_writer_requirements(snap, dml=False)
+        _enforce_constraints(df, _active_constraints(snap), "append")
+        meta, part_cols, table_schema = snap.meta, snap.part_cols, snap.schema
         if partition_by is not None and list(partition_by) != part_cols:
             raise ValueError(
                 f"partition_by {list(partition_by)} != table's "
                 f"partitionColumns {part_cols}"
             )
-        table_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         gen_cols = _generated_cols(table_schema)
         id_cols = _identity_cols(table_schema)
         id_meta_update: dict[str, int] = {}
@@ -756,7 +670,6 @@ def delta_append(
                   if f.name in df.columns],
                 *extras,
             )
-            stage_df = df
         if merge_schema:
             by_name = {f.name: f for f in table_schema.fields}
             for f in df.schema.fields:
@@ -784,27 +697,23 @@ def delta_append(
                 f"append schema {df.schema.simpleString()} != table schema "
                 f"{table_schema.simpleString()}"
             )
-        mode = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        if mode != "none":
-            if evolved is not None:
-                raise ValueError(
-                    "mergeSchema evolution on a column-mapped table needs "
-                    "id/physicalName assignment — not supported"
-                )
-            stage_df, stage_part_cols = _to_physical(
-                df, table_schema, part_cols, mode
+        if snap.mode != "none" and evolved is not None:
+            raise ValueError(
+                "mergeSchema evolution on a column-mapped table needs "
+                "id/physicalName assignment — not supported"
             )
-        if txn is not None:
-            seen = _latest_txn_version(root, txn[0])
-            if seen is not None and seen >= int(txn[1]):
-                return head  # replayed batch: exactly-once no-op
-        version = head + 1
+        stage_df, stage_part_cols = _to_physical(df, snap)
+        # the txn watermark comes from the table itself, so a replayed
+        # batch is a no-op and a recreated table starts from none
+        seen = snap.txns.get(txn[0]) if txn is not None else None
+        if seen is not None and seen[0] >= int(txn[1]):
+            return snap.version  # replayed batch: exactly-once no-op
+        version = snap.version + 1
     else:
         version = 0
         id_meta_update = {}
-        part_cols = list(partition_by or [])
+        part_cols = stage_part_cols = list(partition_by or [])
+        stage_df = df
         missing = [c for c in part_cols if c not in df.columns]
         if missing:
             raise ValueError(f"partition_by columns {missing} not in schema")
@@ -815,8 +724,7 @@ def delta_append(
     nonce = _time.time_ns()
     now_ms = int(_time.time() * 1000)
     placed, adds = _stage_adds(
-        stage_df, root, version, nonce, now_ms,
-        part_cols if stage_part_cols is None else stage_part_cols,
+        stage_df, root, version, nonce, now_ms, stage_part_cols
     )
 
     actions = [{"commitInfo": {"timestamp": now_ms, "operation": "WRITE",
@@ -838,19 +746,7 @@ def delta_append(
             **meta, "schemaString": json.dumps(evolved.jsonValue()),
         }})
     elif id_meta_update:
-        # identity assignment: the advanced high watermark is part of
-        # the schema metadata and rides THIS commit (versioned and
-        # crash-safe — a lost commit loses the watermark advance with
-        # the data that consumed it)
-        sj = json.loads(meta["schemaString"])
-        for f in sj["fields"]:
-            if f["name"] in id_meta_update:
-                f.setdefault("metadata", {})[
-                    "delta.identity.highWaterMark"
-                ] = id_meta_update[f["name"]]
-        actions.append({"metaData": {
-            **meta, "schemaString": json.dumps(sj),
-        }})
+        actions.append(_with_high_watermarks(snap, id_meta_update))
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": int(txn[1]),
                                 "lastUpdated": now_ms}})
@@ -929,112 +825,15 @@ def _predicate_hints(predicate: str) -> list[tuple]:
     return hints
 
 
-def _cow_scan(spark, root, candidates, meta, schema, mode, phys_of,
-              part_cols):
-    """Shared CoW read machinery (DML + MERGE): a pinned-schema scan of
-    the candidate files under LOGICAL column names, excluding DV-deleted
-    rows (the (file, pos) frame comes from the reader's shared helper),
-    re-injecting hive partition values, and exposing ``__f`` (the
-    normalized absolute file path) for file-grain hit accounting."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        _field_id_type,
-        dv_frame,
-    )
-
-    dv_df = dv_frame(spark, root, candidates)
-    by_name = {f.name: f for f in schema.fields}
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    if mode == "id":
-        # resolve parquet columns by FIELD ID (the snapshot read's shape)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        read_schema = _field_id_type(T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable, f.metadata)
-             for f in data_fields]
-        ))
-    else:
-        read_schema = T.StructType(
-            [T.StructField(phys_of[f.name], f.dataType, True)
-             for f in data_fields]
-        )
-    pv_df = None
-    if part_cols:
-        # broadcast file -> partitionValues map, the snapshot read's shape
-        # (partitionValues are keyed by PHYSICAL name on mapped tables)
-        pv_df = spark.createDataFrame(
-            [(os.path.abspath(os.path.join(root, rel)),
-              *[(add.get("partitionValues") or {}).get(phys_of[c])
-                for c in part_cols])
-             for rel, add in candidates.items()],
-            T.StructType(
-                [T.StructField("__f", T.StringType(), False)]
-                + [T.StructField(f"__pv_{c}", T.StringType(), True)
-                   for c in part_cols]
-            ),
-        )
-
-    def scan(rels):
-        df = spark.read.schema(read_schema).parquet(
-            *[os.path.join(root, rel) for rel in sorted(rels)]
-        ).withColumn(
-            "__f",
-            _files.plain_file_path(),
-        )
-        if dv_df is not None:
-            df = (
-                df.withColumn("__pos", F.col("_metadata.row_index"))
-                .join(
-                    F.broadcast(dv_df),
-                    (F.col("__f") == F.col("__dv_file"))
-                    & (F.col("__pos") == F.col("__dv_pos")),
-                    "left_anti",
-                )
-                .drop("__pos")
-            )
-        if mode == "name":
-            # physical -> logical, plan-time rename ('id' already reads
-            # under logical names via field-id resolution)
-            df = df.select(
-                "__f",
-                *[F.col(phys_of[f.name]).alias(f.name)
-                  for f in data_fields],
-            )
-        if pv_df is not None:
-            df = df.join(F.broadcast(pv_df), "__f").select(
-                "__f",
-                *[f.name for f in data_fields],
-                *[F.col(f"__pv_{c}").cast(by_name[c].dataType).alias(c)
-                  for c in part_cols],
-            )
-        return df
-
-    return scan
-
-
 def _delta_cow(
     spark, root: str, predicate: str, assignments: dict[str, str] | None
 ) -> tuple[int, int]:
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        _physical_name,
-        _stats_keep,
-    )
-
-    files, meta, _proto, head = _replay(root, None)
-    _check_writer_requirements(meta, _proto, dml=True,
-                               assignments=assignments)
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
-               for f in schema.fields}
-    part_cols = list(meta.get("partitionColumns") or [])
-    if assignments and any(c in assignments for c in part_cols):
+    snap = _Snapshot(root)
+    _check_writer_requirements(snap, dml=True, assignments=assignments)
+    files, meta, schema, head = snap.files, snap.meta, snap.schema, snap.version
+    if assignments and any(c in assignments for c in snap.part_cols):
         raise ValueError(
             "updating partition columns is not supported (rows would move "
             "between partitions — delete + re-insert instead)"
@@ -1047,24 +846,17 @@ def _delta_cow(
     # scanned (the reader's own skipping, reused on the write path; for
     # partitioned tables the partition terms prune whole partitions)
     hints = _predicate_hints(predicate)
-    if hints:
-        types_of = {f.name: f.dataType for f in schema.fields}
-        candidates = {
-            rel: add for rel, add in files.items()
-            if _stats_keep(add, hints, part_cols, phys_of, types_of)
-        }
-    else:
-        candidates = dict(files)
+    candidates = _prune(snap, files, hints) if hints else files
     if not candidates:
         return head, 0
 
-    # deletion-vector tables: the scan must EXCLUDE DV-deleted rows —
+    # deletion-vector tables: the scan EXCLUDES DV-deleted rows —
     # counting them as hits would rewrite files needlessly, and carrying
     # them into a rewrite would resurrect them.  The rewrite drops the
     # affected files' DVs (survivors are fully materialized), the same
     # DV-collapse a Delta OPTIMIZE performs.
-    scan = _cow_scan(spark, root, candidates, meta, schema, mode,
-                     phys_of, part_cols)
+    def scan(rels):
+        return _scan(spark, snap, {rel: files[rel] for rel in rels}, "__f")
 
     abs_of = {os.path.abspath(os.path.join(root, rel)): rel
               for rel in candidates}
@@ -1106,13 +898,9 @@ def _delta_cow(
     if assignments is not None:
         # UPDATE may move rows outside a CHECK constraint — enforce on
         # the rewritten frame (only evaluated when constraints exist)
-        _enforce_constraints(rewritten, _active_constraints(meta), "update")
-    stage_rewritten, stage_parts = rewritten, part_cols
-    if mode != "none":
-        # mapped tables stage PHYSICAL names (+ field ids under 'id')
-        stage_rewritten, stage_parts = _to_physical(
-            rewritten, schema, part_cols, mode
-        )
+        _enforce_constraints(rewritten, _active_constraints(snap), "update")
+    # mapped tables stage PHYSICAL names (+ field ids under 'id')
+    stage_rewritten, stage_parts = _to_physical(rewritten, snap)
     placed, add_actions = _stage_adds(
         stage_rewritten, root, version, nonce, now_ms, stage_parts
     )
@@ -1142,11 +930,7 @@ def _delta_cow(
             cdc_df = matched.withColumn(
                 "_change_type", F.lit("update_preimage")
             ).unionByName(post)
-        cdc_parts = part_cols
-        if mode != "none":
-            cdc_df, cdc_parts = _to_physical(
-                cdc_df, schema, part_cols, mode, extra=("_change_type",)
-            )
+        cdc_df, cdc_parts = _to_physical(cdc_df, snap, extra=("_change_type",))
         cdc_placed, cdc_actions = _stage_cdc(
             cdc_df, root, version, nonce, now_ms, cdc_parts
         )
@@ -1197,24 +981,11 @@ def delta_merge_into(
     broadcasts via AQE); survivors + inserts stage as ONE job; nothing
     data-sized is collected."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        _physical_name,
-        _stats_keep,
-    )
-
-    files, meta, _proto, head = _replay(root, None)
-    _check_writer_requirements(meta, _proto, dml=True,
-                               assignments=update,
-                               merge_inserts=insert)
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
-               for f in schema.fields}
-    part_cols = list(meta.get("partitionColumns") or [])
+    snap = _Snapshot(root)
+    _check_writer_requirements(snap, dml=True, assignments=update)
+    files, meta, schema, head = snap.files, snap.meta, snap.schema, snap.version
+    part_cols = snap.part_cols
     plan = MergePlan(
         source, on, schema, update=update, delete_when=delete_when,
         insert=insert, insert_when=insert_when, partition_cols=part_cols,
@@ -1231,22 +1002,14 @@ def delta_merge_into(
     # footer-stats candidate pruning: files whose [min, max] cannot hold
     # any source key are never read (sound: a pruned file can contain no
     # matched row, and its rows are exactly the target-only-kept clause)
-    candidates = dict(files)
-    if files and hints:
-        types_of = {f.name: f.dataType for f in schema.fields}
-        candidates = {
-            rel: add for rel, add in files.items()
-            if _stats_keep(add, hints, part_cols, phys_of, types_of)
-        }
+    candidates = _prune(snap, files, hints) if hints else files
 
     nonce = _time.time_ns()
     now_ms = int(_time.time() * 1000)
     version = head + 1
 
     if candidates:
-        scan = _cow_scan(spark, root, candidates, meta, schema, mode,
-                         phys_of, part_cols)
-        tgt = scan(candidates)
+        tgt = _scan(spark, snap, candidates, "__f")
         # file-grain hit discovery: one semi-join, one row per file that
         # CONTAINS a matched key (bounded collect).  No .distinct() on the
         # source keys: the duplicate-key guard proves them unique, and a
@@ -1262,8 +1025,7 @@ def delta_merge_into(
     else:
         affected = []
 
-    plan.join(scan(affected).drop("__f") if affected
-              else spark.createDataFrame([], schema))
+    plan.join(_scan(spark, snap, {rel: files[rel] for rel in affected}))
     stats = plan.stats()
     if not affected and stats["inserted"] == 0:
         return head, stats
@@ -1303,13 +1065,9 @@ def delta_merge_into(
         if n_assigned:
             id_meta_update[c] = base + info["step"] * (n_assigned - 1)
     rewritten = plan.kept().unionByName(ins_rows)
-    _enforce_constraints(rewritten, _active_constraints(meta), "merge")
+    _enforce_constraints(rewritten, _active_constraints(snap), "merge")
 
-    stage_df, stage_parts = rewritten, part_cols
-    if mode != "none":
-        stage_df, stage_parts = _to_physical(
-            rewritten, schema, part_cols, mode
-        )
+    stage_df, stage_parts = _to_physical(rewritten, snap)
     placed, add_actions = _stage_adds(
         stage_df, root, version, nonce, now_ms, stage_parts
     )
@@ -1320,15 +1078,7 @@ def delta_merge_into(
         )},
     }}]
     if id_meta_update:
-        sj = json.loads(meta["schemaString"])
-        for f in sj["fields"]:
-            if f["name"] in id_meta_update:
-                f.setdefault("metadata", {})[
-                    "delta.identity.highWaterMark"
-                ] = id_meta_update[f["name"]]
-        actions.append({"metaData": {
-            **meta, "schemaString": json.dumps(sj),
-        }})
+        actions.append(_with_high_watermarks(snap, id_meta_update))
     actions.extend(add_actions)
     if str((meta.get("configuration") or {}).get(
         "delta.enableChangeDataFeed", "false"
@@ -1337,11 +1087,7 @@ def delta_merge_into(
         cdc_df = plan.changes(ins_rows, labels=(
             "delete", "update_preimage", "update_postimage", "insert"
         ))
-        cdc_parts = part_cols
-        if mode != "none":
-            cdc_df, cdc_parts = _to_physical(
-                cdc_df, schema, part_cols, mode, extra=("_change_type",)
-            )
+        cdc_df, cdc_parts = _to_physical(cdc_df, snap, extra=("_change_type",))
         cdc_placed, cdc_actions = _stage_cdc(
             cdc_df, root, version, nonce, now_ms, cdc_parts
         )
@@ -1372,55 +1118,22 @@ def delta_vacuum(
     readers and recent time travel, which file mtime cannot), with mtime
     as the floor and the only signal for untracked leftovers.  Leftover
     ``_stage_*`` attempt dirs from crashed writers age out by the same
-    rule.  Planner-side: one replay + one log walk + one directory
-    walk."""
-    files, _meta, _proto, _head = _replay(root, None)
+    rule.  Planner-side: one snapshot replay (its tombstones) + one
+    directory walk."""
+    snap = _Snapshot(root)
     if retention_hours is None:
         # default to the table's configured retention, like Delta's own
         # VACUUM (delta.deletedFileRetentionDuration, default 7 days)
-        retention_hours = _retention_hours(_meta)
-    # tombstone timestamps: rel path -> latest deletionTimestamp (ms)
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        _checkpoint_actions,
-        _list_log,
-    )
-
-    commits, ckpts = _list_log(root)
-    deleted_at: dict[str, float] = {}
-
-    def _note_remove(action: dict) -> None:
-        rel = os.path.normpath(action["path"])
-        ts = action.get("deletionTimestamp")
-        if ts is not None:
-            deleted_at[rel] = max(deleted_at.get(rel, 0.0), ts / 1000.0)
-
-    base = max(ckpts, default=None)
-    if base is not None:
-        for part in ckpts[base]:
-            for a in _checkpoint_actions(part):
-                if a.get("remove"):
-                    _note_remove(a["remove"])
-    for v in sorted(commits):
-        if base is not None and v <= base:
-            continue
-        with open(commits[v], encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    a = json.loads(line)
-                    if a.get("remove"):
-                        _note_remove(a["remove"])
-    live = {os.path.normpath(rel) for rel in files}
-    for add in files.values():
+        retention_hours = _retention_hours(snap.meta)
+    # tombstone timestamps: rel path -> deletionTimestamp (s)
+    deleted_at = {os.path.normpath(rel): ts / 1000.0
+                  for rel, ts in snap.tombstones.items()}
+    live = {os.path.normpath(rel) for rel in snap.files}
+    for add in snap.files.values():
         dv = add.get("deletionVector")
-        if dv:
-            from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-                _dv_file_path,
-            )
-
-            p = _dv_file_path(root, dv)
-            if p:
-                live.add(os.path.normpath(os.path.relpath(p, root)))
+        p = _dv_file_path(root, dv) if dv else None
+        if p:
+            live.add(os.path.normpath(os.path.relpath(p, root)))
     cutoff = _time.time() - retention_hours * 3600.0
     removed: list[str] = []
     for dirpath, dirs, names in os.walk(root):
@@ -1496,24 +1209,12 @@ def delta_optimize(
     returning the current head.  Scale: candidate selection is
     O(live files) planner metadata; the rewrite reads only the files
     being compacted."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        dv_frame,
-    )
-
-    files, meta, _proto, head = _replay(root, None)
-    _check_writer_requirements(meta, _proto, dml=False)
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    part_cols = list(meta.get("partitionColumns") or [])
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    by_name = {f.name: f for f in schema.fields}
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
+    snap = _Snapshot(root)
+    _check_writer_requirements(snap, dml=False)
+    files, head = snap.files, snap.version
     if zorder_by:
-        bad = [c for c in zorder_by if c not in by_name or c in part_cols]
+        bad = [c for c in zorder_by
+               if c not in snap.phys_of or c in snap.part_cols]
         if bad:
             raise ValueError(f"zorder_by columns {bad} not clusterable")
 
@@ -1540,67 +1241,7 @@ def delta_optimize(
         return head, 0
 
     cand = {rel: files[rel] for rel in affected}
-    dv_df = dv_frame(spark, root, cand)
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
-        _field_id_type,
-        _physical_name,
-    )
-
-    phys_of = {f.name: (_physical_name(f) if mode != "none" else f.name)
-               for f in schema.fields}
-    if mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        read_schema = _field_id_type(T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable, f.metadata)
-             for f in data_fields]
-        ))
-    else:
-        read_schema = T.StructType(
-            [T.StructField(phys_of[f.name], f.dataType, True)
-             for f in data_fields]
-        )
-    df = spark.read.schema(read_schema).parquet(
-        *[os.path.join(root, rel) for rel in affected]
-    ).withColumn(
-        "__f",
-        _files.plain_file_path(),
-    )
-    if dv_df is not None:
-        df = (
-            df.withColumn("__pos", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(dv_df),
-                (F.col("__f") == F.col("__dv_file"))
-                & (F.col("__pos") == F.col("__dv_pos")),
-                "left_anti",
-            )
-            .drop("__pos")
-        )
-    if mode == "name":
-        df = df.select(
-            "__f",
-            *[F.col(phys_of[f.name]).alias(f.name) for f in data_fields],
-        )
-    if part_cols:
-        pv_df = spark.createDataFrame(
-            [(os.path.abspath(os.path.join(root, rel)),
-              *[(add.get("partitionValues") or {}).get(phys_of[c])
-                for c in part_cols])
-             for rel, add in cand.items()],
-            T.StructType(
-                [T.StructField("__f", T.StringType(), False)]
-                + [T.StructField(f"__pv_{c}", T.StringType(), True)
-                   for c in part_cols]
-            ),
-        )
-        df = df.join(F.broadcast(pv_df), "__f").select(
-            *[f.name for f in data_fields],
-            *[F.col(f"__pv_{c}").cast(by_name[c].dataType).alias(c)
-              for c in part_cols],
-        )
-    else:
-        df = df.drop("__f")
-
+    df = _scan(spark, snap, cand)
     total = sum(cand[rel].get("size", 0) for rel in affected)
     n_out = max(1, -(-total // target_file_bytes))
     if zorder_by:
@@ -1626,9 +1267,7 @@ def delta_optimize(
         "operationParameters": {
             "zOrderBy": json.dumps(list(zorder_by or []))},
     }}]
-    stage_df, stage_parts = df, part_cols
-    if mode != "none":
-        stage_df, stage_parts = _to_physical(df, schema, part_cols, mode)
+    stage_df, stage_parts = _to_physical(df, snap)
     placed, add_actions = _stage_adds(
         stage_df, root, version, nonce, now_ms, stage_parts
     )

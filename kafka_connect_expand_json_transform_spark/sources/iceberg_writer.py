@@ -60,8 +60,9 @@ def _publish_metadata(root: str, version: int, meta: dict, placed=(),
     ``_commit.publish``, then point ``version-hint.text`` at it for
     outside clients; this repo's readers never read the hint
     (``iceberg_reader._metadata_head``).  On a lost race this attempt's
-    ``placed`` files are unlinked and ``conflict`` raised (by default
-    ``IcebergCommitConflict``)."""
+    ``placed`` files — its data or delete files and its manifest and
+    manifest-list Avro files — are unlinked and ``conflict`` raised (by
+    default ``IcebergCommitConflict``)."""
     meta_dir = os.path.join(root, "metadata")
     publish(
         os.path.join(meta_dir, f"v{version}.metadata.json"),
@@ -337,7 +338,8 @@ def iceberg_append(df: DataFrame, root: str,
         "snapshot-log": [],
         "metadata-log": [],
     }
-    _publish_metadata(root, meta_version, meta, placed)
+    _publish_metadata(root, meta_version, meta,
+                      [*placed, manifest_rel, mlist_rel])
     return snap_id
 
 
@@ -476,7 +478,8 @@ def iceberg_delete_where(spark, root: str, predicate: str) -> tuple[int, int]:
             "schema-id": commit_schema_id,
         }],
     })
-    _publish_metadata(root, meta_version, meta, placed)
+    _publish_metadata(root, meta_version, meta,
+                      [*placed, mdel_rel, mlist_rel])
     return snap_id, n_deleted
 
 
@@ -579,7 +582,8 @@ def iceberg_delete_keys(spark, root: str, keys: DataFrame) -> tuple[int, int]:
             "schema-id": prev_meta.get("current-schema-id", 0),
         }],
     })
-    _publish_metadata(root, meta_version, meta, placed)
+    _publish_metadata(root, meta_version, meta,
+                      [*placed, mdel_rel, mlist_rel])
     return snap_id, n_keys
 
 
@@ -661,5 +665,6 @@ def iceberg_compact(spark, root: str) -> int:
             "schema-id": prev_meta.get("current-schema-id", 0),
         }],
     })
-    _publish_metadata(root, meta_version, meta, placed)
+    _publish_metadata(root, meta_version, meta,
+                      [*placed, manifest_rel, mlist_rel])
     return snap_id

@@ -118,10 +118,10 @@ def _delta_replayed(root: str) -> tuple[int | None, set[str], dict]:
     from kafka_connect_expand_json_transform_spark.sources import delta_reader as DR
 
     try:
-        files, _meta, _proto, ver = DR._replay(root, None)
+        snap = DR._Snapshot(root)
     except FileNotFoundError:
         return None, set(), {}
-    return ver, set(files), dict(files)
+    return snap.version, set(snap.files), dict(snap.files)
 
 
 def export_delta(root: str) -> int:

@@ -1232,3 +1232,69 @@ def test_dv_frame_executor_side_decode_large(spark, tmp_path):
 
     with _pytest.raises(Exception, match="cardinality"):
         bad.count()
+
+
+def test_one_delta_snapshot_and_one_scan():
+    """Source scan over ``delta_reader``, ``delta_writer`` and ``uniform``:
+    ``delta_reader._Snapshot`` is the only replay of the Delta log and
+    ``delta_reader._scan`` the only reader of Delta table data files.
+
+    Only ``_Snapshot`` lists the log or reads checkpoints, and commit JSON
+    is parsed only by ``_actions``, which ``_Snapshot`` and
+    ``delta_history`` (each commit's commitInfo) call.  The other
+    ``open`` calls are named here: ``_checkpoint_actions`` opens a v2
+    checkpoint's JSON manifest, and ``write_dv_file`` /
+    ``_dv_bitmap_bytes`` open deletion-vector files.  Only ``_scan``
+    builds the deletion-vector frame or calls ``.parquet``; the column
+    mapping mode is derived once, in ``_Snapshot``; the session-wide
+    ``fieldId.read.enabled`` write and the ``schemaString`` parse each
+    appear once."""
+    import ast
+    import pathlib
+
+    from kafka_connect_expand_json_transform_spark.sources import (
+        delta_reader,
+        delta_writer,
+        uniform,
+    )
+
+    allowed = {
+        "_list_log": {"_Snapshot"},
+        "_checkpoint_actions": {"_Snapshot"},
+        "_parquet_actions": {"_checkpoint_actions"},
+        "_actions": {"_Snapshot", "delta_history"},
+        "open": {"_actions", "_checkpoint_actions", "write_dv_file", "_dv_bitmap_bytes"},
+        "dv_frame": {"_scan"},
+        ".parquet": {"_scan"},
+    }
+    bad, field_id_sets, schema_parses, mode_reads = [], [], [], []
+    for mod in (delta_reader, delta_writer, uniform):
+        tree = ast.parse(pathlib.Path(mod.__file__).read_text())
+        for top in tree.body:
+            name = getattr(top, "name", None)
+            for n in ast.walk(top):
+                if isinstance(n, ast.Constant) and n.value == "delta.columnMapping.mode":
+                    mode_reads.append(name)
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                callee = (
+                    f.id if isinstance(f, ast.Name)
+                    else "." + f.attr if isinstance(f, ast.Attribute) else None
+                )
+                if callee in allowed and name not in allowed[callee]:
+                    bad.append((mod.__name__, name, callee))
+                consts = {
+                    c.value for a in n.args for c in ast.walk(a)
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str)
+                }
+                if callee == ".set" and any("fieldId.read.enabled" in c for c in consts):
+                    field_id_sets.append(name)
+                if callee == ".fromJson" or (callee == ".loads" and "schemaString" in consts):
+                    schema_parses.append((name, callee))
+    assert bad == []
+    assert field_id_sets == ["_scan"]
+    assert schema_parses == [("_schema", ".fromJson"), ("_schema", ".loads")]
+    assert mode_reads == ["_Snapshot"]
+    for gone in ("_replay", "_latest_txn_version", "_TXN_WATERMARKS", "_cow_scan"):
+        assert not hasattr(delta_reader, gone) and not hasattr(delta_writer, gone)

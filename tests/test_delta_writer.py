@@ -66,6 +66,17 @@ def test_txn_exactly_once_replay(spark, tmp_path):
     assert read_delta(spark, root).count() == 6
     # a DIFFERENT app's version 1 is not deduped
     assert delta_append(_df(spark, 6, 7), root, txn=("other", 1)) == 2
+    # the watermark belongs to the table, not to its path: a table
+    # removed and recreated at the same root starts with none, so a
+    # fresh stream's batches 0-2 all land
+    import shutil
+
+    delta_append(_df(spark, 7, 9), root, txn=("app", 3))
+    shutil.rmtree(root)
+    heads = [delta_append(_df(spark, 100 + 5 * i, 105 + 5 * i), root,
+                          txn=("app", i)) for i in range(3)]
+    assert heads == [0, 1, 2]
+    assert read_delta(spark, root).count() == 15
 
 
 def test_commit_conflict(spark, tmp_path, monkeypatch):
@@ -77,16 +88,11 @@ def test_commit_conflict(spark, tmp_path, monkeypatch):
     # simulate the race: this writer replays a STALE head (version 0) while
     # another writer has already committed version 1 — the O_EXCL claim
     # must lose cleanly, never clobber the committed file
-    real = DW._replay
-
-    def stale_replay(path, version):
-        files, meta, proto, _head = real(path, version)
-        return files, meta, proto, 0
-
-    monkeypatch.setattr(DW, "_replay", stale_replay)
+    real = DW._Snapshot
+    monkeypatch.setattr(DW, "_Snapshot", lambda path: real(path, 0))
     with pytest.raises(DeltaCommitConflict):
         delta_append(_df(spark, 3, 5), root)
-    monkeypatch.setattr(DW, "_replay", real)
+    monkeypatch.setattr(DW, "_Snapshot", real)
     assert sorted(r.k for r in read_delta(spark, root).collect()) == [0, 1, 2]
 
 
@@ -257,39 +263,43 @@ def test_cow_multi_file_single_job(spark, tmp_path):
     assert after - before <= 3
 
 
-def test_txn_watermark_cache_incremental(spark, tmp_path, monkeypatch):
-    # VERDICT r7 "What's wrong #1" (tail): _latest_txn_version must not
-    # re-read the whole commit history per micro-batch; the watermark is
-    # cached and only NEW commits are scanned.
-    from kafka_connect_expand_json_transform_spark.sources import delta_writer as DW
+def test_txn_watermark_reads_each_commit_once(spark, tmp_path, monkeypatch):
+    # a streaming sink must not re-read the table's history per batch:
+    # one delta_append(txn=...) opens each commit JSON after the newest
+    # checkpoint exactly once (the snapshot it commits against also
+    # carries the txn watermark), and delta_checkpoint opens no commit
+    # at or below the checkpoint it starts from
+    from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
+        delta_checkpoint,
+    )
 
     root = str(tmp_path / "wm")
-    delta_append(_df(spark, 0, 3), root, txn=("app", 0))
-    delta_append(_df(spark, 3, 6), root, txn=("app", 1))
-    assert DW._latest_txn_version(root, "app") == 1
+    for i in range(7):
+        delta_append(_df(spark, 5 * i, 5 * i + 5), root, txn=("app", i),
+                     checkpoint_interval=5)
     opened = []
     real_open = open
 
     def counting_open(path, *a, **kw):
         if str(path).endswith(".json"):
-            opened.append(str(path))
+            opened.append(os.path.basename(str(path)))
         return real_open(path, *a, **kw)
 
     monkeypatch.setattr("builtins.open", counting_open)
-    assert DW._latest_txn_version(root, "app") == 1
-    assert opened == []  # fully cached: no commit re-read
+    assert delta_append(_df(spark, 35, 40), root, txn=("app", 7),
+                        checkpoint_interval=None) == 7
+    assert delta_append(_df(spark, 35, 40), root, txn=("app", 7)) == 7
+    assert opened == [f"{6:020d}.json"] + [f"{v:020d}.json" for v in (6, 7)]
+    opened.clear()
+    delta_checkpoint(root)
+    assert sorted(opened) == [f"{v:020d}.json" for v in (6, 7)]
     monkeypatch.undo()
-    delta_append(_df(spark, 6, 9), root, txn=("app", 2))
-    monkeypatch.setattr("builtins.open", counting_open)
-    assert DW._latest_txn_version(root, "app") == 2
-    # only the ONE new commit was read
-    assert len(opened) == 1 and opened[0].endswith(f"{2:020d}.json")
+    assert read_delta(spark, root).count() == 40
 
 
 def test_checkpoint_write_bounded_replay_and_txn_survival(spark, tmp_path):
     import json as _json
 
-    from kafka_connect_expand_json_transform_spark.sources import delta_writer as DW
     from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
         delta_checkpoint,
     )
@@ -310,9 +320,17 @@ def test_checkpoint_write_bounded_replay_and_txn_survival(spark, tmp_path):
     # add-action stats ride the checkpoint -> log-level skipping survives
     # (only files whose max k can reach 50 are kept: the last append's)
     assert read_delta(spark, root, where=[("k", ">=", 50)]).count() == 5
+    # the change feed across the cleaned-up commits refuses instead of
+    # returning only the versions still in the log
+    from kafka_connect_expand_json_transform_spark.sources.delta_reader import (
+        read_delta_changes,
+    )
+
+    with pytest.raises(ValueError, match="Delta commit 0 is missing"):
+        read_delta_changes(spark, root, 0)
+    assert read_delta_changes(spark, root, 10).count() == 5
     # txn watermarks ride the checkpoint -> exactly-once dedup survives
-    # the vacuum even from a cold cache
-    DW._TXN_WATERMARKS.clear()
+    # the vacuum
     assert delta_append(_df(spark, 0, 5), root, txn=("app", 3)) == 10  # no-op
     assert delta_append(_df(spark, 55, 60), root, txn=("app", 11)) == 11
     assert read_delta(spark, root).count() == 60
@@ -320,7 +338,6 @@ def test_checkpoint_write_bounded_replay_and_txn_survival(spark, tmp_path):
     delta_checkpoint(root)
     for v in (10, 11):
         os.remove(os.path.join(log, f"{v:020d}.json"))
-    DW._TXN_WATERMARKS.clear()
     assert delta_append(_df(spark, 0, 5), root, txn=("app", 11)) == 11  # no-op
 
 

@@ -66,7 +66,7 @@ def build(spark) -> None:
 def replay_walk(spark) -> dict:
     """1000-commit Delta log: hand-written tiny commits (metadata walk is
     the cost being probed), replay timed raw and through a checkpoint."""
-    from kafka_connect_expand_json_transform_spark.sources.delta_reader import _replay
+    from kafka_connect_expand_json_transform_spark.sources.delta_reader import _Snapshot
     from kafka_connect_expand_json_transform_spark.sources.delta_writer import (
         delta_checkpoint,
     )
@@ -97,13 +97,14 @@ def replay_walk(spark) -> dict:
                     "path": f"f{v - 1}.parquet", "deletionTimestamp": v,
                     "dataChange": True}}) + "\n")
     t0 = time.perf_counter()
-    files, _m, _p, head = _replay(root, None)
+    snap = _Snapshot(root)
+    files, head = snap.files, snap.version
     raw_s = time.perf_counter() - t0
     t0 = time.perf_counter()
     delta_checkpoint(root, 999)
     ckpt_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    files2, _m, _p, _h = _replay(root, None)
+    files2 = _Snapshot(root).files
     through_ckpt_s = time.perf_counter() - t0
     assert len(files) == len(files2) and head == 999
     return {"commits": 1000, "live_files": len(files),
